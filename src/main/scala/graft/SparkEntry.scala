@@ -714,34 +714,17 @@ object SparkEntry {
     "q_order_limit" -> ((s, d) => Ranking.orderLimit(s, d)),
   )
 
-  /** Fresh temp dir registered for recursive deletion at JVM exit —
-    * the one cleanup block all staging sites share. */
-  private def tempDirWithCleanup(prefix: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-    dir
-  }
-
-  /** Staged text copies, one per (sfDir, format) per JVM (ADVICE r2: the
-    * previous per-construction staging leaked several temp copies per
-    * Bench/Verify run and billed the staging write to the query's bench
-    * time). Deleted recursively on JVM exit. */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** S1/S5 + F1-F4 exercised end-to-end: shape the fixture transactions
     * into the reference's raw text format, stage it as CSV-with-header
     * (or headerless TSV), re-read with the all-STRING raw schema, and
     * normalize through the raw→master casts. The oracle reads the
     * parquet directly — a hash match proves the text round-trip is
-    * lossless. */
+    * lossless. Staged once per (sfDir, format) per JVM: the
+    * previous per-construction staging leaked several temp copies per
+    * Bench/Verify run and billed the staging write to the query's bench
+    * time. */
   private def stagedDir(s: SparkSession, d: String, fmt: String): String =
-    stagedDirs.computeIfAbsent((d, fmt), { _ =>
+    Staged.once(s"rt_$fmt", d) { dir =>
       import org.apache.spark.sql.functions._
       val shaped = Relational.transactions(s, d).select(
         col("transaction_id").cast("string").as("transaction_id"),
@@ -749,7 +732,6 @@ object SparkEntry {
         col("transaction_country").as("country"),
         date_format(col("transaction_datetime"), "yyyy-MM-dd HH:mm:ss")
           .as("date_time"))
-      val dir = tempDirWithCleanup("graft_rt")
       fmt match {
         case "tsv" =>
           shaped.select(concat_ws("\t", col("transaction_id"), col("income"),
@@ -787,17 +769,36 @@ object SparkEntry {
           shaped.write.mode("overwrite").option("header", "true")
             .csv(s"$dir/stage")
       }
-      dir.toString
-    })
+      dir
+    }
 
-  /** Once-per-corpus-version near-dup pair table (VERDICT r4 fix #6):
-    * the minhash→LSH→exact-Jaccard chain materializes ONE compact
-    * parquet table per (sfDir) per JVM; q_source_overlap,
-    * q_dedup_clusters and q_curation serve from it instead of each
-    * re-deriving the chain (three shingle pipelines collapse into one
-    * build + three compact scans). Deleted on JVM exit. */
-  private val stagedPairTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The orders fixture slices every versioned-orders table shares —
+    * one definition each, so the batch, stream and lifecycle fixtures
+    * that share one oracle can never drift apart: the v1 base (every
+    * orderkey not %4), the update-or-insert batch (every %3 orderkey
+    * re-stated with status 'M' and price+1.0) and the CDC batch (that
+    * update set as U rows plus every %7-but-not-%3 orderkey as D). */
+  private def ordersBase(orders: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    orders.where(col("o_orderkey") % 4 =!= 0)
+      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+  }
+
+  private def ordersUpdate(orders: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    orders.where(col("o_orderkey") % 3 === 0)
+      .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
+        (col("o_totalprice") + lit(1.0)).as("o_totalprice"))
+  }
+
+  private def ordersCdc(orders: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    ordersUpdate(orders).withColumn("op", lit("U"))
+      .unionByName(orders
+        .where(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 3 =!= 0)
+        .select(col("o_orderkey"), col("o_orderstatus"),
+          col("o_totalprice"), lit("D").as("op")))
+  }
 
   /** Versioned MERGE table staged once per (sfDir, JVM) — the
     * q_merge_publish fixture: v1 = a deterministic orders slice
@@ -808,23 +809,15 @@ object SparkEntry {
     * computes the same merged state straight from the orders parquet,
     * so a hash match certifies the whole MERGE-then-publish machinery
     * (latest-wins, anti-join carry, marker-pointer read) end to end. */
-  private val stagedMergeTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedMergeTable(s: SparkSession, d: String): String =
-    stagedMergeTables.computeIfAbsent(d, { _ =>
-      import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_merge")
+    Staged.once("merge", d) { dir =>
       val orders = graft.Tables.orders(s, d)
-      val base = orders.where(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      graft.sinks.Sinks.mergePublish(s, base, s"$dir/t", Seq("o_orderkey"))
-      val inc = orders.where(col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
-          (col("o_totalprice") + lit(1.0)).as("o_totalprice"))
-      graft.sinks.Sinks.mergePublish(s, inc, s"$dir/t", Seq("o_orderkey"))
+      graft.sinks.Sinks.mergePublish(s, ordersBase(orders), s"$dir/t",
+        Seq("o_orderkey"))
+      graft.sinks.Sinks.mergePublish(s, ordersUpdate(orders), s"$dir/t",
+        Seq("o_orderkey"))
       s"$dir/t"
-    })
+    }
 
   /** Delete-aware CDC fixture (r13): v1 = the merge fixture's base
     * slice; v2 = ONE I/U/D batch through
@@ -834,25 +827,12 @@ object SparkEntry {
     * base, which must no-op). The batch then REPLAYS under its ledger
     * id and must return v2 untouched. Oracle recomputes the final
     * state from raw orders. */
-  private val stagedCdcTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedCdcTable(s: SparkSession, d: String): String =
-    stagedCdcTables.computeIfAbsent(d, { _ =>
-      import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_cdc")
+    Staged.once("cdc", d) { dir =>
       val orders = graft.Tables.orders(s, d)
-      val base = orders.where(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      graft.sinks.Sinks.mergePublish(s, base, s"$dir/t", Seq("o_orderkey"))
-      val cdc = orders.where(col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
-          (col("o_totalprice") + lit(1.0)).as("o_totalprice"),
-          lit("U").as("op"))
-        .unionByName(orders
-          .where(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 3 =!= 0)
-          .select(col("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice"), lit("D").as("op")))
+      graft.sinks.Sinks.mergePublish(s, ordersBase(orders), s"$dir/t",
+        Seq("o_orderkey"))
+      val cdc = ordersCdc(orders)
       require(graft.sinks.Sinks.mergePublishCdc(s, cdc, s"$dir/t",
         Seq("o_orderkey"), batchId = Some(1L)) == 2,
         "CDC batch did not publish v2")
@@ -860,7 +840,7 @@ object SparkEntry {
         Seq("o_orderkey"), batchId = Some(1L))
       require(replayed == 2, s"replayed CDC batch minted version $replayed")
       s"$dir/t"
-    })
+    }
 
   /** Stream-delivered takedown fixture (r13): the same two-batch lex
     * index as [[stagedTakedownLexIndex]], but the takedown id set
@@ -868,14 +848,10 @@ object SparkEntry {
     * (one checkpointed trigger; the micro-batch id keys the deletes
     * partition and the stats correction), then a re-drain on the same
     * checkpoint (no new request files → no-op restart). */
-  private val stagedStreamTakedownLexIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedStreamTakedownLexIndex(s: SparkSession,
                                            d: String): String =
-    stagedStreamTakedownLexIndexes.computeIfAbsent(d, { _ =>
+    Staged.once("lex_td_stream", d) { dir =>
       import org.apache.spark.sql.functions.col
-      val dir = tempDirWithCleanup("graft_lex_td_stream")
       val idx = s"$dir/lex"
       buildTwoBatchLex(s, d, idx)
       takedownDocIds(s, d).write.parquet(s"$dir/req/b0")
@@ -885,20 +861,16 @@ object SparkEntry {
       drain()
       drain() // exactly-once restart: nothing new to process
       idx
-    })
+    }
 
   /** Corpus-takedown fixture (r13): the documents table published
     * versioned (v1), then the takedown id set (doc_id % 5 == 2 — the
     * same set the index-takedown fixtures use) applied as a CDC
     * D-batch (v2). Replay of the takedown batch must no-op against the
     * ledger. */
-  private val stagedTakedownCorpora =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedTakedownCorpus(s: SparkSession, d: String): String =
-    stagedTakedownCorpora.computeIfAbsent(d, { _ =>
+    Staged.once("corpus_td", d) { dir =>
       import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_corpus_td")
       val docs = graft.Tables.documents(s, d)
       require(graft.sinks.Sinks.mergePublish(s, docs, s"$dir/t",
         Seq("doc_id")) == 1)
@@ -912,7 +884,7 @@ object SparkEntry {
       require(replayed == 2,
         s"replayed corpus takedown minted version $replayed")
       s"$dir/t"
-    })
+    }
 
   /** The passage-source doc for the content-addressed takedown row:
     * alive under the fixture takedown set (8 % 5 != 2) AND carrying a
@@ -937,18 +909,25 @@ object SparkEntry {
     * reads stored image bytes, so the benched q_image_neardup row pays
     * decode + dHash + banded join (the serving-shaped work) over
     * parquet-stored payloads, the q_bm25_served staging discipline. */
-  private val stagedImageCorpora =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedImageCorpus(s: SparkSession, d: String): String =
-    stagedImageCorpora.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_imgcorpus")
+    Staged.once("imgcorpus", d) { dir =>
       multimodal.Multimodal.imageCorpus(s, d)
         .write.mode("overwrite").parquet(s"$dir/images")
       s"$dir/images"
-    })
+    }
 
-  /** End-to-end erasure fixture (r14, VERDICT r13 #2/#4): the full
+  /** The staged erasure constellation: the takedown targets, the
+    * orchestration manifest dir, and the two STANDING audit tables the
+    * certificate reads (pack table + its token-count source) — paths
+    * carried explicitly (ADVICE r15: the packs path used to be
+    * reconstructed by string surgery on the corpus dir, which silently
+    * reads a wrong location under a trailing slash or a renamed corpus
+    * dir). */
+  private final case class ErasureEnv(
+      targets: graft.operators.Takedown.TakedownTargets,
+      manifestDir: String, packsDir: String, countsDir: String)
+
+  /** End-to-end erasure fixture: the full
     * artifact constellation one corpus feeds — versioned corpus (v1),
     * two-batch lex + pos indexes, a bootstrap IVF batch, and the
     * stream-shaped pair + signature tables — taken down in ONE
@@ -957,24 +936,9 @@ object SparkEntry {
     * orchestration replayed: every leg must no-op against the manifest
     * (and each artifact's own idempotence underneath) or the
     * certificate hash breaks (lex stats would double-subtract). */
-  /** The staged erasure constellation: the takedown targets, the
-    * orchestration manifest dir, and the two STANDING audit tables the
-    * certificate reads (pack table + its token-count source) — paths
-    * carried explicitly (ADVICE r15: the packs path used to be
-    * reconstructed by string surgery on the corpus dir, which silently
-    * reads a wrong location under a trailing slash or a renamed corpus
-    * dir). */
-  private[graft] final case class ErasureEnv(
-      targets: graft.operators.Takedown.TakedownTargets,
-      manifestDir: String, packsDir: String, countsDir: String)
-
-  private val stagedErasureEnvs = new java.util.concurrent.ConcurrentHashMap[
-    String, ErasureEnv]()
-
-  private[graft] def stagedErasureEnv(s: SparkSession, d: String): ErasureEnv =
-    stagedErasureEnvs.computeIfAbsent(d, { _ =>
+  private def stagedErasureEnv(s: SparkSession, d: String): ErasureEnv =
+    Staged.once("erasure", d) { dir =>
       import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_erasure")
       val docs = graft.Tables.documents(s, d)
       require(graft.sinks.Sinks.mergePublish(s, docs, s"$dir/corpus",
         Seq("doc_id")) == 1)
@@ -1036,7 +1000,7 @@ object SparkEntry {
       Compaction.compactPairTable(s, s"$dir/pairs", s"$dir/sigs")
       Compaction.compactContentIndex(s, s"$dir/content")
       ErasureEnv(targets, s"$dir/manifest", s"$dir/packs", s"$dir/counts")
-    })
+    }
 
   /** Delete-carrying SCD2 dim maintained by the STREAM (r13): the
     * q_scd2_cdc change stream (event_id % 11 == 3 → D) split at its
@@ -1048,13 +1012,9 @@ object SparkEntry {
     * applied-batch ledger must no-op — a replayed D-slice re-applied
     * after later re-inserts would wrongly re-close keys. Shares
     * q_scd2_cdc's from-scratch twin. */
-  private val stagedScdCdcStreamTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedScdCdcStreamTable(s: SparkSession, d: String): String =
-    stagedScdCdcStreamTables.computeIfAbsent(d, { _ =>
+    Staged.once("scdcdcstream", d) { dir =>
       import org.apache.spark.sql.functions.{col, when}
-      val dir = tempDirWithCleanup("graft_scdcdcstream")
       val ev = Scd.changeStream(s, d)
         .withColumn("op",
           when(col("event_id") % 11 === 3, "D").otherwise("U"))
@@ -1075,7 +1035,7 @@ object SparkEntry {
       require(replayed == 2,
         s"replayed SCD-CDC micro-batch minted version $replayed")
       s"$dir/t"
-    })
+    }
 
   /** The delete-aware CDC fixture maintained by the STREAM (r13): the
     * SAME base and I/U/D slices as [[stagedCdcTable]], delivered as
@@ -1084,25 +1044,12 @@ object SparkEntry {
     * second trigger re-attaches to the checkpoint), then a
     * crash-replay of micro-batch 1 that the ledger must no-op. Shares
     * q_merge_publish_cdc's oracle: stream ≡ batch ≡ recompute. */
-  private val stagedStreamCdcTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedStreamCdcTable(s: SparkSession, d: String): String =
-    stagedStreamCdcTables.computeIfAbsent(d, { _ =>
-      import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_cdcstream")
+    Staged.once("cdcstream", d) { dir =>
+      import org.apache.spark.sql.functions.lit
       val orders = graft.Tables.orders(s, d)
-      val base = orders.where(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice"), lit("I").as("op"))
-      val cdc = orders.where(col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
-          (col("o_totalprice") + lit(1.0)).as("o_totalprice"),
-          lit("U").as("op"))
-        .unionByName(orders
-          .where(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 3 =!= 0)
-          .select(col("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice"), lit("D").as("op")))
+      val base = ordersBase(orders).withColumn("op", lit("I"))
+      val cdc = ordersCdc(orders)
       def run(): Unit =
         graft.streaming.StreamingIngest.mergePublishCdcStream(
           s.readStream.schema(base.schema).parquet(s"$dir/in/*"),
@@ -1116,7 +1063,7 @@ object SparkEntry {
       require(replayed == 2,
         s"replayed CDC micro-batch minted version $replayed")
       s"$dir/t"
-    })
+    }
 
   /** The MERGE-then-publish fixture maintained by the STREAMING CDC
     * path (r12, VERDICT r11 #7): the SAME base and MERGE slices as
@@ -1128,19 +1075,11 @@ object SparkEntry {
     * shares mergedStateOracle with q_merge_publish: stream-maintained
     * ≡ batch-maintained ≡ oracle, and the versioned layout gives the
     * CDC stream time travel / rollback / diff for free. */
-  private val stagedStreamMergeTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedStreamMergeTable(s: SparkSession, d: String): String =
-    stagedStreamMergeTables.computeIfAbsent(d, { _ =>
-      import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_mergestream")
+    Staged.once("mergestream", d) { dir =>
       val orders = graft.Tables.orders(s, d)
-      val base = orders.where(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val inc = orders.where(col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
-          (col("o_totalprice") + lit(1.0)).as("o_totalprice"))
+      val base = ordersBase(orders)
+      val inc = ordersUpdate(orders)
       def run(): Unit = graft.streaming.StreamingIngest.mergePublishStream(
         s.readStream.schema(base.schema).parquet(s"$dir/in/*"),
         s"$dir/t", Seq("o_orderkey"), s"$dir/ckpt")
@@ -1153,7 +1092,7 @@ object SparkEntry {
       require(replayed == 2,
         s"replayed micro-batch minted version $replayed")
       s"$dir/t"
-    })
+    }
 
   /** SCD2 dimension maintained by the STREAMING path (r12): the
     * fixture change stream split at its median ts into two append-only
@@ -1165,13 +1104,9 @@ object SparkEntry {
     * touched keys' histories, so WITHOUT the ledger the replay corrupts
     * the dim (content idempotence does not hold). Shares q_scd2's
     * from-scratch twin. */
-  private val stagedScdStreamTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedScdStreamTable(s: SparkSession, d: String): String =
-    stagedScdStreamTables.computeIfAbsent(d, { _ =>
+    Staged.once("scdstream", d) { dir =>
       import org.apache.spark.sql.functions.col
-      val dir = tempDirWithCleanup("graft_scdstream")
       val ev = Scd.changeStream(s, d)
       val cut = ev.stat.approxQuantile("ts_us", Array(0.5), 0.0).head.toLong
       def run(): Unit =
@@ -1189,7 +1124,7 @@ object SparkEntry {
       require(replayed == 2,
         s"replayed SCD micro-batch minted version $replayed")
       s"$dir/t"
-    })
+    }
 
   /** Lifecycle tables for the rollback / vacuum oracle rows — each its
     * own directory because the operations MUTATE version state:
@@ -1199,22 +1134,14 @@ object SparkEntry {
     * merged v=2). Both rows hash-match states recomputed from raw
     * orders, so marker-only rollback and data-reclaiming vacuum are
     * driver-verified, not just spec-verified. */
-  private val stagedLifecycleTables =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def stagedLifecycleTable(s: SparkSession, d: String,
                                    op: String): String =
-    stagedLifecycleTables.computeIfAbsent((d, op), { _ =>
-      import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup(s"graft_$op")
+    Staged.once(op, d) { dir =>
       val orders = graft.Tables.orders(s, d)
-      val base = orders.where(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      graft.sinks.Sinks.mergePublish(s, base, s"$dir/t", Seq("o_orderkey"))
-      val inc = orders.where(col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey"), lit("M").as("o_orderstatus"),
-          (col("o_totalprice") + lit(1.0)).as("o_totalprice"))
-      graft.sinks.Sinks.mergePublish(s, inc, s"$dir/t", Seq("o_orderkey"))
+      graft.sinks.Sinks.mergePublish(s, ordersBase(orders), s"$dir/t",
+        Seq("o_orderkey"))
+      graft.sinks.Sinks.mergePublish(s, ordersUpdate(orders), s"$dir/t",
+        Seq("o_orderkey"))
       op match {
         case "rollback" => graft.sinks.Sinks.rollbackTo(s, s"$dir/t", 1)
         case "vacuum" =>
@@ -1222,46 +1149,42 @@ object SparkEntry {
           require(gone == Seq(1), s"vacuum should reclaim v=1, got $gone")
       }
       s"$dir/t"
-    })
+    }
 
   /** Versioned documents table for the cross-version drift row: v=1 is
     * the even-doc_id half (the "yesterday" corpus), v=2 the full
     * corpus — both served back through the marker-pointer layout, so
     * the drift row also exercises readVersion on document-shaped
     * data. */
-  private val stagedDocVersionTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedDocVersions(s: SparkSession, d: String): String =
-    stagedDocVersionTables.computeIfAbsent(d, { _ =>
+    Staged.once("docver", d) { dir =>
       import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_docver")
       val docs = graft.Tables.documents(s, d)
       graft.sinks.Sinks.publishVersioned(
         docs.where(col("doc_id") % 2 === 0), s"$dir/t")
       graft.sinks.Sinks.publishVersioned(docs, s"$dir/t")
       s"$dir/t"
-    })
+    }
+
+  /** The lineitem (sum_qty, n_rows) delta for orderkey parity `m` —
+    * the one slice definition the batch and stream rollup fixtures
+    * share. */
+  private def lineitemDelta(s: SparkSession, d: String, m: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    graft.Tables.lineitem(s, d).where(col("l_orderkey") % 2 === m).select(
+      col("l_returnflag"), col("l_linestatus"),
+      col("l_quantity").cast("long").as("sum_qty"), lit(1L).as("n_rows"))
+  }
 
   /** Standing rollup maintained by TWO delta applications (even-key
     * lineitems, then odd) through [[graft.sinks.Sinks.mergeAggPublish]]
     * — the oracle recomputes the rollup from the FULL table, so the
     * hash certifies that incremental additive maintenance equals the
     * rebuild exactly (integer sums are order-insensitive). */
-  private val stagedAggTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedAggTable(s: SparkSession, d: String): String =
-    stagedAggTables.computeIfAbsent(d, { _ =>
-      import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_agg")
-      val li = graft.Tables.lineitem(s, d).select(
-        col("l_returnflag"), col("l_linestatus"),
-        col("l_quantity").cast("long").as("sum_qty"),
-        lit(1L).as("n_rows"), col("l_orderkey"))
+    Staged.once("agg", d) { dir =>
       Seq(0, 1).foreach { slice =>
-        graft.sinks.Sinks.mergeAggPublish(s,
-          li.where(col("l_orderkey") % 2 === slice).drop("l_orderkey"),
+        graft.sinks.Sinks.mergeAggPublish(s, lineitemDelta(s, d, slice),
           s"$dir/t", Seq("l_returnflag", "l_linestatus"),
           Seq("sum_qty", "n_rows"), batchId = Some(slice.toLong))
       }
@@ -1270,12 +1193,12 @@ object SparkEntry {
       // so the exactly-once guarantee is driver-verified, not just
       // spec-verified.
       val replayed = graft.sinks.Sinks.mergeAggPublish(s,
-        li.where(col("l_orderkey") % 2 === 0).drop("l_orderkey"),
-        s"$dir/t", Seq("l_returnflag", "l_linestatus"),
-        Seq("sum_qty", "n_rows"), batchId = Some(0L))
+        lineitemDelta(s, d, 0), s"$dir/t",
+        Seq("l_returnflag", "l_linestatus"), Seq("sum_qty", "n_rows"),
+        batchId = Some(0L))
       require(replayed == 2, s"replayed delta minted version $replayed")
       s"$dir/t"
-    })
+    }
 
   /** The standing rollup maintained by the STREAMING path (r12): the
     * same two lineitem delta slices as [[stagedAggTable]], delivered
@@ -1286,42 +1209,37 @@ object SparkEntry {
     * condition — a replay double-counts, unlike the keyed merge's
     * content convergence). Shares q_rollup_incremental's full-rebuild
     * twin: stream ≡ incremental ≡ rebuild, exactly. */
-  private val stagedStreamAggTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedStreamAggTable(s: SparkSession, d: String): String =
-    stagedStreamAggTables.computeIfAbsent(d, { _ =>
-      import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_aggstream")
-      val li = graft.Tables.lineitem(s, d).select(
-        col("l_returnflag"), col("l_linestatus"),
-        col("l_quantity").cast("long").as("sum_qty"),
-        lit(1L).as("n_rows"), col("l_orderkey"))
-      def slice(m: Int) =
-        li.where(col("l_orderkey") % 2 === m).drop("l_orderkey")
+    Staged.once("aggstream", d) { dir =>
+      val (b0, b1) = (lineitemDelta(s, d, 0), lineitemDelta(s, d, 1))
       def run(): Unit =
         graft.streaming.StreamingIngest.mergeAggPublishStream(
-          s.readStream.schema(slice(0).schema).parquet(s"$dir/in/*"),
+          s.readStream.schema(b0.schema).parquet(s"$dir/in/*"),
           s"$dir/t", Seq("l_returnflag", "l_linestatus"),
           Seq("sum_qty", "n_rows"), s"$dir/ckpt")
-      slice(0).write.parquet(s"$dir/in/b0")
+      b0.write.parquet(s"$dir/in/b0")
       run()
-      slice(1).write.parquet(s"$dir/in/b1")
+      b1.write.parquet(s"$dir/in/b1")
       run()
-      val replayed = graft.sinks.Sinks.mergeAggPublish(s, slice(0),
+      val replayed = graft.sinks.Sinks.mergeAggPublish(s, b0,
         s"$dir/t", Seq("l_returnflag", "l_linestatus"),
         Seq("sum_qty", "n_rows"), batchId = Some(0L))
       require(replayed == 2,
         s"replayed rollup micro-batch minted version $replayed")
       s"$dir/t"
-    })
+    }
 
+  /** Once-per-corpus-version near-dup pair table:
+    * the minhash→LSH→exact-Jaccard chain materializes ONE compact
+    * parquet table per (sfDir) per JVM; q_source_overlap,
+    * q_dedup_clusters and q_curation serve from it instead of each
+    * re-deriving the chain (three shingle pipelines collapse into one
+    * build + three compact scans). Deleted on JVM exit. */
   private def stagedPairTable(s: SparkSession, d: String): DataFrame = {
-    val path = stagedPairTables.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_pairs")
+    val path = Staged.once("pairs", d) { dir =>
       operators.Dedup.buildPairTable(s, d, s"$dir/pairs")
       s"$dir/pairs"
-    })
+    }
     operators.Dedup.pairTable(s, path)
   }
 
@@ -1334,16 +1252,12 @@ object SparkEntry {
     * benched: `q_source_overlap` computes verbatim this staging
     * derivation every run. (string, string, long) rows round-trip
     * parquet bit-exactly. Deleted on JVM exit. */
-  private val stagedOverlapTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedOverlapTable(s: SparkSession, d: String): DataFrame = {
-    val path = stagedOverlapTables.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_overlap")
+    val path = Staged.once("overlap", d) { dir =>
       operators.Dedup.sourceOverlapFrom(s, d, stagedPairTable(s, d))
         .write.mode("overwrite").parquet(s"$dir/overlap")
       s"$dir/overlap"
-    })
+    }
     s.read.parquet(path)
   }
 
@@ -1352,42 +1266,30 @@ object SparkEntry {
     * parquet table per (sfDir, JVM); `q_knn_join_served` reads it —
     * the standing-artifact shape for the last expensive family
     * without a build/serve split. Deleted on JVM exit. */
-  private val stagedKnnTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedKnnTable(s: SparkSession, d: String): String =
-    stagedKnnTables.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_knn")
+    Staged.once("knn", d) { dir =>
       operators.Similarity.buildKnnTable(s, d, s"$dir/knn")
       s"$dir/knn"
-    })
+    }
 
   /** Once-per-corpus-version embedding near-dup pairs (r17, second
     * serving pass): the banded-collision + exact-cosine chain
     * materializes once per (sfDir, JVM); `q_embedding_neardup_served`
     * reads it. Deleted on JVM exit. */
-  private val stagedEmbPairTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedEmbPairTable(s: SparkSession, d: String): String =
-    stagedEmbPairTables.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_embpairs")
+    Staged.once("embpairs", d) { dir =>
       operators.Similarity.buildEmbeddingPairTable(s, d, s"$dir/pairs")
       s"$dir/pairs"
-    })
+    }
 
   /** Once-per-corpus-version SimHash neighbor pairs (r17, second
     * serving pass), built through the envelope-dispatched auto form;
     * `q_simhash64_neighbors_served` reads it. Deleted on JVM exit. */
-  private val stagedSimhashTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedSimhashTable(s: SparkSession, d: String): String =
-    stagedSimhashTables.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_simhash")
+    Staged.once("simhash", d) { dir =>
       operators.Dedup.buildSimhashPairTable(s, d, s"$dir/pairs")
       s"$dir/pairs"
-    })
+    }
 
   /** Persisted IVF index, built (centroids TRAINED) once per (sfDir,
     * JVM) — the production build/serve split on the oracle surface:
@@ -1629,25 +1531,13 @@ object SparkEntry {
     * `q_bm25_served` answers the identical query from this index at
     * serve cost (partition-pruned postings), sharing q_bm25's DuckDB
     * twin because the two paths share one score tail. */
-  private val stagedLexIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedLexIndex(s: SparkSession, d: String): String =
-    stagedLexIndexes.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_lex")
+    Staged.once("lex", d) { dir =>
       operators.Retrieval.buildLexIndex(s, d, s"$dir/lex")
       s"$dir/lex"
-    })
+    }
 
-  /** Batch-maintained lex index (two ingest slices — the accreting
-    * layout) with a LOGICAL takedown of doc_id % 5 == 2 applied: the
-    * `q_bm25_takedown` fixture. The oracle rebuilds BM25 over the
-    * purged corpus, so the hash certifies deletion vectors + the
-    * negative stats partial end to end. */
-  private val stagedTakedownLexIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def takedownDocIds(s: SparkSession, d: String) = {
+  private def takedownDocIds(s: SparkSession, d: String) = {
     import org.apache.spark.sql.functions.col
     graft.Tables.documents(s, d).where(col("doc_id") % 5 === 2)
       .select(col("doc_id"))
@@ -1673,24 +1563,24 @@ object SparkEntry {
     operators.Takedown.takedownLex(s, idx, takedownDocIds(s, d), 0L)
   }
 
+  /** Batch-maintained lex index (two ingest slices — the accreting
+    * layout) with a LOGICAL takedown of doc_id % 5 == 2 applied: the
+    * `q_bm25_takedown` fixture. The oracle rebuilds BM25 over the
+    * purged corpus, so the hash certifies deletion vectors + the
+    * negative stats partial end to end. */
   private def stagedTakedownLexIndex(s: SparkSession, d: String): String =
-    stagedTakedownLexIndexes.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_lex_td")
+    Staged.once("lex_td", d) { dir =>
       buildTakedownLex(s, d, s"$dir/lex")
       s"$dir/lex"
-    })
+    }
 
   /** The same takedown fixture COMPACTED (batches + deletes folded
     * physically, ledgered), then a replay of folded ingest batch 0 and
     * of the folded takedown — both must no-op against the ledgers or
     * the shared purged-corpus oracle hash breaks (`q_bm25_compacted`). */
-  private val stagedCompactedLexIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedCompactedLexIndex(s: SparkSession, d: String): String =
-    stagedCompactedLexIndexes.computeIfAbsent(d, { _ =>
+    Staged.once("lex_fold", d) { dir =>
       import org.apache.spark.sql.functions.col
-      val dir = tempDirWithCleanup("graft_lex_fold")
       val idx = s"$dir/lex"
       buildTakedownLex(s, d, idx)
       operators.Compaction.compactLexIndex(s, idx)
@@ -1699,27 +1589,19 @@ object SparkEntry {
         idx, 0L)
       operators.Takedown.takedownLex(s, idx, takedownDocIds(s, d), 0L)
       idx
-    })
-
-  private val stagedPosIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   private def stagedPosIndex(s: SparkSession, d: String): String =
-    stagedPosIndexes.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_pos")
+    Staged.once("pos", d) { dir =>
       operators.Retrieval.buildPosIndex(s, d, s"$dir/pos")
       s"$dir/pos"
-    })
-
-  private val stagedIvfIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   private def stagedIvfIndex(s: SparkSession, d: String): String =
-    stagedIvfIndexes.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_ivf")
+    Staged.once("ivf", d) { dir =>
       operators.Similarity.buildIvfIndex(s, d, s"$dir/ivf")
       s"$dir/ivf"
-    })
+    }
 
   /** Persisted PQ index (books + codes), built once per (sfDir, JVM) —
     * the build/serve split for the ADC tier, mirroring
@@ -1727,15 +1609,11 @@ object SparkEntry {
     * train→encode→serve pipeline is oracle-checked; `q_pq_topk_served`
     * answers the identical query from this index at serve cost
     * (codes-only candidate scan) and shares the same twin. */
-  private val stagedPqIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedPqIndex(s: SparkSession, d: String): String =
-    stagedPqIndexes.computeIfAbsent(d, { _ =>
-      val dir = tempDirWithCleanup("graft_pq")
+    Staged.once("pq", d) { dir =>
       operators.Pq.buildPqIndex(s, d, s"$dir/pq")
       s"$dir/pq"
-    })
+    }
 
   /** In-process Derby holding the transactions fixture — the hermetic
     * stand-in for the reference's operational Cloud SQL MySQL (S6,
@@ -1743,15 +1621,10 @@ object SparkEntry {
     * (sfDir) per JVM through Spark's own JDBC writer; the raw layer is
     * deliberately string-typed except the BIGINT key (the reference's
     * export lands all-string too), so the read path exercises the same
-    * raw→master casts as the text formats. Returns (url, minId, maxId)
-    * — the bounds drive the range-partitioned parallel read. */
-  private val stagedJdbcDbs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long)]()
-
-  private def stagedJdbc(s: SparkSession, d: String): (String, Long, Long) =
-    stagedJdbcDbs.computeIfAbsent(d, { _ =>
+    * raw→master casts as the text formats. Returns the JDBC url. */
+  private def stagedJdbc(s: SparkSession, d: String): String =
+    Staged.once("derby", d) { dir =>
       import org.apache.spark.sql.functions._
-      val dir = tempDirWithCleanup("graft_derby")
       // NO derby.system.home mutation: the property is read once at
       // Derby boot, so setting it here is a no-op if anything booted
       // Derby earlier (a metastore-enabled session) and, worse, would
@@ -1765,20 +1638,13 @@ object SparkEntry {
         col("transaction_country").as("country"),
         date_format(col("transaction_datetime"), "yyyy-MM-dd HH:mm:ss")
           .as("date_time"))
-        .persist() // two staging actions (bounds agg + write) — one join
-      try {
-        // Staging-time bounds for the partitioned read: a one-row agg,
-        // driver-side by necessity (they parameterize the reader).
-        val row = shaped.agg(min(col("transaction_id")),
-          max(col("transaction_id"))).collect()(0)
-        shaped.repartition(4).write.mode("overwrite")
-          .option("createTableColumnTypes",
-            "transaction_id BIGINT, income VARCHAR(32), country VARCHAR(64), " +
-              "date_time VARCHAR(32)")
-          .jdbc(url, "transactions", new java.util.Properties())
-        (url, row.getLong(0), row.getLong(1))
-      } finally shaped.unpersist()
-    })
+      shaped.repartition(4).write.mode("overwrite")
+        .option("createTableColumnTypes",
+          "transaction_id BIGINT, income VARCHAR(32), country VARCHAR(64), " +
+            "date_time VARCHAR(32)")
+        .jdbc(url, "transactions", new java.util.Properties())
+      url
+    }
 
   private def ingestRoundtrip(s: SparkSession, d: String, fmt: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -1787,7 +1653,7 @@ object SparkEntry {
         // Bounds come from the source itself (readJdbcAutoBounds probes
         // MIN/MAX), not from staged literals — the standing contract for
         // an operational table whose key range grows.
-        val (url, _, _) = stagedJdbc(s, d)
+        val url = stagedJdbc(s, d)
         sources.Ingest
           .readJdbcAutoBounds(s, url, "transactions", "transaction_id", 8)
           .select(col("transaction_id").cast("string").as("transaction_id"),

@@ -1,8 +1,9 @@
 package graft
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus).config("spark.ui.enabled","false")
       .config("spark.sql.session.timeZone","UTC").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- args) {

@@ -178,7 +178,12 @@ private[graft] object Publish {
           val fc = org.apache.hadoop.fs.FileContext
             .getFileContext(root.toUri, conf)
           val retract = new Path(root, s".retract-${c.token.take(8)}")
-          fc.rename(new Path(root, s"v=${c.version}"), retract)
+          // Our un-marked claim also sits in every higher claimant's
+          // gap, so a competitor's orphan fence can move it first: the
+          // slot is then already released, and the rename's local-fs
+          // copy fallback fails on the vanished source.
+          try fc.rename(new Path(root, s"v=${c.version}"), retract)
+          catch { case _: java.io.FileNotFoundException => () }
           fs.delete(retract, true)
           ((base + 1) until c.version)
             .foreach(g => fenceOrphan(fs, fc, root, g, orphanFenceMs))
