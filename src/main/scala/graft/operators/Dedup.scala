@@ -575,9 +575,9 @@ object Dedup {
     * the edge list (never all-pairs), `localCheckpoint` truncates the
     * growing lineage, and the loop runs O(component diameter) times —
     * near-dup components are shallow in practice (dozens of iterations
-    * bound web-scale graphs; fixture converges in 2). The per-iteration
-    * driver round-trip is a scalar convergence aggregate, the standard
-    * iterative-graph pattern (GraphX does the same). */
+    * bound web-scale graphs; fixture converges in 2). Round 1 reads the
+    * labels off the edges; a pinned `changed` flag makes each round's
+    * convergence probe a scan of pinned blocks (as GraphX does). */
   def dedupClusters(spark: SparkSession, dir: String,
                     minJaccard: Double = 0.5): DataFrame =
     dedupClustersFrom(ngramJaccard(spark, dir), minJaccard)
@@ -588,33 +588,31 @@ object Dedup {
     val pairs = pairFrame
       .where(col("jaccard") >= minJaccard)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint() // candidates are tiny vs the corpus; pin them
+      .localCheckpoint() // pairTable ends in a distinct; pin it once
     val edges = pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    var labels = edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id"))
+    // One round: each node takes the least label on offer (its
+    // neighbours' and its own) and flags whether that beat its own.
+    def settle(offers: DataFrame): DataFrame = offers
+      .groupBy(col("doc_id"))
+      .agg(min(col("cluster_id")).as("cluster_id"), max(col("own")).as("own"))
+      .select(col("doc_id"), col("cluster_id"),
+        (col("cluster_id") < col("own")).as("changed"))
       .localCheckpoint()
-    var converged = false
-    while (!converged) {
-      val neighborMin = edges
+    var labels = settle(edges.select(col("doc_a").as("doc_id"),
+      least(col("doc_a"), col("doc_b")).as("cluster_id"), col("doc_a").as("own")))
+    while (!labels.where(col("changed")).isEmpty) {
+      val next = settle(edges
         .join(labels, edges("doc_a") === labels("doc_id"))
-        .groupBy(col("doc_b").as("n_doc_id"))
-        .agg(min(col("cluster_id")).as("n_min"))
-      val next = labels
-        .join(neighborMin, labels("doc_id") === col("n_doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
-            .as("cluster_id"))
-        .localCheckpoint()
-      converged = next.alias("n")
-        .join(labels.alias("o"), Seq("doc_id"))
-        .where(col("n.cluster_id") < col("o.cluster_id"))
-        .isEmpty
+        .select(col("doc_b").as("doc_id"), col("cluster_id"),
+          lit(null).cast("long").as("own"))
+        .unionByName(labels.select(col("doc_id"), col("cluster_id"),
+          col("cluster_id").as("own"))))
       labels.unpersist() // superseded checkpoint blocks don't accumulate
       labels = next
     }
     pairs.unpersist()
-    labels
+    labels.select(col("doc_id"), col("cluster_id"))
   }
 
   /** SimHash near-duplicate pairs: band on four 4-bit quarters of the

@@ -202,8 +202,12 @@ object Similarity {
     * query without ever sorting a query's full candidate list in one
     * task. */
   def topkCosine(spark: SparkSession, dir: String,
-                 k: Int = TopK, saltBuckets: Int = 64): DataFrame = {
-    val c = corpus(spark, dir)
+                 k: Int = TopK, saltBuckets: Int = 64): DataFrame =
+    topkCosineOf(corpus(spark, dir), k, saltBuckets)
+
+  /** [[topkCosine]] over an already-built [[corpus]] frame. */
+  private def topkCosineOf(c: DataFrame, k: Int,
+                           saltBuckets: Int = 64): DataFrame = {
     val q = c.select(col("vec_id").as("q_id"), col("v").as("qv"),
       col("nv").as("nq")).where(col("q_id") < NumQueries)
     val scored = c.crossJoin(broadcast(q))
@@ -320,13 +324,15 @@ object Similarity {
     * picked, so near-duplicate passages don't crowd the context
     * window.
     *
-    * Scale shape: the candidate pool is BOUNDED per query (R rows from
-    * the ANN tier — here the exact top-k so the pool shares the
-    * already-hash-proven definition), selection is K rounds of one
-    * q_id-keyed join + one bounded window (≤ R rows per query), total
-    * work O(K·R) per query with queries partitioning the cluster. The
-    * penalty updates incrementally (greatest of the standing penalty
-    * and similarity to the LATEST pick) — never a pairwise matrix.
+    * Scale shape: the candidate pool is BOUNDED per query (R rows from the
+    * ANN tier — here the exact top-k so the pool shares the already-hash-
+    * proven definition), so the K greedy rounds run as one `aggregate` fold
+    * over each collected pool: O(K·R) work per query in one task, one lazy
+    * plan, no per-round pin. A round picks the `array_max` of (score,
+    * ¬vec_id) structs — a window's (score desc, vec_id asc) argmax, NaN
+    * highest, null lowest — and raises the penalties incrementally (greatest
+    * of the standing penalty and similarity to the LATEST pick), never a
+    * pairwise matrix. A pool smaller than K yields fewer rows.
     *
     * Engine-exact: cosines are LTR IEEE dots of parquet-exact
     * operands; 0.7/0.3 are decimal literals parsed to identical
@@ -335,39 +341,32 @@ object Similarity {
     * The twin unrolls the K greedy rounds as CTEs — the driver hash
     * pins the greedy SELECTION ORDER, not just the final set. */
   def mmrDiversify(spark: SparkSession, dir: String): DataFrame = {
-    val score = lit(0.7) * col("rel") - lit(0.3) * col("pen")
-    var cand = topkCosine(spark, dir, k = MmrPool)
+    val c = corpus(spark, dir)
+    val pools = topkCosineOf(c, MmrPool)
       .select(col("q_id"), col("vec_id"), col("cosine").as("rel"))
-      .join(corpus(spark, dir).select(col("vec_id"), col("v"), col("nv")),
-        "vec_id")
-      .select(col("q_id"), col("vec_id"), col("rel"), col("v"), col("nv"))
-      .withColumn("pen", lit(0.0))
-      .localCheckpoint()
-    val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (t <- 1 to MmrKeep) {
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(score.desc, col("vec_id").asc)
-      val sel = cand.withColumn("score", score)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("q_id"), col("vec_id"), col("score"),
-          col("v").as("sv"), col("nv").as("snv"))
-        .localCheckpoint()
-      picks += sel.select(col("q_id"), col("vec_id"),
-        lit(t).as("mmr_rank"), col("score"))
-      if (t < MmrKeep)
-        cand = cand
-          .join(sel.select(col("q_id"), col("vec_id").as("sel_id"),
-            col("sv"), col("snv")), "q_id")
-          .where(col("vec_id") =!= col("sel_id"))
-          .select(col("q_id"), col("vec_id"), col("rel"), col("v"),
-            col("nv"),
-            greatest(col("pen"),
-              dot(col("v"), col("sv")) / (col("nv") * col("snv")))
-              .as("pen"))
-          .localCheckpoint()
-    }
-    picks.reduce(_ unionAll _)
+      .join(c.select(col("vec_id"), col("v"), col("nv")), "vec_id")
+      .groupBy(col("q_id"))
+      .agg(collect_list(struct(col("vec_id"), col("rel"), col("v"),
+        col("nv"), lit(0.0).as("pen"))).as("cand"))
+    // One greedy round (the one-element transform binds the pick once).
+    def pickNext(acc: Column, t: Column): Column = element_at(transform(
+      array(array_max(transform(acc("cand"), x => struct(
+        (lit(0.7) * x("rel") - lit(0.3) * x("pen")).as("score"),
+        bitwise_not(x("vec_id")).as("rid"), // max ¬id = min id
+        x("vec_id").as("vec_id"), x("v").as("v"), x("nv").as("nv"))))),
+      p => struct(
+        transform(filter(acc("cand"), x => x("vec_id") =!= p("vec_id")),
+          x => x.withField("pen", greatest(x("pen"),
+            dot(x("v"), p("v")) / (x("nv") * p("nv"))))).as("cand"),
+        concat(acc("picks"), array(struct(p("vec_id").as("vec_id"),
+          t.as("mmr_rank"), p("score").as("score")))).as("picks"))), 1)
+    val noPicks = array().cast(
+      "array<struct<vec_id:bigint,mmr_rank:int,score:double>>")
+    pools.select(col("q_id"), explode(aggregate(
+        sequence(lit(1), lit(MmrKeep)), struct(col("cand"), noPicks.as("picks")),
+        (acc, t) => when(size(acc("cand")) > 0, pickNext(acc, t))
+          .otherwise(acc))("picks")).as("p"))
+      .select(col("q_id"), col("p.vec_id"), col("p.mmr_rank"), col("p.score"))
   }
 
   /** Multi-probe masks: the query's own bucket plus every bucket at

@@ -556,4 +556,43 @@ class CorpusAssemblySpec extends SparkSpec {
       .select("cluster_id").distinct().count()
       == labels.select("cluster_id").distinct().count())
   }
+
+  test("dedupClustersFrom: multi-round propagation == union-find minima") {
+    import spark.implicits._
+    // A 10-node path whose minimum sits at one end (9 propagation
+    // rounds), given in scrambled order and orientation; two disjoint
+    // triangles; one isolated pair; one sub-threshold edge that must
+    // NOT merge the path with the first triangle.
+    val path = Seq(200, 207, 203, 209, 201, 205, 208, 202, 206, 204)
+    val pathEdges = path.zip(path.tail)
+      .zipWithIndex.map { case ((a, b), i) => if (i % 2 == 0) (b, a) else (a, b) }
+    val strong = Seq(5, 0, 8, 3, 6, 1, 7, 4, 2).map(pathEdges) ++
+      Seq((301, 300), (302, 301), (300, 302), (312, 310), (311, 312),
+        (310, 311), (401, 400))
+    val pairs = (strong.map { case (a, b) => (a.toLong, b.toLong, 0.9) } :+
+      ((204L, 300L, 0.3))).toDF("doc_a", "doc_b", "jaccard")
+    // Plain-Scala union-find, labelled by component minimum.
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    strong.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toLong), find(b.toLong))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val want = parent.keys.toSeq.map(d => (d, find(d))).toSet
+    val got = Dedup.dedupClustersFrom(pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == want, s"labels diverged from union-find:\n got=$got")
+    assert(want.map(_._2) == Set(200L, 300L, 310L, 400L))
+    // The split consumer still counts and maps the returned frame.
+    val split = Sampling.clusterSafeSplit(spark, sf0001, pairs)
+    assert(split.count() == Tables.documents(spark, sf0001).count())
+    val sides = split.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    want.groupBy(_._2).values.foreach { members =>
+      assert(members.map(m => sides(m._1)).size == 1,
+        s"component $members straddles the split")
+    }
+  }
 }

@@ -435,6 +435,24 @@ class PlanAuditSpec extends SparkSpec {
       s"cluster split regressed to a corpus-wide sort-merge join:\n$cs")
   }
 
+  test("MMR rerank is one lazy plan: no pin, one explode over one " +
+      "pool aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
+    import org.apache.spark.sql.execution.LogicalRDD
+    // The greedy rounds are one HOF fold over each query's collected
+    // pool — an eager per-round pin would surface as a LogicalRDD leaf
+    // (and its construction-time job).
+    val plan = operators.Similarity.mmrDiversify(spark, sf0001)
+      .queryExecution.analyzed
+    assert(plan.collect { case r: LogicalRDD => r }.isEmpty,
+      s"MMR pins a round eagerly again:\n$plan")
+    val gens = plan.collect { case g: Generate => g }
+    assert(gens.size == 1, s"expect one explode of the picks:\n$plan")
+    assert(plan.collect { case a: Aggregate => a }.size == 1 &&
+      gens.head.collect { case a: Aggregate => a }.size == 1,
+      s"expect the explode over the one pool aggregate:\n$plan")
+  }
+
   test("r10 additions keep their documented shapes") {
     // Phrase search: the occ stream is cut to the phrase vocabulary by
     // a BROADCAST join before any exchange — no cartesian, no sort,

@@ -134,9 +134,15 @@ class PublishSoakSpec extends SparkSpec {
         reads
       }
     }
-    Await.result(Future.sequence(publisherFs), 600.seconds)
-    Await.result(stallerF, 60.seconds)
-    publishing = false
+    try {
+      Await.result(Future.sequence(publisherFs), 600.seconds)
+      Await.result(stallerF, 60.seconds)
+    } finally {
+      // Stop and drain the readers and the vacuum even when a publisher
+      // failed, so none of their reads leak into the next suite.
+      publishing = false
+      Await.ready(Future.sequence(readerFs :+ vacuumF), 60.seconds)
+    }
     val reads = Await.result(Future.sequence(readerFs), 60.seconds)
     Await.result(vacuumF, 60.seconds)
     assert(reads.sum > 0, "readers never completed a single read")
