@@ -22,12 +22,10 @@ package graft
   *               shared txn subtree with ONE localCheckpoint so both
   *               consumers read the materialized frame (the E1
   *               persisted-frame discipline applied in-query)
-  *   rescore   — r18 (VERDICT r17 #3): the banded self-joins'
-  *               exact-rescore with the shipped float32 +
-  *               envelope-broadcast vector side, vs a verbatim replica
-  *               of the r17 form (widened array<double> vectors, no
-  *               join hints — AQE silently degrades it to pair-payload
-  *               shuffles past ~35k vectors)
+  *   authority — r18 (VERDICT r17 #4): q_source_authority served
+  *               from the standing overlap table staged once per
+  *               corpus version, vs the r17 form that re-aggregates the
+  *               overlap from the pair table on every run
   *   masterlite — r18 (VERDICT r17 #5): campaign-blind business rows
   *               (topProducts, customerRetention) over the full master
   *               (pays the campaignCosts aggregate's second
@@ -93,7 +91,6 @@ object Profile {
       case "masterlite" => masterLiteArms(spark, d, time)
       case "minband" => minBandArms(spark, d, time)
       case "prodperf" => prodPerfArms(spark, d, time)
-      case "rescore" => rescoreArms(spark, d, time)
       case "authority" => authorityServeArms(spark, d, time)
       case _ => retentionAuthorityArms(spark, d, time)
     }
@@ -131,96 +128,6 @@ object Profile {
     time("authority pair-form (r17)")(oldForm)
     time("authority served2")(newForm)
     time("authority pair-form2")(oldForm)
-  }
-
-  // ------------------------------------------------------------------
-  // Experiment: rescore vector side — r17 replica vs shipped r18 form
-  // ------------------------------------------------------------------
-
-  /** Verbatim replica of the r17 rescore chain for [[rescoreArms]]:
-    * widened array<double> corpus, banded collisions with the same
-    * shuffle_hash-hinted self-join, vector join-backs with NO hint
-    * (AQE's 10 MB threshold decides — the form that degrades to
-    * pair-payload shuffles at the ×100 mint). */
-  private def oldCorpus(spark: org.apache.spark.sql.SparkSession,
-                        d: String): DataFrame = {
-    graft.expressions.DotProduct.register(spark)
-    graft.operators.Spread(graft.Tables.embeddings(spark, d))
-      .select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nv",
-        sqrt(call_function("dot_d", col("v"), col("v"))))
-  }
-
-  private def oldCollisions(sigs: DataFrame,
-                            pred: (Column, Column) => Column): DataFrame = {
-    val a = sigs.hint("shuffle_hash").as("a")
-    val b = sigs.hint("shuffle_hash").as("b")
-    a.join(b,
-        col("a.tbl") === col("b.tbl") && col("a.sig") === col("b.sig") &&
-          pred(col("a.vec_id"), col("b.vec_id")))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-  }
-
-  private def oldKnnJoin(spark: org.apache.spark.sql.SparkSession,
-                         d: String): DataFrame = {
-    import graft.operators.{Similarity, Ranking}
-    val c = oldCorpus(spark, d)
-    val h = Similarity.tablePlanesFor(
-      graft.Tables.embeddings(spark, d).count())
-    val cand = oldCollisions(Similarity.bandedSignatureRows(c, h), _ =!= _)
-      .select(col("id_a").as("vec_id"), col("id_b").as("nn_id"))
-      .distinct()
-    val va = c.select(col("vec_id"), col("v").as("va"), col("nv").as("na"))
-    val vb = c.select(col("vec_id").as("nn_id"), col("v").as("vb"),
-      col("nv").as("nb"))
-    val scored = cand.join(va, "vec_id").join(vb, "nn_id")
-      .select(col("vec_id"), col("nn_id"),
-        (call_function("dot_d", col("va"), col("vb")) /
-          (col("na") * col("nb"))).as("cosine"))
-    Ranking.saltedTopK(scored,
-      part = Seq(col("vec_id")),
-      ord = Seq(col("cosine").desc, col("nn_id").asc),
-      saltOn = col("nn_id"), k = 3, saltBuckets = 16)
-  }
-
-  private def oldEmbeddingNearDup(spark: org.apache.spark.sql.SparkSession,
-                                  d: String): DataFrame = {
-    import graft.operators.Similarity
-    val c = oldCorpus(spark, d)
-    val h = Similarity.tablePlanesFor(
-      graft.Tables.embeddings(spark, d).count())
-    val cand = oldCollisions(Similarity.bandedSignatureRows(c, h), _ < _)
-      .groupBy(col("id_a").as("vec_a"), col("id_b").as("vec_b"))
-      .agg(count(lit(1)).as("n_tables"))
-    val va = c.select(col("vec_id").as("vec_a"), col("v").as("va"),
-      col("nv").as("na"))
-    val vb = c.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-      col("nv").as("nb"))
-    cand.join(va, "vec_a").join(vb, "vec_b")
-      .select(col("vec_a"), col("vec_b"), col("n_tables"),
-        (call_function("dot_d", col("va"), col("vb")) /
-          (col("na") * col("nb"))).as("cosine"))
-      .where(col("cosine") > 0.5)
-  }
-
-  private def rescoreArms(spark: org.apache.spark.sql.SparkSession,
-                          d: String,
-                          time: String => (=> DataFrame) => Unit): Unit = {
-    import graft.operators.Similarity
-    val diff = Similarity.knnJoin(spark, d).exceptAll(oldKnnJoin(spark, d))
-      .count() +
-      oldKnnJoin(spark, d).exceptAll(Similarity.knnJoin(spark, d)).count()
-    println(s"knnJoin shipped-vs-old diff rows: $diff (must be 0)")
-    time("warmup")(Similarity.knnJoin(spark, d))
-    time("knn shipped (f32+bcast)")(Similarity.knnJoin(spark, d))
-    time("knn old (dbl, AQE)")(oldKnnJoin(spark, d))
-    time("knn shipped2")(Similarity.knnJoin(spark, d))
-    time("knn old2")(oldKnnJoin(spark, d))
-    time("neardup shipped")(Similarity.embeddingNearDup(spark, d))
-    time("neardup old")(oldEmbeddingNearDup(spark, d))
-    time("neardup shipped2")(Similarity.embeddingNearDup(spark, d))
-    time("neardup old2")(oldEmbeddingNearDup(spark, d))
   }
 
   // ------------------------------------------------------------------

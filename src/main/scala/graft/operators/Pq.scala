@@ -214,14 +214,11 @@ object Pq {
         round(dot(col("qx"), col("cv")) * lit(Micro))
           .cast("long").as("lut_c"))
 
-  private def rankTopk(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+  private def rankTopk(scored: DataFrame, k: Int): DataFrame =
+    Ranking.topK(scored, part = Seq(col("q_id")),
+        ord = Seq(col("adc").desc, col("vec_id").asc), k = k)
       .select(col("q_id"), col("vec_id"), col("adc"),
         col("rank").cast("int").as("rank"))
-  }
 
   /** IVF-PQ (the FAISS IVFPQ composition, Jégou et al. §V): coarse IVF
     * cells bound WHO is scored, PQ codes bound WHAT scoring reads — a

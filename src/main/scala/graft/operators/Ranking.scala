@@ -5,27 +5,26 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Salted two-phase grouped top-k, shared by every operator that keeps
-  * k rows per group (top products, cosine top-k, exact-k sampling):
-  * phase 1 ranks within (group, salt-bucket) and keeps k per bucket —
-  * no task ever sorts a whole group's candidate list — phase 2 ranks
-  * the surviving k·buckets rows per group. Emits the final position as
-  * `rank` (1-based, dense by construction). The ordering must be total
-  * (break ties on a unique column) or ranks are nondeterministic. */
+/** Grouped top-k, shared by every operator that keeps k rows per group
+  * (top products, cosine top-k, exact-k sampling, term and merge
+  * vocabularies): `row_number() <= k` over (part, ord), emitted as
+  * `rank` (1-based, dense by construction). Spark plans the grouped
+  * form as a partial WindowGroupLimit on the map side (each task keeps
+  * at most k rows per group), one exchange, then the final limit — no
+  * task ever sorts a whole group's candidate list, skewed groups
+  * included. With an empty `part` it plans as TakeOrderedAndProject
+  * (per-partition k-row heaps merged on the driver, no exchange). The
+  * map-side cut holds only while k ≤
+  * spark.sql.optimizer.windowGroupLimitThreshold (default 1000). The
+  * ordering must be total (break ties on a unique column) or ranks are
+  * nondeterministic. */
 object Ranking {
-  def saltedTopK(df: DataFrame, part: Seq[Column], ord: Seq[Column],
-                 saltOn: Column, k: Int, saltBuckets: Int): DataFrame = {
-    require(!df.columns.contains("rank") && !df.columns.contains("salt_rank"),
-      "saltedTopK emits 'rank' and uses 'salt_rank' internally — rename " +
-        "the input's conflicting column(s) first")
-    val salted = Window
-      .partitionBy(part :+ pmod(saltOn, lit(saltBuckets)): _*)
-      .orderBy(ord: _*)
-    val global = Window.partitionBy(part: _*).orderBy(ord: _*)
-    df.withColumn("salt_rank", row_number().over(salted))
-      .filter(col("salt_rank") <= k)
-      .drop("salt_rank")
-      .withColumn("rank", row_number().over(global))
+  def topK(df: DataFrame, part: Seq[Column], ord: Seq[Column],
+           k: Int): DataFrame = {
+    require(!df.columns.contains("rank"),
+      "topK emits 'rank' — rename the input's 'rank' column first")
+    df.withColumn("rank",
+        row_number().over(Window.partitionBy(part: _*).orderBy(ord: _*)))
       .filter(col("rank") <= k)
   }
 

@@ -474,23 +474,20 @@ object Relational {
   /** Grouped top-k via ranking window (SURVEY §2.5 north-star window op):
     * top 5 products by income per country, ties broken by product_id.
     *
-    * Two-phase top-k (VERDICT r1 scale note): a single window partitioned
-    * by `country` has ~25 partitions at ANY scale, so each task would sort
-    * a country's ENTIRE product list at 100 TB. Phase 1 salts the window
-    * with a deterministic bucket of product_id and keeps k candidates per
-    * (country, salt); phase 2 ranks the ≤ saltBuckets×k survivors per
-    * country. Phase-1 ranking is per-product (already aggregated), so the
-    * global top-k is always contained in the salted winners — the result
-    * is bit-identical to the single-window form. */
-  def topProductsPerCountry(master: DataFrame, k: Int = 5,
-                            saltBuckets: Int = 32): DataFrame =
-    Ranking.saltedTopK(
+    * Scale (VERDICT r1 scale note): a window partitioned by `country`
+    * has ~25 groups at ANY scale, so a plain sort-based window would
+    * sort a country's ENTIRE product list in one task at 100 TB.
+    * [[Ranking.topK]] plans a partial WindowGroupLimit before the
+    * exchange — each map task keeps at most k products per country —
+    * so the final window ranks at most k × (map tasks) rows per
+    * country. */
+  def topProductsPerCountry(master: DataFrame, k: Int = 5): DataFrame =
+    Ranking.topK(
       master
         .groupBy(col("transaction_country").as("country"), col("product_id"))
         .agg(rsum2(col("income")).as("total_income")),
       part = Seq(col("country")),
-      ord = Seq(col("total_income").desc, col("product_id").asc),
-      saltOn = col("product_id"), k = k, saltBuckets = saltBuckets)
+      ord = Seq(col("total_income").desc, col("product_id").asc), k = k)
 
   /** SELECT * passthrough scan (S6 analog —
     * cloud_composer/datapipeline_gcp.py:36 `SELECT * FROM ronny_dev.stations`). */

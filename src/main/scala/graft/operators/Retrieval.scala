@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -46,9 +45,9 @@ object Retrieval {
 
   /** Per-list candidate depth for fusion and the final cut. RRF fuses
     * bounded CANDIDATE LISTS, not full rankings — the 100 TB shape:
-    * each arm reduces to its own top-R via heap-path TakeOrdered /
-    * salted top-k, and only the ≤2R-row fused frame ever sees a
-    * window. */
+    * each arm reduces to its own top-R via [[Ranking.topK]]'s
+    * heap-path TakeOrderedAndProject, and only the ≤2R-row fused frame
+    * ever sees a window. */
   val CandidateK = 100
   val FinalK = 25
 
@@ -331,39 +330,27 @@ object Retrieval {
   }
 
   /** BM25 top-k: exact-long micro-unit scores summed per doc, global
-    * top-[[FinalK]] cut on (score desc, doc_id asc). The limit plans as
-    * TakeOrderedAndProject (per-partition heaps over the ≤|matching
-    * docs| scored frame); the rank window runs AFTER the cut, over ≤ k
-    * rows. */
+    * top-[[FinalK]] cut on (score desc, doc_id asc). The partition-less
+    * [[Ranking.topK]] plans as TakeOrderedAndProject (per-partition
+    * heaps over the ≤|matching docs| scored frame); the rank window
+    * runs AFTER the cut, over ≤ k rows. */
   def bm25TopK(spark: SparkSession, dir: String,
                terms: Seq[String] = DefaultQuery,
                k: Int = FinalK): DataFrame =
     bm25Cut(bm25Contribs(spark, dir, terms), k)
 
   /** Shared per-doc sum + top-k cut over a contributions frame. */
-  private def bm25Cut(contribs: DataFrame, k: Int): DataFrame = {
-    val scored = contribs
-      .groupBy(col("doc_id"))
-      .agg(sum(col("contrib_fp")).as("score_fp"),
-        count(lit(1)).as("n_terms"))
-      .orderBy(col("score_fp").desc, col("doc_id").asc)
-      .limit(k)
-    scored
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score_fp").desc, col("doc_id").asc)))
+  private def bm25Cut(contribs: DataFrame, k: Int): DataFrame =
+    Ranking.topK(
+      contribs
+        .groupBy(col("doc_id"))
+        .agg(sum(col("contrib_fp")).as("score_fp"),
+          count(lit(1)).as("n_terms")),
+      part = Seq.empty,
+      ord = Seq(col("score_fp").desc, col("doc_id").asc), k = k)
       .select(col("doc_id"), col("n_terms"),
         (col("score_fp").cast("double") / ScoreScale).as("bm25"),
         col("rank"))
-  }
-
-  /** One arm's top-R candidate ranking: heap-path cut first, then a
-    * row_number over the resulting ≤R-row frame (the window never sees
-    * the full scored corpus). */
-  private def rankedTopR(scored: DataFrame, scoreCol: Column,
-                         idCol: Column, r: Int): DataFrame =
-    scored.orderBy(scoreCol.desc, idCol.asc).limit(r)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(scoreCol.desc, idCol.asc)))
 
   /** Reciprocal-rank-fusion hybrid search: the BM25 arm for `terms`
     * fused with the embedding-cosine arm for query vector `queryVecId`
@@ -426,11 +413,11 @@ object Retrieval {
     * (vec_id, v, nv) normalized-corpus frame. */
   private def hybridRrfTail(contribs: DataFrame, c: DataFrame,
                             queryVecId: Long, k: Int): DataFrame = {
-    val lex = rankedTopR(
+    val lex = Ranking.topK(
       contribs
         .groupBy(col("doc_id"))
         .agg(sum(col("contrib_fp")).as("score_fp")),
-      col("score_fp"), col("doc_id"), CandidateK)
+      Seq.empty, Seq(col("score_fp").desc, col("doc_id").asc), CandidateK)
       .select(col("doc_id"), col("rank").as("lex_rank"))
     val q = c.where(col("vec_id") === queryVecId)
       .select(col("v").as("qv"), col("nv").as("nq"))
@@ -439,7 +426,8 @@ object Retrieval {
       .select(col("vec_id"),
         (call_function("dot_d", col("qv"), col("v")) /
           (col("nq") * col("nv"))).as("cosine"))
-    val vec = rankedTopR(scoredVec, col("cosine"), col("vec_id"), CandidateK)
+    val vec = Ranking.topK(scoredVec, Seq.empty,
+        Seq(col("cosine").desc, col("vec_id").asc), CandidateK)
       .select(col("vec_id"), col("rank").as("vec_rank"))
     val fused = lex.join(vec, col("doc_id") === col("vec_id"), "full_outer")
       .select(
@@ -451,7 +439,7 @@ object Retrieval {
           .otherwise(lit(0.0)) +
         when(col("vec_rank") > 0, lit(1.0) / (lit(RrfK) + col("vec_rank")))
           .otherwise(lit(0.0)))
-    rankedTopR(fused, col("rrf"), col("doc_id"), k)
+    Ranking.topK(fused, Seq.empty, Seq(col("rrf").desc, col("doc_id").asc), k)
       .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
         col("rrf"), col("rank"))
   }

@@ -88,8 +88,7 @@ object Sampling {
     * 32-bit hash mod 10^6 falls under the stratum's ppm rate. Pure
     * integer compare (no float thresholds to diverge cross-engine), one
     * codegen'd filter, no shuffle — the 100 TB shape for domain mixing;
-    * an exact-k variant would need the salted two-phase top-k used in
-    * Relational.topProductsPerCountry. */
+    * the exact-k variant is [[exactSample]]. */
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     val rate = SampleRatesPpm.tail.foldLeft(
       when(col("lang") === SampleRatesPpm.head._1,
@@ -109,17 +108,16 @@ object Sampling {
   /** Exact-k uniform sample per stratum (the distributed reservoir-sample
     * analog): the k documents with the smallest deterministic hash draw
     * win — every run, partitioning, and engine agrees on the same k.
-    * Via the shared [[Ranking.saltedTopK]]; ties are impossible on the
+    * Via the shared [[Ranking.topK]]; ties are impossible on the
     * (u, doc_id) ordering since doc_id is unique. */
-  def exactSample(spark: SparkSession, dir: String, k: Int = ExactK,
-                  saltBuckets: Int = 32): DataFrame =
-    Ranking.saltedTopK(
+  def exactSample(spark: SparkSession, dir: String,
+                  k: Int = ExactK): DataFrame =
+    Ranking.topK(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
           h8("exact", col("doc_id")).as("u")),
       part = Seq(col("lang")),
-      ord = Seq(col("u").asc, col("doc_id").asc),
-      saltOn = col("doc_id"), k = k, saltBuckets = saltBuckets)
+      ord = Seq(col("u").asc, col("doc_id").asc), k = k)
 
   /** Shard count for [[shuffleShards]] (demo-sized; production uses
     * O(total size / shard-file size)). */
@@ -154,19 +152,18 @@ object Sampling {
     * likelier to be kept. Both the draw and the IEEE division are
     * bit-identical in DuckDB, so the winner set is engine- and
     * partitioning-independent (a `rand()`-keyed reservoir is neither).
-    * Selection runs through the shared salted two-phase
-    * [[Ranking.saltedTopK]] — no task ever sorts a whole source's
-    * candidate list. */
+    * Selection runs through the shared [[Ranking.topK]], whose map-side
+    * group limit means no task ever sorts a whole source's candidate
+    * list. */
   def weightedSample(spark: SparkSession, dir: String,
                      k: Int = WeightedK): DataFrame =
-    Ranking.saltedTopK(
+    Ranking.topK(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("n_chars"),
           (h8("wsample", col("doc_id")).cast("double") / col("n_chars"))
             .as("priority")),
       part = Seq(col("source")),
-      ord = Seq(col("priority").asc, col("doc_id").asc),
-      saltOn = col("doc_id"), k = k, saltBuckets = 32)
+      ord = Seq(col("priority").asc, col("doc_id").asc), k = k)
 
   /** Domain-mix accounting: per-source doc/token totals, each source's
     * token share, and the resampling multiplier that would equalize the

@@ -198,27 +198,30 @@ object Similarity {
   /** Brute-force cosine top-k: the first NumQueries vectors against the
     * whole corpus. The query side is bounded ⇒ broadcast (legitimately:
     * it does NOT grow with SF); one pass over the corpus computes all
-    * scores, then a salted two-phase row_number keeps the top k per
-    * query without ever sorting a query's full candidate list in one
-    * task. */
+    * scores, then [[Ranking.topK]] keeps the top k per query — its
+    * map-side group limit means no task ever sorts a query's full
+    * candidate list. */
   def topkCosine(spark: SparkSession, dir: String,
-                 k: Int = TopK, saltBuckets: Int = 64): DataFrame =
-    topkCosineOf(corpus(spark, dir), k, saltBuckets)
+                 k: Int = TopK): DataFrame =
+    topkCosineOf(corpus(spark, dir), k)
 
   /** [[topkCosine]] over an already-built [[corpus]] frame. */
-  private def topkCosineOf(c: DataFrame, k: Int,
-                           saltBuckets: Int = 64): DataFrame = {
+  private def topkCosineOf(c: DataFrame, k: Int): DataFrame = {
     val q = c.select(col("vec_id").as("q_id"), col("v").as("qv"),
       col("nv").as("nq")).where(col("q_id") < NumQueries)
     val scored = c.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
-    Ranking.saltedTopK(scored,
-      part = Seq(col("q_id")),
-      ord = Seq(col("cosine").desc, col("vec_id").asc),
-      saltOn = col("vec_id"), k = k, saltBuckets = saltBuckets)
+    topCosine(scored, k)
   }
+
+  /** Top k per q_id by (cosine desc, vec_id asc): the one ranking every
+    * query-side cosine top-k here shares, so exact, LSH, IVF and served
+    * IVF results agree on tie-breaks. */
+  private def topCosine(scored: DataFrame, k: Int): DataFrame =
+    Ranking.topK(scored, part = Seq(col("q_id")),
+      ord = Seq(col("cosine").desc, col("vec_id").asc), k = k)
 
   /** MMR candidate-pool size (top-R by relevance feeds the greedy
     * diversifier) and the number of diversified results kept. */
@@ -235,7 +238,7 @@ object Similarity {
     * embedding model nothing late in training; the hardest negatives
     * are exactly the high-similarity cross-group neighbors this
     * returns. Same scale shape as the exact ANN baseline: bounded
-    * anchor set broadcast, salted two-phase top-k (no global sort);
+    * anchor set broadcast, grouped [[Ranking.topK]] (no global sort);
     * past broadcastability the candidates come from the IVF index's
     * probed cells, identical tail. Self-pairs need no filter — the
     * anchor shares its own label and is excluded with its group. */
@@ -249,9 +252,7 @@ object Similarity {
       .where(col("label") =!= col("q_label"))
       .select(col("q_id"), col("vec_id"), col("label"),
         (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
-    Ranking.saltedTopK(scored, part = Seq(col("q_id")),
-      ord = Seq(col("cosine").desc, col("vec_id").asc),
-      saltOn = col("vec_id"), k = k, saltBuckets = 64)
+    topCosine(scored, k)
   }
 
   /** Margin-based bitext mining (the Artetxe–Schwenk criterion) — the
@@ -387,14 +388,11 @@ object Similarity {
       .withColumn("mask", explode(typedLit(ProbeMasks)))
       .withColumn("bucket", col("bucket").bitwiseXOR(col("mask")))
       .drop("mask")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    c.join(broadcast(q), "bucket")
+    val scored = c.join(broadcast(q), "bucket")
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("bucket"),
         (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topCosine(scored, k)
   }
 
   /** IVF parameters: k = max(MinCentroids, ⌈√N⌉) centroids (VERDICT r6
@@ -494,14 +492,11 @@ object Similarity {
     val candidates = c.join(cells, "vec_id")
       .join(probes, "cell")
       .where(col("vec_id") =!= col("q_id"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    candidates
+    val scored = candidates
       .join(broadcast(q), "q_id")
       .select(col("q_id"), col("vec_id"), col("cell"),
         (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topCosine(scored, k)
   }
 
   /** Embedding-cosine near-duplicate pairs over BANDED LSH (VERDICT r6
@@ -532,7 +527,7 @@ object Similarity {
   }
 
   /** Build/serve split for the kNN GRAPH (r17, VERDICT r16 #7): the
-    * band-join + exact-rescore + salted top-k chain is the standing
+    * band-join + exact-rescore + top-k chain is the standing
     * ×100 top line (74.2 s at sf10), and in a deployment the kNN graph
     * is a once-per-corpus-version ARTIFACT its consumers (hard-negative
     * mining per training epoch, neighborhood stats, recall panels)
@@ -722,10 +717,10 @@ object Similarity {
     * VERDICT r6 #1; the B tables replace radius-1 multi-probe as the
     * recall lever), the distinct collapses pairs colliding in several
     * tables BEFORE vectors are joined back, and per-vector selection
-    * runs through the shared salted two-phase [[Ranking.saltedTopK]].
-    * Vectors colliding with nothing in any table have no neighbors. */
-  def knnJoin(spark: SparkSession, dir: String, k: Int = KnnK,
-              saltBuckets: Int = 16): DataFrame = {
+    * runs through the shared [[Ranking.topK]]. Vectors colliding with
+    * nothing in any table have no neighbors. */
+  def knnJoin(spark: SparkSession, dir: String,
+              k: Int = KnnK): DataFrame = {
     val n = corpusSize(spark, dir)
     val h = tablePlanesFor(n)
     val c = corpus(spark, dir)
@@ -744,10 +739,8 @@ object Similarity {
     val scored = cand.join(va, "vec_id").join(vb, "nn_id")
       .select(col("vec_id"), col("nn_id"),
         (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
-    Ranking.saltedTopK(scored,
-      part = Seq(col("vec_id")),
-      ord = Seq(col("cosine").desc, col("nn_id").asc),
-      saltOn = col("nn_id"), k = k, saltBuckets = saltBuckets)
+    Ranking.topK(scored, part = Seq(col("vec_id")),
+      ord = Seq(col("cosine").desc, col("nn_id").asc), k = k)
   }
 
   /** ANN recall report — the standing-deployment health check "is the
@@ -822,10 +815,7 @@ object Similarity {
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
-    val exact = Ranking.saltedTopK(scored,
-      part = Seq(col("q_id")),
-      ord = Seq(col("cosine").desc, col("vec_id").asc),
-      saltOn = col("vec_id"), k = k, saltBuckets = 64)
+    val exact = topCosine(scored, k)
     recallReportOf(approx, exact, k)
   }
 
@@ -1081,15 +1071,12 @@ object Similarity {
     val postings = Takedown.applyDeletes(
       spark.read.parquet(s"$root/postings"),
       s"$root/deletes", idCol = "vec_id")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    postings.join(broadcast(probes), "cell")
+    val candidates = postings.join(broadcast(probes), "cell")
       .join(broadcast(queries), Seq("q_id"))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("cell"),
         (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topCosine(candidates, k)
   }
 
   /** Lloyd's k-means refinement for the IVF coarse index: starting from

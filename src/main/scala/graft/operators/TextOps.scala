@@ -562,8 +562,8 @@ object TextOps {
     * (term, lang) frame (each doc has one lang, so per-lang doc counts
     * sum to the corpus df) — aggregating postings separately for tf and
     * df would plan the explode subtree twice, the r1 double-scan
-    * lesson. Final per-language top-k goes through the shared salted
-    * two-phase [[Ranking.saltedTopK]]. */
+    * lesson. Final per-language top-k goes through the shared
+    * [[Ranking.topK]]. */
   def tfidfTerms(spark: SparkSession, dir: String,
                  k: Int = TfidfK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -583,10 +583,8 @@ object TextOps {
       .withColumn("score",
         col("tf").cast("double") * col("n_corpus") / col("df"))
       .drop("n_corpus")
-    Ranking.saltedTopK(scored,
-      part = Seq(col("lang")),
-      ord = Seq(col("score").desc, col("term").asc),
-      saltOn = Hash.h8("tfidf", col("term")), k = k, saltBuckets = 8)
+    Ranking.topK(scored, part = Seq(col("lang")),
+      ord = Seq(col("score").desc, col("term").asc), k = k)
   }
 
   /** Chunk window size / stride (chars) for [[chunkDocs]]. */
@@ -638,9 +636,9 @@ object TextOps {
     * Java regex engine Spark's `regexp_extract_all` uses, same
     * pattern, locale-independent lowercase — pinned by the unchanged
     * DuckDB oracle twin. The global top-k runs through the shared
-    * salted two-phase [[Ranking.saltedTopK]] (partition-less top-k is
-    * exactly where the salt matters — phase 1 spreads the global
-    * sort). */
+    * [[Ranking.topK]] with no partition, which Spark plans as
+    * TakeOrderedAndProject: each partition keeps a k-row heap and the
+    * driver merges them — no exchange, no global sort. */
   def bpeMergeCandidates(spark: SparkSession, dir: String,
                          k: Int = BpeTopK): DataFrame = {
     import spark.implicits._
@@ -667,10 +665,8 @@ object TextOps {
       .groupBy(col("pair"))
       .agg(count(lit(1)).as("n_occurrences"))
       .select(col("pair"), col("n_occurrences"))
-    Ranking.saltedTopK(counted,
-      part = Seq.empty,
-      ord = Seq(col("n_occurrences").desc, col("pair").asc),
-      saltOn = Hash.h8("bpe", col("pair")), k = k, saltBuckets = 16)
+    Ranking.topK(counted, part = Seq.empty,
+      ord = Seq(col("n_occurrences").desc, col("pair").asc), k = k)
   }
 
   /** BPE ENCODE — the application step completing [[bpeMergeCandidates]]
@@ -770,8 +766,8 @@ object TextOps {
     * training input (mine → encode → ids; [[bpeRoundtrip]] is the
     * inverse leg): a bounded vocabulary of the `vocabSize` most
     * frequent tokens gets dense ids 0..V−1 by (count DESC, token ASC)
-    * — the deterministic rank, via the same salted two-phase
-    * [[Ranking.saltedTopK]] every global top-k here uses — and each
+    * — the deterministic rank, via the same [[Ranking.topK]] every
+    * global top-k here uses — and each
     * document becomes its ordered id sequence (md5-pinned, so the
     * hash pins id VALUES and ORDER both), with out-of-vocab tokens
     * mapped to the reserved UNK id V and counted per doc.
@@ -799,7 +795,7 @@ object TextOps {
 
   /** The (doc_id, pos, id) token-id stream under the bounded top-V
     * vocab — one definition shared by [[bpeIds]] and [[packIds]] so the
-    * id assignment (salted top-V rank, UNK = V) can never drift between
+    * id assignment (top-V rank, UNK = V) can never drift between
     * the per-doc and packed emissions. */
   private def bpeIdStream(enc: DataFrame, vocabSize: Int): DataFrame = {
     val toks = enc
@@ -807,9 +803,8 @@ object TextOps {
         posexplode(split(col("enc"), " ")).as(Seq("pos", "tok")))
       .where(col("tok") =!= "")
     val counted = toks.groupBy(col("tok")).agg(count(lit(1)).as("n"))
-    val vocab = Ranking.saltedTopK(counted, Seq.empty,
-        Seq(col("n").desc, col("tok").asc),
-        Hash.h8("bpevocab", col("tok")), vocabSize, 16)
+    val vocab = Ranking.topK(counted, Seq.empty,
+        Seq(col("n").desc, col("tok").asc), vocabSize)
       .select(col("tok"), (col("rank") - 1).cast("int").as("id"))
     toks.join(broadcast(vocab), Seq("tok"), "left")
       .select(col("doc_id"), col("pos"),
@@ -1101,8 +1096,8 @@ object TextOps {
     * aggregate over it (count of postings rows = df; sum of tf_doc =
     * tf). Deliberately NO global rank column: ordering a whole
     * vocabulary needs a single-task global sort — the consumer sorts
-    * its own (small) slice, or [[bpeMergeCandidates]]-style salted
-    * top-k takes the head. */
+    * its own (small) slice, or a [[bpeMergeCandidates]]-style
+    * [[Ranking.topK]] takes the head. */
   /** SymSpell-style fuzzy vocabulary matching: all DISTINCT token pairs
     * within Levenshtein distance ≤ `maxDist` (default 2), found by
     * deletion-neighborhood blocking + exact verify — the spelling-

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Mint a scaled-up fixture dir (VERDICT r8 #5): `mult` key-shifted copies
   * of a base fixture (default sf0.1 ×10 ≈ sf1), so the banded LSH, IVF
-  * build, salted top-k and window tiers can be OBSERVED above 600 k rows
+  * build, grouped top-k and window tiers can be OBSERVED above 600 k rows
   * instead of argued about. Usage: `runMain graft.tools.MintSf <baseDir>
   * <outDir> [mult]`.
   *

@@ -396,12 +396,12 @@ class CorpusAssemblySpec extends SparkSpec {
     }
   }
 
-  test("exactSample: exactly k per stratum, salt-phase never drops a winner") {
+  test("exactSample: exactly k per stratum, never drops a winner") {
     val k = 7
     val got = Sampling.exactSample(spark, SparkSpec.Sf001, k = k)
     val sizes = got.groupBy("lang").count().collect()
     assert(sizes.nonEmpty && sizes.forall(_.getLong(1) == k))
-    // Unsalted single-window reference picks the identical winners.
+    // A hand-written single-window reference picks the identical winners.
     import org.apache.spark.sql.expressions.Window
     val ref = Tables.documents(spark, SparkSpec.Sf001)
       .select(col("doc_id"), col("lang"),

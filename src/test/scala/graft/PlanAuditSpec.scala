@@ -483,6 +483,26 @@ class PlanAuditSpec extends SparkSpec {
       s"a range-exchange global sort must never materialize for LIMIT n:\n$p")
   }
 
+  test("grouped top-k: one map-side group limit, one exchange") {
+    // Ranking.topK is row_number() <= k over (part, ord): Spark cuts
+    // each group to k rows per map task (a Partial WindowGroupLimit)
+    // before the one exchange, then ranks the survivors (Final). A
+    // second Partial means a second ranking phase and exchange crept
+    // back in.
+    Seq("q_topk_similarity", "q_top_products", "q_exact_sample",
+      "q_hard_negatives", "q_tfidf_terms").foreach { name =>
+      val p = finalPlan(q(name))
+      assert(count(p, "WindowGroupLimit .*Partial") == 1,
+        s"$name should plan exactly one partial group limit:\n$p")
+    }
+    // Partition-less top-k plans as per-partition k-row heaps merged on
+    // the driver: no window sees more than k rows.
+    val bpe = finalPlan(q("q_bpe_merges"))
+    assert(bpe.contains("TakeOrderedAndProject") &&
+      !bpe.contains("WindowGroupLimit"),
+      s"global top-k must take the heap path:\n$bpe")
+  }
+
   test("business queries push projections into the scans") {
     val p = finalPlan(q("q_performance_metrics"))
     assert(count(p, "PushedFilters: \\[[^\\]]") >= 1, p)

@@ -111,9 +111,9 @@ class RelationalSpec extends SparkSpec {
       windowed.exceptAll(shipped).isEmpty)
   }
 
-  test("topProductsPerCountry: salted two-phase equals single-window top-k") {
+  test("topProductsPerCountry equals a hand-written single-window top-k") {
     val m = Relational.masterModel(spark, sf0001)
-    val got = Relational.topProductsPerCountry(m, k = 3, saltBuckets = 8)
+    val got = Relational.topProductsPerCountry(m, k = 3)
     import org.apache.spark.sql.expressions.Window
     val byCountry = m.groupBy($"transaction_country".as("country"), $"product_id")
       .agg(Relational.rsum2($"income").as("total_income"))
