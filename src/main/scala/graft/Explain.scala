@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: prints the formatted physical plan of one query (or a
   * scan/exchange summary of all) so partition/pushdown/broadcast decisions
@@ -12,13 +11,7 @@ object Explain {
     // r17: every name after the sfDir is dumped (one JVM for a batch of
     // before/after plan artifacts instead of one sbt launch per query).
     val which = if (args.length > 1) Some(args.drop(1).toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => which.forall(_.contains(q._1)))
     // EXPLAIN_FINAL=1 (r18): for named queries, EXECUTE first and print

@@ -1687,14 +1687,15 @@ object SparkEntry {
           sources.Ingest.transactionsSchema)
     }
     // ONE raw→master normalization for all five formats — text and
-    // JDBC must stay in lockstep against the shared oracle.
-    raw.select(
+    // JDBC must stay in lockstep against the shared oracle. The F1/F2
+    // date and time parts come from the raw string, before the parse.
+    sources.Ingest.withDateParts(raw, col("date_time")).select(
       col("transaction_id"),
       col("income").cast("double").as("income"),
       col("country"),
       to_timestamp(col("date_time"), "yyyy-MM-dd HH:mm:ss").as("date_time"),
-      substring(col("date_time"), 1, 10).as("date"),
-      substring(col("date_time"), 12, 8).as("time"))
+      col("date"),
+      col("time"))
   }
 
   // ---- oracle SQL fragments shared by the LLM-pipeline queries ----

@@ -107,7 +107,7 @@ object Tables {
             require(tz == "UTC",
               s"Tables.events requires spark.sql.session.timeZone=UTC to " +
                 s"read TIMESTAMP_NTZ fixtures losslessly (session has " +
-                s"'$tz'); set it in the SparkSession builder.")
+                s"'$tz'); build the session with graft.Session.local().")
             inf.withColumn("ts",
               org.apache.spark.sql.functions.col("ts").cast(TimestampType))
           case Some(LongType) => rawNanosRead

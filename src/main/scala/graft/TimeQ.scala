@@ -1,11 +1,7 @@
 package graft
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus).config("spark.ui.enabled","false")
-      .config("spark.sql.session.timeZone","UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     for (q <- args) {
       val t0 = System.nanoTime()
       // Construction INSIDE the window (matching Bench): queries that

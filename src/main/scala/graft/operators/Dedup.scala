@@ -787,7 +787,7 @@ object Dedup {
         lit(1L << outShift)
     }.reduce(_ + _)
 
-  private def wideKeyCol(t: Seq[Int]): Column =
+  private[graft] def wideKeyCol(t: Seq[Int]): Column =
     t.zipWithIndex.map { case (b, pos) =>
       wideBlockCol(b) * lit(1L << (11 * (2 - pos)))
     }.reduce(_ + _)
@@ -976,35 +976,6 @@ object Dedup {
       case Some(_) => verify(joined).distinct()
     }
     (pairs, quarantine)
-  }
-
-  /** The pre-r18 distinct-based pair fold, kept VERBATIM as the
-    * equivalence twin TextDedupSpec pins the canonical-band rewrite
-    * against (the customerRetentionExpand discipline) and the
-    * `graft.Profile minband` A/B's old arm: same banded candidate
-    * join, duplicates folded by a full exchange over the verified
-    * pair stream instead of the per-row minBand filter. */
-  private[graft] def simhash64NeighborsDistinct(sig: DataFrame,
-      wide: Boolean, maxHamming: Int = 3): DataFrame = {
-    graft.expressions.HammingDistance.register(sig.sparkSession)
-    val bands = if (wide) WideTables.map(wideKeyCol)
-                else Seq(col("q0"), col("q1"), col("q2"), col("q3"))
-    val quarters = sig.select(col("doc_id"), col("q0"), col("q1"),
-      col("q2"), col("q3"),
-      posexplode(array(bands: _*)).as(Seq("band_idx", "band_val")))
-    val a = quarters.select(col("doc_id").as("doc_a"),
-      col("q0").as("a0"), col("q1").as("a1"), col("q2").as("a2"),
-      col("q3").as("a3"), col("band_idx"), col("band_val"))
-    val b = quarters.select(col("doc_id").as("doc_b"),
-      col("q0").as("b0"), col("q1").as("b1"), col("q2").as("b2"),
-      col("q3").as("b3"), col("band_idx"), col("band_val"))
-    a.join(b, Seq("band_idx", "band_val"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        (expr("hamming(a0, b0)") + expr("hamming(a1, b1)") +
-          expr("hamming(a2, b2)") + expr("hamming(a3, b3)")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
   }
 
   /** 16-bit SimHash over the (multiplicity-weighted) token stream: bit k

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Nodes are the corpus `source` values; edges are CROSS-source
   * verified near-duplicate pairs from the standing pair table
   * ([[Dedup.sourceOverlapFrom]] — content observed on both ends),
-  * symmetrized, weighted by pair count. [[sourceAuthority]] runs a
+  * symmetrized, weighted by pair count. [[authorityFrom]] runs a
   * fixed-iteration damped PageRank over that graph.
   *
   * Scale shape: the rank vector stays DISTRIBUTED (one row per source
@@ -153,26 +153,20 @@ object Graph {
       (col("r").cast("double") / lit(Scale.toDouble)).as("authority"))
   }
 
-  /** Corpus entry point: nodes = every distinct `source` in the corpus
-    * (isolated sources still hold teleport mass — an unsyndicated
-    * domain has LOW authority, not undefined authority), edges = the
-    * verified cross-source near-dup counts served from the standing
-    * pair table. */
-  def sourceAuthority(spark: SparkSession, dir: String,
-                      pairFrame: DataFrame): DataFrame =
-    authorityFrom(graft.Tables.documents(spark, dir).select(col("source")),
-      Dedup.sourceOverlapFrom(spark, dir, pairFrame))
-
-  /** [[sourceAuthority]] over a prebuilt OVERLAP frame (r18, VERDICT
-    * r17 #4): the per-run residual cost of the pair-table form was the
-    * overlap rollup itself — two doc_id→source joins against the
-    * corpus plus the source-pair aggregate, rebuilt on every authority
-    * run even though the overlap matrix is a once-per-corpus-version
-    * artifact exactly like the pair table it derives from. A standing
-    * deployment maintains it next to the pair table; this entry reads
-    * it. (string, string, long) rows round-trip parquet bit-exactly,
-    * and the overlap build stays benched as `q_source_overlap`, whose
-    * computation is verbatim the staging build. */
+  /** Corpus entry point over a prebuilt OVERLAP frame (r18, VERDICT
+    * r17 #4): nodes = every distinct `source` in the corpus (isolated
+    * sources still hold teleport mass — an unsyndicated domain has LOW
+    * authority, not undefined authority), edges = the verified
+    * cross-source near-dup counts. The per-run residual cost of the
+    * retired pair-table form was the overlap rollup itself — two
+    * doc_id→source joins against the corpus plus the source-pair
+    * aggregate, rebuilt on every authority run even though the overlap
+    * matrix is a once-per-corpus-version artifact exactly like the pair
+    * table it derives from. A standing deployment maintains it next to
+    * the pair table; this entry reads it. (string, string, long) rows
+    * round-trip parquet bit-exactly, and the overlap build stays benched
+    * as `q_source_overlap`, whose computation is verbatim the staging
+    * build. */
   def sourceAuthorityFromOverlap(spark: SparkSession, dir: String,
                                  overlap: DataFrame): DataFrame =
     authorityFrom(graft.Tables.documents(spark, dir).select(col("source")),

@@ -203,7 +203,7 @@ object Relational {
     * the format expression once per GROUP instead of once per
     * fact-stream row. Same-JVM A/B at sf0.1: salesKpi 1.70→1.51 /
     * 1.48→1.32 s, retention 1.59→1.39 / 1.45→1.32 s across interleaved
-    * arms. The spec twins (performanceMetricsTwoPhase,
+    * arms. The RelationalSpec twins (performanceMetricsTwoPhase,
     * customerRetentionExpand) deliberately KEEP the string key, so the
     * existing bit-identity pins also pin this rewrite.
     *
@@ -236,45 +236,6 @@ object Relational {
         col("average_campaign_cost"), col("total_profit"),
         col("average_transaction_value"))
 
-  /** The 100 TB shape for [[performanceMetrics]]'s exact distinct count
-    * (SURVEY §4 watch list): Spark plans mixed distinct + plain
-    * aggregates as an Expand that doubles every input row through the
-    * shuffle; this two-phase form pre-aggregates on (group keys,
-    * transaction_id) — map-side combine collapses the orders→lineitem
-    * fanout before any exchange — then finishes with a plain aggregate
-    * where the distinct count is a row count. Bit-identical results
-    * (spec-proven): all money passes unrounded through phase 1 and hits
-    * the same round(·, 2/3) at the end, which recovers the exact value
-    * in any summation order; null-bearing rows contribute to exactly
-    * the same aggregates as in the Expand form (per-column non-null
-    * counts, per-row profit differences, null-skipping sums). Only
-    * requirement: transaction_id non-null (it is the join key — a null
-    * id would count as one distinct group here vs zero in
-    * countDistinct). */
-  def performanceMetricsTwoPhase(master: DataFrame): DataFrame =
-    master
-      .groupBy(col("transaction_country").as("country"),
-        dateStr(col("transaction_datetime")).as("date"),
-        col("transaction_id"))
-      .agg(
-        sum(col("income")).as("s_income"),
-        sum(col("campaign_cost")).as("s_cost"),
-        sum(col("income") - col("campaign_cost")).as("s_profit"),
-        count(col("income")).as("n_income"),
-        count(col("campaign_cost")).as("n_cost"))
-      .groupBy(col("country"), col("date"))
-      .agg(
-        count(lit(1)).as("transaction_count"),
-        round(sum(col("s_income")), 2).as("total_income"),
-        round(sum(col("s_cost")), 3).as("total_campaign_cost"),
-        (round(sum(col("s_income")), 2) / sum(col("n_income")))
-          .as("average_income"),
-        (round(sum(col("s_cost")), 3) / sum(col("n_cost")))
-          .as("average_campaign_cost"),
-        round(sum(col("s_profit")), 3).as("total_profit"),
-        (round(sum(col("s_income")), 2) / count(lit(1)))
-          .as("average_transaction_value"))
-
   /** b_product_performance.sql:1-18 — A2 three-key group-by. DATE
     * group key per [[performanceMetrics]].
     *
@@ -295,7 +256,7 @@ object Relational {
     * and the key space (product × country × date) grows with the
     * data, so there is no local-mode constant here. Result-identical
     * trivially — partitioning does not change grouping semantics —
-    * and spec-pinned against [[productPerformanceTwoExchange]]. */
+    * and spec-pinned in RelationalSpec against the two-exchange shape. */
   def productPerformance(master: DataFrame): DataFrame =
     productPerformanceAgg(
       master
@@ -307,16 +268,7 @@ object Relational {
         .repartition(col("product_id"), col("country"), col("_d"))
         .groupBy(col("product_id"), col("country"), col("_d")))
 
-  /** [[productPerformance]]'s pre-r18 planner-default two-exchange
-    * shape, kept for the Profile A/B (`prodperf`) and the
-    * RelationalSpec identity pin. */
-  def productPerformanceTwoExchange(master: DataFrame): DataFrame =
-    productPerformanceAgg(
-      master.groupBy(col("product_id"),
-        col("transaction_country").as("country"),
-        to_date(col("transaction_datetime")).as("_d")))
-
-  private def productPerformanceAgg(
+  private[graft] def productPerformanceAgg(
       grouped: org.apache.spark.sql.RelationalGroupedDataset): DataFrame =
     grouped
       .agg(
@@ -370,7 +322,7 @@ object Relational {
     * the orders→lineitem fanout BEFORE the exchange, one row per
     * customer-day, with two 1-or-null flags; phase 2 turns each
     * conditional distinct count into a non-null flag count. Identity
-    * argument (same class as [[performanceMetricsTwoPhase]], spec-pinned
+    * argument (same class as performanceMetricsTwoPhase, spec-pinned
     * in RelationalSpec):
     *  - customer_id is a join key (o_custkey), hence non-null, so
     *    count(*) over phase-1 groups ≡ countDistinct(customer_id);
@@ -395,22 +347,6 @@ object Relational {
       .select(col("country"), dateStr(col("_d")).as("date"),
         col("unique_customers"), col("paying_customers"),
         col("non_paying_customers"))
-
-  /** The pre-r17 Expand form of [[customerRetention]], kept as the
-    * equivalence twin RelationalSpec pins the rewrite against (the
-    * performanceMetricsTwoPhase discipline, in the opposite
-    * direction: here the DIRECT form is the reference twin and the
-    * two-phase form is shipped). */
-  private[graft] def customerRetentionExpand(master: DataFrame): DataFrame =
-    master
-      .groupBy(col("transaction_country").as("country"),
-        dateStr(col("transaction_datetime")).as("date"))
-      .agg(
-        countDistinct(col("customer_id")).as("unique_customers"),
-        countDistinct(when(col("income") > 0, col("customer_id")))
-          .as("paying_customers"),
-        countDistinct(when(col("income") === 0, col("customer_id")))
-          .as("non_paying_customers"))
 
   /** E3 rollup (cloud_composer/load_campaigns_csv.py:7-88): per-source
     * partial aggregates with literal padding columns (P3) → positional

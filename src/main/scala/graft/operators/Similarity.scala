@@ -561,23 +561,6 @@ object Similarity {
   def embeddingPairTable(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Diagnostic accessor (r17, VERDICT r16 #7): the kNN band join's
-    * candidate-pair volume at signature width h (default: the
-    * envelope-derived width for the corpus). Evidence feed for the
-    * candidates-vs-h growth curve in PLANS.md — [[graft.KnnProbe]]
-    * prints it at h−1/h/h+1 across the sf0.1/sf1/sf10 mints so the
-    * [[tablePlanesFor]] policy's growth is measured, not asserted. */
-  def knnCandidateCount(spark: SparkSession, dir: String,
-                        hOverride: Option[Int] = None): (Int, Long, Long) = {
-    val n = corpusSize(spark, dir)
-    val h = hOverride.getOrElse(tablePlanesFor(n))
-    val c = corpus(spark, dir)
-    val cands = bandedCollisions(bandedSignatureRows(c, h), _ =!= _)
-      .select(col("id_a").as("vec_id"), col("id_b").as("nn_id"))
-      .distinct().count()
-    (h, n, cands)
-  }
-
   def embeddingNearDup(spark: SparkSession, dir: String,
                        threshold: Double = 0.5): DataFrame = {
     val n = corpusSize(spark, dir)

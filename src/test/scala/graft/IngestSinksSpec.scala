@@ -75,6 +75,17 @@ class IngestSinksSpec extends SparkSpec {
       && r(1).getString(2) == "load_trx_txt")
   }
 
+  test("F8: a minted object name has the landed form and routes back via F7") {
+    val name = Sinks.mintObjectName("campaigns", "csv",
+      java.time.LocalDate.of(2023, 7, 6))
+    assert(name.matches("campaigns_20230706_[0-9a-f]{4}\\.csv"), name)
+    val (t, e, dag) = Ingest.routeFilename($"path")
+    val r = Seq(s"ingested/csv/$name").toDF("path")
+      .select(t, e, dag).head()
+    assert((r.getString(0), r.getString(1), r.getString(2)) ==
+      ("campaigns", "csv", "load_campaigns_csv"))
+  }
+
   test("compact rewrites a many-file layer into size-targeted files") {
     val dir = tmpDir("compact")
     // Accrete a fragmented layer: 10 tiny appends = many small files.

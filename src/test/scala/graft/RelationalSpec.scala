@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
 
@@ -7,6 +8,7 @@ import graft.operators.Relational
   * (A4/A5), positional union (§2.5), cast/null edges (F1-F6). */
 class RelationalSpec extends SparkSpec {
   import spark.implicits._
+  import Relational.{dateStr, productPerformanceAgg}
 
   test("J1: non-unique composite keys produce m:n fanout") {
     val left = Seq(("Peru", "d1", 1), ("Peru", "d1", 2), ("Chile", "d2", 3))
@@ -124,10 +126,73 @@ class RelationalSpec extends SparkSpec {
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty)
   }
 
+  /** The 100 TB shape for [[Relational.performanceMetrics]]'s exact
+    * distinct count (SURVEY §4 watch list): Spark plans mixed distinct + plain
+    * aggregates as an Expand that doubles every input row through the
+    * shuffle; this two-phase form pre-aggregates on (group keys,
+    * transaction_id) — map-side combine collapses the orders→lineitem
+    * fanout before any exchange — then finishes with a plain aggregate
+    * where the distinct count is a row count. Bit-identical results
+    * (spec-proven): all money passes unrounded through phase 1 and hits
+    * the same round(·, 2/3) at the end, which recovers the exact value
+    * in any summation order; null-bearing rows contribute to exactly
+    * the same aggregates as in the Expand form (per-column non-null
+    * counts, per-row profit differences, null-skipping sums). Only
+    * requirement: transaction_id non-null (it is the join key — a null
+    * id would count as one distinct group here vs zero in
+    * countDistinct). */
+  private def performanceMetricsTwoPhase(master: DataFrame): DataFrame =
+    master
+      .groupBy(col("transaction_country").as("country"),
+        dateStr(col("transaction_datetime")).as("date"),
+        col("transaction_id"))
+      .agg(
+        sum(col("income")).as("s_income"),
+        sum(col("campaign_cost")).as("s_cost"),
+        sum(col("income") - col("campaign_cost")).as("s_profit"),
+        count(col("income")).as("n_income"),
+        count(col("campaign_cost")).as("n_cost"))
+      .groupBy(col("country"), col("date"))
+      .agg(
+        count(lit(1)).as("transaction_count"),
+        round(sum(col("s_income")), 2).as("total_income"),
+        round(sum(col("s_cost")), 3).as("total_campaign_cost"),
+        (round(sum(col("s_income")), 2) / sum(col("n_income")))
+          .as("average_income"),
+        (round(sum(col("s_cost")), 3) / sum(col("n_cost")))
+          .as("average_campaign_cost"),
+        round(sum(col("s_profit")), 3).as("total_profit"),
+        (round(sum(col("s_income")), 2) / count(lit(1)))
+          .as("average_transaction_value"))
+
+  /** The pre-r17 Expand form of [[Relational.customerRetention]], kept
+    * as the equivalence twin this spec pins the rewrite against (the
+    * performanceMetricsTwoPhase discipline, in the opposite
+    * direction: here the DIRECT form is the reference twin and the
+    * two-phase form is shipped). */
+  private def customerRetentionExpand(master: DataFrame): DataFrame =
+    master
+      .groupBy(col("transaction_country").as("country"),
+        dateStr(col("transaction_datetime")).as("date"))
+      .agg(
+        countDistinct(col("customer_id")).as("unique_customers"),
+        countDistinct(when(col("income") > 0, col("customer_id")))
+          .as("paying_customers"),
+        countDistinct(when(col("income") === 0, col("customer_id")))
+          .as("non_paying_customers"))
+
+  /** [[Relational.productPerformance]]'s pre-r18 planner-default
+    * two-exchange shape, kept as the identity pin's reference twin. */
+  private def productPerformanceTwoExchange(master: DataFrame): DataFrame =
+    productPerformanceAgg(
+      master.groupBy(col("product_id"),
+        col("transaction_country").as("country"),
+        to_date(col("transaction_datetime")).as("_d")))
+
   test("performanceMetrics: two-phase distinct is bit-identical to Expand form") {
     val m = Relational.masterModel(spark, SparkSpec.Sf001)
     val a = Relational.performanceMetrics(m)
-    val b = Relational.performanceMetricsTwoPhase(m)
+    val b = performanceMetricsTwoPhase(m)
     assert(a.count() > 0)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     // Identity must survive nulls (null-skipping sums, per-column
@@ -136,7 +201,7 @@ class RelationalSpec extends SparkSpec {
       when(pmod($"transaction_id", lit(97)) === 0, lit(null).cast("double"))
         .otherwise($"income"))
     val a2 = Relational.performanceMetrics(m2)
-    val b2 = Relational.performanceMetricsTwoPhase(m2)
+    val b2 = performanceMetricsTwoPhase(m2)
     assert(m2.where($"income".isNull).count() > 0)
     assert(a2.exceptAll(b2).isEmpty && b2.exceptAll(a2).isEmpty)
   }
@@ -144,7 +209,7 @@ class RelationalSpec extends SparkSpec {
   test("customerRetention: two-phase flags are bit-identical to the " +
       "Expand form") {
     val m = Relational.masterModel(spark, SparkSpec.Sf001)
-    val a = Relational.customerRetentionExpand(m)
+    val a = customerRetentionExpand(m)
     val b = Relational.customerRetention(m)
     assert(a.count() > 0)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
@@ -158,7 +223,7 @@ class RelationalSpec extends SparkSpec {
         .otherwise($"income"))
     assert(m2.where($"income".isNull).count() > 0)
     assert(m2.where($"income" === 0).count() > 0)
-    val a2 = Relational.customerRetentionExpand(m2)
+    val a2 = customerRetentionExpand(m2)
     val b2 = Relational.customerRetention(m2)
     assert(a2.exceptAll(b2).isEmpty && b2.exceptAll(a2).isEmpty)
   }
@@ -188,7 +253,7 @@ class RelationalSpec extends SparkSpec {
       "the planner-default two-exchange shape") {
     val m = Relational.masterModel(spark, SparkSpec.Sf001)
     val one = Relational.productPerformance(m)
-    val two = Relational.productPerformanceTwoExchange(m)
+    val two = productPerformanceTwoExchange(m)
     assert(one.count() > 0)
     assert(one.columns.toSeq == two.columns.toSeq)
     assert(one.exceptAll(two).isEmpty && two.exceptAll(one).isEmpty)

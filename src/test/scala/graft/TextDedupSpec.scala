@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, TextOps}
 
 /** Unit coverage for the text-analysis and dedup operator families. */
 class TextDedupSpec extends SparkSpec {
   import spark.implicits._
+  import Dedup.{WideTables, wideKeyCol}
 
   test("tokens/shingles edge cases: empty, short, whitespace-heavy") {
     val df = Seq("", "   ", "one", "one two", "one two three",
@@ -228,6 +230,34 @@ class TextDedupSpec extends SparkSpec {
       s"wide missed ${(narrow -- wide).size} / invented ${(wide -- narrow).size}")
   }
 
+  /** The pre-r18 distinct-based pair fold, kept VERBATIM as the
+    * equivalence twin the canonical-band rewrite is pinned against
+    * (RelationalSpec's customerRetentionExpand discipline): same banded
+    * candidate join, duplicates folded by a full exchange over the
+    * verified pair stream instead of the per-row minBand filter. */
+  private def simhash64NeighborsDistinct(sig: DataFrame,
+      wide: Boolean, maxHamming: Int = 3): DataFrame = {
+    graft.expressions.HammingDistance.register(sig.sparkSession)
+    val bands = if (wide) WideTables.map(wideKeyCol)
+                else Seq(col("q0"), col("q1"), col("q2"), col("q3"))
+    val quarters = sig.select(col("doc_id"), col("q0"), col("q1"),
+      col("q2"), col("q3"),
+      posexplode(array(bands: _*)).as(Seq("band_idx", "band_val")))
+    val a = quarters.select(col("doc_id").as("doc_a"),
+      col("q0").as("a0"), col("q1").as("a1"), col("q2").as("a2"),
+      col("q3").as("a3"), col("band_idx"), col("band_val"))
+    val b = quarters.select(col("doc_id").as("doc_b"),
+      col("q0").as("b0"), col("q1").as("b1"), col("q2").as("b2"),
+      col("q3").as("b3"), col("band_idx"), col("band_val"))
+    a.join(b, Seq("band_idx", "band_val"))
+      .where(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        (expr("hamming(a0, b0)") + expr("hamming(a1, b1)") +
+          expr("hamming(a2, b2)") + expr("hamming(a3, b3)")).as("hamming"))
+      .where(col("hamming") <= maxHamming)
+      .distinct()
+  }
+
   test("canonical-band pair fold is bit-identical to the distinct twin " +
       "(quarter and wide)") {
     // r18: the shipped form keeps each candidate pair only in its FIRST
@@ -240,7 +270,7 @@ class TextDedupSpec extends SparkSpec {
       val shipped =
         if (wide) Dedup.simhash64WideNeighborsOf(sig)._1
         else Dedup.simhash64NeighborsOf(sig)._1
-      val twin = Dedup.simhash64NeighborsDistinct(sig, wide)
+      val twin = simhash64NeighborsDistinct(sig, wide)
       assert(shipped.exceptAll(twin).isEmpty &&
         twin.exceptAll(shipped).isEmpty, s"wide=$wide pair set diverged")
       val rows = shipped.collect()
