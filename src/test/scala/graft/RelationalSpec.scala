@@ -127,9 +127,9 @@ class RelationalSpec extends SparkSpec {
   }
 
   /** The 100 TB shape for [[Relational.performanceMetrics]]'s exact
-    * distinct count (SURVEY §4 watch list): Spark plans mixed distinct + plain
-    * aggregates as an Expand that doubles every input row through the
-    * shuffle; this two-phase form pre-aggregates on (group keys,
+    * distinct count (SURVEY §4 watch list): Spark plans mixed distinct +
+    * plain aggregates as an Expand that doubles every input row through
+    * the shuffle; this two-phase form pre-aggregates on (group keys,
     * transaction_id) — map-side combine collapses the orders→lineitem
     * fanout before any exchange — then finishes with a plain aggregate
     * where the distinct count is a row count. Bit-identical results
