@@ -34,6 +34,10 @@ package graft
   * reported under a separate "macro" key on both output lines so the
   * cross-round micro "value" total stays comparable (sum-of-mins since
   * r6). SPARK_GRAFT_MACRO=0 skips them for quick micro iterations.
+  *
+  * Staging record: bench_full.json's "staging" list carries one
+  * {kind, sf, seconds, bytes} entry per once-per-corpus artifact
+  * ([[Staged.costs]]) — the build tier the untimed warmup absorbs.
   */
 object Bench {
   /** On the correctness surface but NOT timed.
@@ -305,8 +309,14 @@ object Bench {
     val macroStagesJson = macroRows
       .map { case (n, _, st) => s"${jstr(n)}:${jmap(st)}" }
       .mkString("{", ",", "}")
+    // The build tier the warmup pass absorbed: one entry per staged
+    // artifact (Staged.costs), never part of any timed figure.
+    val stagingJson = Staged.costs.toSeq.sortBy(_._1).map {
+      case ((kind, sf), c) =>
+        s"""{"kind":${jstr(kind)},"sf":${jstr(sf)},"seconds":${c.seconds},"bytes":${c.bytes}}"""
+    }.mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,"queries":${jmap(mins)},"queries_mean":${jmap(means)},"queries_reps":$repsJson,"queries_n_ok":$nOkJson,"macro":${jmap(macroMins)},"macro_stages":$macroStagesJson,"errors":$errJson,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,"queries":${jmap(mins)},"queries_mean":${jmap(means)},"queries_reps":$repsJson,"queries_n_ok":$nOkJson,"macro":${jmap(macroMins)},"macro_stages":$macroStagesJson,"staging":$stagingJson,"errors":$errJson,"sf":${jstr(sfDir)}}"""
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(fullPath),

@@ -1533,7 +1533,8 @@ object SparkEntry {
     * twin because the two paths share one score tail. */
   private def stagedLexIndex(s: SparkSession, d: String): String =
     Staged.once("lex", d) { dir =>
-      operators.Retrieval.buildLexIndex(s, d, s"$dir/lex")
+      operators.Retrieval.buildLexIndexBatch(s, graft.Tables.documents(s, d),
+        s"$dir/lex", operators.Compaction.BootstrapBatchId)
       s"$dir/lex"
     }
 
@@ -1593,13 +1594,16 @@ object SparkEntry {
 
   private def stagedPosIndex(s: SparkSession, d: String): String =
     Staged.once("pos", d) { dir =>
-      operators.Retrieval.buildPosIndex(s, d, s"$dir/pos")
+      operators.Retrieval.buildPosIndexBatch(s, graft.Tables.documents(s, d),
+        s"$dir/pos", operators.Compaction.BootstrapBatchId)
       s"$dir/pos"
     }
 
   private def stagedIvfIndex(s: SparkSession, d: String): String =
     Staged.once("ivf", d) { dir =>
-      operators.Similarity.buildIvfIndex(s, d, s"$dir/ivf")
+      operators.Similarity.buildIvfIndexBatch(s,
+        graft.Tables.embeddings(s, d), s"$dir/ivf",
+        operators.Compaction.BootstrapBatchId)
       s"$dir/ivf"
     }
 

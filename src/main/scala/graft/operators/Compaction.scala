@@ -7,8 +7,10 @@ import graft.sinks.Publish
 
 /** Exactly-once, READER-ATOMIC compaction for the batch_id-accreting
   * indexes (r13; generation protocol r14 — VERDICT r13 #1): every
-  * streaming-maintained index (lex, pos, pair/signature, IVF) lands
-  * each micro-batch under its own `batch_id=N` partition forever —
+  * maintained index (lex, pos, pair/signature, IVF) lands each batch
+  * under its own `batch_id=N` partition forever — a one-shot build is
+  * the [[Compaction.BootstrapBatchId]] batch, a stream adds one
+  * partition per micro-batch —
   * exactly-once by layout, but at one micro-batch a minute a year-old
   * index carries ~500k partitions per table and LISTING becomes the
   * scan. This pass folds all existing batch partitions into ONE
@@ -22,9 +24,8 @@ import graft.sinks.Publish
   * ROOT is versioned with the SAME marker machinery the corpus tables
   * use ([[Publish]]): generation `n` lives at `<indexPath>/v=n`, the
   * commit point is the token-verified marker `_latest/n`, and readers
-  * resolve their generation ONCE per query ([[resolveRoot]] — the flat
-  * `indexPath` itself until the first fold, for one-shot and
-  * stream-bootstrapped layouts). Phases:
+  * resolve their generation ONCE per query ([[resolveRoot]] — the
+  * bare `indexPath` itself until the first fold). Phases:
   *
   *  1. MATERIALIZE — the consolidated, delete-purged content of the
   *     ENTIRE next generation (all subdirs, the `_folded` ledgers, the
@@ -72,6 +73,15 @@ import graft.sinks.Publish
   *    takedown whose ids are already purged must not re-stamp a
   *    negative stats partial (double-subtraction). */
 object Compaction {
+
+  /** The reserved BOOTSTRAP partition id of every batch_id-keyed index:
+    * a one-shot build writes its whole corpus here
+    * ([[Retrieval.buildLexIndexBatch]] etc. at this id), and the
+    * deletes-only and pair/signature folds write their output here. It
+    * sits BELOW every stream id (foreachBatch ids start at 0), so a
+    * replayed stream batch can never clobber it; ids below it are
+    * [[Takedown.takedownLex]]'s stats-correction namespace. */
+  val BootstrapBatchId: Long = -1L
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
@@ -252,15 +262,15 @@ object Compaction {
   /** The shared fold decision: resolve the current generation,
     * enumerate accreted ingest batches and pending takedown batches,
     * and pick the fold id. None = nothing to do. A DELETES-ONLY fold
-    * (a one-shot flat index, or an already-consolidated one, under a
-    * takedown stream) is REAL work and folds under the bootstrap id -1
-    * — never a stream id, so the output partition collides with
-    * nothing (r14 review #4: an ingest-empty early return starved
-    * exactly that case — compactionDue kept firing on the accreting
-    * deletes while the fold never ran and the serve-path deleted-set
-    * broadcast grew without bound). The pinned-schema reads below
-    * handle the flat layouts transparently (no batch_id column is
-    * discovered; none is selected). */
+    * (a one-shot index — its single [[BootstrapBatchId]] partition —
+    * or an already-consolidated one, under a takedown stream) is REAL
+    * work and folds under its one existing batch id, or under
+    * [[BootstrapBatchId]] when no batch partition exists — never a
+    * fresh stream id, so the output partition collides with nothing
+    * (r14 review #4: an ingest-empty early return starved exactly that
+    * case — compactionDue kept firing on the accreting deletes while
+    * the fold never ran and the serve-path deleted-set broadcast grew
+    * without bound). */
   private case class FoldPlan(cur: String, ingest: Seq[Long],
                               takedowns: Seq[Long], foldId: Long,
                               newFolded: Seq[(Long, Long)],
@@ -278,7 +288,7 @@ object Compaction {
     val ingest = batchIds(fs, at(accretingSub))
     val takedowns = batchIds(fs, at(deletesSub))
     if (ingest.size <= 1 && takedowns.isEmpty) return None
-    val foldId = if (ingest.isEmpty) -1L else ingest.max
+    val foldId = if (ingest.isEmpty) BootstrapBatchId else ingest.max
     val newFolded = ingest.foldLeft(
       Publish.readLedger(fs, new Path(curP, "_folded")))(Publish.addBatch)
     val newTd = takedowns.foldLeft(
@@ -429,18 +439,19 @@ object Compaction {
   /** [[compactPairTable]] with the crash seam between the two
     * generation commits exposed for the spec.
     *
-    * The fold OUTPUT partition is the fixed bootstrap id `-1`, never
+    * The fold OUTPUT partition is the fixed [[BootstrapBatchId]], never
     * `ingest.max` (r14 review, second pass): `ingest.max` is exactly
     * the micro-batch id a post-crash stream replays (offsets commit
     * only after foreachBatch returns, and the self-trigger runs inside
     * it), and under the sig-first commit order the crash window holds
     * no ledger — the replayed append's `batch_id =!= K` exclusion
     * would see the folded sig set (single partition `batch_id=K`) as
-    * its own crashed debris and OVERWRITE it wholesale. At `-1` the
-    * replay lands NEXT TO the fold instead: its sig rows duplicate
-    * rows already inside the fold (collapsed by candidate generation's
-    * distinct and by the next fold's distinct), and its pair partition
-    * rewrites value-identical content — convergent, not lossy. */
+    * its own crashed debris and OVERWRITE it wholesale. At the
+    * bootstrap id the replay lands NEXT TO the fold instead: its sig
+    * rows duplicate rows already inside the fold (collapsed by
+    * candidate generation's distinct and by the next fold's distinct),
+    * and its pair partition rewrites value-identical content —
+    * convergent, not lossy. */
   private[graft] def compactPairTableWith(spark: SparkSession,
                                           pairPath: String, sigPath: String,
                                           betweenCommits: () => Unit =
@@ -470,7 +481,7 @@ object Compaction {
         val cur = resolveRoot(spark, pairPath)
         val curP = new Path(cur)
         Some(FoldPlan(cur, batchIds(pairFs, curP),
-          batchIds(pairFs, new Path(curP, "_deletes")), -1L,
+          batchIds(pairFs, new Path(curP, "_deletes")), BootstrapBatchId,
           Publish.readLedger(pairFs, new Path(curP, "_folded")),
           Publish.readLedger(pairFs, new Path(curP, "_deletes/_folded"))))
       }
@@ -499,12 +510,14 @@ object Compaction {
         spark.read.parquet(curSig).drop("batch_id"),
         s"$curPair/_deletes").distinct()
       publishGeneration(spark, sigPath, tableFlat) { stage =>
-        sigs.write.mode("overwrite").parquet(s"$stage/batch_id=-1")
+        sigs.write.mode("overwrite")
+          .parquet(s"$stage/batch_id=$BootstrapBatchId")
       }
     }
     betweenCommits()
     publishGeneration(spark, pairPath, tableFlat) { stage =>
-      pairs.write.mode("overwrite").parquet(s"$stage/batch_id=-1")
+      pairs.write.mode("overwrite")
+        .parquet(s"$stage/batch_id=$BootstrapBatchId")
       Publish.writeLedger(pairFs, new Path(stage, "_folded"),
         plan.newFolded)
       if (plan.newTd.nonEmpty) {

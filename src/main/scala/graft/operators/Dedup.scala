@@ -307,7 +307,7 @@ object Dedup {
         >= minContainment)
 
   /** Build/serve split for the verified near-dup pair frame — the
-    * [[graft.operators.Similarity.buildIvfIndex]] discipline applied to
+    * [[graft.operators.Similarity.buildIvfIndexBatch]] discipline applied to
     * dedup (VERDICT r4 fix #6): the minhash→LSH→exact-Jaccard chain is
     * the expensive part of every downstream consumer (cross-source
     * overlap, cluster labeling, corpus curation), and in a standing
@@ -317,38 +317,33 @@ object Dedup {
     * consumer afterwards starts from a compact parquet scan instead of
     * two corpus-wide shingle passes. Parquet round-trips longs and
     * IEEE doubles bit-exactly, so serving from the table is
-    * result-identical to recomputing (pinned by TextDedupSpec). */
+    * result-identical to recomputing (pinned by TextDedupSpec). The
+    * one-shot table is the [[Compaction.BootstrapBatchId]] partition
+    * of the [[appendToPairTableBatch]] layout; it writes no signature
+    * table, so a table that will be maintained incrementally is
+    * bootstrapped through [[appendToPairTableBatch]] at that id
+    * instead. */
   def buildPairTable(spark: SparkSession, dir: String, out: String): Unit =
-    ngramJaccard(spark, dir).write.mode("overwrite").parquet(out)
+    ngramJaccard(spark, dir).write.mode("overwrite")
+      .parquet(s"$out/batch_id=${Compaction.BootstrapBatchId}")
 
-  /** Serve the persisted pair table. The streaming layout carries a
-    * `batch_id` provenance partition ([[appendToPairTableBatch]]) —
-    * dropped here so consumers see one schema whatever maintained the
-    * table. The full-row distinct is now a DEFENSE-IN-DEPTH no-op, not
-    * a required pass (ADVICE r5 → VERDICT r6 #6): the batch append
-    * anti-joins against existing rows (a replayed slice writes zero
-    * rows) and the streaming path overwrites its own batch partition
-    * (replays converge bit-identically), so a healthy table has no
-    * duplicates for it to collapse — it stays because count-shaped
-    * consumers ([[sourceOverlapFrom]]'s n_dup_pairs) are NOT robust to
-    * a duplicate smuggled in by an out-of-contract writer. */
+  /** Serve the persisted pair table. Every table carries the `batch_id`
+    * provenance partition ([[appendToPairTableBatch]]) — dropped here
+    * so consumers see the bare pair schema. The full-row distinct is a
+    * DEFENSE-IN-DEPTH no-op, not a required pass (ADVICE r5 → VERDICT
+    * r6 #6): each batch overwrites its own partition (replays converge
+    * bit-identically), so a healthy table has no duplicates for it to
+    * collapse — it stays because count-shaped consumers
+    * ([[sourceOverlapFrom]]'s n_dup_pairs) are NOT robust to a
+    * duplicate smuggled in by an out-of-contract writer. */
   def pairTable(spark: SparkSession, path: String): DataFrame =
     // Generation-resolved (r14): a compacted pair table lives at
     // `path/v=<n>` behind a marker ([[Compaction.resolveRoot]]).
     spark.read.parquet(Compaction.resolveRoot(spark, path))
       .drop("batch_id").distinct()
 
-  /** Persist the banded LSH bucket index — (doc_id, band_idx,
-    * band_key) — the state that makes pair maintenance INCREMENTAL: a
-    * standing pipeline signatures each arrival slice once and appends,
-    * instead of re-signaturing 100 TB per corpus version. */
-  def buildSignatureTable(docs: DataFrame, out: String): Unit =
-    signatureRows(docs).write.mode("overwrite").parquet(out)
-
-  /** LSH candidates of the new slice against the full signature set —
-    * the ONE definition of incremental candidate generation shared by
-    * the batch append and the streaming batch-keyed append (their
-    * bit-identity proofs depend on it never drifting). The new-new
+  /** LSH candidates of the new slice against the full signature set
+    * ([[appendToPairTableBatch]]'s candidate generation). The new-new
     * side of the join produces each pair from both directions, so
     * bands are distinct-counted. Returns a localCheckpoint-pinned
     * frame (it feeds the member list AND the verify); callers
@@ -383,99 +378,24 @@ object Dedup {
     verifyPairs(cand, allDocs.join(members, Seq("doc_id"), "left_semi"))
   }
 
-  /** Incremental near-dup maintenance: signature the NEW docs only,
-    * bucket-join new-vs-(old ∪ new) against the persisted index —
-    * old-vs-old pairs are already in the table and are never
-    * recomputed — verify candidates by exact Jaccard, then append the
-    * new pairs and the new signatures. Per increment the cost is
-    * O(|new| shingling + bucket collisions), not O(corpus).
-    *
-    * Replay-idempotent at the ROW level (VERDICT r6 #6): both appends
-    * anti-join against what the table already holds, so a re-run of an
-    * already-applied slice writes ZERO rows instead of bit-identical
-    * duplicates, and a crash between the two appends converges on
-    * re-run (the pair anti-join removes the landed half, the signature
-    * append completes). [[pairTable]]'s serve-time distinct remains as
-    * defense-in-depth only. A standing pipeline should still wrap both
-    * paths under one [[graft.sinks.Sinks.publishVersioned]] version so
-    * a HALF-APPLIED slice is never served mid-append; the streaming
-    * twin ([[appendToPairTableBatch]]) gets the same property from
-    * batch-keyed overwrite instead. TextDedupSpec proves bootstrap +
-    * increment ≡ full rebuild, bit-identical, and that a replayed
-    * append is a no-op. */
-  def appendToPairTable(spark: SparkSession, newDocs: DataFrame,
-                        allDocs: DataFrame, sigPath: String,
-                        pairPath: String): Unit = {
-    // Resolve generations first (r14) so a compacted (necessarily
-    // batch-keyed) table hits the fail-fast below with its real
-    // layout instead of a raw root listing of `v=` dirs.
-    val sigRoot = Compaction.resolveRoot(spark, sigPath)
-    val pairRoot = Compaction.resolveRoot(spark, pairPath)
-    val newSigs = signatureRows(newDocs)
-      .localCheckpoint() // pinned: feeds the join AND the append
-    try {
-      val persistedSigs = spark.read.parquet(sigRoot)
-      // This flat-append API must not write root-level files into a
-      // STREAM-maintained (batch_id-partitioned) table — the mixed
-      // layout would be unreadable. Fail fast toward the batch twin.
-      require(!persistedSigs.columns.contains("batch_id"),
-        s"$sigPath is batch_id-keyed (stream-maintained) — use " +
-          "appendToPairTableBatch, which overwrites its own partition")
-      val allSigs = persistedSigs.unionByName(newSigs)
-      val cand = candidatePairs(newSigs, allSigs)
-      try {
-        val fresh = verifiedIncrement(cand, allDocs)
-        // Append-time dedupe: a replayed slice's pairs are already in
-        // the table — drop them BEFORE the write (pair rows are
-        // value-deterministic per (doc_a, doc_b), so key anti-join
-        // suffices). The pair table is LSH-candidate-sized, far
-        // smaller than the corpus; the anti-join shuffles only it.
-        // localCheckpoint before each write: the anti-join READS the
-        // very path the append then writes — materializing first keeps
-        // the scan's file list from racing its own output.
-        val existingPairs = readIfExists(spark, pairRoot)
-        existingPairs.foreach(e => require(!e.columns.contains("batch_id"),
-          s"$pairPath is batch_id-keyed (stream-maintained) — use " +
-            "appendToPairTableBatch, which overwrites its own partition"))
-        val newPairs = (existingPairs match {
-          case Some(e) => fresh.join(e.select(col("doc_a"), col("doc_b")),
-            Seq("doc_a", "doc_b"), "left_anti")
-          case None => fresh
-        }).localCheckpoint()
-        try newPairs.write.mode("append").parquet(pairRoot)
-        finally newPairs.unpersist()
-        // Same for signatures: full-row anti-join (a signature row IS
-        // its key), so replaying after both appends landed is a no-op.
-        val sigsToAdd = newSigs.join(spark.read.parquet(sigRoot),
-            Seq("doc_id", "band_idx", "band_key"), "left_anti")
-          .localCheckpoint()
-        try sigsToAdd.write.mode("append").parquet(sigRoot)
-        finally sigsToAdd.unpersist()
-      } finally cand.unpersist()
-    } finally newSigs.unpersist()
-  }
-
-  private def readIfExists(spark: SparkSession,
-                           path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
-  }
-
-  /** Batch-keyed twin of [[appendToPairTable]] for the STREAMING
-    * maintenance path (VERDICT r6 #3): the slice's verified pairs and
-    * signatures land under the micro-batch's own `batch_id=N`
-    * partition directories with OVERWRITE, so a batch replayed after a
-    * checkpoint-window crash converges to the same bytes — exactly-once
-    * by layout, the same deterministic-subdirectory trick the E2
-    * docs-layer sink uses (and stronger than the batch API's row-level
-    * anti-join: a replay here never even rewrites rows it already
-    * has, it atomically replaces its own partition). Self-bootstrapping:
-    * the first batch finds no signature table and joins against an
-    * empty frame — no separate bootstrap write whose replay could
-    * double-apply. The candidate/verify chain is the SAME code as the
-    * batch API, so stream-maintained ≡ rebuild stays bit-identical
-    * (StreamingPipelineSpec). */
+  /** Incremental near-dup maintenance, batch_id-keyed exactly-once:
+    * signature the NEW docs only, bucket-join new-vs-(old ∪ new)
+    * against the persisted signature table — old-vs-old pairs are
+    * already in the table and are never recomputed — verify candidates
+    * by exact Jaccard, then land the slice's verified pairs and
+    * signatures under its own `batch_id=N` partition directories with
+    * OVERWRITE. Per increment the cost is O(|new| shingling + bucket
+    * collisions), not O(corpus). A batch replayed after a
+    * checkpoint-window crash converges to the same bytes (VERDICT r6
+    * #3) — the same deterministic-subdirectory trick the E2 docs-layer
+    * sink uses: a replay never even rewrites rows it already has, it
+    * atomically replaces its own partition. Self-bootstrapping: the
+    * first batch (the corpus so far, at
+    * [[Compaction.BootstrapBatchId]], or a stream's batch 0) finds no
+    * signature table and joins against an empty frame — no separate
+    * bootstrap write whose replay could double-apply. TextDedupSpec and
+    * StreamingPipelineSpec prove bootstrap + increments ≡ full
+    * rebuild, bit-identical, and that a replay is a no-op. */
   def appendToPairTableBatch(spark: SparkSession, newDocs: DataFrame,
                              allDocs: DataFrame, sigPath: String,
                              pairPath: String, batchId: Long): Unit = {
@@ -488,23 +408,17 @@ object Dedup {
     // generation.
     val pairRoot = Compaction.resolveRoot(spark, pairPath)
     val sigRoot = Compaction.resolveRoot(spark, sigPath)
-    // A table bootstrapped flat (buildSignatureTable / the batch
-    // append API) adopts the batch-keyed layout on first contact —
-    // flat children next to batch_id= dirs would make the whole
-    // directory unreadable at partition discovery (r7 review).
-    graft.sinks.Sinks.adoptFlatLayout(spark, sigRoot)
-    graft.sinks.Sinks.adoptFlatLayout(spark, pairRoot)
+    val sigDir = new org.apache.hadoop.fs.Path(sigRoot)
     val newSigs = signatureRows(newDocs).localCheckpoint()
     try {
-      val existing = readIfExists(spark, sigRoot) match {
-        case Some(df) =>
-          // The replayed batch's own (crashed, possibly partial)
-          // signature partition must not count as "already seen" —
-          // partition-pruned exclusion, then back to the bare shape.
-          df.where(col("batch_id") =!= batchId)
-            .select(col("doc_id"), col("band_idx"), col("band_key"))
-        case None => newSigs.limit(0)
-      }
+      val existing =
+        if (!sigDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .exists(sigDir)) newSigs.limit(0)
+        // The replayed batch's own (crashed, possibly partial)
+        // signature partition must not count as "already seen" —
+        // partition-pruned exclusion, then back to the bare shape.
+        else spark.read.parquet(sigRoot).where(col("batch_id") =!= batchId)
+          .select(col("doc_id"), col("band_idx"), col("band_key"))
       val cand = candidatePairs(newSigs, existing.unionByName(newSigs))
       try {
         verifiedIncrement(cand, allDocs)

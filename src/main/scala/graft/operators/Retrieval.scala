@@ -86,39 +86,25 @@ object Retrieval {
         posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "tok"))),
       phrase)
 
-  /** Build the persisted POSITIONAL postings index — (doc_id, pos)
-    * rows term-partitioned, the layout the BM25 index uses, but
-    * keeping POSITIONS (tf postings cannot serve phrases). The
-    * corpus-grain explode is paid once at build; every phrase serve
+  /** Build or maintain the persisted POSITIONAL postings index —
+    * (doc_id, pos) rows term-partitioned, the layout the BM25 index
+    * uses, but keeping POSITIONS (tf postings cannot serve phrases).
+    * The explode is paid once per slice at build; every phrase serve
     * after that reads only its terms' partitions.
     *
-    * Layout: `batch_id=<n>/tok=<term>/` — the SAME directory depth as
-    * [[buildPosIndexBatch]], so the natural lifecycle (bootstrap with
-    * the full build, then maintain incrementally) keeps one consistent
-    * partition scheme under one indexPath; mixed depths would break
-    * Spark's partition discovery at serve time (ADVICE r10). The
-    * bootstrap claims batch_id = -1, BELOW any batch/streaming id
-    * (foreachBatch ids start at 0), so a checkpoint replaying batch 0
-    * can never clobber the bootstrap slice. mode=overwrite here clears
-    * the WHOLE index (a full rebuild), where the batch form overwrites
-    * only its own batch partition. */
-  def buildPosIndex(spark: SparkSession, dir: String,
-                    indexPath: String): Unit =
-    Tables.documents(spark, dir)
-      .select(lit(-1L).as("batch_id"), col("doc_id"),
-        posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "tok")))
-      .write.partitionBy("batch_id", "tok").mode("overwrite")
-      .parquet(s"$indexPath/pos")
-
-  /** Incremental positional-index maintenance, batch_id-keyed
-    * exactly-once (the lex-index pattern): each arrival slice lands
-    * its positional postings under its own `batch_id=N` partition with
+    * Layout: `pos/batch_id=<n>/tok=<term>/`, exactly-once by layout:
+    * each slice lands under its own `batch_id=N` partition with
     * mode=overwrite, so a replayed slice overwrites itself instead of
-    * double-indexing. Contract: batches carry disjoint doc_id slices.
-    * The serve path is layout-agnostic — the pinned reader schema
-    * surfaces the discovered batch_id column and simply never selects
-    * it — so phrase results over N batches are bit-identical to a
-    * one-shot build over the union (spec-proven, replay included). */
+    * double-indexing. A one-shot build is the slice of the whole corpus
+    * at [[Compaction.BootstrapBatchId]], below any stream id, so a
+    * stream maintaining the same indexPath keeps one partition depth
+    * (mixed depths break Spark's partition discovery at serve time,
+    * ADVICE r10) and a checkpoint replaying batch 0 can never clobber
+    * the bootstrap slice. Contract: batches carry disjoint doc_id
+    * slices. The serve path is layout-agnostic — the pinned reader
+    * schema surfaces the discovered batch_id column and simply never
+    * selects it — so phrase results over N batches are bit-identical
+    * to one batch over the union (spec-proven, replay included). */
   def buildPosIndexBatch(spark: SparkSession, docs: DataFrame,
                          indexPath: String, batchId: Long): Unit = {
     if (Compaction.isFolded(spark, indexPath, batchId)) return
@@ -226,41 +212,26 @@ object Retrieval {
         round((idf * tfn) * ScoreScale).cast("long").as("contrib_fp"))
   }
 
-  /** Build the persisted lexical index: term-partitioned postings
-    * (`tok=<term>/` dirs → a query touches only its terms' partitions),
-    * doc lengths, and the one-row corpus stats. The corpus-grain
-    * explode is paid ONCE here at build time; every serve after that
-    * reads postings slices. At 10⁹-term scale partition-per-term
-    * becomes bucket-by-term-hash — the layout idea (queries prune to
-    * their terms' files) is unchanged. */
-  def buildLexIndex(spark: SparkSession, dir: String,
-                    indexPath: String): Unit = {
-    val docs = Tables.documents(spark, dir)
-    docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-      .write.partitionBy("tok").mode("overwrite")
-      .parquet(s"$indexPath/postings")
-    docs.select(col("doc_id"),
-        size(TextOps.tokens(col("text"))).cast("long").as("dl"))
-      .write.mode("overwrite").parquet(s"$indexPath/doclens")
-    docs.agg(count(lit(1)).as("n_docs"),
-        sum(size(TextOps.tokens(col("text"))).cast("long")).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$indexPath/stats")
-  }
-
-  /** Incremental index maintenance, batch_id-keyed exactly-once (the
-    * [[Similarity.buildIvfIndexBatch]] / pair-table pattern): each
-    * arrival slice of documents lands its postings, doc lengths, and
-    * PARTIAL corpus stats under its own `batch_id=N` partition with
-    * mode=overwrite — a replayed batch overwrites itself, never
-    * double-counts. Contract: batches carry disjoint doc_id slices
-    * (re-ingesting a doc means replaying ITS batch). The serve path
-    * is layout-agnostic: partition discovery surfaces `batch_id` as
-    * just another column the reader ignores, and stats MERGE by exact
-    * long addition — so served scores over N batches are bit-identical
-    * to a from-scratch build over the union (RetrievalSpec proves it,
-    * replay included). */
+  /** Build or maintain the persisted lexical index: term-partitioned
+    * postings (`tok=<term>/` dirs → a query touches only its terms'
+    * partitions), doc lengths, and corpus stats. The corpus-grain
+    * explode is paid ONCE per slice here; every serve after that reads
+    * postings slices. At 10⁹-term scale partition-per-term becomes
+    * bucket-by-term-hash — the layout idea (queries prune to their
+    * terms' files) is unchanged.
+    *
+    * Batch_id-keyed exactly-once (the [[Similarity.buildIvfIndexBatch]]
+    * / pair-table pattern): each slice of documents lands its postings,
+    * doc lengths, and PARTIAL corpus stats under its own `batch_id=N`
+    * partition with mode=overwrite — a replayed batch overwrites
+    * itself, never double-counts. A one-shot build is the whole corpus
+    * at [[Compaction.BootstrapBatchId]]. Contract: batches carry
+    * disjoint doc_id slices (re-ingesting a doc means replaying ITS
+    * batch). The serve path is layout-agnostic: partition discovery
+    * surfaces `batch_id` as just another column the reader ignores,
+    * and stats MERGE by exact long addition — so served scores over N
+    * batches are bit-identical to one batch over the union
+    * (RetrievalSpec proves it, replay included). */
   def buildLexIndexBatch(spark: SparkSession, docs: DataFrame,
                          indexPath: String, batchId: Long): Unit = {
     // Replay guard post-compaction (r13): once [[Compaction]] folded
@@ -285,10 +256,9 @@ object Retrieval {
   /** BM25 served from the persisted index: partition-pruned postings
     * reads (only the query terms' directories), the SAME score tail,
     * the SAME cut — hash-identical to [[bm25TopK]] by construction, at
-    * serve cost (no corpus explode, no token-grain shuffle). Handles
-    * both the one-shot [[buildLexIndex]] layout and the
-    * [[buildLexIndexBatch]]-maintained layout: stats re-aggregate by
-    * exact long SUM (identity over the one-shot single row). */
+    * serve cost (no corpus explode, no token-grain shuffle). Stats
+    * re-aggregate the [[buildLexIndexBatch]] partials by exact long
+    * SUM. */
   def bm25TopKServed(spark: SparkSession, indexPath: String,
                      terms: Seq[String] = DefaultQuery,
                      k: Int = FinalK): DataFrame =

@@ -465,7 +465,8 @@ object Similarity {
     * centroids — an equi-join on cell id, the inverted-list shape
     * (shuffle keyed by cell, never all-pairs). Training cost rides the
     * query here for oracle-checkability; production builds train ONCE
-    * at [[buildIvfIndex]] time and serve from the persisted centroids. */
+    * at [[buildIvfIndexBatch]] time and serve from the persisted
+    * centroids. */
   def topkCosineIvf(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
     val c = corpus(spark, dir)
     topkCosineIvfWith(c, trainedCentroidsOf(c), k)
@@ -531,7 +532,7 @@ object Similarity {
     * ×100 top line (74.2 s at sf10), and in a deployment the kNN graph
     * is a once-per-corpus-version ARTIFACT its consumers (hard-negative
     * mining per training epoch, neighborhood stats, recall panels)
-    * read, not re-derive — the [[buildIvfIndex]] / `Dedup.pairTable`
+    * read, not re-derive — the [[buildIvfIndexBatch]] / `Dedup.pairTable`
     * discipline applied to the last expensive family without a served
     * form. The table is k·N rows of (long, long, double, int) — tiny
     * next to the corpus — and parquet round-trips longs/doubles
@@ -629,7 +630,7 @@ object Similarity {
     semDedupSweep(members, threshold)
   }
 
-  /** SemDeDup from a persisted [[buildIvfIndex]] index — the
+  /** SemDeDup from a persisted [[buildIvfIndexBatch]] index — the
     * build/serve split the ANN tier already has, applied to semantic
     * dedup: members and their cells come straight from the
     * cell-partitioned postings (assignment cost: ZERO at serve — the
@@ -848,61 +849,6 @@ object Similarity {
           .otherwise(lit(0)).as("code"))
   }
 
-  /** Persist the IVF index as two parquet tables: `centroids`
-    * (cent_id, cv, cnv — k = O(√N) rows, ~16 MB at 1 B vectors, so the
-    * broadcast stays practical through the scalable range; past ~10¹²
-    * vectors shard the centroid scoring instead of broadcasting) and
-    * `postings` partitioned BY CELL (hive layout `cell=N/`), so a query
-    * probing NumProbes cells reads exactly those directories and the
-    * scan prunes the rest of the corpus (`PartitionFilters` in the
-    * plan) — the true inverted-list access path, which the in-memory
-    * [[topkCosineIvf]] can only simulate with a shuffle. Build once,
-    * serve many: the standing-index shape for a corpus that outlives
-    * any single query's runtime. */
-  def buildIvfIndex(spark: SparkSession, dir: String,
-                    indexPath: String): Unit =
-    buildIvfIndexOf(spark, Tables.embeddings(spark, dir), indexPath)
-
-  /** [[buildIvfIndex]] over an arbitrary raw-embeddings frame — the
-    * form the incremental-maintenance spec builds its base index
-    * through. */
-  def buildIvfIndexOf(spark: SparkSession, emb: DataFrame,
-                      indexPath: String): Unit = {
-    val c = corpusOf(spark, emb)
-    // Trained centroids (VERDICT r5 ask #4): KmIterations Lloyd rounds
-    // from the deterministic hash-sample seed, k = O(√N) — training
-    // happens ONCE here at build time; serving and incremental appends
-    // read the persisted result (parquet round-trips the 9-dp doubles
-    // exactly).
-    buildIvfIndexWith(c, trainedCentroidsOf(c), indexPath)
-  }
-
-  /** Index build over an EXPLICIT (cent_id, cv, cnv) centroid set — the
-    * rebuild-without-retraining form (e.g. re-laying-out a grown corpus
-    * against the serving centroids, or the spec's append-vs-rebuild
-    * bit-identity proof, which must hold the centroid set fixed: Lloyd
-    * means depend on the member set, so a base-only training run and a
-    * full-corpus one diverge by construction). */
-  def buildIvfIndexWith(c: DataFrame, cents: DataFrame,
-                        indexPath: String): Unit = {
-    // ADVICE r5: an empty centroid set would assign NO cells (the
-    // crossJoin produces zero rows) and silently publish an index that
-    // loses every vector — fail fast instead. The set is bounded, so
-    // the probe is a cheap one-partition job at build time.
-    require(!cents.isEmpty,
-      s"refusing to build IVF index at $indexPath with ZERO centroids " +
-        "(empty corpus, or a mis-built input)")
-    cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
-    assignCells(c, cents)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/postings")
-  }
-
-  /** The normalized corpus shape over a raw embeddings frame, exposed
-    * for explicit-centroid builds ([[buildIvfIndexWith]]). */
-  def normalizedCorpusOf(spark: SparkSession, emb: DataFrame): DataFrame =
-    corpusOf(spark, emb)
-
   /** Nearest-centroid assignment of a normalized corpus frame — ONE
     * definition of the scoring and (ccos desc, cent_id asc) tie-break
     * shared by the full build and the incremental append, so their
@@ -923,44 +869,27 @@ object Similarity {
 
   /** Incremental IVF maintenance: assign ONLY the arrival slice to the
     * already-trained centroids (read back from the index — broadcast,
-    * O(√N) rows) and append its postings into the cell-partitioned layout
-    * (hive partition append touches only the cells the new vectors land
-    * in). Centroids stay FIXED — the production contract: cells are
+    * O(√N) rows) and land its postings under the batch's own
+    * `batch_id=N` partition directory (cell-partitioned inside it) with
+    * OVERWRITE, so a batch replayed after a checkpoint-window crash
+    * converges to the same bytes instead of appending duplicate
+    * postings — which would corrupt top-k serving (both copies rank).
+    * Exactly-once by layout (VERDICT r6 #3 + ADVICE r6
+    * bootstrap-replay); `batch_id` rides as a provenance partition
+    * column and cell-pruning still applies (both are partition keys).
+    * Centroids stay FIXED — the production contract: cells are
     * retrained on full rebuild, not per arrival, so serving stays
     * consistent while the corpus grows; per-increment cost is
     * O(|slice| · centroids), never O(corpus). `newVecs` takes the raw
     * embeddings shape (vec_id, label, emb Array[Float]); [[assignCells]]
-    * is the SAME code the full build runs, so an appended index is
-    * bit-identical to rebuilding with the same centroid set
-    * (SimilaritySpec). The append is at-least-once: a crash after the
-    * write followed by a re-run would post the slice twice, and
-    * duplicate postings corrupt top-k serving (both copies rank; ties
-    * then break nondeterministically) — the pair table has the same
-    * replay exposure and absorbs it with a serve-time distinct
-    * ([[graft.operators.Dedup.pairTable]]); postings could too, but the
-    * clean fix is not to serve a half-applied index at all: stage the
-    * index under [[graft.sinks.Sinks.publishVersioned]] and re-point
-    * only after the slice's append completed. */
-  /** Batch-keyed twin of [[appendToIvfIndex]] for the STREAMING
-    * maintenance path (VERDICT r6 #3 + ADVICE r6 bootstrap-replay): the
-    * slice's postings land under the micro-batch's own `batch_id=N`
-    * partition directory (cell-partitioned inside it) with OVERWRITE,
-    * so a batch replayed after a checkpoint-window crash converges to
-    * the same bytes instead of appending duplicate postings — which
-    * would corrupt top-k serving (both copies rank). Exactly-once by
-    * layout; `batch_id` rides as a provenance partition column and
-    * cell-pruning still applies (both are partition keys). Assignment
-    * is the shared [[assignCells]] against the persisted centroids. */
+    * is the SAME code the bootstrap runs, so an appended index is
+    * bit-identical to one batch over the union against the same
+    * centroid set (SimilaritySpec). */
   def appendToIvfIndexBatch(spark: SparkSession, newVecs: DataFrame,
                             indexPath: String, batchId: Long): Unit = {
     // Replay guard post-compaction + generation resolution (r13/r14).
     if (Compaction.isFolded(spark, indexPath, batchId)) return
     val root = Compaction.resolveRoot(spark, indexPath)
-    // An index built flat (buildIvfIndex) adopts the batch-keyed
-    // layout on first stream contact: its cell=* dirs move under
-    // batch_id=-1, because batch_id= dirs NEXT TO flat cell=* dirs
-    // make the whole postings directory unreadable (r7 review).
-    graft.sinks.Sinks.adoptFlatLayout(spark, s"$root/postings")
     val nv = corpusOf(spark, newVecs)
     val cents = spark.read.parquet(s"$root/centroids")
     require(!cents.isEmpty,
@@ -971,13 +900,27 @@ object Similarity {
       .parquet(s"$root/postings/batch_id=$batchId")
   }
 
-  /** Bootstrap twin of [[appendToIvfIndexBatch]]: train centroids from
-    * the first slice and write BOTH tables idempotently — centroids by
-    * plain overwrite (training is deterministic, so a replay rewrites
-    * identical bytes), postings under the batch's own partition. The
-    * ADVICE r6 crash window (bootstrap writes landed, checkpoint
-    * commit didn't) therefore converges WHICHEVER branch the replay
-    * takes: re-entering here retrains to the identical centroids and
+  /** Build the persisted IVF index — two parquet tables: `centroids`
+    * (cent_id, cv, cnv — k = O(√N) rows, ~16 MB at 1 B vectors, so the
+    * broadcast stays practical through the scalable range; past ~10¹²
+    * vectors shard the centroid scoring instead of broadcasting) and
+    * `postings` partitioned BY CELL inside the batch's own
+    * `batch_id=N` partition, so a query probing NumProbes cells reads
+    * exactly those directories and the scan prunes the rest of the
+    * corpus (`PartitionFilters` in the plan) — the true inverted-list
+    * access path, which the in-memory [[topkCosineIvf]] can only
+    * simulate with a shuffle. Build once, serve many: a one-shot build
+    * is the whole corpus at [[Compaction.BootstrapBatchId]]; later
+    * slices go through [[appendToIvfIndexBatch]].
+    *
+    * Centroids are TRAINED here (VERDICT r5 ask #4): KmIterations Lloyd
+    * rounds from the deterministic hash-sample seed, k = O(√N) —
+    * serving and appends read the persisted result. Both tables are
+    * written idempotently — centroids by plain overwrite (training is
+    * deterministic, so a replay rewrites identical bytes), postings
+    * under the batch's own partition. The ADVICE r6 crash window
+    * (bootstrap writes landed, checkpoint commit didn't) therefore
+    * converges WHICHEVER branch the replay takes: re-entering here retrains to the identical centroids and
     * overwrites; falling through to the append branch (centroids
     * exist) assigns against the very centroids this bootstrap
     * persisted — the same [[assignCells]] the bootstrap ran — and
@@ -987,7 +930,6 @@ object Similarity {
     // Replay guard post-compaction (r13): see [[Compaction]].
     if (Compaction.isFolded(spark, indexPath, batchId)) return
     val root = Compaction.resolveRoot(spark, indexPath)
-    graft.sinks.Sinks.adoptFlatLayout(spark, s"$root/postings")
     val c = corpusOf(spark, emb)
     val cents = trainedCentroidsOf(c)
     require(!cents.isEmpty,
@@ -1002,33 +944,7 @@ object Similarity {
       .parquet(s"$root/postings/batch_id=$batchId")
   }
 
-  def appendToIvfIndex(spark: SparkSession, newVecs: DataFrame,
-                       indexPath: String): Unit = {
-    val root = Compaction.resolveRoot(spark, indexPath)
-    val nv = corpusOf(spark, newVecs)
-    // This flat-append API must not write cell=* dirs into a
-    // STREAM-maintained (batch_id-keyed) postings layout — the mix is
-    // unreadable at partition discovery. Fail fast toward the batch
-    // twin (r7 review).
-    val postings = new org.apache.hadoop.fs.Path(s"$root/postings")
-    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(postings) || !fs.listStatus(postings)
-        .exists(_.getPath.getName.startsWith("batch_id=")),
-      s"$indexPath/postings is batch_id-keyed (stream-maintained) — " +
-        "use appendToIvfIndexBatch, which overwrites its own partition")
-    val cents = spark.read.parquet(s"$root/centroids")
-    // ADVICE r5: an empty/truncated centroid table would make the
-    // assignment crossJoin produce zero rows and the append write
-    // NOTHING — the whole arrival slice silently lost. Fail fast.
-    require(!cents.isEmpty,
-      s"IVF index at $indexPath has an empty centroid table — " +
-        "mis-built or truncated; appending would silently drop the slice")
-    assignCells(nv, cents)
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$root/postings")
-  }
-
-  /** Serve top-k from a persisted [[buildIvfIndex]] index: rank the
+  /** Serve top-k from a persisted [[buildIvfIndexBatch]] index: rank the
     * broadcast centroid table per query, probe the NumProbes best
     * cells, and push `cell IN (...)` into the postings scan so only the
     * probed partitions are read. Scoring and ranking match

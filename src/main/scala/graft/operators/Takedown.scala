@@ -108,7 +108,7 @@ object Takedown {
   }
 
   /** Takedown against the persisted LEXICAL index
-    * ([[Retrieval.buildLexIndex]] layout): record the deletes (serve
+    * ([[Retrieval.buildLexIndexBatch]] layout): record the deletes (serve
     * paths anti-join them) and stamp the NEGATIVE corpus-stats partial
     * that keeps served BM25 bit-identical to a rebuild over the purged
     * corpus — n_docs/sum_dl are summed over partial partitions at
@@ -116,8 +116,11 @@ object Takedown {
     * -removed tokens) composes exactly (longs). The correction counts
     * only ids present in the index's doclens and not already deleted
     * by another batch; it lands under `stats/batch_id=-(takedownId+2)`
-    * — below the -1 bootstrap id, so it can never collide with an
-    * ingest batch's partial. */
+    * — below [[Compaction.BootstrapBatchId]] (-1), so it can never
+    * collide with an ingest batch's partial. That namespace is safe
+    * only while -1 stays the ONE reserved non-stream ingest id: an
+    * ingest batch written at -2 or below would share (and overwrite)
+    * a correction partial. */
   def takedownLex(spark: SparkSession, indexPath: String,
                   ids: DataFrame, takedownId: Long): Unit = {
     require(takedownId >= 0, s"takedownId must be >= 0, got $takedownId")
@@ -154,11 +157,6 @@ object Takedown {
           "replay an existing id, or allocate ids monotonically " +
           "(the streaming path's micro-batch ids already are)")
     }
-    // A one-shot ([[Retrieval.buildLexIndex]]) stats dir is FLAT; the
-    // correction partial below adds a batch_id= child, and mixed
-    // depths break partition discovery — adopt first (moves the flat
-    // row under batch_id=-1, the standard bootstrap id; idempotent).
-    graft.sinks.Sinks.adoptFlatLayout(spark, s"$root/stats")
     // "Newly deleted BY THIS batch" = ids minus docs owned by a
     // SMALLER takedownId — deterministic under replay whatever later
     // batches landed in between (see [[deletedIds]]).
@@ -180,7 +178,7 @@ object Takedown {
   }
 
   /** Takedown against the persisted POSITIONAL index
-    * ([[Retrieval.buildPosIndex]] layout): deletes only — phrase
+    * ([[Retrieval.buildPosIndexBatch]] layout): deletes only — phrase
     * alignment carries no corpus statistics to correct. */
   def takedownPos(spark: SparkSession, indexPath: String,
                   ids: DataFrame, takedownId: Long): Unit = {
@@ -191,7 +189,7 @@ object Takedown {
   }
 
   /** Takedown against the persisted IVF index
-    * ([[Similarity.buildIvfIndex]] layout): deletes on `vec_id` —
+    * ([[Similarity.buildIvfIndexBatch]] layout): deletes on `vec_id` —
     * served neighbors stop containing the vectors immediately. The
     * trained centroids are NOT retrained (they are an approximation
     * structure, not data; the purged vectors' mass in the means is a

@@ -550,12 +550,11 @@ object StreamingIngest {
   /** Standing near-dup index maintenance (VERDICT r5 ask #7): each
     * micro-batch of arriving documents lands in the docs layer
     * (batchId-idempotent) and is folded into the persisted signature +
-    * pair index via [[graft.operators.Dedup.appendToPairTable]] — the
-    * stream side of the build/serve split, so overlap / cluster /
+    * pair index via [[graft.operators.Dedup.appendToPairTableBatch]] —
+    * the stream side of the build/serve split, so overlap / cluster /
     * curation consumers always serve from a fresh index instead of
     * re-shingling the corpus per query. Cost per trigger is
-    * O(|batch| shingling + bucket collisions), never O(corpus) — the
-    * batch incremental contract, now riding ingest.
+    * O(|batch| shingling + bucket collisions), never O(corpus).
     *
     * Delivery contract: EXACTLY-ONCE BY LAYOUT end to end (VERDICT r6
     * #3) — the docs-layer write, the pair write, and the signature
@@ -602,7 +601,7 @@ object StreamingIngest {
   /** Standing ANN-index maintenance — the IVF twin of
     * [[pairIndexMaintenanceStream]]: the FIRST micro-batch bootstraps
     * the index (trains centroids from the batch via
-    * [[graft.operators.Similarity.buildIvfIndexOf]] — production points
+    * [[graft.operators.Similarity.buildIvfIndexBatch]] — production points
     * the bootstrap at a representative base corpus, i.e. makes the
     * first slice big); every later batch assigns its vectors to the
     * FIXED persisted centroids and appends only the touched cell
@@ -700,19 +699,13 @@ object StreamingIngest {
     * applied to the phrase-search index: each document slice lands its
     * positional postings batch_id-keyed (exactly-once by layout), and
     * [[graft.operators.Retrieval.phraseSearchServed]] answers over the
-    * union without re-tokenizing anything already indexed. Attach-time
-    * adoption (ADVICE r11): an index bootstrapped by the PRE-r11 flat
-    * [[graft.operators.Retrieval.buildPosIndex]] (tok=* at the root)
-    * is migrated under `batch_id=-1` before the first batch lands —
-    * without it the batch-keyed writes sit NEXT TO flat tok=* dirs and
-    * partition discovery fails at serve time, the exact mixed-depth
-    * failure the unified layout exists to prevent. Idempotent; the
-    * current bootstrap layout has nothing left to move. */
+    * union without re-tokenizing anything already indexed. A one-shot
+    * bootstrap of the same indexPath is its
+    * [[graft.operators.Compaction.BootstrapBatchId]] batch, so the
+    * stream's partitions land beside it at one partition depth. */
   def posIndexMaintenanceStream(stream: DataFrame, indexPath: String,
                                 checkpointDir: String,
                                 compactEvery: Int = 0): Unit = {
-    graft.sinks.Sinks.adoptFlatLayout(stream.sparkSession,
-      s"${graft.operators.Compaction.resolveRoot(stream.sparkSession, indexPath)}/pos")
     val q = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -622,48 +622,27 @@ class IngestSinksSpec extends SparkSpec {
     assert(missing.getMessage.contains("v=9"))
   }
 
-  test("flat-layout tables adopt the batch_id layout; flat APIs refuse mixes") {
-    import org.apache.spark.sql.functions._
-    // IVF: build flat, then a batch-keyed stream append attaches — the
-    // flat cells must move under batch_id=-1 (mixed layouts are
-    // unreadable at partition discovery), serving keeps every vector.
-    val dir = tmpDir("adopt")
-    val emb = Tables.embeddings(spark, sf0001)
-    val base = emb.where(col("vec_id") % 7 =!= 3)
-    val inc = emb.where(col("vec_id") % 7 === 3)
-    graft.operators.Similarity.buildIvfIndexOf(spark, base, s"$dir/ivf")
-    graft.operators.Similarity.appendToIvfIndexBatch(spark, inc, s"$dir/ivf", 5)
-    val postings = spark.read.parquet(s"$dir/ivf/postings")
-    assert(postings.count() == emb.count(), "adoption lost postings")
-    assert(postings.columns.contains("batch_id") &&
-      postings.columns.contains("cell"))
-    // The flat append API refuses a stream-maintained layout.
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.appendToIvfIndex(spark, inc, s"$dir/ivf")
+  test("every staged maintained index is batch_id-keyed: no flat " +
+      "accreting dir") {
+    // Stage through the served rows' own stagers, then look where
+    // Staged put each artifact: a one-shot build is the bootstrap
+    // batch, so every accreting subdir holds only batch_id= partitions
+    // (plus hidden `_`/`.` entries) — never tok=, cell= or part files.
+    Seq("q_bm25_served", "q_phrase_search_served", "q_ann_ivf_served",
+      "q_source_overlap").foreach(q => SparkEntry.queries(q)(spark, sf0001))
+    def staged(kind: String) = Staged.costs((kind, sf0001)).dir
+    val accreting = Seq("lex/postings", "lex/doclens", "lex/stats")
+      .map(sub => s"${staged("lex")}/$sub") ++ Seq(
+      s"${staged("pos")}/pos/pos", s"${staged("ivf")}/ivf/postings",
+      s"${staged("pairs")}/pairs")
+    accreting.foreach { d =>
+      val kids = Option(new java.io.File(d).list()).toSeq.flatten
+      assert(kids.exists(_.startsWith("batch_id=")),
+        s"$d holds no batch partition")
+      val flat = kids.filterNot(n =>
+        n.startsWith("batch_id=") || n.startsWith("_") || n.startsWith("."))
+      assert(flat.isEmpty, s"$d is a flat accreting dir: ${flat.mkString(", ")}")
     }
-    assert(e.getMessage.contains("appendToIvfIndexBatch"))
-    // Pairs: flat bootstrap (buildSignatureTable + batch append), then
-    // the batch-keyed stream variant attaches and the serve path still
-    // matches the one-pass rebuild.
-    val docs = Tables.documents(spark, sf0001)
-    val dbase = docs.where(col("doc_id") % 5 =!= 0)
-    val dinc = docs.where(col("doc_id") % 5 === 0)
-    graft.operators.Dedup.buildSignatureTable(dbase.limit(0), s"$dir/sigs")
-    graft.operators.Dedup.appendToPairTable(spark, dbase, dbase,
-      s"$dir/sigs", s"$dir/pairs")
-    graft.operators.Dedup.appendToPairTableBatch(spark, dinc, docs,
-      s"$dir/sigs", s"$dir/pairs", 3)
-    val served = graft.operators.Dedup.pairTable(spark, s"$dir/pairs")
-    val rebuilt = graft.operators.Dedup.ngramJaccard(spark, sf0001)
-    assert(served.exceptAll(rebuilt).isEmpty &&
-      rebuilt.exceptAll(served).isEmpty,
-      "flat bootstrap + batch-keyed increment must equal the rebuild")
-    // And the flat append API refuses the now-batch_id-keyed table.
-    val e2 = intercept[IllegalArgumentException] {
-      graft.operators.Dedup.appendToPairTable(spark, dinc, docs,
-        s"$dir/sigs", s"$dir/pairs")
-    }
-    assert(e2.getMessage.contains("appendToPairTableBatch"))
   }
 
   test("versioned publish: concurrent publishers never blend a version") {

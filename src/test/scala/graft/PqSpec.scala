@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Pq, Similarity}
+import graft.operators.{Compaction, Pq, Similarity}
 
 /** Product quantization: structure, determinism, and the property PQ
   * exists for — ADC ranking over 4-byte codes still finds real
@@ -62,7 +62,8 @@ class PqSpec extends SparkSpec {
   test("IVF-PQ: candidates come only from probed cells; served == in-query") {
     val ivfIdx = tmpDir("ivfpq_ivf")
     val pqIdx = tmpDir("ivfpq_pq")
-    Similarity.buildIvfIndex(spark, sf0001, ivfIdx)
+    Similarity.buildIvfIndexBatch(spark, Tables.embeddings(spark, sf0001),
+      ivfIdx, Compaction.BootstrapBatchId)
     Pq.buildPqIndex(spark, sf0001, pqIdx)
     val inQuery = Pq.ivfPqTopk(spark, sf0001)
     val served = Pq.ivfPqTopkServed(spark, sf0001, ivfIdx, pqIdx)

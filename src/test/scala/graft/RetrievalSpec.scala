@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Retrieval
+import graft.operators.{Compaction, Retrieval}
 
 /** Semantic invariants of the ranked-retrieval tier (BM25 + RRF hybrid)
   * — the oracle rows pin exact values; these pin the properties that
@@ -89,7 +89,8 @@ class RetrievalSpec extends SparkSpec {
   test("phrase served == inline; positional scan is partition-pruned") {
     import graft.operators.Retrieval
     val dir = tmpDir("pos_idx")
-    Retrieval.buildPosIndex(spark, sf0001, s"$dir/pos")
+    Retrieval.buildPosIndexBatch(spark, Tables.documents(spark, sf0001),
+      s"$dir/pos", Compaction.BootstrapBatchId)
     val served = Retrieval.phraseSearchServed(spark, s"$dir/pos")
     val inline = Retrieval.phraseSearch(spark, sf0001)
     assert(served.exceptAll(inline).isEmpty &&
@@ -124,8 +125,10 @@ class RetrievalSpec extends SparkSpec {
   test("hybrid rrf served == inline; lex arm partition-pruned") {
     import graft.operators.{Retrieval, Similarity}
     val dir = tmpDir("hybrid_idx")
-    Retrieval.buildLexIndex(spark, sf0001, s"$dir/lex")
-    Similarity.buildIvfIndex(spark, sf0001, s"$dir/ivf")
+    Retrieval.buildLexIndexBatch(spark, Tables.documents(spark, sf0001),
+      s"$dir/lex", Compaction.BootstrapBatchId)
+    Similarity.buildIvfIndexBatch(spark, Tables.embeddings(spark, sf0001),
+      s"$dir/ivf", Compaction.BootstrapBatchId)
     val served = Retrieval.hybridRrfServed(spark, s"$dir/lex", s"$dir/ivf")
     val inline = Retrieval.hybridRrf(spark, sf0001)
     assert(served.exceptAll(inline).isEmpty &&
@@ -143,15 +146,14 @@ class RetrievalSpec extends SparkSpec {
       "indexPath; replayed batch 0 never clobbers the bootstrap slice") {
     import graft.operators.Retrieval
     // The lifecycle the unified batch_id layout exists for (ADVICE r10
-    // / VERDICT r11 #3): full build claims batch_id=-1, a stream then
-    // attaches to the SAME indexPath and its foreachBatch ids (0, 1)
-    // land beside it — one consistent partition depth, and the
-    // bootstrap sits BELOW any replayable id.
+    // / VERDICT r11 #3): a one-shot build claims the bootstrap
+    // batch_id=-1, a stream then attaches to the SAME indexPath and its
+    // foreachBatch ids (0, 1) land beside it — one consistent partition
+    // depth, and the bootstrap sits BELOW any replayable id.
     val docs = Tables.documents(spark, sf0001)
     val dir = tmpDir("pos_mixed")
-    docs.where(col("doc_id") % 3 === 0).write
-      .parquet(s"$dir/boot/documents.parquet")
-    Retrieval.buildPosIndex(spark, s"$dir/boot", s"$dir/idx")
+    Retrieval.buildPosIndexBatch(spark, docs.where(col("doc_id") % 3 === 0),
+      s"$dir/idx", Compaction.BootstrapBatchId)
     docs.where(col("doc_id") % 3 === 1)
       .coalesce(1).write.parquet(s"$dir/in/s1")
     docs.where(col("doc_id") % 3 === 2)
@@ -188,37 +190,6 @@ class RetrievalSpec extends SparkSpec {
       inline.exceptAll(replayed).isEmpty, "replay drifted the serve")
   }
 
-  test("pos index flat-layout adoption: a pre-unified flat index is " +
-      "migrated under batch_id=-1 at stream attach") {
-    import graft.operators.Retrieval
-    // An index bootstrapped by the OLD flat layout (tok=* at the
-    // root). Without attach-time adoption, the stream's batch_id=N
-    // dirs land NEXT TO the flat tok=* dirs and partition discovery
-    // fails at serve time (ADVICE r11 #3).
-    val docs = Tables.documents(spark, sf0001)
-    val dir = tmpDir("pos_adopt")
-    docs.where(col("doc_id") % 2 === 0)
-      .select(col("doc_id"),
-        posexplode(graft.operators.TextOps.tokens(col("text")))
-          .as(Seq("pos", "tok")))
-      .write.partitionBy("tok").mode("overwrite").parquet(s"$dir/idx/pos")
-    docs.where(col("doc_id") % 2 === 1)
-      .coalesce(1).write.parquet(s"$dir/in/s1")
-    val schema = spark.read.parquet(s"$dir/in/s1").schema
-    graft.streaming.StreamingIngest.posIndexMaintenanceStream(
-      spark.readStream.schema(schema).parquet(s"$dir/in/*"),
-      s"$dir/idx", s"$dir/ckpt")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(
-      new org.apache.hadoop.fs.Path(s"$dir/idx/pos/batch_id=-1")),
-      "flat layout was not adopted under batch_id=-1")
-    val inline = Retrieval.phraseSearch(spark, sf0001)
-    val served = Retrieval.phraseSearchServed(spark, s"$dir/idx")
-    assert(served.exceptAll(inline).isEmpty &&
-      inline.exceptAll(served).isEmpty, "adopted index drifted")
-  }
-
   test("positional serve survives numeric tokens (no partition inference)") {
     import spark.implicits._
     import graft.operators.Retrieval
@@ -226,10 +197,9 @@ class RetrievalSpec extends SparkSpec {
     // inference would read it back as the integer 7 and silently
     // de-match it from the phrase. The explicit reader schema pins it.
     val dir = tmpDir("pos_num")
-    Seq((1L, "007 agent 007 agent"), (2L, "agent 7"))
-      .toDF("doc_id", "text")
-      .write.parquet(s"$dir/documents.parquet")
-    Retrieval.buildPosIndex(spark, dir, s"$dir/pos")
+    Retrieval.buildPosIndexBatch(spark,
+      Seq((1L, "007 agent 007 agent"), (2L, "agent 7")).toDF("doc_id", "text"),
+      s"$dir/pos", Compaction.BootstrapBatchId)
     val served = Retrieval
       .phraseSearchServed(spark, s"$dir/pos", Seq("007", "agent"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2))))
@@ -240,7 +210,8 @@ class RetrievalSpec extends SparkSpec {
 
   test("bm25 served == inline; postings scan is partition-pruned") {
     val dir = tmpDir("lex_idx")
-    graft.operators.Retrieval.buildLexIndex(spark, sf0001, s"$dir/lex")
+    Retrieval.buildLexIndexBatch(spark, Tables.documents(spark, sf0001),
+      s"$dir/lex", Compaction.BootstrapBatchId)
     val served = graft.operators.Retrieval.bm25TopKServed(spark, s"$dir/lex")
     val inline = graft.operators.Retrieval.bm25TopK(spark, sf0001)
     assert(served.exceptAll(inline).isEmpty &&
@@ -257,7 +228,7 @@ class RetrievalSpec extends SparkSpec {
     import graft.operators.Retrieval
     val docs = Tables.documents(spark, sf0001)
     val oneShot = tmpDir("lex_full")
-    Retrieval.buildLexIndex(spark, sf0001, s"$oneShot/lex")
+    Retrieval.buildLexIndexBatch(spark, docs, s"$oneShot/lex", Compaction.BootstrapBatchId)
     val expect = Retrieval.bm25TopKServed(spark, s"$oneShot/lex")
     // Two disjoint doc_id slices arriving as separate batches...
     val inc = tmpDir("lex_inc")
@@ -280,7 +251,7 @@ class RetrievalSpec extends SparkSpec {
     import graft.operators.Retrieval
     val docs = Tables.documents(spark, sf0001)
     val oneShot = tmpDir("lex_full2")
-    Retrieval.buildLexIndex(spark, sf0001, s"$oneShot/lex")
+    Retrieval.buildLexIndexBatch(spark, docs, s"$oneShot/lex", Compaction.BootstrapBatchId)
     val expect = Retrieval.bm25TopKServed(spark, s"$oneShot/lex")
     val dir = tmpDir("lex_stream")
     (0 to 2).foreach { m =>

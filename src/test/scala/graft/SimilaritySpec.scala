@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{ScaleEnvelope, Similarity}
+import graft.operators.{Compaction, ScaleEnvelope, Similarity}
 
 /** Unit coverage for similarity search: exact baseline sanity, LSH
   * bucketing determinism, and approximate-vs-exact recall. */
@@ -377,18 +377,18 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val inc = emb.where(col("vec_id") % 7 === 3)
     val base = emb.join(inc.select("vec_id"), Seq("vec_id"), "left_anti")
-    Similarity.buildIvfIndexOf(spark, base, s"$dir/a")
-    Similarity.appendToIvfIndex(spark, inc, s"$dir/a")
+    Similarity.buildIvfIndexBatch(spark, base, s"$dir/a",
+      Compaction.BootstrapBatchId)
+    Similarity.appendToIvfIndexBatch(spark, inc, s"$dir/a", 0L)
     // The rebuild must hold the centroid set FIXED (the production
     // contract: appends never retrain; cells retrain only on a full
     // rebuild). Since round 6 builds TRAIN their centroids, a full-corpus
     // training run would diverge from the base-only one by construction —
     // so rebuild b against index a's persisted centroids.
-    Similarity.buildIvfIndexWith(
-      Similarity.normalizedCorpusOf(spark, emb),
-      spark.read.parquet(s"$dir/a/centroids"), s"$dir/b")
-    val pa = spark.read.parquet(s"$dir/a/postings")
-    val pb = spark.read.parquet(s"$dir/b/postings")
+    ivfRebuildWith(s"$dir/a", emb, s"$dir/b")
+    // batch_id is provenance (two batches in a, one in b), not content.
+    val pa = spark.read.parquet(s"$dir/a/postings").drop("batch_id")
+    val pb = spark.read.parquet(s"$dir/b/postings").drop("batch_id")
     assert(pa.count() == emb.count(), "every vector posted exactly once")
     assert(pa.exceptAll(pb).isEmpty && pb.exceptAll(pa).isEmpty,
       "append-maintained postings are bit-identical to the rebuild")
@@ -411,10 +411,11 @@ class SimilaritySpec extends SparkSpec {
     // floor — if appends degraded the cell geometry badly, it won't.
     val idx = tmpDir("ivf_drift")
     val emb = Tables.embeddings(spark, sf0001)
-    Similarity.buildIvfIndexOf(spark, emb.where(col("vec_id") % 4 === 0), idx)
+    Similarity.buildIvfIndexBatch(spark, emb.where(col("vec_id") % 4 === 0),
+      idx, Compaction.BootstrapBatchId)
     (1 to 3).foreach { r =>
-      Similarity.appendToIvfIndex(spark,
-        emb.where(col("vec_id") % 4 === r), idx)
+      Similarity.appendToIvfIndexBatch(spark,
+        emb.where(col("vec_id") % 4 === r), idx, r.toLong)
     }
     graft.expressions.DotProduct.register(spark)
     val queries = emb.where(col("vec_id") < Similarity.NumQueries)
@@ -431,7 +432,8 @@ class SimilaritySpec extends SparkSpec {
     // k/nprobe settings. Absolute recall at nprobe=2 is a geometry
     // constant, not a health signal; the maintained-vs-fresh gap is.
     val fresh = tmpDir("ivf_fresh")
-    Similarity.buildIvfIndexOf(spark, emb, fresh)
+    Similarity.buildIvfIndexBatch(spark, emb, fresh,
+      Compaction.BootstrapBatchId)
     val maintained = meanRecall(idx)
     val freshRecall = meanRecall(fresh)
     assert(maintained >= 0.7 * freshRecall,
@@ -444,9 +446,11 @@ class SimilaritySpec extends SparkSpec {
 
   test("persisted IVF index serves results identical to the in-memory plan") {
     val idx = tmpDir("ivf_idx")
-    Similarity.buildIvfIndex(spark, sf0001, idx)
+    Similarity.buildIvfIndexBatch(spark, Tables.embeddings(spark, sf0001),
+      idx, Compaction.BootstrapBatchId)
     // Postings landed hive-partitioned by cell (the pruning layout).
-    val cellDirs = new java.io.File(s"$idx/postings").listFiles()
+    val cellDirs = new java.io.File(
+        s"$idx/postings/batch_id=${Compaction.BootstrapBatchId}").listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs > 1)
     graft.expressions.DotProduct.register(spark)
@@ -479,7 +483,8 @@ class SimilaritySpec extends SparkSpec {
     // the shared assignCells wrote, cent_cos from the same IEEE
     // expression over parquet-exact operands.
     val idx = tmpDir("semdedup_idx")
-    Similarity.buildIvfIndex(spark, sf0001, idx)
+    Similarity.buildIvfIndexBatch(spark, Tables.embeddings(spark, sf0001),
+      idx, Compaction.BootstrapBatchId)
     val inQuery = Similarity.semDedup(spark, sf0001)
     val served = Similarity.semDedupServed(spark, idx)
     assert(served.count() == inQuery.count() && served.count() > 0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
@@ -29,4 +29,14 @@ abstract class SparkSpec extends AnyFunSuite {
   def sf0001: String = SparkSpec.Sf0001
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The fixed-centroid IVF rebuild reference: index `from`'s trained
+    * centroids copied into a fresh index at `to`, then ONE
+    * `appendToIvfIndexBatch` of `emb` at the bootstrap id. Appends never
+    * retrain, so this is what an append-maintained index must equal. */
+  def ivfRebuildWith(from: String, emb: DataFrame, to: String): Unit = {
+    spark.read.parquet(s"$from/centroids").write.parquet(s"$to/centroids")
+    graft.operators.Similarity.appendToIvfIndexBatch(spark, emb, to,
+      graft.operators.Compaction.BootstrapBatchId)
+  }
 }

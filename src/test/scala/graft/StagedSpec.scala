@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The staging registry's contract, on plain JVM values: one build per
   * (kind, sfDir) under concurrency, nested builds, retry after a failed
-  * build, and one fresh `graft_<kind>*` temp dir per key. */
+  * build, the per-build cost record, and one fresh `graft_<kind>*` temp
+  * dir per key. */
 class StagedSpec extends AnyFunSuite {
 
   /** A sfDir no other spec (or test) in this JVM stages against. */
@@ -44,6 +45,22 @@ class StagedSpec extends AnyFunSuite {
     assert(Staged.once[Int]("spec_inner", sf)(_ => fail("inner rebuilt")) == 7)
   }
 
+  test("each finished build records its dir, seconds and own bytes") {
+    val sf = freshSf()
+    val dir = Staged.once("spec_cost", sf) { dir =>
+      Staged.once("spec_cost_inner", sf) { inner =>
+        Files.write(Paths.get(inner, "x"), new Array[Byte](5))
+      }
+      Files.createDirectories(Paths.get(dir, "sub"))
+      Files.write(Paths.get(dir, "sub", "y"), new Array[Byte](11))
+      Thread.sleep(20)
+      dir
+    }
+    val cost = Staged.costs(("spec_cost", sf))
+    assert(cost.dir == dir && cost.bytes == 11 && cost.seconds >= 0.02)
+    assert(Staged.costs(("spec_cost_inner", sf)).bytes == 5)
+  }
+
   test("a throwing build propagates and is not remembered") {
     val sf = freshSf()
     val builds = new AtomicInteger()
@@ -54,6 +71,7 @@ class StagedSpec extends AnyFunSuite {
       }
     }
     assert(e.getMessage == "staging write failed")
+    assert(!Staged.costs.contains(("spec_flaky", sf)))
     assert(Staged.once("spec_flaky", sf) { _ => builds.incrementAndGet() } == 2)
     assert(Staged.once[Int]("spec_flaky", sf)(_ => fail("rebuilt")) == 2)
   }

@@ -440,9 +440,7 @@ class StreamingPipelineSpec extends SparkSpec {
     // never retrain — the batch contract): postings must be
     // bit-identical (modulo the stream layout's batch_id provenance
     // partition, excluded from the compare).
-    graft.operators.Similarity.buildIvfIndexWith(
-      graft.operators.Similarity.normalizedCorpusOf(spark, emb),
-      spark.read.parquet(s"$dir/idx/centroids"), s"$dir/rebuild")
+    ivfRebuildWith(s"$dir/idx", emb, s"$dir/rebuild")
     val rebuilt = spark.read.parquet(s"$dir/rebuild/postings")
       .select(postingCols: _*)
     assert(maintained.exceptAll(rebuilt).isEmpty &&

@@ -111,7 +111,8 @@ class TakedownSpec extends SparkSpec {
       "equal a same-centroid rebuild over the purged vectors") {
     val dir = tmpDir("td_ivf")
     val emb = Tables.embeddings(spark, sf0001)
-    Similarity.buildIvfIndexOf(spark, emb, s"$dir/idx")
+    Similarity.buildIvfIndexBatch(spark, emb, s"$dir/idx",
+      Compaction.BootstrapBatchId)
     val dead = emb.where(col("vec_id") % 7 === 3)
       .select(col("vec_id").as("doc_id")) // recordDeletes casts by name
       .withColumnRenamed("doc_id", "vec_id")
@@ -131,9 +132,7 @@ class TakedownSpec extends SparkSpec {
     // Rebuild holding the TRAINED centroids fixed (they are structure,
     // not data): postings from purged vectors only.
     val purged = emb.join(dead, Seq("vec_id"), "left_anti")
-    Similarity.buildIvfIndexWith(
-      Similarity.normalizedCorpusOf(spark, purged),
-      spark.read.parquet(s"$dir/idx/centroids"), s"$dir/rebuilt")
+    ivfRebuildWith(s"$dir/idx", purged, s"$dir/rebuilt")
     val want = Similarity.queryIvfIndex(spark, s"$dir/rebuilt", queries)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
     assert(got == want)
@@ -345,8 +344,10 @@ class TakedownSpec extends SparkSpec {
       "takedown ledger never collides with ingest CDC ids (#3)") {
     val dir = tmpDir("flat_fold")
     val idx = s"$dir/idx"
-    // One-shot FLAT lex index (no batch partitions at all).
-    Retrieval.buildLexIndex(spark, sf0001, idx)
+    // One-shot lex index: the whole corpus as the single bootstrap
+    // batch, so the fold below is deletes-only work.
+    Retrieval.buildLexIndexBatch(spark, docs, idx,
+      Compaction.BootstrapBatchId)
     Takedown.takedownLex(spark, idx, takedownIds, 0L)
     val want = servedRows(idx)
     val rebuilt = s"$dir/rebuilt"
@@ -362,6 +363,9 @@ class TakedownSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(s"$gen/deletes/batch_id=0")),
       "deletes not applied by the deletes-only fold")
+    assert(fs.exists(new Path(
+      s"$gen/postings/batch_id=${Compaction.BootstrapBatchId}")),
+      "deletes-only fold left the bootstrap partition")
     assert(!Compaction.compactionDue(spark, idx,
       sub = "postings", deletesSub = "deletes", threshold = 2),
       "compactionDue still firing after the fold — the starvation loop")

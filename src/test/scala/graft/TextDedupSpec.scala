@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TextOps}
+import graft.operators.{Compaction, Dedup, TextOps}
 
 /** Unit coverage for the text-analysis and dedup operator families. */
 class TextDedupSpec extends SparkSpec {
@@ -157,27 +157,32 @@ class TextDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     val base = docs.where(col("doc_id") % 5 =!= 0)
     val inc = docs.where(col("doc_id") % 5 === 0)
-    // Bootstrap: empty index, then the base corpus IS the first slice.
-    Dedup.buildSignatureTable(base.limit(0), s"$dir/sigs")
-    Dedup.appendToPairTable(spark, base, base, s"$dir/sigs", s"$dir/pairs")
+    // Bootstrap: the base corpus IS the bootstrap batch (no signature
+    // table yet — the batch append bootstraps itself).
+    Dedup.appendToPairTableBatch(spark, base, base, s"$dir/sigs",
+      s"$dir/pairs", Compaction.BootstrapBatchId)
     // Arrival slice: new-vs-all candidates only; old-vs-old pairs are
     // never recomputed.
-    Dedup.appendToPairTable(spark, inc, docs, s"$dir/sigs", s"$dir/pairs")
+    Dedup.appendToPairTableBatch(spark, inc, docs, s"$dir/sigs",
+      s"$dir/pairs", 0L)
     val incremental = Dedup.pairTable(spark, s"$dir/pairs")
     val full = Dedup.ngramJaccard(spark, sf0001)
     assert(incremental.exceptAll(full).isEmpty &&
       full.exceptAll(incremental).isEmpty,
       "bootstrap + increment must reproduce the full rebuild exactly")
-    // Replayed append is a no-op at the ROW level (VERDICT r6 #6): the
-    // append-time anti-joins drop already-present pairs AND signatures,
-    // so re-running the slice writes zero rows — checked on the RAW
-    // table, without the serve-time distinct defense.
-    val rawPairs = spark.read.parquet(s"$dir/pairs").count()
-    val rawSigs = spark.read.parquet(s"$dir/sigs").count()
-    Dedup.appendToPairTable(spark, inc, docs, s"$dir/sigs", s"$dir/pairs")
-    assert(spark.read.parquet(s"$dir/pairs").count() == rawPairs &&
-      spark.read.parquet(s"$dir/sigs").count() == rawSigs,
-      "replayed appendToPairTable must write zero duplicate rows")
+    // A replay under the same batch id leaves the table unchanged —
+    // checked on the RAW tables, without the serve-time distinct
+    // defense: the slice overwrites its own partitions.
+    def raw(t: String) = spark.read.parquet(s"$dir/$t").localCheckpoint()
+    val (pairsBefore, sigsBefore) = (raw("pairs"), raw("sigs"))
+    Dedup.appendToPairTableBatch(spark, inc, docs, s"$dir/sigs",
+      s"$dir/pairs", 0L)
+    Seq(pairsBefore -> raw("pairs"), sigsBefore -> raw("sigs")).foreach {
+      case (before, after) =>
+        assert(after.count() == before.count() &&
+          after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty,
+          "a replayed batch must leave the table unchanged")
+    }
   }
 
   test("pair table build/serve is bit-identical to inline recompute") {

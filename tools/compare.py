@@ -2,15 +2,21 @@
 """Dev-only oracle comparator (mimics the driver's DuckDB check).
 
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
+       python3 tools/compare.py --pair <parentOutDir> <changeOutDir>
 
 For each <name>.parquet dir under verifyOutDir, runs oracle_sql.json[name]
 in DuckDB with views over sfDir's parquet tables, then compares:
 column names (sorted), row counts, and an order-insensitive value hash
 with values normalized (floats rounded repr, dates/timestamps as ISO).
+
+--pair compares two Verify output dirs (a parent and a change) without
+DuckDB: it byte-compares the two oracle_sql.json files, then hashes every
+query's output in both dirs the same way and prints each query whose
+columns or hash differ (or that is missing from one side), ending with
+"N identical, M differ". Exit status is 0 only when nothing differs.
 NOT part of the shipped library — local testing aid only.
 """
 import sys, json, glob, os, hashlib
-import duckdb
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -45,7 +51,42 @@ def df_hash(df: pd.DataFrame) -> str:
         h.update(("\x01".join("" if v is None else str(v) for v in row) + "\n").encode())
     return h.hexdigest()
 
+def output_hash(out_dir: str, name: str):
+    """(sorted columns, row count, hash) of one query's Verify output, or
+    None when the query wrote no parquet files."""
+    files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
+    if not files:
+        return None
+    df = pd.concat([pd.read_parquet(f) for f in files])
+    return sorted(df.columns), len(df), df_hash(norm_df(df))
+
+def compare_pair(parent_dir: str, change_dir: str) -> int:
+    oracle_a = open(f"{parent_dir}/oracle_sql.json", "rb").read()
+    oracle_b = open(f"{change_dir}/oracle_sql.json", "rb").read()
+    oracle_same = oracle_a == oracle_b
+    print("oracle_sql.json " + ("identical" if oracle_same else "DIFFERS"))
+    names = sorted(set(json.loads(oracle_a)) | set(json.loads(oracle_b)))
+    n_same = n_diff = 0
+    for name in names:
+        a, b = output_hash(parent_dir, name), output_hash(change_dir, name)
+        if a is not None and a == b:
+            n_same += 1
+            continue
+        n_diff += 1
+        if a is None or b is None:
+            side = "parent" if a is None else "change"
+            print(f"DIFF {name}: no output in {side}")
+        elif a[0] != b[0]:
+            print(f"DIFF {name}: columns {a[0]} vs {b[0]}")
+        else:
+            print(f"DIFF {name}: rows {a[1]} vs {b[1]}, hash {a[2][:12]} vs {b[2][:12]}")
+    print(f"\n{n_same} identical, {n_diff} differ")
+    return 0 if oracle_same and n_diff == 0 else 1
+
 def main():
+    if sys.argv[1] == "--pair":
+        sys.exit(compare_pair(sys.argv[2], sys.argv[3]))
+    import duckdb
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
     for t in TABLES:
