@@ -920,11 +920,12 @@ object Similarity {
     * deterministic, so a replay rewrites identical bytes), postings
     * under the batch's own partition. The ADVICE r6 crash window
     * (bootstrap writes landed, checkpoint commit didn't) therefore
-    * converges WHICHEVER branch the replay takes: re-entering here retrains to the identical centroids and
-    * overwrites; falling through to the append branch (centroids
-    * exist) assigns against the very centroids this bootstrap
-    * persisted — the same [[assignCells]] the bootstrap ran — and
-    * overwrites the same batch partition. */
+    * converges WHICHEVER branch the replay takes: re-entering here
+    * retrains to the identical centroids and overwrites; falling
+    * through to the append branch (centroids exist) assigns against
+    * the very centroids this bootstrap persisted — the same
+    * [[assignCells]] the bootstrap ran — and overwrites the same batch
+    * partition. */
   def buildIvfIndexBatch(spark: SparkSession, emb: DataFrame,
                          indexPath: String, batchId: Long): Unit = {
     // Replay guard post-compaction (r13): see [[Compaction]].

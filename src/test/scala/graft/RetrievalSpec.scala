@@ -228,7 +228,8 @@ class RetrievalSpec extends SparkSpec {
     import graft.operators.Retrieval
     val docs = Tables.documents(spark, sf0001)
     val oneShot = tmpDir("lex_full")
-    Retrieval.buildLexIndexBatch(spark, docs, s"$oneShot/lex", Compaction.BootstrapBatchId)
+    Retrieval.buildLexIndexBatch(spark, docs, s"$oneShot/lex",
+      Compaction.BootstrapBatchId)
     val expect = Retrieval.bm25TopKServed(spark, s"$oneShot/lex")
     // Two disjoint doc_id slices arriving as separate batches...
     val inc = tmpDir("lex_inc")
@@ -251,7 +252,8 @@ class RetrievalSpec extends SparkSpec {
     import graft.operators.Retrieval
     val docs = Tables.documents(spark, sf0001)
     val oneShot = tmpDir("lex_full2")
-    Retrieval.buildLexIndexBatch(spark, docs, s"$oneShot/lex", Compaction.BootstrapBatchId)
+    Retrieval.buildLexIndexBatch(spark, docs, s"$oneShot/lex",
+      Compaction.BootstrapBatchId)
     val expect = Retrieval.bm25TopKServed(spark, s"$oneShot/lex")
     val dir = tmpDir("lex_stream")
     (0 to 2).foreach { m =>
