@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.{BoundedCollectLong, DotProduct, HammingDistance, ShingleArray}
 import graft.plans.RewriteDotProduct
 
@@ -14,44 +16,38 @@ import graft.plans.RewriteDotProduct
   *    `spark.experimental.extraOptimizations` and the temp-function
   *    registry, idempotent.
   *
-  * Installs the native expressions (`dot_d`, `hamming`) and the
-  * [[graft.plans.RewriteDotProduct]] optimizer rule that transparently
-  * upgrades HOF dot-product folds to the fused codegen loop.
+  * Installs the SQL names of the native expressions ([[Functions]]) and
+  * the [[graft.plans.RewriteDotProduct]] optimizer rule that
+  * transparently upgrades HOF dot-product folds to the fused codegen
+  * loop. Operator code does not need either path: it builds native
+  * columns through the expressions' `of` constructors.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RewriteDotProduct)
-    ext.injectFunction((
-      FunctionIdentifier("dot_d"),
-      new ExpressionInfo(classOf[DotProduct].getCanonicalName, "dot_d"),
-      DotProduct.builder))
-    ext.injectFunction((
-      FunctionIdentifier("hamming"),
-      new ExpressionInfo(classOf[HammingDistance].getCanonicalName, "hamming"),
-      HammingDistance.builder))
-    ext.injectFunction((
-      FunctionIdentifier("bounded_collect_long"),
-      new ExpressionInfo(classOf[BoundedCollectLong].getCanonicalName,
-        "bounded_collect_long"),
-      BoundedCollectLong.builder))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_array"),
-      new ExpressionInfo(classOf[ShingleArray].getCanonicalName,
-        "shingle_array"),
-      ShingleArray.builder))
+    GraftExtensions.Functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getCanonicalName, name), builder))
+    }
   }
 }
 
 object GraftExtensions {
+  /** The SQL functions graft offers SQL users: (name, expression
+    * class, builder). The one table both install paths read. */
+  val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_d", classOf[DotProduct], DotProduct.builder),
+    ("hamming", classOf[HammingDistance], HammingDistance.builder),
+    ("bounded_collect_long", classOf[BoundedCollectLong],
+      BoundedCollectLong.builder),
+    ("shingle_array", classOf[ShingleArray], ShingleArray.builder))
+
   /** Install on an already-running session (idempotent). */
   def install(spark: SparkSession): Unit = {
-    DotProduct.register(spark)
-    HammingDistance.register(spark)
-    BoundedCollectLong.register(spark)
-    ShingleArray.register(spark)
+    Functions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
     if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteDotProduct

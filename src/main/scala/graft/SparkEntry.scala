@@ -194,17 +194,9 @@ object SparkEntry {
     "q_ann_ivf" -> ((s, d) => Similarity.topkCosineIvf(s, d)),
     // Same answer from the PERSISTED trained index (built once per JVM):
     // the production build/serve split, with cell-partition pruning.
-    "q_ann_ivf_served" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val idx = stagedIvfIndex(s, d)
-      graft.expressions.DotProduct.register(s)
-      val queries = graft.Tables.embeddings(s, d)
-        .where(col("vec_id") < Similarity.NumQueries)
-        .select(col("vec_id").as("q_id"),
-          transform(col("embedding"), x => x.cast("double")).as("qv"))
-        .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
-      Similarity.queryIvfIndex(s, idx, queries)
-    }),
+    "q_ann_ivf_served" -> ((s, d) => Similarity.queryIvfIndex(s,
+      stagedIvfIndex(s, d),
+      Similarity.queriesOf(graft.Tables.embeddings(s, d)))),
     "q_embedding_stats" -> ((s, d) => Similarity.embeddingStats(s, d)),
     // MMR diversification (r10): greedy relevance-vs-redundancy
     // re-rank of each query's candidate pool — the RAG serving step

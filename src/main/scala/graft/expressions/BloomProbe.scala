@@ -2,28 +2,26 @@ package graft.expressions
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.graftseam.ColumnSeam
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Session registration for Spark's own codegen'd
-  * [[BloomFilterMightContain]] predicate under the name
-  * `bloom_might_contain(filter_binary, value_long)`.
+/** Column access to Spark's own codegen'd [[BloomFilterMightContain]]
+  * predicate.
   *
   * Spark ships the expression (it is what the AQE runtime-bloom-filter
   * rule injects into shuffle joins) but does not expose it in the
-  * public function registry — this registers the stock class unchanged,
-  * no custom expression, so the probe stays inside whole-stage codegen
+  * public function API — this wraps the stock class unchanged, no
+  * custom expression, so the probe stays inside whole-stage codegen
   * (preference tier: reuse a built-in before writing one). */
 object BloomProbe {
-  val builder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2,
-      "bloom_might_contain(filter, value) takes two arguments")
-    BloomFilterMightContain(children(0), children(1))
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", builder, "built-in")
+  /** True when `value` (a long) may be in the serialized `filter`,
+    * built through [[ColumnSeam]]: no function-registry entry on any
+    * session. */
+  def of(filter: Column, value: Column): Column =
+    ColumnSeam.column(BloomFilterMightContain(
+      ColumnSeam.expression(filter), ColumnSeam.expression(value)))
 
   /** The wire format [[BloomFilterMightContain]] deserializes — the
     * sketch's own `writeTo` stream. */

@@ -4,12 +4,14 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftseam.ColumnSeam
 import org.apache.spark.sql.types._
 
 /** Bounded collect-list with an exact element count, for `long` inputs:
@@ -130,9 +132,10 @@ object BoundedCollectLong {
     BoundedCollectLong(children(0), limit)
   }
 
-  /** Register in the session's function registry (idempotent), for use
-    * via `expr`/SQL/`call_function`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_collect_long", builder, "built-in")
+  /** `bounded_collect_long(v, limit)` as an aggregate Column, built
+    * through [[ColumnSeam]]: no function-registry entry on any
+    * session. */
+  def of(v: Column, limit: Int): Column =
+    ColumnSeam.column(BoundedCollectLong(ColumnSeam.expression(v), limit)
+      .toAggregateExpression())
 }

@@ -1,8 +1,10 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftseam.ColumnSeam
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Native Catalyst expression: Hamming distance between two int bit
@@ -39,17 +41,16 @@ case class HammingDistance(left: Expression, right: Expression)
 }
 
 object HammingDistance {
-  /** The one function builder, shared by the live-session registry path
-    * and the spark.sql.extensions path (GraftExtensions). */
+  /** The SQL function builder `hamming(a, b)`, installed by
+    * [[graft.GraftExtensions]] for SQL users. */
   val builder: Seq[Expression] => Expression = { children =>
     require(children.length == 2, "hamming(a, b) takes two arguments")
     HammingDistance(children(0), children(1))
   }
 
-  /** Register `hamming(a, b)` in a session's function registry so it is
-    * usable from `expr(...)`/SQL without a spark.sql.extensions config
-    * (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming", builder, "built-in")
+  /** `hamming(a, b)` as a Column, built through [[ColumnSeam]]: no
+    * function-registry entry on any session. */
+  def of(a: Column, b: Column): Column =
+    ColumnSeam.column(
+      HammingDistance(ColumnSeam.expression(a), ColumnSeam.expression(b)))
 }

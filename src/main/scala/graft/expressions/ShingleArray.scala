@@ -1,9 +1,11 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftseam.ColumnSeam
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -82,10 +84,9 @@ case class ShingleArray(child: Expression, n: Int)
 }
 
 object ShingleArray {
-  /** SQL registration `shingle_array(toks, n)` (idempotent; the repo's
-    * standard expression seam — callers go through
-    * `call_function("shingle_array", toks, lit(n))` after registering,
-    * same as `hamming`/`dot_d`); n must be a foldable int literal. */
+  /** The SQL function builder `shingle_array(toks, n)`, installed by
+    * [[graft.GraftExtensions]] for SQL users; n must be a foldable int
+    * literal. */
   val builder: Seq[Expression] => Expression = { children =>
     require(children.length == 2, "shingle_array(toks, n) takes two args")
     val n = children(1) match {
@@ -97,7 +98,8 @@ object ShingleArray {
     ShingleArray(children(0), n)
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_array", builder, "built-in")
+  /** `shingle_array(toks, n)` as a Column, built through
+    * [[ColumnSeam]]: no function-registry entry on any session. */
+  def of(toks: Column, n: Int): Column =
+    ColumnSeam.column(ShingleArray(ColumnSeam.expression(toks), n))
 }

@@ -66,6 +66,7 @@ object VecMean extends Aggregator[Seq[Double], VecMeanBuffer, Seq[Double]] {
     * `array<double>` column (cast `array<float>` inputs first). */
   def asUdf: UserDefinedFunction = udaf(this, ExpressionEncoder[Seq[Double]]())
 
-  def register(spark: SparkSession, name: String = "vec_mean"): Unit =
-    spark.udf.register(name, asUdf)
+  /** Register as the SQL aggregate `vec_mean`. */
+  def register(spark: SparkSession): Unit =
+    spark.udf.register("vec_mean", asUdf)
 }

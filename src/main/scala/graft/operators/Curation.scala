@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.expressions.BoundedCollectLong
 
 /** End-to-end training-data curation: the composition a 100 TB corpus
   * actually runs — quality gating plus near-duplicate removal — built
@@ -109,7 +110,6 @@ object Curation {
     * so the oracle is reproducible). */
   def decontaminate(spark: SparkSession, dir: String,
                     minShared: Int = 3, maxDf: Int = 20): DataFrame = {
-    graft.expressions.BoundedCollectLong.register(spark)
     val sh = Spread(graft.Tables.documents(spark, dir))
       .select(col("doc_id"),
         Sampling.splitOf(Sampling.splitBucket(col("doc_id"))).as("split"),
@@ -130,12 +130,10 @@ object Curation {
       .groupBy(col("sh"))
       .agg(
         count(lit(1)).as("df"),
-        call_function("bounded_collect_long",
-          when(col("split") === "train", col("doc_id")), lit(maxDf))
-          .as("tr"),
-        call_function("bounded_collect_long",
-          when(col("split") === "test", col("doc_id")), lit(maxDf))
-          .as("ev"))
+        BoundedCollectLong.of(
+          when(col("split") === "train", col("doc_id")), maxDf).as("tr"),
+        BoundedCollectLong.of(
+          when(col("split") === "test", col("doc_id")), maxDf).as("ev"))
       .where(col("df") <= maxDf &&
         col("tr.n") > 0 && col("ev.n") > 0)
     postings

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.HammingDistance
 import TextOps.{normText, tokens, shingles}
 
 /** Deduplication operators for the LLM-data-pipeline tier: exact
@@ -546,7 +547,6 @@ object Dedup {
     require(maxHamming <= 3,
       s"4-band LSH over a 16-bit simhash is only complete to Hamming " +
         s"distance 3; got maxHamming=$maxHamming")
-    graft.expressions.HammingDistance.register(spark)
     val sig = simhash(spark, dir)
     val quarters = sig.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(q =>
@@ -559,7 +559,7 @@ object Dedup {
     a.join(b, Seq("q_idx", "q_val"))
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        expr("hamming(sim_a, sim_b)").as("hamming"))
+        HammingDistance.of(col("sim_a"), col("sim_b")).as("hamming"))
       // Filter BEFORE the dedup shuffle: most candidates exceed the
       // radius, so the distinct's exchange shrinks by orders of
       // magnitude (measured 5.0 s → well under half at sf0.1).
@@ -602,10 +602,8 @@ object Dedup {
     * collisions actually thin out), exact distance via four native
     * [[graft.expressions.HammingDistance]] calls summed. */
   def simhash64Neighbors(spark: SparkSession, dir: String,
-                         maxHamming: Int = 3): DataFrame = {
-    graft.expressions.HammingDistance.register(spark)
+                         maxHamming: Int = 3): DataFrame =
     simhash64NeighborsOf(simhash64(spark, dir), maxHamming)._1
-  }
 
   /** Banded near-dup candidate generation over a (doc_id, q0..q3)
     * signature frame, with an optional per-band-bucket candidate cap
@@ -854,7 +852,6 @@ object Dedup {
                                  maxHamming: Int, bucketCap: Option[Long],
                                  minBand: Column)
       : (DataFrame, DataFrame) = {
-    graft.expressions.HammingDistance.register(sig.sparkSession)
     val quarters = sig.select(col("doc_id"), col("q0"), col("q1"),
       col("q2"), col("q3"),
       posexplode(array(bands: _*)).as(Seq("band_idx", "band_val")))
@@ -882,8 +879,8 @@ object Dedup {
       .where(col("doc_a") < col("doc_b"))
     def verify(df: DataFrame): DataFrame = df
       .select(col("doc_a"), col("doc_b"),
-        (expr("hamming(a0, b0)") + expr("hamming(a1, b1)") +
-          expr("hamming(a2, b2)") + expr("hamming(a3, b3)")).as("hamming"))
+        (0 until 4).map(q => HammingDistance.of(col(s"a$q"), col(s"b$q")))
+          .reduce(_ + _).as("hamming"))
       .where(col("hamming") <= maxHamming)
     val pairs = bucketCap match {
       case None => verify(joined.where(col("band_idx") === minBand))

@@ -135,13 +135,11 @@ object Joins {
   def bloomPrunedJoin(big: DataFrame, small: DataFrame,
                       bigKeys: Seq[String], smallKeys: Seq[String],
                       expectedItems: Long, fpp: Double = 0.03): DataFrame = {
-    val spark = big.sparkSession
-    graft.expressions.BloomProbe.register(spark)
     val bf = small
       .select(xxhash64(smallKeys.map(col): _*).as("kh"))
       .stat.bloomFilter("kh", expectedItems, fpp)
     val bytes = graft.expressions.BloomProbe.serialize(bf)
-    val pruned = big.where(call_function("bloom_might_contain",
+    val pruned = big.where(graft.expressions.BloomProbe.of(
       lit(bytes), xxhash64(bigKeys.map(col): _*)))
     pruned.join(small,
       bigKeys.zip(smallKeys).map { case (a, b) => col(a) === col(b) }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.DotProduct
 
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the memory side of
@@ -49,16 +50,13 @@ object Pq {
   /** Fixed-point scale for ADC table entries. */
   val Micro = 1000000L
 
-  private def dot(a: Column, b: Column): Column =
-    call_function("dot_d", a, b)
-
   /** m-th subspace slice of a D-dim vector column (1-based slice). */
   private def sub(v: Column, m: Int): Column =
     slice(v, m * SubDim + 1, SubDim)
 
   /** Squared L2 distance from three exact dots, fixed association. */
   private def dist2(x: Column, c: Column): Column =
-    dot(x, x) - lit(2.0) * dot(x, c) + dot(c, c)
+    DotProduct.of(x, x) - lit(2.0) * DotProduct.of(x, c) + DotProduct.of(c, c)
 
   /** Trained codebooks: (m, code, cv) — `code` ∈ [0, Codes) dense by
     * seed-centroid id order, `cv` a SubDim vector. The seed is the
@@ -66,7 +64,6 @@ object Pq {
     * then [[Iterations]] Lloyd rounds at subspace grain with the
     * keep-seed-on-empty-cell guard and 9-dp mean rounding. */
   def codebooksOf(c: DataFrame): DataFrame = {
-    graft.expressions.DotProduct.register(c.sparkSession)
     val seeds = Similarity.seedCentroidsOf(c, Codes)
       .withColumn("code",
         row_number().over(Window.orderBy(col("cent_id"))) - 1)
@@ -211,7 +208,7 @@ object Pq {
       .select(col("q_id"), col("sq.m").as("m"), col("sq.qx").as("qx"))
       .join(broadcast(books), Seq("m"))
       .select(col("q_id"), col("m"), col("code"),
-        round(dot(col("qx"), col("cv")) * lit(Micro))
+        round(DotProduct.of(col("qx"), col("cv")) * lit(Micro))
           .cast("long").as("lut_c"))
 
   private def rankTopk(scored: DataFrame, k: Int): DataFrame =
@@ -234,7 +231,7 @@ object Pq {
                 k: Int = Similarity.TopK): DataFrame = {
     val raw = Similarity.normalizedCorpus(spark, dir)
     val cents = Similarity.trainedCentroidsOf(raw)
-    val ranked = rankedCells(raw, cents)
+    val ranked = Similarity.rankedCells(raw, cents)
     val cells = ranked.where(col("crank") === 1)
       .select(col("vec_id"), col("cent_id").as("cell"))
     val u = unitCorpus(spark, dir)
@@ -251,14 +248,13 @@ object Pq {
   def ivfPqTopkServed(spark: SparkSession, dir: String,
                       ivfIndexPath: String, pqIndexPath: String,
                       k: Int = Similarity.TopK): DataFrame = {
-    graft.expressions.DotProduct.register(spark)
     val ivfRoot = Compaction.resolveRoot(spark, ivfIndexPath)
     val pqRoot = Compaction.resolveRoot(spark, pqIndexPath)
     val raw = Similarity.normalizedCorpus(spark, dir)
     val cents = spark.read.parquet(s"$ivfRoot/centroids")
     // Probe ranking only needs the QUERY vectors — the corpus-wide
     // assignment is already persisted in the postings layout.
-    val ranked = rankedCells(
+    val ranked = Similarity.rankedCells(
       raw.where(col("vec_id") < Similarity.NumQueries), cents)
     // Takedown-aware (r13): honor deletes recorded against EITHER
     // index (the IVF cells and the PQ codes are views of one corpus).
@@ -272,16 +268,6 @@ object Pq {
         s"$pqRoot/deletes", idCol = "vec_id"),
       books = spark.read.parquet(s"$pqRoot/books"), k = k)
   }
-
-  /** Per-vector centroid ranking — the IVF tier's exact expression and
-    * tie-break ((ccos desc, cent_id asc), cosine over raw vectors). */
-  private def rankedCells(raw: DataFrame, cents: DataFrame): DataFrame =
-    raw.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"),
-        (dot(col("cv"), col("v")) / (col("cnv") * col("nv"))).as("ccos"))
-      .withColumn("crank", row_number().over(Window
-        .partitionBy(col("vec_id"))
-        .orderBy(col("ccos").desc, col("cent_id").asc)))
 
   private def ivfPqServeWith(u: DataFrame, ranked: DataFrame,
                              cells: DataFrame, codes: DataFrame,

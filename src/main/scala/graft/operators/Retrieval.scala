@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.DotProduct
 
 /** Ranked retrieval over the document corpus: BM25 lexical scoring and
   * reciprocal-rank-fusion (RRF) hybrid search combining the lexical
@@ -363,7 +364,6 @@ object Retrieval {
                       terms: Seq[String] = DefaultQuery,
                       queryVecId: Long = 0L,
                       k: Int = FinalK): DataFrame = {
-    graft.expressions.DotProduct.register(spark)
     val vecRoot = Compaction.resolveRoot(spark, vecIndexPath)
     // Takedown-aware (r13 review): the vector arm must drop deleted
     // vectors like every other serve path — a taken-down doc surfacing
@@ -394,7 +394,7 @@ object Retrieval {
     val scoredVec = c.crossJoin(broadcast(q))
       .where(col("vec_id") =!= queryVecId)
       .select(col("vec_id"),
-        (call_function("dot_d", col("qv"), col("v")) /
+        (DotProduct.of(col("qv"), col("v")) /
           (col("nq") * col("nv"))).as("cosine"))
     val vec = Ranking.topK(scoredVec, Seq.empty,
         Seq(col("cosine").desc, col("vec_id").asc), CandidateK)

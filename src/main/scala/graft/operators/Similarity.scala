@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.DotProduct
 
 /** Similarity-search operators over the `embeddings` fixture
   * (`embedding: array<float>`, 64-dim): brute-force cosine top-k as the
@@ -11,11 +12,12 @@ import graft.Tables
   * scale path (candidates only collide within a bucket — never
   * all-pairs at 100 TB).
   *
-  * All vector math uses higher-order functions (`zip_with` +
-  * `aggregate`), which fold left-to-right in array order — the same
-  * order the DuckDB oracle's `list_sum(list_transform(range(...)))`
-  * uses — so cosine scores are bit-identical across engines with no
-  * rounding tolerance needed.
+  * Every dot product is the native codegen
+  * [[graft.expressions.DotProduct]] expression (`DotProduct.of`), a
+  * strict left-to-right double fold in array order — the same order
+  * the DuckDB oracle's `list_sum(list_transform(range(...)))` uses — so
+  * cosine scores are bit-identical across engines with no rounding
+  * tolerance needed.
   */
 object Similarity {
 
@@ -102,26 +104,14 @@ object Similarity {
   /** embedding floats cast to double (exact) for all arithmetic. */
   private def vec: Column = transform(col("embedding"), x => x.cast("double"))
 
-  /** LTR dot product via the native codegen
-    * [[graft.expressions.DotProduct]] expression (registered in
-    * [[corpus]], which every entry point goes through). Bit-identical to
-    * the HOF fold it replaced — `aggregate(zip_with(a,b,_*_), 0.0, _+_)`
-    * — and to the oracle's `list_sum(list_transform(...))`. At fixture
-    * scale the swap is timing-neutral (the 5k-vector corpus is
-    * overhead-dominated); at volume it is the 100 TB call: 7× measured
-    * on a 2M-row × 64-dim microbenchmark (4.3 s → 0.6 s, local[8] —
-    * the fold pays an interpreted lambda per element plus a zipped
-    * intermediate array per row). */
-  private def dot(a: Column, b: Column): Column =
-    call_function("dot_d", a, b)
-
   private def planeLit(h: Int): Column =
     typedLit(hyperplanes(h).toSeq)
 
   /** LSH bucket id: sign bits of the NumPlanes hyperplane projections. */
   def bucketOf(v: Column): Column =
     (0 until NumPlanes)
-      .map(h => when(dot(planeLit(h), v) > 0, lit(1 << h)).otherwise(lit(0)))
+      .map(h => when(DotProduct.of(planeLit(h), v) > 0, lit(1 << h))
+        .otherwise(lit(0)))
       .reduce(_ + _)
 
   /** Signature bits of banded table `tbl` (width h): bit j is the sign
@@ -131,7 +121,7 @@ object Similarity {
     * WIDER signature still match the 24-bit one (spec-pinned). */
   private def tableSig(v: Column, tbl: Int, h: Int): Column =
     (0 until h)
-      .map(j => when(dot(planeLit(planeIndexFor(tbl, j)), v) > 0,
+      .map(j => when(DotProduct.of(planeLit(planeIndexFor(tbl, j)), v) > 0,
         lit(1L << j)).otherwise(lit(0L)))
       .reduce(_ + _)
 
@@ -155,7 +145,7 @@ object Similarity {
     Tables.embeddings(spark, dir).count()
 
   private def corpus(spark: SparkSession, dir: String): DataFrame =
-    corpusOf(spark, Tables.embeddings(spark, dir))
+    corpusOf(Tables.embeddings(spark, dir))
 
   /** Rescore side of the banded self-joins (r18, VERDICT r17 #3):
     * (vec_id, v, nv) with `v` as the RAW float32 embedding — half the
@@ -168,12 +158,10 @@ object Similarity {
     * No [[Spread]]: this frame is a join/broadcast DIMENSION — its
     * per-row work is one 64-dim dot for `nv`, not a CPU-heavy stream
     * stage, and repartitioning a to-be-broadcast side is pure cost. */
-  private def rescoreCorpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.DotProduct.register(spark)
+  private def rescoreCorpus(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nv", sqrt(dot(col("v"), col("v"))))
-  }
+      .withColumn("nv", sqrt(DotProduct.of(col("v"), col("v"))))
 
   /** Envelope-dispatched join form for a rescore vector side (guide
     * §3.1): broadcast below [[ScaleEnvelope.VectorBroadcastRows]] —
@@ -188,12 +176,18 @@ object Similarity {
   /** The normalized (vec_id, label, v, nv) corpus shape over an
     * arbitrary raw-embeddings frame — shared by the dir readers and
     * the incremental index path so the norm arithmetic has one home. */
-  private def corpusOf(spark: SparkSession, emb: DataFrame): DataFrame = {
-    graft.expressions.DotProduct.register(spark)
+  private def corpusOf(emb: DataFrame): DataFrame =
     Spread(emb)
       .select(col("vec_id"), col("label"), vec.as("v"))
-      .withColumn("nv", sqrt(dot(col("v"), col("v"))))
-  }
+      .withColumn("nv", sqrt(DotProduct.of(col("v"), col("v"))))
+
+  /** The (q_id, qv, nq) query frame [[queryIvfIndex]] serves: the first
+    * [[NumQueries]] vectors of a raw embeddings frame, widened and
+    * normalized exactly as [[corpusOf]] does. */
+  def queriesOf(emb: DataFrame): DataFrame =
+    emb.where(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), vec.as("qv"))
+      .withColumn("nq", sqrt(DotProduct.of(col("qv"), col("qv"))))
 
   /** Brute-force cosine top-k: the first NumQueries vectors against the
     * whole corpus. The query side is bounded ⇒ broadcast (legitimately:
@@ -212,7 +206,8 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
+        (DotProduct.of(col("qv"), col("v")) /
+          (col("nq") * col("nv"))).as("cosine"))
     topCosine(scored, k)
   }
 
@@ -251,7 +246,8 @@ object Similarity {
     val scored = c.crossJoin(broadcast(anchors))
       .where(col("label") =!= col("q_label"))
       .select(col("q_id"), col("vec_id"), col("label"),
-        (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
+        (DotProduct.of(col("qv"), col("v")) /
+          (col("nq") * col("nv"))).as("cosine"))
     topCosine(scored, k)
   }
 
@@ -288,7 +284,8 @@ object Similarity {
       col("v").as("bv"), col("nv").as("nb"))
     val ab = a.crossJoin(broadcast(b))
       .select(col("a_id"), col("b_id"),
-        (dot(col("av"), col("bv")) / (col("na") * col("nb"))).as("cos"))
+        (DotProduct.of(col("av"), col("bv")) /
+          (col("na") * col("nb"))).as("cos"))
       .localCheckpoint() // scored once; feeds both direction windows
     val wa = Window.partitionBy(col("a_id"))
       .orderBy(col("cos").desc, col("b_id").asc)
@@ -358,7 +355,7 @@ object Similarity {
       p => struct(
         transform(filter(acc("cand"), x => x("vec_id") =!= p("vec_id")),
           x => x.withField("pen", greatest(x("pen"),
-            dot(x("v"), p("v")) / (x("nv") * p("nv"))))).as("cand"),
+            DotProduct.of(x("v"), p("v")) / (x("nv") * p("nv"))))).as("cand"),
         concat(acc("picks"), array(struct(p("vec_id").as("vec_id"),
           t.as("mmr_rank"), p("score").as("score")))).as("picks"))), 1)
     val noPicks = array().cast(
@@ -391,7 +388,8 @@ object Similarity {
     val scored = c.join(broadcast(q), "bucket")
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("bucket"),
-        (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
+        (DotProduct.of(col("qv"), col("v")) /
+          (col("nq") * col("nv"))).as("cosine"))
     topCosine(scored, k)
   }
 
@@ -451,7 +449,7 @@ object Similarity {
         .as("pairs"))
       .select(col("cell").as("cent_id"),
         transform(col("pairs"), p => p.getField("mean_x")).as("cv"))
-      .withColumn("cnv", sqrt(dot(col("cv"), col("cv"))))
+      .withColumn("cnv", sqrt(DotProduct.of(col("cv"), col("cv"))))
 
   /** The normalized corpus frame, exposed for recall experiments
     * (SimilaritySpec compares trained-vs-seed centroid recall). */
@@ -477,12 +475,7 @@ object Similarity {
     * baseline. */
   def topkCosineIvfWith(c: DataFrame, cents: DataFrame,
                         k: Int = TopK): DataFrame = {
-    val scoredCells = c.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"),
-        (dot(col("cv"), col("v")) / (col("cnv") * col("nv"))).as("ccos"))
-    val byVec = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val ranked = scoredCells.withColumn("crank", row_number().over(byVec))
+    val ranked = rankedCells(c, cents)
     val cells = ranked.where(col("crank") === 1)
       .select(col("vec_id"), col("cent_id").as("cell"))
     val probes = ranked.where(col("crank") <= NumProbes)
@@ -496,7 +489,8 @@ object Similarity {
     val scored = candidates
       .join(broadcast(q), "q_id")
       .select(col("q_id"), col("vec_id"), col("cell"),
-        (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
+        (DotProduct.of(col("qv"), col("v")) /
+          (col("nq") * col("nv"))).as("cosine"))
     topCosine(scored, k)
   }
 
@@ -580,7 +574,8 @@ object Similarity {
       col("v").as("vb"), col("nv").as("nb")), n)
     cand.join(va, "vec_a").join(vb, "vec_b")
       .select(col("vec_a"), col("vec_b"), col("n_tables"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+        (DotProduct.of(col("va"), col("vb")) /
+          (col("na") * col("nb"))).as("cosine"))
       .where(col("cosine") > threshold)
   }
 
@@ -614,13 +609,7 @@ object Similarity {
   def semDedup(spark: SparkSession, dir: String,
                threshold: Double = SemDedupEps): DataFrame = {
     val c = corpus(spark, dir)
-    val cents = trainedCentroidsOf(c)
-    val byVec = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val cells = c.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"),
-        (dot(col("cv"), col("v")) / (col("cnv") * col("nv"))).as("ccos"))
-      .withColumn("crank", row_number().over(byVec))
+    val cells = rankedCells(c, trainedCentroidsOf(c))
       .where(col("crank") === 1)
       .select(col("vec_id"), col("cent_id").as("cell"),
         col("ccos").as("cent_cos"))
@@ -645,7 +634,6 @@ object Similarity {
     * build, never the dedup query. */
   def semDedupServed(spark: SparkSession, indexPath: String,
                      threshold: Double = SemDedupEps): DataFrame = {
-    graft.expressions.DotProduct.register(spark)
     val root = Compaction.resolveRoot(spark, indexPath)
     val cents = spark.read.parquet(s"$root/centroids")
     // Takedown-aware (r13 review): deleted vectors leave the dedup
@@ -657,7 +645,7 @@ object Similarity {
         col("v"), col("nv"))
       .join(broadcast(cents), col("cell") === col("cent_id"))
       .select(col("vec_id"), col("cell"),
-        (dot(col("cv"), col("v")) / (col("cnv") * col("nv")))
+        (DotProduct.of(col("cv"), col("v")) / (col("cnv") * col("nv")))
           .as("cent_cos"),
         col("v"), col("nv"))
     semDedupSweep(members, threshold)
@@ -676,7 +664,7 @@ object Similarity {
       col("cent_cos").as("cc_b"), col("v").as("vb"), col("nv").as("nb"))
     val losers = a.join(b, Seq("cell"))
       .where(col("id_a") < col("id_b"))
-      .where((dot(col("va"), col("vb")) / (col("na") * col("nb")))
+      .where((DotProduct.of(col("va"), col("vb")) / (col("na") * col("nb")))
         >= threshold)
       .select(
         when(col("cc_a") > col("cc_b") ||
@@ -722,7 +710,8 @@ object Similarity {
       col("v").as("vb"), col("nv").as("nb")), n)
     val scored = cand.join(va, "vec_id").join(vb, "nn_id")
       .select(col("vec_id"), col("nn_id"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+        (DotProduct.of(col("va"), col("vb")) /
+          (col("na") * col("nb"))).as("cosine"))
     Ranking.topK(scored, part = Seq(col("vec_id")),
       ord = Seq(col("cosine").desc, col("nn_id").asc), k = k)
   }
@@ -778,9 +767,7 @@ object Similarity {
   def recallAfterTakedown(spark: SparkSession, indexPath: String,
                           dir: String, k: Int = TopK): DataFrame = {
     val c = corpus(spark, dir)
-    val q = c.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nv").as("nq"))
+    val q = queriesOf(Tables.embeddings(spark, dir))
     val approx = queryIvfIndex(spark, indexPath, q, k)
     val root = Compaction.resolveRoot(spark, indexPath)
     // The purged corpus is INDEX MEMBERSHIP — the vec_ids the serve
@@ -798,7 +785,8 @@ object Similarity {
     val scored = live.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
+        (DotProduct.of(col("qv"), col("v")) /
+          (col("nq") * col("nv"))).as("cosine"))
     val exact = topCosine(scored, k)
     recallReportOf(approx, exact, k)
   }
@@ -849,18 +837,27 @@ object Similarity {
           .otherwise(lit(0)).as("code"))
   }
 
-  /** Nearest-centroid assignment of a normalized corpus frame — ONE
-    * definition of the scoring and (ccos desc, cent_id asc) tie-break
-    * shared by the full build and the incremental append, so their
+  /** Every vector of a normalized corpus frame (vec_id, v, nv) ranked
+    * against every centroid (cent_id, cv, cnv): (vec_id, cent_id, ccos,
+    * crank), crank by (ccos desc, cent_id asc). The ONE definition of
+    * the cell scoring and tie-break shared by the in-query IVF,
+    * SemDeDup, the index build and append, and IVF-PQ, so the served
+    * and in-query forms cannot drift apart. */
+  def rankedCells(c: DataFrame, cents: DataFrame): DataFrame =
+    c.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("cent_id"),
+        (DotProduct.of(col("cv"), col("v")) /
+          (col("cnv") * col("nv"))).as("ccos"))
+      .withColumn("crank", row_number().over(Window
+        .partitionBy(col("vec_id"))
+        .orderBy(col("ccos").desc, col("cent_id").asc)))
+
+  /** Nearest-centroid assignment of a normalized corpus frame, shared
+    * by the full build and the incremental append so their
     * bit-identity proof (SimilaritySpec) cannot drift. Returns the
     * cell-partitioned postings shape. */
   private def assignCells(c: DataFrame, cents: DataFrame): DataFrame = {
-    val scoredCells = c.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"),
-        (dot(col("cv"), col("v")) / (col("cnv") * col("nv"))).as("ccos"))
-    val byVec = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val cells = scoredCells.withColumn("crank", row_number().over(byVec))
+    val cells = rankedCells(c, cents)
       .where(col("crank") === 1)
       .select(col("vec_id"), col("cent_id").as("cell"))
     c.join(cells, "vec_id")
@@ -890,7 +887,7 @@ object Similarity {
     // Replay guard post-compaction + generation resolution (r13/r14).
     if (Compaction.isFolded(spark, indexPath, batchId)) return
     val root = Compaction.resolveRoot(spark, indexPath)
-    val nv = corpusOf(spark, newVecs)
+    val nv = corpusOf(newVecs)
     val cents = spark.read.parquet(s"$root/centroids")
     require(!cents.isEmpty,
       s"IVF index at $indexPath has an empty centroid table — " +
@@ -931,7 +928,7 @@ object Similarity {
     // Replay guard post-compaction (r13): see [[Compaction]].
     if (Compaction.isFolded(spark, indexPath, batchId)) return
     val root = Compaction.resolveRoot(spark, indexPath)
-    val c = corpusOf(spark, emb)
+    val c = corpusOf(emb)
     val cents = trainedCentroidsOf(c)
     require(!cents.isEmpty,
       s"refusing to bootstrap IVF index at $indexPath with ZERO " +
@@ -953,14 +950,14 @@ object Similarity {
     * from disk is result-identical to the in-memory plan. */
   def queryIvfIndex(spark: SparkSession, indexPath: String,
                     queries: DataFrame, k: Int = TopK): DataFrame = {
-    graft.expressions.DotProduct.register(spark)
     // Generation-resolved ONCE per query (r14): centroids and postings
     // always come from the same generation.
     val root = Compaction.resolveRoot(spark, indexPath)
     val cents = spark.read.parquet(s"$root/centroids")
     val scored = queries.crossJoin(broadcast(cents))
       .select(col("q_id"), col("cent_id"),
-        (dot(col("cv"), col("qv")) / (col("cnv") * col("nq"))).as("ccos"))
+        (DotProduct.of(col("cv"), col("qv")) /
+          (col("cnv") * col("nq"))).as("ccos"))
     val byQ = Window.partitionBy(col("q_id"))
       .orderBy(col("ccos").desc, col("cent_id").asc)
     val probes = scored.withColumn("crank", row_number().over(byQ))
@@ -975,7 +972,8 @@ object Similarity {
       .join(broadcast(queries), Seq("q_id"))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("cell"),
-        (dot(col("qv"), col("v")) / (col("nq") * col("nv"))).as("cosine"))
+        (DotProduct.of(col("qv"), col("v")) /
+          (col("nq") * col("nv"))).as("cosine"))
     topCosine(candidates, k)
   }
 
@@ -1013,12 +1011,12 @@ object Similarity {
           .as("pairs"))
         .select(col("cell"),
           transform(col("pairs"), p => p.getField("cx")).as("cv"))
-        .withColumn("cnv", sqrt(call_function("dot_d", col("cv"), col("cv"))))
+        .withColumn("cnv", sqrt(DotProduct.of(col("cv"), col("cv"))))
       val byVec = Window.partitionBy(col("vec_id"))
         .orderBy(col("ccos").desc, col("cell").asc)
       val assigned = c.crossJoin(broadcast(cvecs))
         .select(col("vec_id"), col("cell"), col("v"),
-          (call_function("dot_d", col("cv"), col("v")) /
+          (DotProduct.of(col("cv"), col("v")) /
             (col("cnv") * col("nv"))).as("ccos"))
         .withColumn("r", row_number().over(byVec))
         .where(col("r") === 1)

@@ -51,16 +51,7 @@ object TextOps {
     // shingles across the minhash/fingerprint family — the compiled
     // per-row sliding window is ~20× cheaper (ShingleSpec pins
     // element-for-element equality of the two forms).
-    {
-      // Constructed directly (ColumnSeam bridge) rather than via
-      // call_function + a registry side effect on SparkSession.active:
-      // building a Column must not depend on WHICH session is active,
-      // and must not throw when none is. SQL/`expr` users still get the
-      // name through GraftExtensions' injectFunction registration.
-      import org.apache.spark.sql.graftseam.ColumnSeam
-      ColumnSeam.column(
-        graft.expressions.ShingleArray(ColumnSeam.expression(toks), n))
-    }
+    graft.expressions.ShingleArray.of(toks, n)
 
   /** The declarative shingle construction [[shingles]] replaced —
     * retained as the independently-derived twin ShingleSpec checks the

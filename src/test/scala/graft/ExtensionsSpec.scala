@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.expressions.DotProduct
 
 /** GraftExtensions + RewriteDotProduct: the HOF dot-product fold is
   * transparently replaced by the native expression, with identical
@@ -55,16 +57,15 @@ class ExtensionsSpec extends SparkSpec {
     // cast-the-array-then-multiply, elementwise and in accumulation
     // order. Pin it on real fixture vectors, both pure-float and the
     // MIXED (float, double) case the hyperplane dots use.
-    graft.expressions.DotProduct.register(spark)
     val v = Tables.embeddings(spark, sf0001).limit(200)
       .select(col("embedding").as("f"),
         transform(col("embedding"), x => x.cast("double")).as("d"),
         reverse(col("embedding")).as("fr"),
         transform(reverse(col("embedding")), x => x.cast("double")).as("dr"))
     val got = v.select(
-      call_function("dot_d", col("f"), col("fr")).as("ff"),
-      call_function("dot_d", col("d"), col("dr")).as("dd"),
-      call_function("dot_d", col("f"), col("dr")).as("fd"))
+      DotProduct.of(col("f"), col("fr")).as("ff"),
+      DotProduct.of(col("d"), col("dr")).as("dd"),
+      DotProduct.of(col("f"), col("dr")).as("fd"))
       .collect()
     got.foreach { r =>
       assert(r.getDouble(0) == r.getDouble(1),
@@ -73,26 +74,38 @@ class ExtensionsSpec extends SparkSpec {
         s"mixed dot diverged: ${r.getDouble(2)} vs ${r.getDouble(1)}")
     }
     // Null / length-mismatch edges keep the zip_with semantics on the
-    // float path too.
-    val edge = spark.sql(
-      """SELECT dot_d(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
-        |             array(CAST(3.0 AS FLOAT))) AS mismatch,
-        |       dot_d(array(CAST(1.0 AS FLOAT)),
-        |             array(CAST(NULL AS FLOAT))) AS nul""".stripMargin)
-    val r = edge.head()
-    assert(r.isNullAt(0) && r.isNullAt(1))
+    // float path too (through SQL, so the spec installs the name).
+    GraftExtensions.install(spark)
+    try {
+      val edge = spark.sql(
+        """SELECT dot_d(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+          |             array(CAST(3.0 AS FLOAT))) AS mismatch,
+          |       dot_d(array(CAST(1.0 AS FLOAT)),
+          |             array(CAST(NULL AS FLOAT))) AS nul""".stripMargin)
+      val r = edge.head()
+      assert(r.isNullAt(0) && r.isNullAt(1))
+    } finally GraftExtensions.uninstall(spark)
   }
 
   test("withExtensions path injects the rule at session build time") {
-    val ext = new GraftExtensions
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").withExtensions(ext)
+    // create() builds a NEW session on the shared context, so the
+    // extension object is applied to it (getOrCreate would hand back
+    // the shared session, built without it).
+    val s2 = SparkSession.builder()
+      .master("local[2]").withExtensions(new GraftExtensions)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may return the shared session (same context); the
-    // builder still applied the extension object — assert the rule is
-    // reachable through either the new session or an install.
-    GraftExtensions.install(s2)
+      .create()
+    // The install path: a fresh session without the extension.
+    val s3 = spark.newSession()
+    GraftExtensions.install(s3)
+    // One SQL probe per name of GraftExtensions' table, with its value.
+    val probes = Map[String, (String, Any)](
+      "dot_d" -> ("SELECT dot_d(array(1.0d, 2.0d), array(3.0d, 4.0d))", 11.0),
+      "hamming" -> ("SELECT hamming(5, 3)", 2),
+      "bounded_collect_long" ->
+        ("SELECT bounded_collect_long(id, 2).n FROM range(3)", 3L),
+      "shingle_array" ->
+        ("SELECT shingle_array(array('a', 'b', 'c'), 2)", Seq("a b", "b c")))
     try {
       val df = s2.range(1).select(
         transform(sequence(lit(1), lit(3)), i => i.cast("double")).as("a"),
@@ -100,6 +113,14 @@ class ExtensionsSpec extends SparkSpec {
         .select(fold.as("d"))
       assert(df.queryExecution.optimizedPlan.toString.contains("dot_d"))
       assert(df.head().getDouble(0) == (1 * 2 + 2 * 4 + 3 * 6).toDouble)
-    } finally GraftExtensions.uninstall(s2)
+      assert(probes.keySet == GraftExtensions.Functions.map(_._1).toSet)
+      for ((label, s) <- Seq("withExtensions" -> s2, "install" -> s3);
+           (name, (sql, want)) <- probes)
+        assert(s.sql(sql).head().get(0) == want, s"$name via $label")
+    } finally {
+      GraftExtensions.uninstall(s3)
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
   }
 }

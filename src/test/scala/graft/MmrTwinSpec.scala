@@ -4,6 +4,7 @@ import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.DotProduct
 import graft.operators.Similarity
 
 /** Differential guard for [[Similarity.mmrDiversify]]'s one-plan greedy
@@ -17,7 +18,7 @@ class MmrTwinSpec extends SparkSpec {
   /** The K-round windowed MMR: pick the (score desc, vec_id asc) argmax
     * per q_id, pin it, drop it from the pool, raise the penalties. */
   private def windowedMmr(spark: SparkSession, dir: String): DataFrame = {
-    val dot = (a: String, b: String) => call_function("dot_d", col(a), col(b))
+    val dot = (a: String, b: String) => DotProduct.of(col(a), col(b))
     val score = lit(0.7) * col("rel") - lit(0.3) * col("pen")
     var cand = Similarity.topkCosine(spark, dir, k = Similarity.MmrPool)
       .select(col("q_id"), col("vec_id"), col("cosine").as("rel"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.expressions.DotProduct
 import graft.operators.{Compaction, ScaleEnvelope, Similarity}
 
 /** Unit coverage for similarity search: exact baseline sanity, LSH
@@ -169,11 +170,10 @@ class SimilaritySpec extends SparkSpec {
     // sanity floor.
     val c = Similarity.normalizedCorpus(spark, SparkSpec.Sf001).cache()
     try {
-      graft.expressions.DotProduct.register(spark)
       def objectiveOf(cents: org.apache.spark.sql.DataFrame): Double =
         c.crossJoin(broadcast(cents))
           .select(col("vec_id"),
-            (call_function("dot_d", col("cv"), col("v")) /
+            (DotProduct.of(col("cv"), col("v")) /
               (col("cnv") * col("nv"))).as("ccos"))
           .groupBy(col("vec_id")).agg(max(col("ccos")).as("best"))
           .agg(avg(col("best"))).head().getDouble(0)
@@ -220,7 +220,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("dot_d: bit-identical to the HOF fold, null on mismatch/nulls") {
     import org.apache.spark.sql.functions._
-    graft.expressions.DotProduct.register(spark)
     val vecs = Tables.embeddings(spark, sf0001).limit(200)
       .select(
         transform(col("embedding"), x => x.cast("double")).as("a"),
@@ -228,13 +227,17 @@ class SimilaritySpec extends SparkSpec {
     val fold = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v)
     // Bit-exact equality, not tolerance: identical accumulation order.
-    assert(vecs.where(expr("dot_d(a, b)") =!= fold).isEmpty)
-    val edge = spark.sql(
-      """SELECT dot_d(array(1.0d, 2.0d), array(3.0d)) AS mismatch,
-        |       dot_d(array(1.0d, CAST(NULL AS DOUBLE)), array(3.0d, 4.0d)) AS nul,
-        |       dot_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS ok""".stripMargin)
-      .head()
-    assert(edge.isNullAt(0) && edge.isNullAt(1) && edge.getDouble(2) == 11.0)
+    assert(vecs.where(DotProduct.of(col("a"), col("b")) =!= fold).isEmpty)
+    // The edges go through SQL, so the spec installs the name.
+    GraftExtensions.install(spark)
+    try {
+      val edge = spark.sql(
+        """SELECT dot_d(array(1.0d, 2.0d), array(3.0d)) AS mismatch,
+          |       dot_d(array(1.0d, CAST(NULL AS DOUBLE)), array(3.0d, 4.0d)) AS nul,
+          |       dot_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS ok""".stripMargin)
+        .head()
+      assert(edge.isNullAt(0) && edge.isNullAt(1) && edge.getDouble(2) == 11.0)
+    } finally GraftExtensions.uninstall(spark)
   }
 
   test("kmeansRefine: complete dims per cell, deterministic, moves centroids") {
@@ -285,7 +288,6 @@ class SimilaritySpec extends SparkSpec {
       // Every (vec, neighbor) pair really collides in ≥ 1 banded table:
       // recompute the (tbl, sig) rows and anti-join the knn pairs
       // against the collision set.
-      graft.expressions.DotProduct.register(spark)
       val n = Tables.embeddings(spark, sf0001).count()
       val sigs = Similarity.bandedSignatureRows(
         Similarity.normalizedCorpus(spark, sf0001),
@@ -337,17 +339,15 @@ class SimilaritySpec extends SparkSpec {
     // true pairs as a single fixed 6-plane table — the VERDICT r6 bar
     // for replacing the domain.
     val tau = 0.2
-    graft.expressions.DotProduct.register(spark)
     val c = Similarity.normalizedCorpus(spark, SparkSpec.Sf001).cache()
     try {
-      def dotc(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        call_function("dot_d", a, b)
       val a = c.select(col("vec_id").as("vec_a"), col("v").as("va"),
         col("nv").as("na"))
       val b = c.select(col("vec_id").as("vec_b"), col("v").as("vb"),
         col("nv").as("nb"))
       val truth = a.crossJoin(b).where(col("vec_a") < col("vec_b"))
-        .where(dotc(col("va"), col("vb")) / (col("na") * col("nb")) > tau)
+        .where(DotProduct.of(col("va"), col("vb")) /
+          (col("na") * col("nb")) > tau)
         .select(col("vec_a"), col("vec_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val banded = Similarity.embeddingNearDup(spark, SparkSpec.Sf001, tau)
@@ -361,7 +361,8 @@ class SimilaritySpec extends SparkSpec {
         val y = bn.select(col("vec_id").as("vec_b"), col("v").as("vb"),
           col("nv").as("nb"), col("bucket"))
         x.join(y, Seq("bucket")).where(col("vec_a") < col("vec_b"))
-          .where(dotc(col("va"), col("vb")) / (col("na") * col("nb")) > tau)
+          .where(DotProduct.of(col("va"), col("vb")) /
+            (col("na") * col("nb")) > tau)
           .select(col("vec_a"), col("vec_b")).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       }
@@ -393,11 +394,7 @@ class SimilaritySpec extends SparkSpec {
     assert(pa.exceptAll(pb).isEmpty && pb.exceptAll(pa).isEmpty,
       "append-maintained postings are bit-identical to the rebuild")
     // And serving from the maintained index answers identically.
-    graft.expressions.DotProduct.register(spark)
-    val queries = emb.where(col("vec_id") < Similarity.NumQueries)
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), x => x.cast("double")).as("qv"))
-      .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
+    val queries = Similarity.queriesOf(emb)
     val sa = Similarity.queryIvfIndex(spark, s"$dir/a", queries)
     val sb = Similarity.queryIvfIndex(spark, s"$dir/b", queries)
     assert(sa.exceptAll(sb).isEmpty && sb.exceptAll(sa).isEmpty)
@@ -417,11 +414,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.appendToIvfIndexBatch(spark,
         emb.where(col("vec_id") % 4 === r), idx, r.toLong)
     }
-    graft.expressions.DotProduct.register(spark)
-    val queries = emb.where(col("vec_id") < Similarity.NumQueries)
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), x => x.cast("double")).as("qv"))
-      .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
+    val queries = Similarity.queriesOf(emb)
     val exact = Similarity.topkCosine(spark, sf0001)
     def meanRecall(indexPath: String): Double =
       Similarity.recallReportOf(
@@ -453,12 +446,7 @@ class SimilaritySpec extends SparkSpec {
         s"$idx/postings/batch_id=${Compaction.BootstrapBatchId}").listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs > 1)
-    graft.expressions.DotProduct.register(spark)
-    val queries = Tables.embeddings(spark, sf0001)
-      .where(col("vec_id") < Similarity.NumQueries)
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), x => x.cast("double")).as("qv"))
-      .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
+    val queries = Similarity.queriesOf(Tables.embeddings(spark, sf0001))
     val served = Similarity.queryIvfIndex(spark, idx, queries)
       .select("q_id", "vec_id", "cell", "cosine", "rank")
     val inMem = Similarity.topkCosineIvf(spark, sf0001)

@@ -285,11 +285,7 @@ class StreamingPipelineSpec extends SparkSpec {
     // hits, the exact arm recruits replacements from cells the probes
     // never visit — recall must drop, and that drop is precisely the
     // drift the flag exists to surface.
-    graft.expressions.DotProduct.register(spark)
-    val queries = emb.where(col("vec_id") < Similarity.NumQueries)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("qv"))
-      .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
+    val queries = Similarity.queriesOf(emb)
     val dead = Similarity.queryIvfIndex(spark, s"$dir/ivf", queries)
       .select(col("vec_id").as("doc_id")).distinct()
     dead.write.parquet(s"$dir/req/b0")

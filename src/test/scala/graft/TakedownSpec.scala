@@ -118,11 +118,7 @@ class TakedownSpec extends SparkSpec {
       .withColumnRenamed("doc_id", "vec_id")
     Takedown.takedownIvf(spark, s"$dir/idx",
       dead.withColumnRenamed("vec_id", "vec_id"), 0L)
-    graft.expressions.DotProduct.register(spark)
-    val queries = emb.where(col("vec_id") < Similarity.NumQueries)
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), x => x.cast("double")).as("qv"))
-      .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
+    val queries = Similarity.queriesOf(emb)
     val got = Similarity.queryIvfIndex(spark, s"$dir/idx", queries)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
     assert(got.nonEmpty)
@@ -638,11 +634,7 @@ class TakedownSpec extends SparkSpec {
       emb.where(col("vec_id") % 2 === 0), s"$vd/idx", 0L)
     Similarity.appendToIvfIndexBatch(spark,
       emb.where(col("vec_id") % 2 === 1), s"$vd/idx", 1L)
-    graft.expressions.DotProduct.register(spark)
-    val queries = emb.where(col("vec_id") < Similarity.NumQueries)
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), x => x.cast("double")).as("qv"))
-      .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
+    val queries = Similarity.queriesOf(emb)
     def vrows = Similarity.queryIvfIndex(spark, s"$vd/idx", queries)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val vBefore = vrows

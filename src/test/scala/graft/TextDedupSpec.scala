@@ -130,19 +130,21 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("HammingDistance expression: eval, codegen path, nulls, registry") {
-    graft.expressions.HammingDistance.register(spark)
-    val df = Seq((0xFF00, 0x0F00), (5, 5), (0, 0xFFFF))
-      .toDF("a", "b")
-      .selectExpr("hamming(a, b) AS h")
-    assert(df.collect().map(_.getInt(0)).toSeq == Seq(4, 0, 16))
-    // null-safe: null input → null output
-    val n = spark.sql("SELECT hamming(CAST(NULL AS INT), 3)").head()
-    assert(n.isNullAt(0))
-    // survives whole-stage codegen over a real table
-    val sig = Dedup.simhash(spark, sf0001).limit(10)
-    val d = sig.selectExpr("hamming(simhash, simhash) AS z")
-      .agg(max($"z")).head().getInt(0)
-    assert(d == 0)
+    GraftExtensions.install(spark)
+    try {
+      val df = Seq((0xFF00, 0x0F00), (5, 5), (0, 0xFFFF))
+        .toDF("a", "b")
+        .selectExpr("hamming(a, b) AS h")
+      assert(df.collect().map(_.getInt(0)).toSeq == Seq(4, 0, 16))
+      // null-safe: null input → null output
+      val n = spark.sql("SELECT hamming(CAST(NULL AS INT), 3)").head()
+      assert(n.isNullAt(0))
+      // survives whole-stage codegen over a real table
+      val sig = Dedup.simhash(spark, sf0001).limit(10)
+      val d = sig.selectExpr("hamming(simhash, simhash) AS z")
+        .agg(max($"z")).head().getInt(0)
+      assert(d == 0)
+    } finally GraftExtensions.uninstall(spark)
   }
 
   test("quality score stays in [0, 1] on the fixture corpus") {
@@ -242,7 +244,6 @@ class TextDedupSpec extends SparkSpec {
     * verified pair stream instead of the per-row minBand filter. */
   private def simhash64NeighborsDistinct(sig: DataFrame,
       wide: Boolean, maxHamming: Int = 3): DataFrame = {
-    graft.expressions.HammingDistance.register(sig.sparkSession)
     val bands = if (wide) WideTables.map(wideKeyCol)
                 else Seq(col("q0"), col("q1"), col("q2"), col("q3"))
     val quarters = sig.select(col("doc_id"), col("q0"), col("q1"),
@@ -271,7 +272,9 @@ class TextDedupSpec extends SparkSpec {
     // with a full distinct. Same pair set, and the shipped form must
     // also be duplicate-free WITHOUT the distinct.
     val sig = Dedup.simhash64(spark, sf0001)
-    for (wide <- Seq(false, true)) {
+    // The twin calls `hamming` by its SQL name.
+    GraftExtensions.install(spark)
+    try for (wide <- Seq(false, true)) {
       val shipped =
         if (wide) Dedup.simhash64WideNeighborsOf(sig)._1
         else Dedup.simhash64NeighborsOf(sig)._1
@@ -282,7 +285,7 @@ class TextDedupSpec extends SparkSpec {
       assert(rows.length == rows.map(r => (r.getLong(0), r.getLong(1)))
         .distinct.length, s"wide=$wide emitted duplicate pairs")
       assert(rows.nonEmpty)
-    }
+    } finally GraftExtensions.uninstall(spark)
   }
 
   test("wide multi-index pigeonhole: 3 flips in 3 DIFFERENT quarters still pair") {
