@@ -490,9 +490,10 @@ object SparkEntry {
     "q_bm25_compacted" -> ((s, d) =>
       Retrieval.bm25TopKServed(s, stagedCompactedLexIndex(s, d))),
     // takedown delivered as a STREAM (r13): the id set arrives through
-    // StreamingIngest.takedownStream (checkpointed trigger, id-keyed
-    // exactly-once) instead of a direct call — shares the purged-
-    // corpus oracle: stream-takedown ≡ batch-takedown ≡ rebuild.
+    // StreamingIngest.takedownAllStream (checkpointed trigger, id-keyed
+    // exactly-once, completion manifest) instead of a direct call —
+    // shares the purged-corpus oracle: stream-takedown ≡
+    // batch-takedown ≡ rebuild.
     "q_bm25_takedown_stream" -> ((s, d) =>
       Retrieval.bm25TopKServed(s, stagedStreamTakedownLexIndex(s, d))),
     // SymSpell fuzzy vocab matching (r9): deletion-neighborhood
@@ -836,22 +837,26 @@ object SparkEntry {
 
   /** Stream-delivered takedown fixture (r13): the same two-batch lex
     * index as [[stagedTakedownLexIndex]], but the takedown id set
-    * arrives through [[graft.streaming.StreamingIngest.takedownStream]]
-    * (one checkpointed trigger; the micro-batch id keys the deletes
-    * partition and the stats correction), then a re-drain on the same
-    * checkpoint (no new request files → no-op restart). */
+    * arrives through [[graft.streaming.StreamingIngest.takedownAllStream]]
+    * with the lex index as its only target (one checkpointed trigger;
+    * the micro-batch id keys the deletes partition, the stats
+    * correction and the manifest), then a re-drain on the same
+    * checkpoint (no new request files → no-op restart) and the
+    * manifest's completion check. */
   private def stagedStreamTakedownLexIndex(s: SparkSession,
                                            d: String): String =
     Staged.once("lex_td_stream", d) { dir =>
-      import org.apache.spark.sql.functions.col
       val idx = s"$dir/lex"
       buildTwoBatchLex(s, d, idx)
       takedownDocIds(s, d).write.parquet(s"$dir/req/b0")
-      def drain(): Unit = graft.streaming.StreamingIngest.takedownStream(
+      val targets = Takedown.TakedownTargets(lexIndexPath = Some(idx))
+      def drain(): Unit = graft.streaming.StreamingIngest.takedownAllStream(
         s.readStream.schema("doc_id BIGINT").parquet(s"$dir/req/*"),
-        lexIndexPath = Some(idx), checkpointDir = s"$dir/ckpt")
+        targets, s"$dir/manifest", s"$dir/ckpt")
       drain()
       drain() // exactly-once restart: nothing new to process
+      require(Takedown.manifestComplete(s, s"$dir/manifest", 0L, targets),
+        "stream takedown manifest incomplete after the re-drain")
       idx
     }
 
@@ -1019,7 +1024,7 @@ object SparkEntry {
       run()
       ev.where(col("ts_us") > cut).write.parquet(s"$dir/in/b1")
       run()
-      val replayed = graft.sinks.Sinks.publishState(s, s"$dir/t", {
+      val replayed = graft.sinks.Publish.publishLoop(s, s"$dir/t", {
         case Some(dim) =>
           Scd.scd2ApplyCdc(dim, ev.where(col("ts_us") <= cut))
         case None => throw new IllegalStateException("empty scd table")
@@ -1109,7 +1114,7 @@ object SparkEntry {
       run()
       ev.where(col("ts_us") > cut).write.parquet(s"$dir/in/b1")
       run()
-      val replayed = graft.sinks.Sinks.publishState(s, s"$dir/t", {
+      val replayed = graft.sinks.Publish.publishLoop(s, s"$dir/t", {
         case Some(dim) => Scd.scd2Apply(dim, ev.where(col("ts_us") <= cut))
         case None => throw new IllegalStateException("empty scd table")
       }, batchId = Some(0L))

@@ -33,7 +33,7 @@ import graft.sinks.Publish
   *  2. CLAIM — one rename to `v=<n+1>`. Invisible to readers (no
   *     marker); the no-overwrite rename is the only-one-compactor
   *     check.
-  *  3. COMMIT — [[Publish.commitMarker]] writes `_latest/<n+1>`
+  *  3. COMMIT — [[Publish.commitMarkerWith]] writes `_latest/<n+1>`
   *     naming the claim token. This single metadata op is the reader
   *     flip: a query that resolved before it reads generation n (still
   *     fully present), one that resolves after reads n+1 — never a
@@ -82,6 +82,35 @@ object Compaction {
     * replayed stream batch can never clobber it; ids below it are
     * [[Takedown.takedownLex]]'s stats-correction namespace. */
   val BootstrapBatchId: Long = -1L
+
+  /** One compactable index KIND — the one place its on-disk layout is
+    * named. `subdirs` are its content subdirs; `accreting` is the one
+    * ingest batches land in ("" for the pair table, whose batch
+    * partitions live at the root); `deletes` is where takedown batches
+    * land. Every fold, poll and flat-entry reap below reads it. */
+  private[graft] sealed abstract class Kind(val subdirs: Set[String],
+                                            val accreting: String,
+                                            val deletes: String) {
+    /** A pre-generation entry at a flat index root, reaped once
+      * generation 2 commits. */
+    private[Compaction] def flatEntry(n: String): Boolean =
+      subdirs(n) || n == deletes || n == "_folded" ||
+        (accreting.isEmpty && n.startsWith("batch_id="))
+  }
+
+  private[graft] object Kind {
+    case object Lex extends Kind(Set("postings", "doclens", "stats"),
+      "postings", "deletes")
+    case object Pos extends Kind(Set("pos"), "pos", "deletes")
+    case object Content extends Kind(Set("shingles", "docstore"),
+      "shingles", "deletes")
+    case object Ivf extends Kind(Set("postings", "centroids"),
+      "postings", "deletes")
+    /** The near-dup pair table; its signature table at `sigPath` folds
+      * with it (same flat layout, no ledger of its own). */
+    final case class Pair(sigPath: String) extends Kind(Set.empty, "",
+      "_deletes")
+  }
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
@@ -148,15 +177,14 @@ object Compaction {
     * streaming maintenance paths poll each micro-batch (r14, VERDICT
     * r13 #5 — before this, serve-path takedown cost grew until someone
     * remembered to run compact*Index by hand). One listing of the
-    * current generation; `threshold <= 0` disables. `sub` is the
-    * accreting subdir ("" for tables whose batch partitions live at
-    * the root, like the pair table). */
-  def compactionDue(spark: SparkSession, indexPath: String, sub: String,
-                    deletesSub: String, threshold: Int): Boolean =
+    * current generation; `threshold <= 0` disables. */
+  private[graft] def compactionDue(spark: SparkSession, indexPath: String,
+                                   kind: Kind, threshold: Int): Boolean =
     threshold > 0 && {
       val cur = resolveRoot(spark, indexPath)
       val (fs, p) = fsOf(spark, cur)
       def at(s: String) = if (s.isEmpty) p else new Path(p, s)
+      val sub = kind.accreting
       // Mirror the fold's own never-built check (ADVICE r14): when the
       // accreting content was never built — a takedown stream racing
       // ahead of its ingest twin — the fold is a guaranteed no-op, and
@@ -174,7 +202,20 @@ object Compaction {
           }
         else fs.exists(at(sub))
       built && (batchIds(fs, at(sub)).size >= threshold ||
-        batchIds(fs, at(deletesSub)).size >= threshold)
+        batchIds(fs, at(kind.deletes)).size >= threshold)
+    }
+
+  /** Fold `indexPath` with its kind's compactor when [[compactionDue]]
+    * says so — the one call a self-compacting stream makes per
+    * micro-batch. */
+  private[graft] def compactIfDue(spark: SparkSession, indexPath: String,
+                                  kind: Kind, threshold: Int): Unit =
+    if (compactionDue(spark, indexPath, kind, threshold)) kind match {
+      case Kind.Lex => compactLexIndex(spark, indexPath)
+      case Kind.Pos => compactPosIndex(spark, indexPath)
+      case Kind.Content => compactContentIndex(spark, indexPath)
+      case Kind.Ivf => compactIvfIndex(spark, indexPath)
+      case Kind.Pair(sigPath) => compactPairTable(spark, indexPath, sigPath)
     }
 
   /** Batch ids present as `batch_id=N` children of one subdir. */
@@ -205,20 +246,30 @@ object Compaction {
   }
 
   /** Phases 1–4 shared by every index form: `build` materializes the
-    * full next-generation content into the hidden stage; then claim
-    * rename, marker commit, and retention reap (generations < the
-    * previous one; the flat pre-generation entries — selected by
-    * `flatEntry` — count as generation 0 and are reaped once
-    * generation 2 commits). */
+    * full next-generation content into the hidden stage, and the
+    * fold's `plan` stamps its two ledgers there (`_folded` and
+    * `<deletes>/_folded`; the signature table folds without one); then
+    * claim rename, marker commit, and retention reap (generations <
+    * the previous one; the kind's flat pre-generation entries count as
+    * generation 0 and are reaped once generation 2 commits). */
   private def publishGeneration(spark: SparkSession, indexPath: String,
-                                flatEntry: String => Boolean)
+                                kind: Kind, plan: Option[FoldPlan])
                                (build: Path => Unit): Unit = {
     val (fs, root) = fsOf(spark, indexPath)
     val cur = currentGen(fs, root)
     val stage = new Path(root,
       s".genstage-${java.util.UUID.randomUUID.toString.take(8)}")
-    try build(stage)
-    catch { case e: Throwable => fs.delete(stage, true); throw e }
+    try {
+      build(stage)
+      plan.foreach { p =>
+        Publish.writeLedger(fs, new Path(stage, "_folded"), p.newFolded)
+        if (p.newTd.nonEmpty) {
+          fs.mkdirs(new Path(stage, kind.deletes))
+          Publish.writeLedger(fs,
+            new Path(stage, s"${kind.deletes}/_folded"), p.newTd)
+        }
+      }
+    } catch { case e: Throwable => fs.delete(stage, true); throw e }
     val token = java.util.UUID.randomUUID.toString
     fs.create(new Path(stage, s"_claim-$token"), false).close()
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
@@ -227,7 +278,8 @@ object Compaction {
     // loudly instead of cross-wiring two folds.
     fc.rename(stage, new Path(root, s"v=${cur + 1}"),
       org.apache.hadoop.fs.Options.Rename.NONE)
-    Publish.commitMarker(spark, indexPath, Publish.Claim(cur + 1, token))
+    Publish.commitMarkerWith(spark, indexPath,
+      Publish.Claim(cur + 1, token))
     // CLEANUP: keep generation `cur` for readers in flight across the
     // flip; everything older is unreachable by any future resolve.
     // Reap by LISTING the marker dir once, not by probing every
@@ -251,13 +303,11 @@ object Compaction {
     if (cur >= 1)
       fs.listStatus(root).toSeq.foreach { s =>
         val n = s.getPath.getName
-        if (!n.startsWith("v=") && n != Publish.MarkerDir && flatEntry(n))
+        if (!n.startsWith("v=") && n != Publish.MarkerDir &&
+            kind.flatEntry(n))
           fs.delete(s.getPath, true)
       }
   }
-
-  private def lexFlat(n: String): Boolean =
-    Set("postings", "doclens", "stats", "deletes", "_folded").contains(n)
 
   /** The shared fold decision: resolve the current generation,
     * enumerate accreted ingest batches and pending takedown batches,
@@ -276,23 +326,22 @@ object Compaction {
                               newFolded: Seq[(Long, Long)],
                               newTd: Seq[(Long, Long)])
 
-  private def foldPlan(spark: SparkSession, indexPath: String,
-                       accretingSub: String, deletesSub: String)
+  private def foldPlan(spark: SparkSession, indexPath: String, kind: Kind)
       : Option[FoldPlan] = {
     val (fs, root) = fsOf(spark, indexPath)
     recoverGen(fs, root)
     val cur = resolveRoot(spark, indexPath)
     val curP = new Path(cur)
     def at(s: String) = if (s.isEmpty) curP else new Path(curP, s)
-    if (!fs.exists(at(accretingSub))) return None // never built
-    val ingest = batchIds(fs, at(accretingSub))
-    val takedowns = batchIds(fs, at(deletesSub))
+    if (!fs.exists(at(kind.accreting))) return None // never built
+    val ingest = batchIds(fs, at(kind.accreting))
+    val takedowns = batchIds(fs, at(kind.deletes))
     if (ingest.size <= 1 && takedowns.isEmpty) return None
     val foldId = if (ingest.isEmpty) BootstrapBatchId else ingest.max
     val newFolded = ingest.foldLeft(
       Publish.readLedger(fs, new Path(curP, "_folded")))(Publish.addBatch)
     val newTd = takedowns.foldLeft(
-      Publish.readLedger(fs, new Path(curP, s"$deletesSub/_folded")))(
+      Publish.readLedger(fs, new Path(curP, s"${kind.deletes}/_folded")))(
       Publish.addBatch)
     Some(FoldPlan(cur, ingest, takedowns, foldId, newFolded, newTd))
   }
@@ -305,12 +354,10 @@ object Compaction {
     * physically and cleared. No-op on an index with nothing accreted
     * and nothing deleted. */
   def compactLexIndex(spark: SparkSession, indexPath: String): Unit = {
-    val (fs, root) = fsOf(spark, indexPath)
-    val plan = foldPlan(spark, indexPath, "postings", "deletes")
-      .getOrElse(return)
+    val plan = foldPlan(spark, indexPath, Kind.Lex).getOrElse(return)
     val cur = plan.cur
     val foldId = plan.foldId
-    val deletesDir = s"$cur/deletes"
+    val deletesDir = s"$cur/${Kind.Lex.deletes}"
     val postings = Takedown.applyDeletes(
       spark.read.schema("doc_id BIGINT, tf BIGINT, tok STRING")
         .parquet(s"$cur/postings")
@@ -326,19 +373,13 @@ object Compaction {
     val stats = spark.read.schema("n_docs BIGINT, sum_dl BIGINT")
       .parquet(s"$cur/stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    publishGeneration(spark, indexPath, lexFlat) { stage =>
+    publishGeneration(spark, indexPath, Kind.Lex, Some(plan)) { stage =>
       postings.write.mode("overwrite").partitionBy("tok")
         .parquet(s"$stage/postings/batch_id=$foldId")
       doclens.write.mode("overwrite")
         .parquet(s"$stage/doclens/batch_id=$foldId")
       stats.write.mode("overwrite")
         .parquet(s"$stage/stats/batch_id=$foldId")
-      Publish.writeLedger(fs, new Path(stage, "_folded"), plan.newFolded)
-      if (plan.newTd.nonEmpty) {
-        fs.mkdirs(new Path(stage, "deletes"))
-        Publish.writeLedger(fs, new Path(stage, "deletes/_folded"),
-          plan.newTd)
-      }
     }
   }
 
@@ -346,25 +387,16 @@ object Compaction {
     * layout): one subdir (`pos`, term-partitioned), deletes applied
     * and cleared. */
   def compactPosIndex(spark: SparkSession, indexPath: String): Unit = {
-    val (fs, root) = fsOf(spark, indexPath)
-    val plan = foldPlan(spark, indexPath, "pos", "deletes")
-      .getOrElse(return)
+    val plan = foldPlan(spark, indexPath, Kind.Pos).getOrElse(return)
     val cur = plan.cur
     val occ = Takedown.applyDeletes(
       spark.read.schema("doc_id BIGINT, pos INT, tok STRING")
         .parquet(s"$cur/pos")
         .select(col("doc_id"), col("pos"), col("tok")),
-      s"$cur/deletes")
-    publishGeneration(spark, indexPath,
-      n => Set("pos", "deletes", "_folded").contains(n)) { stage =>
+      s"$cur/${Kind.Pos.deletes}")
+    publishGeneration(spark, indexPath, Kind.Pos, Some(plan)) { stage =>
       occ.write.mode("overwrite").partitionBy("tok")
         .parquet(s"$stage/pos/batch_id=${plan.foldId}")
-      Publish.writeLedger(fs, new Path(stage, "_folded"), plan.newFolded)
-      if (plan.newTd.nonEmpty) {
-        fs.mkdirs(new Path(stage, "deletes"))
-        Publish.writeLedger(fs, new Path(stage, "deletes/_folded"),
-          plan.newTd)
-      }
     }
   }
 
@@ -375,11 +407,9 @@ object Compaction {
     * which a content-addressed takedown probe reads consolidated,
     * purged buckets. */
   def compactContentIndex(spark: SparkSession, indexPath: String): Unit = {
-    val (fs, _) = fsOf(spark, indexPath)
-    val plan = foldPlan(spark, indexPath, "shingles", "deletes")
-      .getOrElse(return)
+    val plan = foldPlan(spark, indexPath, Kind.Content).getOrElse(return)
     val cur = plan.cur
-    val deletesDir = s"$cur/deletes"
+    val deletesDir = s"$cur/${Kind.Content.deletes}"
     val sh = Takedown.applyDeletes(
       spark.read.schema("doc_id BIGINT, sh STRING")
         .parquet(s"$cur/shingles")
@@ -390,23 +420,15 @@ object Compaction {
         .parquet(s"$cur/docstore")
         .select(col("doc_id"), col("norm_text"), col("db")),
       deletesDir)
-    publishGeneration(spark, indexPath,
-      n => Set("shingles", "docstore", "deletes", "_folded").contains(n)) {
-      stage =>
-        sh.write.mode("overwrite").partitionBy("sb")
-          .parquet(s"$stage/shingles/batch_id=${plan.foldId}")
-        // Keep the build's sorted-by-doc_id row groups through the fold
-        // — the verify tier's IN-list row-group pruning depends on it.
-        store.repartition(col("db"))
-          .sortWithinPartitions(col("db"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("db")
-          .parquet(s"$stage/docstore/batch_id=${plan.foldId}")
-        Publish.writeLedger(fs, new Path(stage, "_folded"), plan.newFolded)
-        if (plan.newTd.nonEmpty) {
-          fs.mkdirs(new Path(stage, "deletes"))
-          Publish.writeLedger(fs, new Path(stage, "deletes/_folded"),
-            plan.newTd)
-        }
+    publishGeneration(spark, indexPath, Kind.Content, Some(plan)) { stage =>
+      sh.write.mode("overwrite").partitionBy("sb")
+        .parquet(s"$stage/shingles/batch_id=${plan.foldId}")
+      // Keep the build's sorted-by-doc_id row groups through the fold
+      // — the verify tier's IN-list row-group pruning depends on it.
+      store.repartition(col("db"))
+        .sortWithinPartitions(col("db"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("db")
+        .parquet(s"$stage/docstore/batch_id=${plan.foldId}")
     }
   }
 
@@ -473,17 +495,19 @@ object Compaction {
     // takedownId (the folded ledger no-ops the original id by design);
     // the shipped sig-first commit order makes this state unreachable
     // going forward — it exists only for pre-reorder (r14-draft) trees.
+    val kind = Kind.Pair(sigPath)
     val sigOwed = hasSig &&
       batchIds(sigFs, new Path(resolveRoot(spark, sigPath))).size > 1
-    val plan = foldPlan(spark, pairPath, "", "_deletes").orElse {
+    val plan = foldPlan(spark, pairPath, kind).orElse {
       if (!sigOwed) None
       else {
         val cur = resolveRoot(spark, pairPath)
         val curP = new Path(cur)
+        val deletes = new Path(curP, kind.deletes)
         Some(FoldPlan(cur, batchIds(pairFs, curP),
-          batchIds(pairFs, new Path(curP, "_deletes")), BootstrapBatchId,
+          batchIds(pairFs, deletes), BootstrapBatchId,
           Publish.readLedger(pairFs, new Path(curP, "_folded")),
-          Publish.readLedger(pairFs, new Path(curP, "_deletes/_folded"))))
+          Publish.readLedger(pairFs, new Path(deletes, "_folded"))))
       }
     }.getOrElse(return)
     val curPair = plan.cur
@@ -502,29 +526,20 @@ object Compaction {
            !n.startsWith("_") && !n.startsWith(".")
          })) return
     val pairs = Takedown.pairTableLive(spark, pairPath)
-    def tableFlat(n: String): Boolean =
-      n.startsWith("batch_id=") || n == "_deletes" || n == "_folded"
     if (hasSig) {
       val curSig = resolveRoot(spark, sigPath)
       val sigs = Takedown.applyDeletes(
         spark.read.parquet(curSig).drop("batch_id"),
-        s"$curPair/_deletes").distinct()
-      publishGeneration(spark, sigPath, tableFlat) { stage =>
+        s"$curPair/${kind.deletes}").distinct()
+      publishGeneration(spark, sigPath, kind, None) { stage =>
         sigs.write.mode("overwrite")
           .parquet(s"$stage/batch_id=$BootstrapBatchId")
       }
     }
     betweenCommits()
-    publishGeneration(spark, pairPath, tableFlat) { stage =>
+    publishGeneration(spark, pairPath, kind, Some(plan)) { stage =>
       pairs.write.mode("overwrite")
         .parquet(s"$stage/batch_id=$BootstrapBatchId")
-      Publish.writeLedger(pairFs, new Path(stage, "_folded"),
-        plan.newFolded)
-      if (plan.newTd.nonEmpty) {
-        pairFs.mkdirs(new Path(stage, "_deletes"))
-        Publish.writeLedger(pairFs, new Path(stage, "_deletes/_folded"),
-          plan.newTd)
-      }
     }
   }
 
@@ -544,26 +559,16 @@ object Compaction {
     * 9-dp doubles) — they are structure, not data, and are never
     * retrained here. */
   def compactIvfIndex(spark: SparkSession, indexPath: String): Unit = {
-    val (fs, root) = fsOf(spark, indexPath)
-    val plan = foldPlan(spark, indexPath, "postings", "deletes")
-      .getOrElse(return)
+    val plan = foldPlan(spark, indexPath, Kind.Ivf).getOrElse(return)
     val cur = plan.cur
     val postings = Takedown.applyDeletes(
       spark.read.parquet(s"$cur/postings").drop("batch_id"),
-      s"$cur/deletes", idCol = "vec_id")
+      s"$cur/${Kind.Ivf.deletes}", idCol = "vec_id")
     val cents = spark.read.parquet(s"$cur/centroids")
-    publishGeneration(spark, indexPath,
-      n => Set("postings", "centroids", "deletes", "_folded").contains(n)) {
-      stage =>
-        postings.write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$stage/postings/batch_id=${plan.foldId}")
-        cents.write.mode("overwrite").parquet(s"$stage/centroids")
-        Publish.writeLedger(fs, new Path(stage, "_folded"), plan.newFolded)
-        if (plan.newTd.nonEmpty) {
-          fs.mkdirs(new Path(stage, "deletes"))
-          Publish.writeLedger(fs, new Path(stage, "deletes/_folded"),
-            plan.newTd)
-        }
+    publishGeneration(spark, indexPath, Kind.Ivf, Some(plan)) { stage =>
+      postings.write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$stage/postings/batch_id=${plan.foldId}")
+      cents.write.mode("overwrite").parquet(s"$stage/centroids")
     }
   }
 }

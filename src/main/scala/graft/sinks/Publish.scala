@@ -29,7 +29,7 @@ import org.apache.hadoop.fs.Path
   * | 3 | COMMITTED            | ✓ | - | ✓ | servable                                 | retention drop (vacuum) → 1; stale fence rename (fencer) → 5 |
   * | 4 | FENCED-UNCOMMITTED   | - | ✓ | - | fencer renamed an aged unmarked claim    | tomb delete (fencer/vacuum) → 1                  |
   * | 5 | FENCED-COMMITTED     | - | ✓ | ✓ | marker landed around the fence rename    | restore rename (fencer/vacuum) → 3               |
-  * | 6 | ZOMBIE               | - | - | ✓ | owner died inside commitMarker's create→post-check window after its fenced claim was deleted | age-gated marker reap (vacuum) → 1 |
+  * | 6 | ZOMBIE               | - | - | ✓ | owner died inside commitMarkerWith's create→post-check window after its fenced claim was deleted | age-gated marker reap (vacuum) → 1 |
   * | 7 | USURPED-TRANSIT      | ✓*| ✓ | ✓ | a fresh claimant occupied the freed slot mid-restore (✓* = FOREIGN token) | marker-exclusion vacate (claimant) → 5 |
   *
   * Invariants the transitions preserve (each enforced by a check in
@@ -73,25 +73,39 @@ private[graft] object Publish {
   /** A claimed-but-unmarked version: the number the filesystem granted
     * plus the publisher-owned token stamped INSIDE the staged data
     * before the claim rename (so it travels with the directory). The
-    * token is what lets [[commitMarker]] distinguish "my data still
+    * token is what lets [[commitMarkerWith]] distinguish "my data still
     * sits at v=n" from "v=n was orphan-fenced and/or re-claimed by a
     * competitor while I stalled" — the two are indistinguishable by
     * version number alone. */
   private[graft] final case class Claim(version: Int, token: String)
 
-  private[graft] def publishState(spark: SparkSession, tableDir: String,
-                                  mergeOf: Option[DataFrame] => DataFrame,
-                                  batchId: Option[Long],
-                                  orphanFenceMs: Long = 60000L,
-                                  beforeClaim: () => Unit = () => ()): Int =
-    publishLoop(spark, tableDir, mergeOf, orphanFenceMs, beforeClaim,
-      batchId)
-
+  /** The serializable publish loop — a versioned STATE TRANSITION:
+    * read the current version, compute the successor state via
+    * `mergeOf` (`mergeOf(None)` is the bootstrap), claim, commit only
+    * on claim-adjacency, retract-and-retry otherwise. Every keyed
+    * merge of [[Sinks]] rides it, and so does any maintenance operator
+    * whose transition is not a keyed merge (SCD2 apply, any fold of a
+    * delta into standing state). With a `batchId`, replaying a
+    * committed transition is detected against the applied-batch
+    * ledger and returns the current version untouched — the
+    * correctness condition whenever the transition is not idempotent
+    * by content.
+    *
+    * Fencing vs the fenced (ADVICE r10): a publisher merely STALLED
+    * (not crashed) between claim and marker for longer than
+    * `orphanFenceMs` can be fenced by a competitor, and must then FAIL
+    * its commit loudly ([[commitMarkerWith]]'s token checks), never
+    * report success for a batch that was discarded or whose number
+    * was re-claimed with different data. Every interleaving ends in
+    * (marker ∧ the OWNER's data), (no marker ∧ the stalled publisher
+    * throws), or a data-less ZOMBIE marker readers resolve past and
+    * vacuum reaps — the state table above. `beforeClaim` is the spec
+    * seam between the base read and the claim (the race window). */
   private[graft] def publishLoop(spark: SparkSession, tableDir: String,
                                  mergeOf: Option[DataFrame] => DataFrame,
-                                 orphanFenceMs: Long,
-                                 beforeClaim: () => Unit,
-                                 batchId: Option[Long] = None): Int = {
+                                 batchId: Option[Long],
+                                 orphanFenceMs: Long = 60000L,
+                                 beforeClaim: () => Unit = () => ()): Int = {
     val root = new Path(tableDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
@@ -118,9 +132,7 @@ private[graft] object Publish {
       if (attempts > 1) Thread.sleep(
         java.util.concurrent.ThreadLocalRandom.current()
           .nextLong(5L, 40L) * math.min(attempts, 8))
-      val hasCurrent = fs.exists(root) &&
-        (fs.exists(new Path(root, MarkerDir)) ||
-          fs.exists(new Path(root, "LATEST")))
+      val hasCurrent = fs.exists(new Path(root, MarkerDir))
       val base = if (hasCurrent) currentVersion(fs, root) else 0
       // Applied-batch ledger (r12): with a batchId, a delta whose id is
       // already in the current version's ledger is a REPLAY — return
@@ -159,7 +171,7 @@ private[graft] object Publish {
         if (c == null) () // transient base move — loop re-reads
         else if (c.version == base + 1 ||
             ((base + 1) until c.version).forall(g => zombieNumber(fs, root, g))) {
-          commitMarker(spark, tableDir, c); result = c.version
+          commitMarkerWith(spark, tableDir, c); result = c.version
         } else {
           // Non-adjacent claim: someone claimed (base, n) after our
           // read. Retract ours (invisible — no marker was written) by
@@ -232,7 +244,7 @@ private[graft] object Publish {
   /** Fence ONE aged claimed-but-unmarked gap version (factored out of
     * [[publishLoop]] r12 so the interleavings are spec-drivable).
     * Rename-first: after the tombstone rename the dir is gone from
-    * `v=g`, so a stalled owner's commitMarker token check fails
+    * `v=g`, so a stalled owner's commitMarkerWith token check fails
     * deterministically. A competitor racing the same fence surfaces as
     * a rename IOException — it already moved the dir; nothing left for
     * us to do. The marker re-check after the rename catches an owner
@@ -494,7 +506,7 @@ private[graft] object Publish {
   /** The first half of a publish: stage the data and claim a version
     * NUMBER (no-overwrite rename — the filesystem grants each number
     * to exactly one publisher), WITHOUT the marker. The claimed
-    * version is INVISIBLE to readers until [[commitMarker]] — which is
+    * version is INVISIBLE to readers until [[commitMarkerWith]] — which is
     * what lets the merge paths validate their merge base between claim
     * and commit, and retract a stale claim without any reader ever
     * having observed it.
@@ -570,12 +582,12 @@ private[graft] object Publish {
     // commits (progress) or retracts (freeing base+1 for the next
     // claimant); occupied or marker-excluded numbers are skipped by
     // the existing rename/exclusion logic. Tables with no markers yet
-    // (bootstrap or legacy LATEST) keep the dir-derived start.
+    // (bootstrap) keep the dir-derived start.
     // The start is the SERVABLE current + 1 (not the max marker —
     // a crashed-commit zombie above the servable base would skip the
     // genuinely free next number); the walk skips marker-excluded and
     // occupied numbers from there. All-zombie marker sets fall back
-    // to the max marker, bootstrap/legacy tables to the dir max.
+    // to the max marker, bootstrap tables to the dir max.
     val markerMax =
       if (fs.exists(new Path(root, MarkerDir)))
         fs.listStatus(new Path(root, MarkerDir)).toSeq
@@ -607,7 +619,7 @@ private[graft] object Publish {
           // INTO the existing destination as a CHILD and returns true.
           // Forensically observed: a loser's stage nested at
           // v=N/.stage-*, the loser proceeding as if it owned v=N, and
-          // its commitMarker later failing "fenced" (or worse,
+          // its commitMarkerWith later failing "fenced" (or worse,
           // committing a marker over the winner's bytes). Ownership is
           // therefore verified by the claim token at the TOP level of
           // the slot; a nested loser recovers its bytes (or restages
@@ -700,19 +712,16 @@ private[graft] object Publish {
     * just before our marker landed; we retract the marker and fail).
     * After a successful post-check, any later fencer sees the marker
     * either at its age gate or at its own post-rename re-check and
-    * restores — so "commitMarker returned" really means "readers will
+    * restores — so "commitMarkerWith returned" really means "readers will
     * resolve this version". Failure is an IllegalStateException, never
     * a silent success: the caller's batch was NOT published and must
-    * be replayed (the merge paths converge on replay by design). */
-  private[graft] def commitMarker(spark: SparkSession, tableDir: String,
-                                  claim: Claim): Unit =
-    commitMarkerWith(spark, tableDir, claim)
-
-  /** [[commitMarker]] with the spec seam exposed: `beforeMarker` runs
-    * after the token pre-check and before the marker create — the
-    * exact window in which a fence arriving mid-commit produces the
-    * "fenced at commit" retract-and-throw path, which no wall-clock
-    * interleaving reaches deterministically. */
+    * be replayed (the merge paths converge on replay by design).
+    *
+    * Spec seam: `beforeMarker` runs after the token pre-check and
+    * before the marker create — the exact window in which a fence
+    * arriving mid-commit produces the "fenced at commit"
+    * retract-and-throw path, which no wall-clock interleaving reaches
+    * deterministically. */
   private[graft] def commitMarkerWith(spark: SparkSession, tableDir: String,
                                       claim: Claim,
                                       beforeMarker: () => Unit = () => ())
@@ -760,8 +769,9 @@ private[graft] object Publish {
     * directory exists AND — when the marker file names a claim token
     * (r12) — the directory still carries that token, so a claimant
     * transiting a freed committed slot can never be served as the
-    * committed version. Tokenless (legacy / mid-write) markers fall
-    * back to the dir-exists rule. One small-file read per candidate;
+    * committed version. Tokenless markers ([[Sinks.rollbackTo]] writes
+    * them; a marker caught mid-write reads as one) fall back to the
+    * dir-exists rule. One small-file read per candidate;
     * resolution normally checks a single marker. */
   private[graft] def servableVersion(fs: org.apache.hadoop.fs.FileSystem,
                                      root: Path, v: Int): Boolean =
@@ -787,7 +797,7 @@ private[graft] object Publish {
     * two transients produce one: a fence→restore transit (the
     * committed bytes sit in a tombstone for the duration of two
     * renames) and a ZOMBIE marker from a publisher that crashed (or
-    * was descheduled) inside commitMarker's create→post-check window
+    * was descheduled) inside commitMarkerWith's create→post-check window
     * after its unmarked claim had been fenced and deleted (r12 —
     * observed as a reader PATH_NOT_FOUND flake under suite-load
     * stalls: the zombie marker resolved as current and the read
@@ -804,26 +814,15 @@ private[graft] object Publish {
       if (fs.exists(md))
         fs.listStatus(md).toSeq.flatMap(_.getPath.getName.toIntOption)
       else Nil
-    val servable = markers.sorted(Ordering[Int].reverse)
+    require(markers.nonEmpty,
+      s"no publish marker under $root — never published?")
+    markers.sorted(Ordering[Int].reverse)
       .find(v => servableVersion(fs, root, v))
-    if (servable.nonEmpty) servable.get
-    else if (markers.nonEmpty) throw new IllegalStateException(
-      s"markers exist under $root but none has a data directory — every " +
-        "version is in a fence-restore transit or is a crashed-commit " +
-        "zombie; retry, or run vacuumVersions to reap zombies and " +
-        "complete crashed restores")
-    else {
-      // Legacy single-file pointer (pre-r7 tables): resolve it so an
-      // existing deployment keeps reading; the next publish writes a
-      // marker and the table migrates forward.
-      val ptr = new Path(root, "LATEST")
-      require(fs.exists(ptr),
-        s"no publish marker or LATEST pointer under $root — never published?")
-      val in = fs.open(ptr)
-      val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-      txt.toInt
-    }
+      .getOrElse(throw new IllegalStateException(
+        s"markers exist under $root but none has a data directory — " +
+          "every version is in a fence-restore transit or is a " +
+          "crashed-commit zombie; retry, or run vacuumVersions to reap " +
+          "zombies and complete crashed restores"))
   }
 
   /** [[Sinks.vacuumVersions]]'s implementation — see its scaladoc for
@@ -857,7 +856,7 @@ private[graft] object Publish {
         else if (!marked) fs.delete(st.getPath, true)
       }
     // Zombie-marker reap (r12): a publisher that crashed inside
-    // commitMarker's create→post-check window — after its unmarked
+    // commitMarkerWith's create→post-check window — after its unmarked
     // claim had been fenced and deleted — leaves a marker with no data
     // directory. It is no version at all (nothing was ever readable
     // there); readers skip it and marker exclusion blocks its number,
@@ -909,10 +908,7 @@ private[graft] object Publish {
     // so there is nothing to retain-sweep — surviving `v=` dirs are
     // live claims the sweep must not touch (r13, surfaced by the
     // reap-seam spec).
-    val anyCommitted =
-      (fs.exists(md) && fs.listStatus(md).nonEmpty) ||
-        fs.exists(new Path(root, "LATEST"))
-    if (!anyCommitted) return Nil
+    if (!fs.exists(md) || fs.listStatus(md).isEmpty) return Nil
     val current = currentVersion(fs, root)
     // Keep the `keepLast` NEWEST below current (by version number, not
     // arithmetic — committed numbers need not be contiguous).

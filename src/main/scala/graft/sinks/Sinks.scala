@@ -125,7 +125,7 @@ object Sinks {
     val v = Publish.currentVersion(fs, root)
     val bytes = fs.getContentSummary(new Path(root, s"v=$v")).getLength
     val nFiles = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-    publishState(spark, tableDir, {
+    Publish.publishLoop(spark, tableDir, {
       case Some(cur) => cur.repartition(nFiles)
       case None => throw new IllegalStateException(
         s"publishCompacted: $tableDir vanished between resolve and publish")
@@ -284,11 +284,11 @@ object Sinks {
     * CLAIM-ADJACENCY: commit the marker only when the claimed number
     * is exactly mergeBase+1 (our merge provably saw everything below
     * it). A publisher whose claim lands higher retracts its claim —
-    * which no reader ever saw, because [[stageAndClaim]] doesn't write
-    * the marker — re-reads the new current version, re-merges, and
-    * retries. `beforeClaim` runs between the base read and the claim
-    * (the race window), letting the spec inject a deterministic
-    * interleaving.
+    * which no reader ever saw, because [[Publish.stageAndClaim]]
+    * doesn't write the marker — re-reads the new current version,
+    * re-merges, and retries. `beforeClaim` runs between the base read
+    * and the claim (the race window), letting the spec inject a
+    * deterministic interleaving.
     *
     * Orphan fencing: a publisher that crashed between claim and marker
     * leaves a claimed-but-unmarked gap version that would make every
@@ -311,7 +311,7 @@ object Sinks {
       case Some(current) => current
         .join(deduped.select(keys.map(col): _*), keys, "left_anti")
         .unionByName(deduped)
-    }, orphanFenceMs, beforeClaim, batchId)
+    }, batchId, orphanFenceMs, beforeClaim)
   }
 
   /** DELETE-AWARE keyed MERGE over the versioned publish (r13, VERDICT
@@ -369,7 +369,7 @@ object Sinks {
       case Some(current) => current
         .join(winners.select(keys.map(col): _*), keys, "left_anti")
         .unionByName(upserts)
-    }, orphanFenceMs, beforeClaim, batchId)
+    }, batchId, orphanFenceMs, beforeClaim)
   }
 
   /** Incremental AGGREGATE maintenance over the versioned publish: the
@@ -407,75 +407,8 @@ object Sinks {
     Publish.publishLoop(spark, tableDir, {
       case None => reagg(delta)
       case Some(current) => reagg(current.unionByName(reagg(delta)))
-    }, orphanFenceMs, beforeClaim, batchId)
+    }, batchId, orphanFenceMs, beforeClaim)
   }
-
-  /** The shared serializable publish loop: read the current version,
-    * compute the successor state via `mergeOf`, claim, commit only on
-    * claim-adjacency, retract-and-retry otherwise (scaladoc on
-    * [[mergePublishWith]]). `mergeOf(None)` is the bootstrap.
-    *
-    * Fencing vs the fenced (ADVICE r10): a publisher merely STALLED
-    * (not crashed) between claim and marker for longer than
-    * `orphanFenceMs` can be fenced by a competitor — and must then
-    * FAIL its commit loudly, never report success for a batch that was
-    * discarded or whose number was re-claimed with different data.
-    * Two mechanisms close this: (1) every claim carries a
-    * publisher-owned token file inside the version directory, and
-    * [[commitMarker]] verifies the token before AND after creating the
-    * marker (see its scaladoc for the interleaving argument); (2) the
-    * fence itself is rename-to-tombstone + marker re-check + delete,
-    * not a blind delete — renaming first makes the fence visible to
-    * the owner's token check in the same metadata op that makes the
-    * data unreachable, and the re-check restores a version whose
-    * marker landed between our staleness read and the rename. The
-    * restore's third leg (r12): [[stageAndClaim]]'s MARKER EXCLUSION
-    * guarantees no claimant retains a slot whose marker exists, so the
-    * restore converges ([[restoreTombstone]]) instead of racing a
-    * usurper — without it, a fresh claimant grabbing the freed slot
-    * between fence and restore left uncommitted bytes under the
-    * owner's committed marker (VERDICT r11 #1). Every interleaving
-    * therefore ends in one of THREE states: (marker present ∧ the
-    * OWNER's data present), (no marker ∧ the stalled publisher
-    * throws), or — when the publisher dies inside commitMarker's
-    * create→post-check window after its fenced claim was deleted — a
-    * ZOMBIE marker with no data, which never carried readable state:
-    * readers resolve past it (the servable rule in currentVersion),
-    * marker exclusion keeps its number unclaimable, the
-    * claim-adjacency check commits over all-zombie gaps, and
-    * vacuumVersions reaps it. The serializability claim holds for
-    * stalls and crashes both. */
-  /** General versioned STATE-TRANSITION publish (r12): run an
-    * arbitrary `mergeOf` transition (current state → successor state)
-    * through the same claim-adjacency OCC loop, fencing, and
-    * applied-batch ledger as [[mergePublish]] — for maintenance
-    * operators whose transition is not a keyed merge (SCD2 apply, any
-    * fold of a delta into standing state). `mergeOf(None)` is the
-    * bootstrap. With a `batchId`, replaying a committed transition is
-    * detected and returns the current version untouched — which is the
-    * correctness condition whenever the transition is not idempotent
-    * by content. Engine-internal seam (private[graft]): public callers
-    * go through the named operators that pin their transition's
-    * semantics with specs and oracle rows. */
-  /** Seam kept on [[Sinks]] for callers/specs; the protocol itself
-    * lives in [[Publish]] (extracted r13 — VERDICT r12 #2) with its
-    * state-machine enumeration. */
-  private[graft] def publishState(spark: SparkSession, tableDir: String,
-                                  mergeOf: Option[DataFrame] => DataFrame,
-                                  batchId: Option[Long],
-                                  orphanFenceMs: Long = 60000L,
-                                  beforeClaim: () => Unit = () => ()): Int =
-    Publish.publishState(spark, tableDir, mergeOf, batchId,
-      orphanFenceMs, beforeClaim)
-
-  private[graft] def fenceOrphan(fs: org.apache.hadoop.fs.FileSystem,
-                                 fc: org.apache.hadoop.fs.FileContext,
-                                 root: Path, g: Int, orphanFenceMs: Long,
-                                 beforeRename: () => Unit = () => (),
-                                 afterRename: () => Unit = () => ()): Unit =
-    Publish.fenceOrphan(fs, fc, root, g, orphanFenceMs,
-      beforeRename, afterRename)
-
 
   /** Range-clustered layout: repartitionByRange + sortWithinPartitions
     * on the dominant filter column before writing, so every output file
@@ -578,18 +511,17 @@ object Sinks {
 
   /** Atomic versioned publish — the missing piece between [[upsert]]'s
     * in-place swap and a standing corpus pipeline: each publish writes a
-    * COMPLETE new version directory `v=<n>` and only then flips a
-    * one-line `LATEST` pointer file (temp-file + rename — atomic on
-    * HDFS-semantics filesystems; on object stores the pointer is a
-    * single small object, last-writer-wins). Readers resolve the
-    * pointer first, so they observe either the old version or the new
-    * one — never a blend, never a half-written directory; a crash
-    * mid-write leaves an unreferenced stage directory that
-    * [[vacuumVersions]]' caller can reclaim, and version numbers only
-    * move forward. This is the pattern transactional table formats
-    * industrialize; at 100 TB the version directories share nothing, so
-    * publish cost is one full write with zero read amplification and
-    * rollback is re-pointing LATEST. Returns the published version.
+    * COMPLETE new version directory `v=<n>` and only then creates its
+    * commit marker `_latest/<n>` (a fresh small file naming the claim
+    * token). Readers resolve the highest servable marker first, so they
+    * observe either the old version or the new one — never a blend,
+    * never a half-written directory; a crash mid-write leaves an
+    * unreferenced stage directory that [[vacuumVersions]] reclaims,
+    * and version numbers only move forward. This is the pattern
+    * transactional table formats industrialize; at 100 TB the version
+    * directories share nothing, so publish cost is one full write with
+    * zero read amplification and rollback is deleting the newer
+    * markers. Returns the published version.
     *
     * Concurrency (ADVICE r5): CONCURRENT PUBLISHERS ARE SAFE on
     * HDFS-semantics filesystems — each publisher writes its data into a
@@ -607,38 +539,16 @@ object Sinks {
     * regress readers (the single-file re-read-then-rename this
     * replaces narrowed that race but could not close it: a loser
     * whose overwrite landed last still parked readers on the older
-    * version). Rollback = delete the newer markers. Legacy tables
-    * carrying only a one-line `LATEST` file still resolve (fallback
-    * read); their next publish writes a marker and the table is
-    * migrated. */
+    * version). Rollback = delete the newer markers. */
   def publishVersioned(df: DataFrame, tableDir: String): Int = {
-    val claim = stageAndClaim(df, tableDir)
-    commitMarker(df.sparkSession, tableDir, claim)
+    val claim = Publish.stageAndClaim(df, tableDir)
+    Publish.commitMarkerWith(df.sparkSession, tableDir, claim)
     claim.version
   }
 
-  /** The protocol's claim handle — see [[Publish.Claim]]. */
-  private[graft] type Claim = Publish.Claim
-
-  private[graft] def stageAndClaim(df: DataFrame, tableDir: String,
-                                   stamp: Path => Unit = _ => (),
-                                   beforeRename: Int => Unit = _ => (),
-                                   afterRename: Int => Unit = _ => ())
-      : Claim =
-    Publish.stageAndClaim(df, tableDir, stamp, beforeRename, afterRename)
-
-  private[graft] def commitMarker(spark: SparkSession, tableDir: String,
-                                  claim: Claim): Unit =
-    Publish.commitMarker(spark, tableDir, claim)
-
-  private[graft] def commitMarkerWith(spark: SparkSession, tableDir: String,
-                                      claim: Claim,
-                                      beforeMarker: () => Unit = () => ())
-      : Unit =
-    Publish.commitMarkerWith(spark, tableDir, claim, beforeMarker)
-
-  /** Resolve the LATEST pointer and read that version (an unreferenced
-    * higher `v=` from a crashed publish is invisible here). */
+  /** Resolve the current version (the highest servable marker) and
+    * read it (an unreferenced higher `v=` from a crashed publish is
+    * invisible here). */
   def readLatest(spark: SparkSession, tableDir: String): DataFrame = {
     val root = new Path(tableDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -748,9 +658,7 @@ object Sinks {
     * [[vacuumVersions]] reclaims below the new current). Fails fast if
     * `version` was never published or its directory is gone (a
     * rollback must land on a COMPLETE version, the invariant markers
-    * encode). Legacy tables (LATEST file, no markers) migrate: the
-    * target's marker is created, then the stale LATEST file is removed
-    * so marker resolution takes over. */
+    * encode). */
   def rollbackTo(spark: SparkSession, tableDir: String, version: Int): Unit = {
     val root = new Path(tableDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -764,7 +672,6 @@ object Sinks {
       .flatMap(st => st.getPath.getName.toIntOption.map(st.getPath -> _))
       .filter(_._2 > version)
       .foreach { case (p, _) => fs.delete(p, false) }
-    fs.delete(new Path(root, "LATEST"), false)
   }
 
   /** Drop version directories below the pointed-to one, RETAINING the

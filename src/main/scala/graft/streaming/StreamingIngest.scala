@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
+import graft.operators.Compaction
 
 /** E2: event-driven ingest — Structured Streaming subsumes the
   * reference's GCS-finalize → Pub/Sub → per-file DAG chain
@@ -40,15 +41,9 @@ object StreamingIngest {
         .option("cleanSource", "archive")
         .option("sourceArchiveDir", dir)
     }
-    val q = reader.csv(watchDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchPartition(batch, layerPath, batchId)
-      }
-      .start()
-    q.awaitTermination()
+    drain(reader.csv(watchDir), checkpointDir) { (batch, batchId) =>
+      writeBatchPartition(batch, layerPath, batchId)
+    }
   }
 
   /** Stream-stream inner join with event-time bounds: clicks joined to
@@ -89,6 +84,29 @@ object StreamingIngest {
                                   batchId: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$root/batch_id=$batchId")
 
+  /** THE micro-batch runner every checkpointed stream here goes
+    * through: drain everything currently available
+    * (`Trigger.AvailableNow`) into `sink`, checkpointed at
+    * `checkpointDir`, and block until the drain completes. A restart
+    * on the same checkpoint resumes after the last committed batch;
+    * a batch whose sink threw is replayed under the same id. */
+  private def drain(stream: DataFrame, checkpointDir: String)
+                   (sink: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(sink)
+      .start()
+      .awaitTermination()
+
+  /** Persist a micro-batch its sink consumes more than once, so the
+    * source files are read and parsed once per trigger, not once per
+    * consumer. */
+  private def pinned(batch: DataFrame)(body: => Unit): Unit = {
+    batch.persist()
+    try body finally batch.unpersist()
+  }
+
   /** Streaming twin of Events.hourlyWindows: watermarked tumbling-window
     * aggregation over an event stream read from parquet files. Returns
     * the streaming DataFrame (caller attaches a sink; tests use a memory
@@ -122,21 +140,14 @@ object StreamingIngest {
                    rules: Seq[(String, org.apache.spark.sql.Column)],
                    layerPath: String, quarantinePath: String,
                    checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Two sinks consume the batch — persist so the source files are
-        // read and the rules evaluated once, not once per sink.
-        batch.persist()
-        try {
-          val (good, bad) = graft.operators.Curation.expectSplit(batch, rules)
-          writeBatchPartition(good, layerPath, batchId)
-          writeBatchPartition(bad, quarantinePath, batchId)
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      // Two sinks consume the batch, so the rules evaluate once.
+      pinned(batch) {
+        val (good, bad) = graft.operators.Curation.expectSplit(batch, rules)
+        writeBatchPartition(good, layerPath, batchId)
+        writeBatchPartition(bad, quarantinePath, batchId)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming drift gate: every arriving micro-batch of documents is
@@ -154,16 +165,11 @@ object StreamingIngest {
     * one-definition with the batch monitor. */
   def driftGateStream(stream: DataFrame, referencePath: String,
                       monitorPath: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ref = batch.sparkSession.read.parquet(referencePath)
-        val report = graft.operators.Curation.driftBetween(batch, ref)
-        writeBatchPartition(report, monitorPath, batchId)
-      }
-      .start()
-    q.awaitTermination()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      val ref = batch.sparkSession.read.parquet(referencePath)
+      val report = graft.operators.Curation.driftBetween(batch, ref)
+      writeBatchPartition(report, monitorPath, batchId)
+    }
   }
 
   /** Streaming CDC apply: merge every micro-batch into a keyed layer
@@ -177,26 +183,21 @@ object StreamingIngest {
     * (merging identical content twice is a no-op), so the layer is
     * effectively exactly-once without a transactional format. This is
     * the whole-layer merge; at partition-mappable keys swap in
-    * `overwritePartitions` inside the same foreachBatch. Batches are
+    * `overwritePartitions` inside the same micro-batch sink. Batches are
     * applied serially by the streaming engine — the upsert's
     * non-atomic swap window (see its scaladoc) is the read-side
     * caveat. */
   def upsertStream(stream: DataFrame, layerPath: String,
                    keys: Seq[String], checkpointDir: String,
                    latestBy: Seq[String] = Nil): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // The merge plan references the batch twice (anti-join keys +
-        // union) — persist so the source parses once per trigger.
-        batch.persist()
-        try graft.sinks.Sinks.upsert(batch.sparkSession, batch, layerPath,
+    drain(stream, checkpointDir) { (batch, _) =>
+      // The merge plan references the batch twice (anti-join keys +
+      // union).
+      pinned(batch) {
+        graft.sinks.Sinks.upsert(batch.sparkSession, batch, layerPath,
           keys, latestBy)
-        finally batch.unpersist()
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming CDC apply through the VERSIONED publish (VERDICT r11
@@ -218,21 +219,14 @@ object StreamingIngest {
   def mergePublishStream(stream: DataFrame, tableDir: String,
                          keys: Seq[String], checkpointDir: String,
                          latestBy: Seq[String] = Nil): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The merge plan references the batch twice (anti-join keys +
-        // union) — persist so the source parses once per trigger.
-        batch.persist()
-        try {
-          graft.sinks.Sinks.mergePublishWith(batch.sparkSession, batch,
-            tableDir, keys, latestBy, batchId = Some(batchId))
-          ()
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      // The merge plan references the batch twice (anti-join keys +
+      // union).
+      pinned(batch) {
+        graft.sinks.Sinks.mergePublishWith(batch.sparkSession, batch,
+          tableDir, keys, latestBy, batchId = Some(batchId))
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** DELETE-AWARE streaming CDC through the versioned publish (r13):
@@ -248,19 +242,12 @@ object StreamingIngest {
                             keys: Seq[String], checkpointDir: String,
                             opCol: String = "op",
                             latestBy: Seq[String] = Nil): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          graft.sinks.Sinks.mergePublishCdc(batch.sparkSession, batch,
-            tableDir, keys, opCol, latestBy, batchId = Some(batchId))
-          ()
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      pinned(batch) {
+        graft.sinks.Sinks.mergePublishCdc(batch.sparkSession, batch,
+          tableDir, keys, opCol, latestBy, batchId = Some(batchId))
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming AGGREGATE maintenance through the versioned publish —
@@ -282,16 +269,10 @@ object StreamingIngest {
   def mergeAggPublishStream(stream: DataFrame, tableDir: String,
                             keys: Seq[String], sums: Seq[String],
                             checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sinks.Sinks.mergeAggPublish(batch.sparkSession, batch,
-          tableDir, keys, sums, batchId = Some(batchId))
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      graft.sinks.Sinks.mergeAggPublish(batch.sparkSession, batch,
+        tableDir, keys, sums, batchId = Some(batchId))
+    }
   }
 
   /** Streaming SCD2 dimension maintenance through the versioned
@@ -302,7 +283,7 @@ object StreamingIngest {
     * keys rebuilt from their own versions + the slice — O(affected),
     * never O(history)); the first batch bootstraps via
     * [[graft.operators.Scd.scd2FromChanges]]. Published through
-    * [[graft.sinks.Sinks.publishState]]'s OCC loop with the micro-batch
+    * [[graft.sinks.Publish.publishLoop]]'s OCC loop with the micro-batch
     * id on the applied-batch ledger: scd2Apply is NOT idempotent by
     * content (re-applying a slice re-unions its change points into the
     * touched keys' histories), so replay detection is the correctness
@@ -314,23 +295,15 @@ object StreamingIngest {
     * rebuild path). */
   def scd2MaintenanceStream(stream: DataFrame, tableDir: String,
                             checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The apply references the batch twice (affected keys + union)
-        // — persist so the source parses once per trigger.
-        batch.persist()
-        try {
-          graft.sinks.Sinks.publishState(batch.sparkSession, tableDir, {
-            case None => graft.operators.Scd.scd2FromChanges(batch)
-            case Some(dim) => graft.operators.Scd.scd2Apply(dim, batch)
-          }, batchId = Some(batchId))
-          ()
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      // The apply references the batch twice (affected keys + union).
+      pinned(batch) {
+        graft.sinks.Publish.publishLoop(batch.sparkSession, tableDir, {
+          case None => graft.operators.Scd.scd2FromChanges(batch)
+          case Some(dim) => graft.operators.Scd.scd2Apply(dim, batch)
+        }, batchId = Some(batchId))
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** DELETE-AWARE streaming SCD2 maintenance (r13): the
@@ -345,95 +318,15 @@ object StreamingIngest {
   def scd2CdcMaintenanceStream(stream: DataFrame, tableDir: String,
                                checkpointDir: String,
                                opCol: String = "op"): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          graft.sinks.Sinks.publishState(batch.sparkSession, tableDir, {
-            case None => graft.operators.Scd.scd2FromCdc(batch, opCol)
-            case Some(dim) =>
-              graft.operators.Scd.scd2ApplyCdc(dim, batch, opCol)
-          }, batchId = Some(batchId))
-          ()
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      pinned(batch) {
+        graft.sinks.Publish.publishLoop(batch.sparkSession, tableDir, {
+          case None => graft.operators.Scd.scd2FromCdc(batch, opCol)
+          case Some(dim) =>
+            graft.operators.Scd.scd2ApplyCdc(dim, batch, opCol)
+        }, batchId = Some(batchId))
       }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Continuous TAKEDOWN stream (r13): takedown requests (doc_ids)
-    * arrive as a stream and propagate into the standing lex/pos index
-    * pair and the near-dup pair table at each trigger — the
-    * operational form of [[graft.operators.Takedown]], keyed by the
-    * micro-batch id so a replayed request batch is exactly-once (the
-    * recordDeletes overwrite + the post-compaction folded-takedown
-    * ledger). Corpus-side removal is the caller's mergePublishCdc
-    * D-batch; embedding-index takedown takes the same shape with
-    * vec_id ids. Cost per trigger: O(|ids|) writes + one doclens probe
-    * for the stats correction — never an index rewrite (compaction
-    * amortizes the physical fold). */
-  def takedownStream(idStream: DataFrame,
-                     lexIndexPath: Option[String] = None,
-                     posIndexPath: Option[String] = None,
-                     pairTablePath: Option[String] = None,
-                     checkpointDir: String,
-                     compactEvery: Int = 0,
-                     pairSigPath: Option[String] = None): Unit = {
-    // All-None would CONSUME and checkpoint takedown requests while
-    // applying them nowhere — for a right-to-erasure pipeline, a
-    // silent compliance hole (r13 review). Fail fast.
-    require(lexIndexPath.nonEmpty || posIndexPath.nonEmpty ||
-        pairTablePath.nonEmpty,
-      "takedownStream: no target index/table — requests would be " +
-        "checkpointed as processed and applied nowhere")
-    val q = idStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          val s = batch.sparkSession
-          lexIndexPath.foreach(p =>
-            graft.operators.Takedown.takedownLex(s, p, batch, batchId))
-          posIndexPath.foreach(p =>
-            graft.operators.Takedown.takedownPos(s, p, batch, batchId))
-          pairTablePath.foreach(p =>
-            graft.operators.Takedown.takedownPairs(s, p, batch, batchId))
-          // Self-triggering compaction (r14): a long-lived takedown
-          // stream with no ingest twin would otherwise grow the
-          // serve-path deleted-set broadcast until someone folds by
-          // hand — the deletes-partition count is the trigger here.
-          // CONTRACT (r14 review #2): enable compactEvery on exactly
-          // ONE stream per index. Two self-compacting streams against
-          // the same index make the fold race a concurrent writer —
-          // the out-of-contract state that can drop an in-flight
-          // batch (the fold's ledger doesn't name it, the writer's
-          // checkpoint won't replay it). The pair-table fold also
-          // needs the signature table — pass `pairSigPath` or the
-          // pair deletes accrete unfolded.
-          if (compactEvery > 0) {
-            lexIndexPath.foreach(p =>
-              if (graft.operators.Compaction.compactionDue(s, p,
-                  sub = "postings", deletesSub = "deletes",
-                  threshold = compactEvery))
-                graft.operators.Compaction.compactLexIndex(s, p))
-            posIndexPath.foreach(p =>
-              if (graft.operators.Compaction.compactionDue(s, p,
-                  sub = "pos", deletesSub = "deletes",
-                  threshold = compactEvery))
-                graft.operators.Compaction.compactPosIndex(s, p))
-            for (pp <- pairTablePath; sp <- pairSigPath)
-              if (graft.operators.Compaction.compactionDue(s, pp,
-                  sub = "", deletesSub = "_deletes",
-                  threshold = compactEvery))
-                graft.operators.Compaction.compactPairTable(s, pp, sp)
-          }
-        } finally batch.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** ORCHESTRATED takedown stream (r15, VERDICT r14 next #6): the
@@ -455,9 +348,12 @@ object StreamingIngest {
     * contract: this stream must then be the ONLY self-compacting
     * stream for each targeted index):
     *
-    *  - PHYSICAL health: per-artifact [[graft.operators.Compaction]]
-    *    polls fold the accreted delete partitions once they pass
-    *    `compactEvery`.
+    *  - PHYSICAL health: each targeted index folds through
+    *    [[graft.operators.Compaction.compactIfDue]] once its accreted
+    *    batch or delete partitions pass `compactEvery`. The pair table
+    *    folds only when `pairSigPath` names its signature table (the
+    *    two fold together); without it the pair deletes accrete
+    *    unfolded.
     *  - SEMANTIC health (VERDICT r14 next #4): when `recallFloor` > 0
     *    and an IVF target is present, the post-takedown recall panel
     *    ([[graft.operators.Similarity.recallAfterTakedown]]) runs
@@ -492,59 +388,41 @@ object StreamingIngest {
       recallFloor: Double = 0.0, recallCorpusDir: Option[String] = None,
       recallEvery: Int = 1,
       beforeLeg: String => Unit = _ => ()): Unit = {
-    val q = idStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          val s = batch.sparkSession
-          graft.operators.Takedown.takedownAllWith(s, batch, batchId,
-            targets, manifestDir, beforeLeg)
-          if (compactEvery > 0) {
-            def due(p: String, sub: String, del: String) =
-              graft.operators.Compaction.compactionDue(s, p, sub, del,
-                threshold = compactEvery)
-            targets.lexIndexPath.foreach(p =>
-              if (due(p, "postings", "deletes"))
-                graft.operators.Compaction.compactLexIndex(s, p))
-            targets.posIndexPath.foreach(p =>
-              if (due(p, "pos", "deletes"))
-                graft.operators.Compaction.compactPosIndex(s, p))
-            targets.ivfIndexPath.foreach(p =>
-              if (due(p, "postings", "deletes"))
-                graft.operators.Compaction.compactIvfIndex(s, p))
-            targets.contentIndexPath.foreach(p =>
-              if (due(p, "shingles", "deletes"))
-                graft.operators.Compaction.compactContentIndex(s, p))
-            for (pp <- targets.pairTablePath; sp <- pairSigPath)
-              if (due(pp, "", "_deletes"))
-                graft.operators.Compaction.compactPairTable(s, pp, sp)
-          }
-          // Recall probe discipline (r16, ADVICE r15): retrainDue's
-          // exact arm is a corpus × query-panel pass, so (a) the probe
-          // is SKIPPED outright while `_retrain_due` already stands —
-          // once due, no evidence can change the verdict until an
-          // operator retrains and clears the marker — and (b)
-          // `recallEvery` thins it to every Nth micro-batch (takedowns
-          // shift recall slowly; per-trigger probing buys nothing a
-          // cadence misses).
-          for (ivf <- targets.ivfIndexPath; dir <- recallCorpusDir
-               if recallFloor > 0.0 &&
-                 (recallEvery <= 1 || batchId % recallEvery == 0)) {
-            val root = new org.apache.hadoop.fs.Path(ivf)
-            val fs = root.getFileSystem(
-              s.sparkContext.hadoopConfiguration)
-            val marker = new org.apache.hadoop.fs.Path(root, "_retrain_due")
-            if (!fs.exists(marker) &&
-                graft.operators.Similarity.retrainDue(s, ivf, dir,
-                  recallFloor))
-              fs.create(marker, true).close()
-          }
-        } finally batch.unpersist()
+    import Compaction.{Kind, compactIfDue}
+    drain(idStream, checkpointDir) { (batch, batchId) =>
+      pinned(batch) {
+        val s = batch.sparkSession
+        graft.operators.Takedown.takedownAllWith(s, batch, batchId,
+          targets, manifestDir, beforeLeg)
+        val folds = targets.lexIndexPath.map(_ -> Kind.Lex) ++
+          targets.posIndexPath.map(_ -> Kind.Pos) ++
+          targets.ivfIndexPath.map(_ -> Kind.Ivf) ++
+          targets.contentIndexPath.map(_ -> Kind.Content) ++
+          (for (pp <- targets.pairTablePath; sp <- pairSigPath)
+            yield pp -> Kind.Pair(sp))
+        folds.foreach { case (p, kind) =>
+          compactIfDue(s, p, kind, compactEvery) }
+        // Recall probe discipline (r16, ADVICE r15): retrainDue's
+        // exact arm is a corpus × query-panel pass, so (a) the probe
+        // is SKIPPED outright while `_retrain_due` already stands —
+        // once due, no evidence can change the verdict until an
+        // operator retrains and clears the marker — and (b)
+        // `recallEvery` thins it to every Nth micro-batch (takedowns
+        // shift recall slowly; per-trigger probing buys nothing a
+        // cadence misses).
+        for (ivf <- targets.ivfIndexPath; dir <- recallCorpusDir
+             if recallFloor > 0.0 &&
+               (recallEvery <= 1 || batchId % recallEvery == 0)) {
+          val root = new org.apache.hadoop.fs.Path(ivf)
+          val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+          val marker = new org.apache.hadoop.fs.Path(root, "_retrain_due")
+          if (!fs.exists(marker) &&
+              graft.operators.Similarity.retrainDue(s, ivf, dir,
+                recallFloor))
+            fs.create(marker, true).close()
+        }
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Standing near-dup index maintenance (VERDICT r5 ask #7): each
@@ -568,34 +446,26 @@ object StreamingIngest {
                                  sigPath: String, pairPath: String,
                                  checkpointDir: String,
                                  compactEvery: Int = 0): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // Batch feeds the layer write, the signature pass, and the
-        // candidate join — persist so the source parses once.
-        batch.persist()
-        try {
-          writeBatchPartition(batch, docsLayer, batchId)
-          // The corpus-so-far INCLUDING this batch (members of candidate
-          // pairs are re-read here for exact-Jaccard verification; the
-          // select drops the batch_id provenance partition).
-          val all = spark.read.parquet(docsLayer)
-            .select(batch.columns.map(col(_)).toIndexedSeq: _*)
-          graft.operators.Dedup.appendToPairTableBatch(spark, batch, all,
-            sigPath, pairPath, batchId)
-          // Self-triggering compaction (r14): the stream is the only
-          // writer, so folding between micro-batches is serialized by
-          // construction — and the fold itself is reader-atomic.
-          if (graft.operators.Compaction.compactionDue(spark, pairPath,
-              sub = "", deletesSub = "_deletes", threshold = compactEvery))
-            graft.operators.Compaction.compactPairTable(spark, pairPath,
-              sigPath)
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // Batch feeds the layer write, the signature pass, and the
+      // candidate join.
+      pinned(batch) {
+        writeBatchPartition(batch, docsLayer, batchId)
+        // The corpus-so-far INCLUDING this batch (members of candidate
+        // pairs are re-read here for exact-Jaccard verification; the
+        // select drops the batch_id provenance partition).
+        val all = spark.read.parquet(docsLayer)
+          .select(batch.columns.map(col(_)).toIndexedSeq: _*)
+        graft.operators.Dedup.appendToPairTableBatch(spark, batch, all,
+          sigPath, pairPath, batchId)
+        // Self-triggering compaction (r14): the stream is the only
+        // writer, so folding between micro-batches is serialized by
+        // construction — and the fold itself is reader-atomic.
+        Compaction.compactIfDue(spark, pairPath,
+          Compaction.Kind.Pair(sigPath), compactEvery)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Standing ANN-index maintenance — the IVF twin of
@@ -622,31 +492,22 @@ object StreamingIngest {
   def ivfIndexMaintenanceStream(stream: DataFrame, indexPath: String,
                                 checkpointDir: String,
                                 compactEvery: Int = 0): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          val cents = new org.apache.hadoop.fs.Path(
-            s"${graft.operators.Compaction.resolveRoot(spark, indexPath)}" +
-              "/centroids")
-          val fs = cents.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(cents))
-            graft.operators.Similarity.buildIvfIndexBatch(
-              spark, batch, indexPath, batchId)
-          else
-            graft.operators.Similarity.appendToIvfIndexBatch(
-              spark, batch, indexPath, batchId)
-          if (graft.operators.Compaction.compactionDue(spark, indexPath,
-              sub = "postings", deletesSub = "deletes",
-              threshold = compactEvery))
-            graft.operators.Compaction.compactIvfIndex(spark, indexPath)
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      pinned(batch) {
+        val cents = new org.apache.hadoop.fs.Path(
+          s"${Compaction.resolveRoot(spark, indexPath)}/centroids")
+        val fs = cents.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(cents))
+          graft.operators.Similarity.buildIvfIndexBatch(
+            spark, batch, indexPath, batchId)
+        else
+          graft.operators.Similarity.appendToIvfIndexBatch(
+            spark, batch, indexPath, batchId)
+        Compaction.compactIfDue(spark, indexPath, Compaction.Kind.Ivf,
+          compactEvery)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming lexical (BM25) index maintenance — the retrieval twin of
@@ -662,37 +523,26 @@ object StreamingIngest {
   def lexIndexMaintenanceStream(stream: DataFrame, indexPath: String,
                                 checkpointDir: String,
                                 compactEvery: Int = 0): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Three writes consume the slice (postings/doclens/stats) —
-        // pin it so the stream source isn't re-read per write.
-        batch.persist()
-        try {
-          graft.operators.Retrieval.buildLexIndexBatch(
-            batch.sparkSession, batch, indexPath, batchId)
-          // Self-triggering compaction (r14, VERDICT r13 #5): once the
-          // accreted batch partitions (or the logical-delete partitions
-          // a takedownStream keeps landing) pass the threshold, fold —
-          // discovery stays O(threshold) and the serve path's
-          // deleted-set broadcast stays bounded for the life of the
-          // stream. Between-batch = the only writer is idle; readers
-          // are protected by the generation flip. CONTRACT: enable
-          // compactEvery on exactly ONE stream per index — a second
-          // self-compacting stream (e.g. a takedownStream against the
-          // same index) makes the fold race a concurrent writer, the
-          // out-of-contract state that can drop an in-flight batch.
-          if (graft.operators.Compaction.compactionDue(
-              batch.sparkSession, indexPath,
-              sub = "postings", deletesSub = "deletes",
-              threshold = compactEvery))
-            graft.operators.Compaction.compactLexIndex(
-              batch.sparkSession, indexPath)
-        } finally batch.unpersist()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      // Three writes consume the slice (postings/doclens/stats).
+      pinned(batch) {
+        graft.operators.Retrieval.buildLexIndexBatch(
+          batch.sparkSession, batch, indexPath, batchId)
+        // Self-triggering compaction (r14, VERDICT r13 #5): once the
+        // accreted batch partitions (or the logical-delete partitions
+        // a takedown stream keeps landing) pass the threshold, fold —
+        // discovery stays O(threshold) and the serve path's
+        // deleted-set broadcast stays bounded for the life of the
+        // stream. Between-batch = the only writer is idle; readers
+        // are protected by the generation flip. CONTRACT: enable
+        // compactEvery on exactly ONE stream per index — a second
+        // self-compacting stream (e.g. a [[takedownAllStream]] against
+        // the same index) makes the fold race a concurrent writer, the
+        // out-of-contract state that can drop an in-flight batch.
+        Compaction.compactIfDue(batch.sparkSession, indexPath,
+          Compaction.Kind.Lex, compactEvery)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming positional-index maintenance — the lex-index pattern
@@ -706,20 +556,12 @@ object StreamingIngest {
   def posIndexMaintenanceStream(stream: DataFrame, indexPath: String,
                                 checkpointDir: String,
                                 compactEvery: Int = 0): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Retrieval.buildPosIndexBatch(
-          batch.sparkSession, batch, indexPath, batchId)
-        if (graft.operators.Compaction.compactionDue(
-            batch.sparkSession, indexPath,
-            sub = "pos", deletesSub = "deletes", threshold = compactEvery))
-          graft.operators.Compaction.compactPosIndex(
-            batch.sparkSession, indexPath)
-      }
-      .start()
-    q.awaitTermination()
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      graft.operators.Retrieval.buildPosIndexBatch(
+        batch.sparkSession, batch, indexPath, batchId)
+      Compaction.compactIfDue(batch.sparkSession, indexPath,
+        Compaction.Kind.Pos, compactEvery)
+    }
   }
 
   /** Streaming dedup with BOUNDED state: `dropDuplicatesWithinWatermark`

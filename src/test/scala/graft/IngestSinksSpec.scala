@@ -572,7 +572,7 @@ class IngestSinksSpec extends SparkSpec {
     assert(e.getMessage.contains("change"))
   }
 
-  test("versioned publish: marker pointer is monotonic; legacy LATEST resolves") {
+  test("versioned publish: marker pointer is monotonic; rollback is marker-only") {
     // ADVICE r6 (hardened r7): the pointer is MAX over per-version
     // marker files — creations commute, so a race loser's marker can
     // never regress readers, under ANY interleaving (the single
@@ -598,26 +598,20 @@ class IngestSinksSpec extends SparkSpec {
     // pointer follows it forward.
     assert(Sinks.publishVersioned(spark.range(30).toDF(), s"$dir/t") == 8)
     assert(Sinks.readLatest(spark, s"$dir/t").count() == 30)
-    // Legacy migration: a pre-marker table carrying only a LATEST file
-    // still resolves, and its next publish writes a marker.
-    val legacy = s"$dir/legacy"
-    spark.range(40).write.parquet(s"$legacy/v=1")
-    val lp = new org.apache.hadoop.fs.Path(s"$legacy/LATEST")
-    val out = fs.create(lp, true)
-    try out.write("1".getBytes("UTF-8")) finally out.close()
-    assert(Sinks.readLatest(spark, legacy).count() == 40)
-    assert(Sinks.publishVersioned(spark.range(50).toDF(), legacy) == 2)
-    assert(Sinks.readLatest(spark, legacy).count() == 50)
     // Rollback = delete newer markers: readers resolve the older
     // version again; data directories survive; republish moves PAST
     // the rolled-back (still-on-disk) version; a vacuumed/absent
     // target fails fast.
-    Sinks.rollbackTo(spark, legacy, 1)
-    assert(Sinks.readLatest(spark, legacy).count() == 40)
-    assert(Sinks.publishVersioned(spark.range(60).toDF(), legacy) == 3)
-    assert(Sinks.readLatest(spark, legacy).count() == 60)
+    val rb = s"$dir/rb"
+    assert(Sinks.publishVersioned(spark.range(40).toDF(), rb) == 1)
+    assert(Sinks.publishVersioned(spark.range(50).toDF(), rb) == 2)
+    assert(Sinks.readLatest(spark, rb).count() == 50)
+    Sinks.rollbackTo(spark, rb, 1)
+    assert(Sinks.readLatest(spark, rb).count() == 40)
+    assert(Sinks.publishVersioned(spark.range(60).toDF(), rb) == 3)
+    assert(Sinks.readLatest(spark, rb).count() == 60)
     val missing = intercept[IllegalArgumentException] {
-      Sinks.rollbackTo(spark, legacy, 9)
+      Sinks.rollbackTo(spark, rb, 9)
     }
     assert(missing.getMessage.contains("v=9"))
   }

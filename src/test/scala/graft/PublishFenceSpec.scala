@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
-import graft.sinks.Sinks
+import graft.sinks.{Publish, Sinks}
 
 /** Deterministic interleavings of the stall-fencing publish protocol
   * (VERDICT r11 #1/#2 — the r11 mechanism shipped untested and carried
@@ -10,9 +10,9 @@ import graft.sinks.Sinks
   * `beforeMarker`) rather than sleeping: the interleaving ends in
   * (marker present ∧ the owner's data present), (no marker ∧ the
   * stalled publisher throws), or — for a publisher that died inside
-  * commitMarker's create→post-check window — a data-less ZOMBIE
+  * commitMarkerWith's create→post-check window — a data-less ZOMBIE
   * marker readers resolve past and vacuum reaps (r12 third state) —
-  * the Sinks scaladoc's state enumeration, enforced by assertion. */
+  * the Publish state table, enforced by assertion. */
 class PublishFenceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,7 +42,7 @@ class PublishFenceSpec extends SparkSpec {
     val t = s"${tmpDir("fence_pre")}/t"
     val (fs, _, root) = fsOf(t)
     // A stages + claims v=1, then stalls (we simply hold its Claim).
-    val claimA = Sinks.stageAndClaim(Seq((1L, "from_a")).toDF("id", "s"), t)
+    val claimA = Publish.stageAndClaim(Seq((1L, "from_a")).toDF("id", "s"), t)
     assert(claimA.version == 1)
     // B publishes with fence age 0: A's claimed-but-unmarked v=1 is an
     // aged orphan — B's first claim lands non-adjacent at v=2, is
@@ -54,7 +54,7 @@ class PublishFenceSpec extends SparkSpec {
     // A wakes and tries to commit: its token is gone with the fenced
     // dir — loud IllegalStateException, never a silent success.
     val e = intercept[IllegalStateException] {
-      Sinks.commitMarker(spark, t, claimA)
+      Publish.commitMarkerWith(spark, t, claimA)
     }
     assert(e.getMessage.contains("fenced before commit"))
     assert(markersOf(fs, root) == Set(1), "A's failed commit left a marker")
@@ -72,7 +72,7 @@ class PublishFenceSpec extends SparkSpec {
     val (fs, fc, root) = fsOf(t)
     assert(Sinks.mergePublish(spark, Seq((1L, "base")).toDF("id", "s"),
       t, Seq("id")) == 1)
-    val claimA = Sinks.stageAndClaim(Seq((2L, "from_a")).toDF("id", "s"), t)
+    val claimA = Publish.stageAndClaim(Seq((2L, "from_a")).toDF("id", "s"), t)
     assert(claimA.version == 2)
     // A's commit passes the token pre-check, and THEN the fence lands
     // (beforeMarker = the pre-check→marker-create window): the fencer
@@ -80,8 +80,8 @@ class PublishFenceSpec extends SparkSpec {
     // marker create goes through but the post-check catches the fence
     // — marker retracted, loud throw.
     val e = intercept[IllegalStateException] {
-      Sinks.commitMarkerWith(spark, t, claimA,
-        beforeMarker = () => Sinks.fenceOrphan(fs, fc, root, 2, 0L))
+      Publish.commitMarkerWith(spark, t, claimA,
+        beforeMarker = () => Publish.fenceOrphan(fs, fc, root, 2, 0L))
     }
     assert(e.getMessage.contains("fenced at commit"))
     assert(markersOf(fs, root) == Set(1),
@@ -99,14 +99,14 @@ class PublishFenceSpec extends SparkSpec {
       "fencer's re-check leg preserves committed data") {
     val t = s"${tmpDir("fence_restore")}/t"
     val (fs, fc, root) = fsOf(t)
-    val claimA = Sinks.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
+    val claimA = Publish.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
     // The fencer reads "v=1 unmarked, aged" — then the OWNER's commit
     // completes ENTIRELY inside the fencer's read→rename window
     // (beforeRename seam). The fence still renames the dir away; the
     // re-check sees the marker and the restore puts the committed
     // bytes back.
-    Sinks.fenceOrphan(fs, fc, root, 1, 0L,
-      beforeRename = () => Sinks.commitMarker(spark, t, claimA))
+    Publish.fenceOrphan(fs, fc, root, 1, 0L,
+      beforeRename = () => Publish.commitMarkerWith(spark, t, claimA))
     assert(markersOf(fs, root) == Set(1))
     assert(rowsOf(t) == Set((1L, "owner")),
       "a committed version was lost to a stale-read fence")
@@ -120,7 +120,7 @@ class PublishFenceSpec extends SparkSpec {
     val (fs, fc, root) = fsOf(t)
     assert(Sinks.mergePublish(spark, Seq((1L, "v1")).toDF("id", "s"),
       t, Seq("id")) == 1)
-    val claimB = Sinks.stageAndClaim(
+    val claimB = Publish.stageAndClaim(
       Seq((1L, "v1"), (2L, "v2")).toDF("id", "s"), t)
     assert(claimB.version == 2)
     // Owner commits entirely inside the fencer's read→rename window;
@@ -130,8 +130,8 @@ class PublishFenceSpec extends SparkSpec {
     // the servable rule now falls back to committed v=1.
     var duringTransit: Set[(Long, String)] = null
     var transitAsOf = -1
-    Sinks.fenceOrphan(fs, fc, root, 2, 0L,
-      beforeRename = () => Sinks.commitMarker(spark, t, claimB),
+    Publish.fenceOrphan(fs, fc, root, 2, 0L,
+      beforeRename = () => Publish.commitMarkerWith(spark, t, claimB),
       afterRename = () => {
         duringTransit = rowsOf(t)
         transitAsOf =
@@ -156,7 +156,7 @@ class PublishFenceSpec extends SparkSpec {
     assert(Sinks.mergeAggPublish(spark, Seq(("k", 2L)).toDF("k", "n"),
       t, Seq("k"), Seq("n"), batchId = Some(2L)) == 2)
     // Crash residue: a publisher was fenced, its unmarked claim
-    // deleted, and it died INSIDE commitMarker's create→post-check
+    // deleted, and it died INSIDE commitMarkerWith's create→post-check
     // window — marker 4 exists and no v=4 ever will. Planted directly:
     // the window is two metadata ops wide and has no seam to hold it
     // open, but the residue state is exactly this.
@@ -282,10 +282,10 @@ class PublishFenceSpec extends SparkSpec {
     // tombstone, and a claimant is transiting the freed slot (marker
     // exclusion will force it out). The old vacuum judged "tombstone
     // not restorable" and DELETED the only committed copy.
-    val claim3 = Sinks.stageAndClaim(
+    val claim3 = Publish.stageAndClaim(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"), t)
     assert(claim3.version == 3)
-    Sinks.commitMarker(spark, t, claim3)
+    Publish.commitMarkerWith(spark, t, claim3)
     val (_, fc, _) = fsOf(t)
     fc.rename(new Path(root, "v=3"), new Path(root, ".fenced-3-transit"))
     fs.mkdirs(new Path(root, "v=3"))
@@ -305,18 +305,18 @@ class PublishFenceSpec extends SparkSpec {
       "committed marker (marker exclusion in stageAndClaim)") {
     val t = s"${tmpDir("fence_triple")}/t"
     val (fs, fc, root) = fsOf(t)
-    val claimA = Sinks.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
-    var claimC: Sinks.Claim = null
+    val claimA = Publish.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
+    var claimC: Publish.Claim = null
     // Worst interleaving from VERDICT r11 #1: owner commits fully
     // inside the fencer's read→rename window; a fresh claimant C
     // arrives between the fence rename and the restore (afterRename
     // seam) — in r11 C grabbed the freed v=1 slot, the restore failure
     // was swallowed, and readers served C's uncommitted bytes under
     // the owner's marker. Marker exclusion now forces C past v=1.
-    Sinks.fenceOrphan(fs, fc, root, 1, 0L,
-      beforeRename = () => Sinks.commitMarker(spark, t, claimA),
+    Publish.fenceOrphan(fs, fc, root, 1, 0L,
+      beforeRename = () => Publish.commitMarkerWith(spark, t, claimA),
       afterRename = () => {
-        claimC = Sinks.stageAndClaim(
+        claimC = Publish.stageAndClaim(
           Seq((9L, "claimant")).toDF("id", "s"), t)
       })
     assert(claimC.version == 2,
@@ -324,7 +324,7 @@ class PublishFenceSpec extends SparkSpec {
     // The owner's committed version survived the whole episode…
     assert(rowsOf(t) == Set((1L, "owner")))
     // …and C's claim is a normal uncommitted v=2 it can now commit.
-    Sinks.commitMarker(spark, t, claimC)
+    Publish.commitMarkerWith(spark, t, claimC)
     assert(rowsOf(t) == Set((9L, "claimant")))
     assert(childrenOf(fs, root) == Set("v=1", "v=2", "_latest"))
   }
@@ -335,8 +335,8 @@ class PublishFenceSpec extends SparkSpec {
     val (fs, fc, root) = fsOf(t)
     // A fully-committed v=1 whose fencer CRASHED mid-fence: the data
     // sits in a tombstone, the marker exists, the v=1 slot is free.
-    val claimA = Sinks.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
-    Sinks.commitMarker(spark, t, claimA)
+    val claimA = Publish.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
+    Publish.commitMarkerWith(spark, t, claimA)
     fc.rename(new Path(root, "v=1"), new Path(root, ".fenced-1-crash"))
     // Claimant C starts while the marker for 1 is visible only AFTER
     // its pre-check (injected via the beforeRename seam — the marker
@@ -347,7 +347,7 @@ class PublishFenceSpec extends SparkSpec {
     val hidden = new Path(root, "_latest/.hidden-1")
     fc.rename(marker, hidden)
     var injected = false
-    val claimC = Sinks.stageAndClaim(
+    val claimC = Publish.stageAndClaim(
       Seq((9L, "claimant")).toDF("id", "s"), t,
       beforeRename = n => if (n == 1 && !injected) {
         injected = true
@@ -365,7 +365,7 @@ class PublishFenceSpec extends SparkSpec {
     Sinks.vacuumVersions(spark, t)
     assert(rowsOf(t) == Set((1L, "owner")),
       "vacuum failed to restore the committed tombstone")
-    Sinks.commitMarker(spark, t, claimC)
+    Publish.commitMarkerWith(spark, t, claimC)
     assert(rowsOf(t) == Set((9L, "claimant")))
   }
 
@@ -378,9 +378,9 @@ class PublishFenceSpec extends SparkSpec {
     // mid-fence — data in a tombstone, marker 2 present, slot free.
     assert(Sinks.mergePublish(spark, Seq((1L, "base")).toDF("id", "s"),
       t, Seq("id")) == 1)
-    val claimB = Sinks.stageAndClaim(
+    val claimB = Publish.stageAndClaim(
       Seq((1L, "base"), (2L, "real")).toDF("id", "s"), t)
-    Sinks.commitMarker(spark, t, claimB)
+    Publish.commitMarkerWith(spark, t, claimB)
     fc.rename(new Path(root, "v=2"), new Path(root, ".fenced-2-crash"))
     // Hide marker 2 past the claimant's pre-check, restore it in the
     // beforeRename seam; READ inside the afterRename window — the
@@ -392,7 +392,7 @@ class PublishFenceSpec extends SparkSpec {
     fc.rename(marker, hidden)
     var injected = false
     var duringOccupancy: Set[(Long, String)] = null
-    val claimC = Sinks.stageAndClaim(
+    val claimC = Publish.stageAndClaim(
       Seq((9L, "foreign")).toDF("id", "s"), t,
       beforeRename = n => if (n == 2 && !injected) {
         injected = true
@@ -405,7 +405,7 @@ class PublishFenceSpec extends SparkSpec {
     // Vacuum restores the crashed fence's tombstone; v=2 serves again.
     Sinks.vacuumVersions(spark, t)
     assert(rowsOf(t) == Set((1L, "base"), (2L, "real")))
-    Sinks.commitMarker(spark, t, claimC)
+    Publish.commitMarkerWith(spark, t, claimC)
     assert(rowsOf(t) == Set((9L, "foreign")))
   }
 
@@ -507,7 +507,7 @@ class PublishFenceSpec extends SparkSpec {
     // A claim that will NEVER commit: every concurrent publisher that
     // loses adjacency must fence it (age gate zero) — the stall the
     // protocol exists for, now under real thread interleavings.
-    val stalled = Sinks.stageAndClaim(Seq(("k", 999L)).toDF("k", "n"), t)
+    val stalled = Publish.stageAndClaim(Seq(("k", 999L)).toDF("k", "n"), t)
     // With fence age 0 even an IN-FLIGHT competitor can be fenced
     // between its claim and its commit — then mergeAggPublish throws
     // `publish fenced` and the contract is REPLAY: same batchId, the
@@ -534,7 +534,7 @@ class PublishFenceSpec extends SparkSpec {
     // The stalled publisher was fenced by SOMEONE — its commit throws,
     // its 999 never entered the sum.
     intercept[IllegalStateException] {
-      Sinks.commitMarker(spark, t, stalled)
+      Publish.commitMarkerWith(spark, t, stalled)
     }
     assert(sum == 10L)
     // Every id replays as a no-op against the final state.
@@ -585,7 +585,7 @@ class PublishFenceSpec extends SparkSpec {
     val t = s"${tmpDir("stage_reap")}/t"
     val (fs, _, root) = fsOf(t)
     var injected = false
-    val claim = Sinks.stageAndClaim(Seq((1L, "x")).toDF("id", "s"), t,
+    val claim = Publish.stageAndClaim(Seq((1L, "x")).toDF("id", "s"), t,
       beforeRename = { next =>
         if (!injected) {
           injected = true
@@ -607,7 +607,7 @@ class PublishFenceSpec extends SparkSpec {
     // The lost race restaged from the DataFrame and claimed the next
     // free number…
     assert(claim.version == 2)
-    Sinks.commitMarker(spark, t, claim)
+    Publish.commitMarkerWith(spark, t, claim)
     assert(rowsOf(t) == Set((1L, "x")))
     // …and the token-less old stage was reaped, not abandoned: the
     // root carries no `.stage-*` debris (pre-fix this left exactly the

@@ -42,9 +42,9 @@ class PublishProtocolSpec extends SparkSpec {
     assert(Sinks.mergePublish(spark, Seq((2L, "b")).toDF("id", "s"),
       t, Seq("id")) == 2)
     // Three live unmarked claims at 3, 4, 5...
-    val c3 = Sinks.stageAndClaim(Seq((3L, "x")).toDF("id", "s"), t)
-    val c4 = Sinks.stageAndClaim(Seq((4L, "y")).toDF("id", "s"), t)
-    val c5 = Sinks.stageAndClaim(Seq((5L, "z")).toDF("id", "s"), t)
+    val c3 = Publish.stageAndClaim(Seq((3L, "x")).toDF("id", "s"), t)
+    val c4 = Publish.stageAndClaim(Seq((4L, "y")).toDF("id", "s"), t)
+    val c5 = Publish.stageAndClaim(Seq((5L, "z")).toDF("id", "s"), t)
     assert((c3.version, c4.version, c5.version) == (3, 4, 5))
     // ...and 3 retracts (the publishLoop retract shape: rename out,
     // then delete the private tombstone) — the forensic root state.
@@ -55,10 +55,10 @@ class PublishProtocolSpec extends SparkSpec {
       Set("v=1", "v=2", "v=4", "v=5", "_latest"))
     // Dir-derived numbering would claim 6 here and starve forever on
     // the 3-hole in its adjacency gap; servable-current+1 claims 3.
-    val healed = Sinks.stageAndClaim(Seq((6L, "h")).toDF("id", "s"), t)
+    val healed = Publish.stageAndClaim(Seq((6L, "h")).toDF("id", "s"), t)
     assert(healed.version == 3,
       s"claim start did not heal the retract hole: got v=${healed.version}")
-    Sinks.commitMarker(spark, t, healed)
+    Publish.commitMarkerWith(spark, t, healed)
     assert(rowsOf(t) == Set((6L, "h")))
     // A full merge publish then proceeds once the stranded claims at
     // 4,5 age out (fence age 0): the first round claims 6, finds live
@@ -77,14 +77,14 @@ class PublishProtocolSpec extends SparkSpec {
     val (fs1, _, root1) = fsOf(t1)
     fs1.mkdirs(new Path(root1, "_latest"))
     fs1.create(new Path(root1, "_latest/1"), false).close()
-    val c = Sinks.stageAndClaim(Seq((1L, "a")).toDF("id", "s"), t1)
+    val c = Publish.stageAndClaim(Seq((1L, "a")).toDF("id", "s"), t1)
     assert(c.version == 2,
       s"all-zombie fallback should start at markerMax+1=2, got ${c.version}")
-    // Bootstrap (no markers, no LATEST): dir-derived — an unmarked
+    // Bootstrap (no markers): dir-derived — an unmarked
     // claim at v=1 pushes the next claim to 2.
     val t2 = s"${tmpDir("fallback_boot")}/t"
-    val b1 = Sinks.stageAndClaim(Seq((1L, "a")).toDF("id", "s"), t2)
-    val b2 = Sinks.stageAndClaim(Seq((2L, "b")).toDF("id", "s"), t2)
+    val b1 = Publish.stageAndClaim(Seq((1L, "a")).toDF("id", "s"), t2)
+    val b2 = Publish.stageAndClaim(Seq((2L, "b")).toDF("id", "s"), t2)
     assert((b1.version, b2.version) == (1, 2))
   }
 
@@ -160,14 +160,14 @@ class PublishProtocolSpec extends SparkSpec {
       "that never vacates raises the loud assert instead of spinning") {
     val t = s"${tmpDir("restore_cap")}/t"
     val (fs, fc, root) = fsOf(t)
-    val claim = Sinks.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
+    val claim = Publish.stageAndClaim(Seq((1L, "owner")).toDF("id", "s"), t)
     assert(claim.version == 1)
     // Fence the aged claim; inside the rename→re-check window the
     // owner's marker lands AND a crashed claimant's data occupies v=1
     // without a vacate ever coming (we create it directly — the state
     // the marker-exclusion protocol claims impossible).
     val e = intercept[IllegalStateException] {
-      Sinks.fenceOrphan(fs, fc, root, 1, 0L,
+      Publish.fenceOrphan(fs, fc, root, 1, 0L,
         afterRename = () => {
           fs.mkdirs(new Path(root, "_latest"))
           fs.create(new Path(root, "_latest/1"), false).close()

@@ -93,7 +93,7 @@ class PublishSoakSpec extends SparkSpec {
     // on, injected while publishers run.
     val stallerF = Future {
       (1 to 3).foreach { _ =>
-        Sinks.stageAndClaim(Seq(("k", 1L)).toDF("k", "n"), t)
+        Publish.stageAndClaim(Seq(("k", 1L)).toDF("k", "n"), t)
         Thread.sleep(150L)
       }
     }

@@ -137,7 +137,7 @@ class ScdSpec extends SparkSpec {
     // Replay micro-batch 0: WITHOUT the ledger this re-unions s0's
     // change points into every touched key's history (scd2Apply is not
     // idempotent by content) — the ledger must no-op it.
-    assert(graft.sinks.Sinks.publishState(spark, s"$dir/t", {
+    assert(graft.sinks.Publish.publishLoop(spark, s"$dir/t", {
       case Some(dim) => Scd.scd2Apply(dim, s0)
       case None => fail("replay saw an empty table")
     }, batchId = Some(0L)) == 2)

@@ -269,6 +269,94 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(Takedown.manifestComplete(spark, s"$dir/manifest", 0L, targets))
   }
 
+  test("self-compacting takedownAllStream folds all five index kinds: " +
+      "each resolves to a purged generation serving like a " +
+      "non-compacting twin") {
+    import graft.operators.{Compaction, ContentIndex, Dedup, Retrieval,
+      Similarity, Takedown}
+    val docs = graft.Tables.documents(spark, sf0001)
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val ids = docs.where(col("doc_id") % 5 === 2).select(col("doc_id"))
+    // Two ingest batches per artifact (even / odd ids), then ONE
+    // takedown trigger across all five: at compactEvery = 1 that
+    // trigger folds every target; the twin only records the deletes.
+    def run(dir: String, compactEvery: Int): Unit = {
+      for (b <- 0 to 1) {
+        val half = docs.where(col("doc_id") % 2 === b)
+        Retrieval.buildLexIndexBatch(spark, half, s"$dir/lex", b.toLong)
+        Retrieval.buildPosIndexBatch(spark, half, s"$dir/pos", b.toLong)
+        ContentIndex.buildBatch(spark, half, s"$dir/content", b.toLong)
+      }
+      Similarity.buildIvfIndexBatch(spark,
+        emb.where(col("vec_id") % 2 === 0), s"$dir/ivf", 0L)
+      Similarity.appendToIvfIndexBatch(spark,
+        emb.where(col("vec_id") % 2 === 1), s"$dir/ivf", 1L)
+      val even = docs.where(col("doc_id") % 2 === 0)
+      Dedup.appendToPairTableBatch(spark, even, even,
+        s"$dir/sigs", s"$dir/pairs", 0L)
+      Dedup.appendToPairTableBatch(spark,
+        docs.where(col("doc_id") % 2 === 1), docs,
+        s"$dir/sigs", s"$dir/pairs", 1L)
+      ids.write.parquet(s"$dir/req/b0")
+      val targets = Takedown.TakedownTargets(
+        lexIndexPath = Some(s"$dir/lex"),
+        posIndexPath = Some(s"$dir/pos"),
+        ivfIndexPath = Some(s"$dir/ivf"),
+        pairTablePath = Some(s"$dir/pairs"),
+        contentIndexPath = Some(s"$dir/content"))
+      StreamingIngest.takedownAllStream(
+        spark.readStream.schema("doc_id BIGINT").parquet(s"$dir/req/*"),
+        targets, s"$dir/manifest", s"$dir/ckpt",
+        compactEvery = compactEvery, pairSigPath = Some(s"$dir/sigs"))
+      assert(Takedown.manifestComplete(spark, s"$dir/manifest", 0L,
+        targets), s"takedown manifest incomplete under $dir")
+    }
+    val folded = tmpDir("tdallfold")
+    val twin = tmpDir("tdalltwin")
+    run(folded, compactEvery = 1)
+    run(twin, compactEvery = 0)
+    val fs = new org.apache.hadoop.fs.Path(folded).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val kinds = Seq("lex" -> Compaction.Kind.Lex,
+      "pos" -> Compaction.Kind.Pos, "ivf" -> Compaction.Kind.Ivf,
+      "content" -> Compaction.Kind.Content,
+      "pairs" -> Compaction.Kind.Pair(s"$folded/sigs"))
+    for ((name, kind) <- kinds) {
+      val gen = Compaction.resolveRoot(spark, s"$folded/$name")
+      assert(gen == s"$folded/$name/v=1", s"$name: the stream never folded")
+      val deletes = new org.apache.hadoop.fs.Path(s"$gen/${kind.deletes}")
+      assert(!fs.listStatus(deletes)
+          .exists(_.getPath.getName.startsWith("batch_id=")),
+        s"$name: the fold left its delete partitions standing")
+      assert(Compaction.isTakedownFolded(spark, deletes.toString, 0L),
+        s"$name: the fold did not ledger takedown 0")
+      assert(Compaction.resolveRoot(spark, s"$twin/$name") ==
+        s"$twin/$name", s"$name: the non-compacting twin folded")
+    }
+    assert(Compaction.resolveRoot(spark, s"$folded/sigs") ==
+      s"$folded/sigs/v=1", "the signature table did not fold with its pairs")
+    val queries = Similarity.queriesOf(emb)
+    val passages = docs.where(col("doc_id") === 8L)
+      .select(lit(0L).as("passage_id"),
+        concat_ws(" ",
+          slice(graft.operators.TextOps.tokens(col("text")), 2, 5))
+          .as("passage"))
+      .localCheckpoint()
+    def served(dir: String) = Seq(
+      "lex" -> Retrieval.bm25TopKServed(spark, s"$dir/lex"),
+      "pos" -> Retrieval.phraseSearchServed(spark, s"$dir/pos"),
+      "ivf" -> Similarity.queryIvfIndex(spark, s"$dir/ivf", queries),
+      "pairs" -> Takedown.pairTableLive(spark, s"$dir/pairs"),
+      "content" -> Takedown.resolveTakedownContentServed(spark,
+        s"$dir/content", passages))
+      .map { case (n, df) => n -> df.collect().toSet }
+    for (((name, got), (_, want)) <- served(folded).zip(served(twin))) {
+      assert(want.nonEmpty, s"$name: the twin serves nothing")
+      assert(got == want, s"$name: the folded generation serves " +
+        "differently from the non-compacting twin")
+    }
+  }
+
   test("takedown stream flags retrain-due when post-takedown IVF " +
       "recall drifts below the floor (r15, VERDICT r14 next #4)") {
     import graft.operators.{Similarity, Takedown}

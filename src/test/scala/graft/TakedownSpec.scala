@@ -362,8 +362,8 @@ class TakedownSpec extends SparkSpec {
     assert(fs.exists(new Path(
       s"$gen/postings/batch_id=${Compaction.BootstrapBatchId}")),
       "deletes-only fold left the bootstrap partition")
-    assert(!Compaction.compactionDue(spark, idx,
-      sub = "postings", deletesSub = "deletes", threshold = 2),
+    assert(!Compaction.compactionDue(spark, idx, Compaction.Kind.Lex,
+      threshold = 2),
       "compactionDue still firing after the fold — the starvation loop")
     // #3: a corpus whose ingest CDC stream already applied batch id 0
     // gets takedownAll with takedownId 0 — the D-batch must still
@@ -754,13 +754,13 @@ class TakedownSpec extends SparkSpec {
     val lx = tmpDir("cd_guard_lex")
     Takedown.recordDeletes(takedownIds, s"$lx/idx/deletes", 0L)
     assert(!Compaction.compactionDue(spark, s"$lx/idx",
-      sub = "postings", deletesSub = "deletes", threshold = 1),
+      Compaction.Kind.Lex, threshold = 1),
       "compactionDue fired on a never-built lex index")
     // Pair shape (root-accreting): only `_`-prefixed takedown debris.
     val pr = tmpDir("cd_guard_pair")
     Takedown.recordDeletes(takedownIds, s"$pr/pairs/_deletes", 0L)
     assert(!Compaction.compactionDue(spark, s"$pr/pairs",
-      sub = "", deletesSub = "_deletes", threshold = 1),
+      Compaction.Kind.Pair(s"$pr/sigs"), threshold = 1),
       "compactionDue fired on a content-less pair root")
     // And the guard releases the moment content lands.
     operators.Dedup.appendToPairTableBatch(spark,
@@ -768,7 +768,7 @@ class TakedownSpec extends SparkSpec {
       docs.where(col("doc_id") % 2 === 0),
       s"$pr/sigs", s"$pr/pairs", 0L)
     assert(Compaction.compactionDue(spark, s"$pr/pairs",
-      sub = "", deletesSub = "_deletes", threshold = 1),
+      Compaction.Kind.Pair(s"$pr/sigs"), threshold = 1),
       "compactionDue stayed silent after content arrived")
   }
 
