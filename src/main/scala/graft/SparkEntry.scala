@@ -1781,7 +1781,7 @@ object SparkEntry {
   }
 
   /** MinHash banded-signature CTEs (DuckDB) — twin of
-    * Dedup.bandedSignatures + minhashPairs (one md5 per shingle, then
+    * Dedup.bandedSignaturesOf + minhashPairs (one md5 per shingle, then
     * the (a·x+b) mod p universal-hash family). */
   private def minhashCtes: String = {
     val a = Dedup.HashA.mkString("[", ", ", "]")

@@ -83,33 +83,90 @@ object Compaction {
     * [[Takedown.takedownLex]]'s stats-correction namespace. */
   val BootstrapBatchId: Long = -1L
 
-  /** One compactable index KIND — the one place its on-disk layout is
-    * named. `subdirs` are its content subdirs; `accreting` is the one
-    * ingest batches land in ("" for the pair table, whose batch
-    * partitions live at the root); `deletes` is where takedown batches
-    * land. Every fold, poll and flat-entry reap below reads it. */
+  /** One index KIND — the one place its on-disk layout is named.
+    * `subdirs` are its content subdirs; `accreting` is the one ingest
+    * batches land in ("" for the pair table, whose batch partitions
+    * live at the root); `deletes` is where takedown batches land, keyed
+    * by `idCol`. Every fold, poll, reap, takedown write ([[record]])
+    * and serve-path read ([[live]]) goes through it; each method takes
+    * a root [[resolveRoot]] has already resolved. */
   private[graft] sealed abstract class Kind(val subdirs: Set[String],
                                             val accreting: String,
-                                            val deletes: String) {
+                                            val deletes: String = "deletes",
+                                            val idCol: String = "doc_id") {
     /** A pre-generation entry at a flat index root, reaped once
       * generation 2 commits. */
     private[Compaction] def flatEntry(n: String): Boolean =
       subdirs(n) || n == deletes || n == "_folded" ||
         (accreting.isEmpty && n.startsWith("batch_id="))
+
+    private[operators] def deletesDir(root: String): String =
+      s"$root/$deletes"
+
+    /** `df` minus this kind's deletes: the same plan when the index
+      * never saw a takedown, one broadcast anti-join otherwise (a
+      * takedown set too big to broadcast is a corpus rebuild wearing
+      * the wrong API). */
+    def live(df: DataFrame, root: String): DataFrame = {
+      val dir = deletesDir(root)
+      val (fs, d) = fsOf(df.sparkSession, dir)
+      if (!fs.exists(d)) df
+      else df.join(
+        broadcast(df.sparkSession.read.schema(s"$idCol BIGINT")
+          .parquet(dir).select(col(idCol)).distinct()),
+        Seq(idCol), "left_anti")
+    }
+
+    /** Record one takedown's `ids` (an `idCol` column). */
+    def record(ids: DataFrame, root: String, takedownId: Long): Unit =
+      Takedown.recordDeletes(ids, deletesDir(root), takedownId, idCol)
+
+    /** The writers' replay guard: a fold already purged these ids. */
+    def takedownFolded(spark: SparkSession, root: String,
+                       takedownId: Long): Boolean =
+      isTakedownFolded(spark, deletesDir(root), takedownId)
+
+    /** The subdir this kind serves (and the certificate counts). */
+    private[operators] def served: String = accreting
+
+    /** Every served row's id columns — the erasure certificate's read. */
+    private[operators] def servedIds(spark: SparkSession,
+                                     root: String): DataFrame =
+      live(spark.read.schema(s"$idCol BIGINT")
+        .parquet(s"$root/$served").select(col(idCol)), root)
   }
 
   private[graft] object Kind {
     case object Lex extends Kind(Set("postings", "doclens", "stats"),
-      "postings", "deletes")
-    case object Pos extends Kind(Set("pos"), "pos", "deletes")
+      "postings")
+    case object Pos extends Kind(Set("pos"), "pos")
     case object Content extends Kind(Set("shingles", "docstore"),
-      "shingles", "deletes")
+      "shingles") {
+      override private[operators] def served = "docstore"
+    }
     case object Ivf extends Kind(Set("postings", "centroids"),
-      "postings", "deletes")
-    /** The near-dup pair table; its signature table at `sigPath` folds
-      * with it (same flat layout, no ledger of its own). */
-    final case class Pair(sigPath: String) extends Kind(Set.empty, "",
-      "_deletes")
+      "postings", idCol = "vec_id")
+    /** The PQ index ([[Pq.buildPqIndex]]): a one-shot flat build with
+      * no `batch_id` partitions. It never folds — its codebooks are
+      * trained over the whole corpus, so it is rebuilt, not maintained;
+      * until then its deletes filter the serve paths. */
+    case object Pq extends Kind(Set("codes", "books"), "codes",
+      idCol = "vec_id")
+    /** The near-dup pair table. Its deletes live INSIDE the table dir
+      * (read wholesale; the `_` hides them from partition discovery).
+      * `sigPath` names its signature table, which folds with it (same
+      * flat layout, no ledger of its own); without one it never folds,
+      * since folding the pairs alone would keep dead docs' bands. */
+    final case class Pair(sigPath: Option[String]) extends Kind(Set.empty,
+      "", "_deletes") {
+      override private[operators] def servedIds(spark: SparkSession,
+                                                root: String): DataFrame =
+        Takedown.pairTableLive(spark, root)
+          .select(col("doc_a"), col("doc_b"))
+    }
+    object Pair {
+      def apply(sigPath: String): Pair = Pair(Some(sigPath))
+    }
   }
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
@@ -207,16 +264,21 @@ object Compaction {
 
   /** Fold `indexPath` with its kind's compactor when [[compactionDue]]
     * says so — the one call a self-compacting stream makes per
-    * micro-batch. */
+    * micro-batch. A kind that never folds (PQ, a pair table without
+    * its signature table) is never polled. */
   private[graft] def compactIfDue(spark: SparkSession, indexPath: String,
-                                  kind: Kind, threshold: Int): Unit =
-    if (compactionDue(spark, indexPath, kind, threshold)) kind match {
-      case Kind.Lex => compactLexIndex(spark, indexPath)
-      case Kind.Pos => compactPosIndex(spark, indexPath)
-      case Kind.Content => compactContentIndex(spark, indexPath)
-      case Kind.Ivf => compactIvfIndex(spark, indexPath)
-      case Kind.Pair(sigPath) => compactPairTable(spark, indexPath, sigPath)
+                                  kind: Kind, threshold: Int): Unit = {
+    val fold: Option[() => Unit] = kind match {
+      case Kind.Lex => Some(() => compactLexIndex(spark, indexPath))
+      case Kind.Pos => Some(() => compactPosIndex(spark, indexPath))
+      case Kind.Content => Some(() => compactContentIndex(spark, indexPath))
+      case Kind.Ivf => Some(() => compactIvfIndex(spark, indexPath))
+      case Kind.Pair(sig) =>
+        sig.map(sp => () => compactPairTable(spark, indexPath, sp))
+      case Kind.Pq => None
     }
+    for (f <- fold if compactionDue(spark, indexPath, kind, threshold)) f()
+  }
 
   /** Batch ids present as `batch_id=N` children of one subdir. */
   private[operators] def batchIds(fs: FileSystem, dir: Path): Seq[Long] =
@@ -357,17 +419,16 @@ object Compaction {
     val plan = foldPlan(spark, indexPath, Kind.Lex).getOrElse(return)
     val cur = plan.cur
     val foldId = plan.foldId
-    val deletesDir = s"$cur/${Kind.Lex.deletes}"
-    val postings = Takedown.applyDeletes(
+    val postings = Kind.Lex.live(
       spark.read.schema("doc_id BIGINT, tf BIGINT, tok STRING")
         .parquet(s"$cur/postings")
         .select(col("doc_id"), col("tf"), col("tok")),
-      deletesDir)
-    val doclens = Takedown.applyDeletes(
+      cur)
+    val doclens = Kind.Lex.live(
       spark.read.schema("doc_id BIGINT, dl BIGINT")
         .parquet(s"$cur/doclens")
         .select(col("doc_id"), col("dl")),
-      deletesDir)
+      cur)
     // Stats: the negative correction partials exist precisely so this
     // exact long re-sum equals the purged corpus — fold them in.
     val stats = spark.read.schema("n_docs BIGINT, sum_dl BIGINT")
@@ -389,11 +450,11 @@ object Compaction {
   def compactPosIndex(spark: SparkSession, indexPath: String): Unit = {
     val plan = foldPlan(spark, indexPath, Kind.Pos).getOrElse(return)
     val cur = plan.cur
-    val occ = Takedown.applyDeletes(
+    val occ = Kind.Pos.live(
       spark.read.schema("doc_id BIGINT, pos INT, tok STRING")
         .parquet(s"$cur/pos")
         .select(col("doc_id"), col("pos"), col("tok")),
-      s"$cur/${Kind.Pos.deletes}")
+      cur)
     publishGeneration(spark, indexPath, Kind.Pos, Some(plan)) { stage =>
       occ.write.mode("overwrite").partitionBy("tok")
         .parquet(s"$stage/pos/batch_id=${plan.foldId}")
@@ -409,17 +470,16 @@ object Compaction {
   def compactContentIndex(spark: SparkSession, indexPath: String): Unit = {
     val plan = foldPlan(spark, indexPath, Kind.Content).getOrElse(return)
     val cur = plan.cur
-    val deletesDir = s"$cur/${Kind.Content.deletes}"
-    val sh = Takedown.applyDeletes(
+    val sh = Kind.Content.live(
       spark.read.schema("doc_id BIGINT, sh STRING")
         .parquet(s"$cur/shingles")
         .select(col("doc_id"), col("sh"), col("sb")),
-      deletesDir)
-    val store = Takedown.applyDeletes(
+      cur)
+    val store = Kind.Content.live(
       spark.read.schema("doc_id BIGINT, norm_text STRING")
         .parquet(s"$cur/docstore")
         .select(col("doc_id"), col("norm_text"), col("db")),
-      deletesDir)
+      cur)
     publishGeneration(spark, indexPath, Kind.Content, Some(plan)) { stage =>
       sh.write.mode("overwrite").partitionBy("sb")
         .parquet(s"$stage/shingles/batch_id=${plan.foldId}")
@@ -528,9 +588,8 @@ object Compaction {
     val pairs = Takedown.pairTableLive(spark, pairPath)
     if (hasSig) {
       val curSig = resolveRoot(spark, sigPath)
-      val sigs = Takedown.applyDeletes(
-        spark.read.parquet(curSig).drop("batch_id"),
-        s"$curPair/${kind.deletes}").distinct()
+      val sigs = kind.live(
+        spark.read.parquet(curSig).drop("batch_id"), curPair).distinct()
       publishGeneration(spark, sigPath, kind, None) { stage =>
         sigs.write.mode("overwrite")
           .parquet(s"$stage/batch_id=$BootstrapBatchId")
@@ -561,9 +620,8 @@ object Compaction {
   def compactIvfIndex(spark: SparkSession, indexPath: String): Unit = {
     val plan = foldPlan(spark, indexPath, Kind.Ivf).getOrElse(return)
     val cur = plan.cur
-    val postings = Takedown.applyDeletes(
-      spark.read.parquet(s"$cur/postings").drop("batch_id"),
-      s"$cur/${Kind.Ivf.deletes}", idCol = "vec_id")
+    val postings = Kind.Ivf.live(
+      spark.read.parquet(s"$cur/postings").drop("batch_id"), cur)
     val cents = spark.read.parquet(s"$cur/centroids")
     publishGeneration(spark, indexPath, Kind.Ivf, Some(plan)) { stage =>
       postings.write.mode("overwrite").partitionBy("cell")

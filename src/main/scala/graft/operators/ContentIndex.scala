@@ -88,20 +88,20 @@ object ContentIndex {
     * dir. */
   def shinglePostings(spark: SparkSession, root: String,
                       buckets: Seq[Long]): DataFrame =
-    Takedown.applyDeletes(
+    Compaction.Kind.Content.live(
       spark.read.schema("doc_id BIGINT, sh STRING")
         .parquet(s"$root/shingles")
         .where(col("sb").isin(buckets: _*))
         .select(col("doc_id"), col("sh")),
-      s"$root/deletes")
+      root)
 
   /** The takedown-aware docstore reader: (db, doc_id, norm_text) — `db`
     * kept so a candidate join on (db, doc_id) gives dynamic partition
     * pruning a handle. */
   def docstore(spark: SparkSession, root: String): DataFrame =
-    Takedown.applyDeletes(
+    Compaction.Kind.Content.live(
       spark.read.schema("doc_id BIGINT, norm_text STRING")
         .parquet(s"$root/docstore")
         .select(col("db"), col("doc_id"), col("norm_text")),
-      s"$root/deletes")
+      root)
 }

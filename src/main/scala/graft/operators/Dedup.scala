@@ -63,13 +63,10 @@ object Dedup {
     * per-shingle md5 is computed exactly once per hash, and partial
     * aggregation (map-side min) collapses each document before the
     * shuffle. Documents with fewer than 3 tokens have no shingles and
-    * drop out (they can't near-dup by shingle overlap). */
-  private def bandedSignatures(spark: SparkSession, dir: String): DataFrame =
-    bandedSignaturesOf(Tables.documents(spark, dir))
-
-  /** [[bandedSignatures]] over an arbitrary (doc_id, text) frame — the
-    * form the incremental maintenance path feeds new-arrival slices
-    * through. */
+    * drop out (they can't near-dup by shingle overlap). Takes any
+    * (doc_id, text) frame; [[signatureRows]] is its one caller, for
+    * candidate generation, the persisted index and the incremental
+    * append alike. */
   private def bandedSignaturesOf(docs: DataFrame): DataFrame = {
     val sigCols = (0 until NumHashes).map { h =>
       min((lit(HashA(h)) * col("x") + lit(HashB(h))) % lit(HashP)).as(s"sig_$h")

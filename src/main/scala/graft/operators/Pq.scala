@@ -175,11 +175,9 @@ object Pq {
     val root = Compaction.resolveRoot(spark, indexPath)
     adcServe(unitCorpus(spark, dir),
       // Takedown-aware (r13): taken-down vectors' codes leave the
-      // candidate set (deletes recorded via Takedown at
-      // `<indexPath>/deletes`, vec_id-keyed, same as IVF).
-      codes = Takedown.applyDeletes(
-        spark.read.parquet(s"$root/codes"),
-        s"$root/deletes", idCol = "vec_id"),
+      // candidate set (the PQ kind's deletes, vec_id-keyed like IVF's).
+      codes = Compaction.Kind.Pq.live(
+        spark.read.parquet(s"$root/codes"), root),
       books = spark.read.parquet(s"$root/books"), k = k)
   }
 
@@ -258,14 +256,12 @@ object Pq {
       raw.where(col("vec_id") < Similarity.NumQueries), cents)
     // Takedown-aware (r13): honor deletes recorded against EITHER
     // index (the IVF cells and the PQ codes are views of one corpus).
-    val cells = Takedown.applyDeletes(
-        spark.read.parquet(s"$ivfRoot/postings"),
-        s"$ivfRoot/deletes", idCol = "vec_id")
+    val cells = Compaction.Kind.Ivf.live(
+        spark.read.parquet(s"$ivfRoot/postings"), ivfRoot)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
     ivfPqServeWith(unitCorpus(spark, dir), ranked, cells,
-      codes = Takedown.applyDeletes(
-        spark.read.parquet(s"$pqRoot/codes"),
-        s"$pqRoot/deletes", idCol = "vec_id"),
+      codes = Compaction.Kind.Pq.live(
+        spark.read.parquet(s"$pqRoot/codes"), pqRoot),
       books = spark.read.parquet(s"$pqRoot/books"), k = k)
   }
 

@@ -133,12 +133,12 @@ object Retrieval {
       // phrase — the BPE vocabulary is full of number pieces, so pin
       // tok to STRING at the reader. Takedown-aware (r13): deleted
       // docs drop out of the occurrence slice before alignment.
-      Takedown.applyDeletes(
+      Compaction.Kind.Pos.live(
         spark.read.schema("doc_id BIGINT, pos INT, tok STRING")
           .parquet(s"$root/pos")
           .where(col("tok").isin(phrase.distinct: _*))
           .select(col("doc_id"), col("pos"), col("tok")),
-        s"$root/deletes"),
+        root),
       phrase)
   }
 
@@ -284,13 +284,13 @@ object Retrieval {
     // corpus-stats correction is already a negative partial under
     // stats/, and df re-derives from this purged slice — so served
     // scores equal a rebuild over the purged corpus, bit for bit.
-    val tf = Takedown.applyDeletes(
+    val tf = Compaction.Kind.Lex.live(
       spark.read
         .schema("doc_id BIGINT, tf BIGINT, tok STRING")
         .parquet(s"$root/postings")
         .where(col("tok").isin(terms: _*))
         .select(col("doc_id"), col("tok"), col("tf")),
-      s"$root/deletes")
+      root)
     val dl = spark.read.schema("doc_id BIGINT, dl BIGINT")
       .parquet(s"$root/doclens")
       .select(col("doc_id"), col("dl"))
@@ -369,9 +369,8 @@ object Retrieval {
     // vectors like every other serve path — a taken-down doc surfacing
     // through hybrid fusion is the same compliance hole as serving it
     // directly.
-    val c = Takedown.applyDeletes(
-      spark.read.parquet(s"$vecRoot/postings"),
-      s"$vecRoot/deletes", idCol = "vec_id")
+    val c = Compaction.Kind.Ivf.live(
+      spark.read.parquet(s"$vecRoot/postings"), vecRoot)
       .select(col("vec_id"), col("v"), col("nv"))
     hybridRrfTail(servedContribs(spark, lexIndexPath, terms), c,
       queryVecId, k)

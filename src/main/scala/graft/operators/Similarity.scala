@@ -638,9 +638,8 @@ object Similarity {
     val cents = spark.read.parquet(s"$root/centroids")
     // Takedown-aware (r13 review): deleted vectors leave the dedup
     // sweep too — they must neither survive nor shadow a live vector.
-    val members = Takedown.applyDeletes(
-        spark.read.parquet(s"$root/postings"),
-        s"$root/deletes", idCol = "vec_id")
+    val members = Compaction.Kind.Ivf.live(
+        spark.read.parquet(s"$root/postings"), root)
       .select(col("cell").cast("long").as("cell"), col("vec_id"),
         col("v"), col("nv"))
       .join(broadcast(cents), col("cell") === col("cent_id"))
@@ -778,9 +777,9 @@ object Similarity {
     // reports drift that isn't there. Postings-minus-current-deletes is
     // fold-invariant: pre-fold it equals the sidecar subtraction,
     // post-fold the postings are already purged.
-    val servedIds = Takedown.applyDeletes(
-      spark.read.parquet(s"$root/postings").select(col("vec_id")),
-      s"$root/deletes", idCol = "vec_id").distinct()
+    val servedIds = Compaction.Kind.Ivf.live(
+      spark.read.parquet(s"$root/postings").select(col("vec_id")), root)
+      .distinct()
     val live = c.join(servedIds, Seq("vec_id"), "left_semi")
     val scored = live.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("q_id"))
@@ -965,9 +964,8 @@ object Similarity {
       .select(col("q_id"), col("cent_id").as("cell"))
     // Takedown-aware (r13): taken-down vectors drop out of the probed
     // cells before scoring (no-op join when no takedown ever ran).
-    val postings = Takedown.applyDeletes(
-      spark.read.parquet(s"$root/postings"),
-      s"$root/deletes", idCol = "vec_id")
+    val postings = Compaction.Kind.Ivf.live(
+      spark.read.parquet(s"$root/postings"), root)
     val candidates = postings.join(broadcast(probes), "cell")
       .join(broadcast(queries), Seq("q_id"))
       .where(col("vec_id") =!= col("q_id"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import Compaction.Kind
 
 /** Takedown propagation (r13, VERDICT r12 missing #1): purge a set of
   * document ids from the corpus AND from every derived artifact — the
@@ -38,73 +39,58 @@ import org.apache.hadoop.fs.Path
   * ledgered). */
 object Takedown {
 
-  /** Pinned reader schema for a deletes directory — partition-value
-    * type inference must never reinterpret the id column, and the
-    * discovered `batch_id` partition column is appended after the
-    * pinned field (selected only where provenance matters). */
-  private def deletesSchema(idCol: String) = s"$idCol BIGINT"
-
   /** Record one takedown slice under `deletesDir/batch_id=<takedownId>`
-    * (mode=overwrite → a replayed takedown overwrites itself). The
-    * directory name is `deletes` as an index SIBLING, or `_deletes`
-    * when it must live INSIDE a directory Spark reads wholesale (the
-    * `_` prefix hides it from partition discovery, the `_latest`
-    * convention). */
+    * (mode=overwrite → a replayed takedown overwrites itself). Each
+    * index kind names its own deletes dir and id column
+    * ([[Compaction.Kind.record]]). */
   def recordDeletes(ids: DataFrame, deletesDir: String,
                     takedownId: Long, idCol: String = "doc_id"): Unit =
     ids.select(col(idCol).cast("long").as(idCol)).distinct()
       .write.mode("overwrite")
       .parquet(s"$deletesDir/batch_id=$takedownId")
 
-  /** All deleted ids under a deletes directory (empty frame with the
-    * right schema when no takedown ever ran). `beforeBatch` restricts
-    * to takedown batches with a SMALLER id — the replay-stable base
-    * for computing "what THIS batch newly deletes": ownership of a
-    * doc's stats correction goes to the smallest takedownId containing
-    * it, a rule that is independent of replay order (an exclude-my-own
-    * rule is not — replaying batch A after a later overlapping batch B
-    * landed would re-assign A's docs to B and the rewritten correction
-    * would under-subtract; r13 review). */
-  def deletedIds(spark: SparkSession, deletesDir: String,
-                 idCol: String = "doc_id",
-                 beforeBatch: Option[Long] = None): DataFrame = {
+  /** The doc ids recorded under a deletes directory by takedown batches
+    * with an id SMALLER than `beforeBatch` (None when nothing was
+    * recorded) — the replay-stable base for computing "what THIS batch
+    * newly deletes": ownership of a doc's stats correction goes to the
+    * smallest takedownId containing it, a rule that is independent of
+    * replay order (an exclude-my-own rule is not — replaying batch A
+    * after a later overlapping batch B landed would re-assign A's docs
+    * to B and the rewritten correction would under-subtract; r13
+    * review). */
+  private def deletedIds(spark: SparkSession, deletesDir: String,
+                         beforeBatch: Long): Option[DataFrame] = {
     val root = new Path(deletesDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol,
-          org.apache.spark.sql.types.LongType))))
-    if (!fs.exists(root)) empty
-    else {
-      val all = spark.read.schema(deletesSchema(idCol)).parquet(deletesDir)
-      // Post-compaction the deletes dir can hold ONLY the `_folded`
-      // ledger (zero data files): no batch_id partition column is
-      // discovered then, and filtering on it would throw — an empty
-      // dir means nothing recorded (r13 review; the folded history
-      // lives in the data, not here).
-      if (!all.columns.contains("batch_id"))
-        if (beforeBatch.isEmpty) all.select(col(idCol)).distinct() else empty
-      else beforeBatch.fold(all)(b => all.where(col("batch_id") < b))
-        .select(col(idCol)).distinct()
-    }
+    // Post-compaction the deletes dir can hold ONLY the `_folded`
+    // ledger (zero data files): no batch_id partition column is
+    // discovered then, and filtering on it would throw — an empty dir
+    // means nothing recorded (r13 review; the folded history lives in
+    // the data, not here).
+    Option.when(fs.exists(root))(
+        spark.read.schema("doc_id BIGINT").parquet(deletesDir))
+      .filter(_.columns.contains("batch_id"))
+      .map(_.where(col("batch_id") < beforeBatch).select(col("doc_id"))
+        .distinct())
   }
 
-  /** Anti-join `df` against the deletes directory — a no-op (same
-    * plan, zero cost) when no takedown ever ran, one broadcast
-    * anti-join otherwise. Takedown sets are small relative to the
-    * corpus by nature (requests, not rebuilds); a takedown set too big
-    * to broadcast is a corpus rebuild wearing the wrong API. */
-  def applyDeletes(df: DataFrame, deletesDir: String,
-                   idCol: String = "doc_id"): DataFrame = {
-    val spark = df.sparkSession
-    val root = new Path(deletesDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) df
-    else df.join(
-      broadcast(spark.read.schema(deletesSchema(idCol))
-        .parquet(deletesDir).select(col(idCol)).distinct()),
-      Seq(idCol), "left_anti")
+  /** The one takedown body every index leg runs: resolve the current
+    * generation once, skip a takedown a fold already purged physically
+    * (the [[Compaction]] deletes ledger), and record `ids` (keyed by
+    * the kind's id column). Lex alone adds steps ([[takedownLex]]). */
+  private def takedown(spark: SparkSession, kind: Kind, indexPath: String,
+                       ids: DataFrame, takedownId: Long): Unit = {
+    if (kind == Kind.Lex)
+      require(takedownId >= 0, s"takedownId must be >= 0, got $takedownId")
+    val root = Compaction.resolveRoot(spark, indexPath)
+    if (!kind.takedownFolded(spark, root, takedownId)) {
+      if (kind == Kind.Lex) stampLexCorrection(spark, root, ids, takedownId)
+      // Deletes last: a crash between lex's two writes leaves a
+      // correction without its deletes (or, replayed, vice versa) —
+      // replaying the SAME takedownId recomputes both idempotently,
+      // which is the documented recovery.
+      kind.record(ids, root, takedownId)
+    }
   }
 
   /** Takedown against the persisted LEXICAL index
@@ -122,47 +108,41 @@ object Takedown {
     * ingest batch written at -2 or below would share (and overwrite)
     * a correction partial. */
   def takedownLex(spark: SparkSession, indexPath: String,
-                  ids: DataFrame, takedownId: Long): Unit = {
-    require(takedownId >= 0, s"takedownId must be >= 0, got $takedownId")
-    // Generation-resolved once (r14): every path below reads/writes
-    // the CURRENT generation of a compacted index.
-    val root = Compaction.resolveRoot(spark, indexPath)
-    // Replay guard post-compaction: these ids were already purged
-    // PHYSICALLY — re-stamping the negative stats partial would
-    // double-subtract ([[Compaction]]'s deletes ledger).
-    if (Compaction.isTakedownFolded(spark, s"$root/deletes",
-        takedownId)) return
-    // MONOTONE-ID contract, enforced (ADVICE r13): the
-    // smallest-takedownId-owns stats rule is replay-stable only when
-    // fresh ids arrive in increasing order — a brand-new batch applied
-    // with an id SMALLER than an already-applied overlapping batch
-    // would recompute the overlap doc as "fresh" (deletedIds excludes
-    // the larger id) and stamp a SECOND negative partial: silent
-    // double-subtraction. Replaying an id already recorded (crash
-    // recovery) stays legal — it recomputes its own correction
-    // idempotently; only a FRESH id below the high-water is rejected.
-    {
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val recorded =
-        Compaction.batchIds(fs, new Path(s"$root/deletes"))
-      val seenMax = (recorded ++ Compaction
-        .foldedTakedowns(spark, s"$root/deletes").map(_._2))
-        .foldLeft(-1L)(math.max)
-      require(takedownId >= seenMax || recorded.contains(takedownId),
-        s"takedownLex: out-of-order takedownId $takedownId — ids up " +
-          s"to $seenMax are already applied under $root/deletes, " +
-          "and the smallest-id-owns stats-correction rule " +
-          "double-subtracts when a FRESH smaller id lands later; " +
-          "replay an existing id, or allocate ids monotonically " +
-          "(the streaming path's micro-batch ids already are)")
-    }
+                  ids: DataFrame, takedownId: Long): Unit =
+    takedown(spark, Kind.Lex, indexPath, ids, takedownId)
+
+  /** [[takedownLex]]'s negative stats partial, under the MONOTONE-ID
+    * contract (ADVICE r13): the smallest-takedownId-owns stats rule is
+    * replay-stable only when fresh ids arrive in increasing order — a
+    * brand-new batch applied with an id SMALLER than an already-applied
+    * overlapping batch would recompute the overlap doc as "fresh"
+    * ([[deletedIds]] excludes the larger id) and stamp a SECOND
+    * negative partial: silent double-subtraction. Replaying an id
+    * already recorded (crash recovery) stays legal — it recomputes its
+    * own correction idempotently; only a FRESH id below the high-water
+    * is rejected. */
+  private def stampLexCorrection(spark: SparkSession, root: String,
+                                 ids: DataFrame, takedownId: Long): Unit = {
+    val deletesDir = Kind.Lex.deletesDir(root)
+    val fs = new Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val recorded = Compaction.batchIds(fs, new Path(deletesDir))
+    val seenMax = (recorded ++ Compaction
+      .foldedTakedowns(spark, deletesDir).map(_._2))
+      .foldLeft(-1L)(math.max)
+    require(takedownId >= seenMax || recorded.contains(takedownId),
+      s"takedownLex: out-of-order takedownId $takedownId — ids up " +
+        s"to $seenMax are already applied under $deletesDir, " +
+        "and the smallest-id-owns stats-correction rule " +
+        "double-subtracts when a FRESH smaller id lands later; " +
+        "replay an existing id, or allocate ids monotonically " +
+        "(the streaming path's micro-batch ids already are)")
     // "Newly deleted BY THIS batch" = ids minus docs owned by a
     // SMALLER takedownId — deterministic under replay whatever later
-    // batches landed in between (see [[deletedIds]]).
-    val fresh = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-      .join(deletedIds(spark, s"$root/deletes",
-        beforeBatch = Some(takedownId)), Seq("doc_id"), "left_anti")
+    // batches landed in between.
+    val all = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
+    val fresh = deletedIds(spark, deletesDir, takedownId)
+      .fold(all)(all.join(_, Seq("doc_id"), "left_anti"))
     val dl = spark.read.schema("doc_id BIGINT, dl BIGINT")
       .parquet(s"$root/doclens")
     val corr = dl.join(broadcast(fresh), "doc_id")
@@ -170,80 +150,52 @@ object Takedown {
         (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
     corr.write.mode("overwrite")
       .parquet(s"$root/stats/batch_id=-${takedownId + 2}")
-    // Deletes last: a crash between the two writes leaves a correction
-    // without its deletes (or, replayed, vice versa) — replaying the
-    // SAME takedownId recomputes both idempotently, which is the
-    // documented recovery.
-    recordDeletes(ids, s"$root/deletes", takedownId)
   }
 
   /** Takedown against the persisted POSITIONAL index
     * ([[Retrieval.buildPosIndexBatch]] layout): deletes only — phrase
     * alignment carries no corpus statistics to correct. */
   def takedownPos(spark: SparkSession, indexPath: String,
-                  ids: DataFrame, takedownId: Long): Unit = {
-    val root = Compaction.resolveRoot(spark, indexPath)
-    if (!Compaction.isTakedownFolded(spark, s"$root/deletes",
-        takedownId))
-      recordDeletes(ids, s"$root/deletes", takedownId)
-  }
+                  ids: DataFrame, takedownId: Long): Unit =
+    takedown(spark, Kind.Pos, indexPath, ids, takedownId)
 
   /** Takedown against the persisted IVF index
-    * ([[Similarity.buildIvfIndexBatch]] layout): deletes on `vec_id` —
-    * served neighbors stop containing the vectors immediately. The
+    * ([[Similarity.buildIvfIndexBatch]] layout): `ids` carry `vec_id`,
+    * and served neighbors stop containing the vectors immediately. The
     * trained centroids are NOT retrained (they are an approximation
     * structure, not data; the purged vectors' mass in the means is a
     * quality question the next scheduled retrain absorbs, exactly as
     * production ANN systems treat deletes). */
   def takedownIvf(spark: SparkSession, indexPath: String,
-                  ids: DataFrame, takedownId: Long): Unit = {
-    val root = Compaction.resolveRoot(spark, indexPath)
-    if (!Compaction.isTakedownFolded(spark, s"$root/deletes",
-        takedownId))
-      recordDeletes(ids, s"$root/deletes", takedownId, idCol = "vec_id")
-  }
+                  ids: DataFrame, takedownId: Long): Unit =
+    takedown(spark, Kind.Ivf, indexPath, ids, takedownId)
 
   /** Takedown against the persisted near-dup PAIR table: a pair is
     * evidence ABOUT two documents, so it dies when EITHER side is
-    * taken down. The deletes live INSIDE the table directory as
-    * `_deletes` (the table dir is read wholesale — an unprefixed
-    * sibling would break partition discovery). [[pairTableLive]] is
-    * the deletes-aware reader. */
+    * taken down. [[pairTableLive]] is the deletes-aware reader. */
   def takedownPairs(spark: SparkSession, pairPath: String,
-                    ids: DataFrame, takedownId: Long): Unit = {
-    val root = Compaction.resolveRoot(spark, pairPath)
-    if (!Compaction.isTakedownFolded(spark, s"$root/_deletes",
-        takedownId))
-      recordDeletes(ids, s"$root/_deletes", takedownId)
-  }
+                    ids: DataFrame, takedownId: Long): Unit =
+    takedown(spark, Kind.Pair(None), pairPath, ids, takedownId)
 
   /** Takedown against the standing CONTENT index
-    * ([[ContentIndex.buildBatch]] layout): deletes only — the index
-    * carries no corpus statistics; both its readers (shingle postings
-    * and docstore) anti-join the deletes, so a taken-down doc's text
-    * stops being probe-able immediately and
+    * ([[ContentIndex.buildBatch]] layout): deletes only — both its
+    * readers (shingle postings and docstore) anti-join them, so a
+    * taken-down doc's text stops being probe-able immediately and
     * [[Compaction.compactContentIndex]] purges it physically. This is
     * the most compliance-sensitive artifact of the set — the docstore
     * stores the full normalized text. */
   def takedownContent(spark: SparkSession, indexPath: String,
-                      ids: DataFrame, takedownId: Long): Unit = {
-    val root = Compaction.resolveRoot(spark, indexPath)
-    if (!Compaction.isTakedownFolded(spark, s"$root/deletes",
-        takedownId))
-      recordDeletes(ids, s"$root/deletes", takedownId)
-  }
+                      ids: DataFrame, takedownId: Long): Unit =
+    takedown(spark, Kind.Content, indexPath, ids, takedownId)
 
   /** The deletes-aware pair-table reader: [[Dedup.pairTable]]'s
     * contract minus pairs touching a taken-down doc (either side). */
   def pairTableLive(spark: SparkSession, pairPath: String): DataFrame = {
     val root = Compaction.resolveRoot(spark, pairPath)
-    val base = Dedup.pairTable(spark, pairPath)
-    val d = s"$root/_deletes"
-    applyDeletes(
-      applyDeletes(base.withColumnRenamed("doc_a", "doc_id"), d)
-        .withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("doc_b", "doc_id"), d)
-      .withColumnRenamed("doc_id", "doc_b")
+    def liveOn(df: DataFrame, side: String): DataFrame =
+      Kind.Pair(None).live(df.withColumnRenamed(side, "doc_id"), root)
+        .withColumnRenamed("doc_id", side)
+    liveOn(liveOn(Dedup.pairTable(spark, pairPath), "doc_a"), "doc_b")
   }
 
   /** Which packed training sequences a takedown invalidates — resolved
@@ -355,11 +307,19 @@ object Takedown {
       ivfIndexPath: Option[String] = None,
       pairTablePath: Option[String] = None,
       contentIndexPath: Option[String] = None) {
-    private[Takedown] def legs: Seq[(String, String)] = Seq(
-      "corpus" -> corpusTableDir, "lex" -> lexIndexPath,
-      "pos" -> posIndexPath, "ivf" -> ivfIndexPath,
-      "pairs" -> pairTablePath,
-      "content" -> contentIndexPath).collect { case (n, Some(p)) => n -> p }
+    /** Each targeted artifact as (manifest name, path, index kind); the
+      * corpus table is the one leg without a kind. `pairSigPath` names
+      * the pair table's signature table, which only a fold reads
+      * ([[Compaction.Kind.Pair]]). */
+    private[graft] def legs(pairSigPath: Option[String] = None)
+        : Seq[(String, String, Option[Kind])] = Seq(
+      ("corpus", corpusTableDir, None),
+      ("lex", lexIndexPath, Some(Kind.Lex)),
+      ("pos", posIndexPath, Some(Kind.Pos)),
+      ("ivf", ivfIndexPath, Some(Kind.Ivf)),
+      ("pairs", pairTablePath, Some(Kind.Pair(pairSigPath))),
+      ("content", contentIndexPath, Some(Kind.Content)))
+      .collect { case (n, Some(p), k) => (n, p, k) }
   }
 
   /** ORCHESTRATED takedown (r14, VERDICT r13 #2): one call propagates
@@ -399,7 +359,7 @@ object Takedown {
                                      manifestDir: String,
                                      beforeLeg: String => Unit =
                                        _ => ()): Unit = {
-    require(targets.legs.nonEmpty,
+    require(targets.legs().nonEmpty,
       "takedownAll: no target artifacts — the request would be " +
         "manifested as complete while applied nowhere")
     val mroot = new Path(manifestDir)
@@ -407,13 +367,13 @@ object Takedown {
     fs.mkdirs(mroot)
     val pinned = ids.select(col("doc_id").cast("long").as("doc_id"))
       .distinct().localCheckpoint()
-    try targets.legs.foreach { case (name, path) =>
+    try targets.legs().foreach { case (name, path, kind) =>
       beforeLeg(name)
       val lp = new Path(mroot, name)
       val done = graft.sinks.Publish.readLedger(fs, lp)
       if (!graft.sinks.Publish.batchApplied(done, takedownId)) {
-        name match {
-          case "corpus" =>
+        kind match {
+          case None =>
             val cur = graft.sinks.Sinks.readLatest(spark, path)
             val dels = cur.join(pinned, Seq("doc_id"))
               .withColumn("op", lit("D"))
@@ -427,12 +387,9 @@ object Takedown {
             // convention the lex index's correction partials use.
             graft.sinks.Sinks.mergePublishCdc(spark, dels, path,
               Seq("doc_id"), batchId = Some(-(takedownId + 2L)))
-          case "lex" => takedownLex(spark, path, pinned, takedownId)
-          case "pos" => takedownPos(spark, path, pinned, takedownId)
-          case "ivf" => takedownIvf(spark, path,
-            pinned.withColumnRenamed("doc_id", "vec_id"), takedownId)
-          case "pairs" => takedownPairs(spark, path, pinned, takedownId)
-          case "content" => takedownContent(spark, path, pinned, takedownId)
+          // A doc's vector is keyed by its doc id (vec_id = doc_id).
+          case Some(k) => takedown(spark, k, path,
+            pinned.withColumnRenamed("doc_id", k.idCol), takedownId)
         }
         graft.sinks.Publish.writeLedger(fs, lp,
           graft.sinks.Publish.addBatch(done, takedownId))
@@ -447,7 +404,7 @@ object Takedown {
                        takedownId: Long, targets: TakedownTargets): Boolean = {
     val mroot = new Path(manifestDir)
     val fs = mroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    targets.legs.forall { case (name, _) =>
+    targets.legs().forall { case (name, _, _) =>
       graft.sinks.Publish.batchApplied(
         graft.sinks.Publish.readLedger(fs, new Path(mroot, name)),
         takedownId)
@@ -496,8 +453,9 @@ object Takedown {
     // its ±50% same-box swing (BASELINE.md). Now the union feeds ONE
     // hash aggregate keyed by artifact (partial map-side per leg scan,
     // a 7-group reduce), so the whole certificate body is one job.
-    def leg(name: String, df: DataFrame, idCols: Seq[String]): DataFrame = {
-      val flagged = idCols.foldLeft(df.select(idCols.map(col): _*)) {
+    def leg(name: String, ids: DataFrame): DataFrame = {
+      val idCols = ids.columns.toSeq
+      val flagged = idCols.foldLeft(ids) {
         (acc, c) =>
           acc.join(broadcast(dead.select(col("doc_id").as(c))
             .withColumn(s"__dead_$c", lit(1))), Seq(c), "left")
@@ -507,36 +465,15 @@ object Takedown {
       flagged.select(lit(name).as("artifact"),
         when(anyDead, 1L).otherwise(0L).as("dead"))
     }
-    val legs = targets.legs.map {
-      case ("corpus", t) =>
-        leg("corpus", graft.sinks.Sinks.readLatest(spark, t)
-          .select(col("doc_id")), Seq("doc_id"))
-      case ("lex", p) =>
-        val root = Compaction.resolveRoot(spark, p)
-        leg("lex", applyDeletes(
-          spark.read.schema("doc_id BIGINT, tf BIGINT, tok STRING")
-            .parquet(s"$root/postings").select(col("doc_id")),
-          s"$root/deletes"), Seq("doc_id"))
-      case ("pos", p) =>
-        val root = Compaction.resolveRoot(spark, p)
-        leg("pos", applyDeletes(
-          spark.read.schema("doc_id BIGINT, pos INT, tok STRING")
-            .parquet(s"$root/pos").select(col("doc_id")),
-          s"$root/deletes"), Seq("doc_id"))
-      case ("ivf", p) =>
-        val root = Compaction.resolveRoot(spark, p)
-        leg("ivf", applyDeletes(
-          spark.read.parquet(s"$root/postings").select(col("vec_id")),
-          s"$root/deletes", idCol = "vec_id")
-          .withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"))
-      case ("pairs", p) =>
-        leg("pairs", pairTableLive(spark, p)
-          .select(col("doc_a"), col("doc_b")), Seq("doc_a", "doc_b"))
-      case ("content", p) =>
-        val root = Compaction.resolveRoot(spark, p)
-        leg("content", ContentIndex.docstore(spark, root)
-          .select(col("doc_id")), Seq("doc_id"))
-      case (other, _) => throw new IllegalStateException(other)
+    // Every leg's served ids, one row per served row: the corpus
+    // read, or its index kind's live serve slice.
+    val legs = targets.legs().map { case (name, path, kind) =>
+      leg(name, kind match {
+        case None => graft.sinks.Sinks.readLatest(spark, path)
+          .select(col("doc_id"))
+        case Some(k) =>
+          k.servedIds(spark, Compaction.resolveRoot(spark, path))
+      })
     }
     // An artifact whose serve path holds ZERO rows produces no group —
     // backfill from the driver-known leg list so the certificate always
@@ -544,13 +481,13 @@ object Takedown {
     // same contract the per-leg global aggregates gave for free. A
     // pack-only certificate (no index legs) skips the body entirely.
     val body =
-      if (targets.legs.isEmpty) None
+      if (legs.isEmpty) None
       else {
         val counted = legs.reduce(_ unionByName _)
           .groupBy(col("artifact"))
           .agg(count(lit(1)).as("n_rows"), sum(col("dead")).as("n_dead"))
         val nameFrame = spark
-          .createDataFrame(targets.legs.map(l => Tuple1(l._1)))
+          .createDataFrame(targets.legs().map(l => Tuple1(l._1)))
           .toDF("artifact")
         Some(nameFrame.join(broadcast(counted), Seq("artifact"), "left")
           .select(col("artifact"),
@@ -779,8 +716,8 @@ object Takedown {
     *     candidate texts from the index's docstore (never the
     *     `documents` table — PlanAuditSpec pins the serve plan corpus-
     *     scan-free); candidates broadcast into the bucketed docstore
-    *     (requests are small by nature — the [[applyDeletes]]
-    *     contract).
+    *     (requests are small by nature — the
+    *     [[Compaction.Kind.live]] contract).
     *
     * Build/serve identity: the tail is shared by definition, the
     * docstore's norm_text is the same [[TextOps.normText]] the inline
@@ -789,7 +726,7 @@ object Takedown {
     * hash-identical to the inline resolver over the same live corpus
     * (the driver oracle pins it: q_takedown_by_content_served shares
     * q_takedown_by_content's twin verbatim). Takedown-aware end to
-    * end: both index readers anti-join `deletes/`. */
+    * end: both index readers anti-join the content kind's deletes. */
   def resolveTakedownContentServed(spark: SparkSession, indexPath: String,
                                    passages: DataFrame,
                                    pairTablePath: Option[String] = None,
@@ -941,9 +878,7 @@ object Takedown {
     * joins. */
   private def contentExpandTail(spark: SparkSession, exact: DataFrame,
                                 pairTablePath: Option[String],
-                                idPushdownCap: Long =
-                                  ScaleEnvelope.ContentIdPushdownCap)
-      : DataFrame =
+                                idPushdownCap: Long): DataFrame =
     pairTablePath match {
       case None => exact.withColumn("via", lit("exact"))
       case Some(pp) =>

@@ -74,9 +74,6 @@ object TextOps {
     "fr" -> Seq("le", "la", "les", "et", "en", "un", "une", "est", "que", "des"),
     "zh" -> Seq("的", "是", "不", "了", "在", "人", "有", "我", "他", "这"))
 
-  private def stopHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isInCollection(words)))
-
   /** Per-document token aggregates computed via explode + ONE hash
     * aggregate: the text is tokenized exactly once per document (array
     * expressions referenced by several consumers get re-evaluated per

@@ -388,20 +388,13 @@ object StreamingIngest {
       recallFloor: Double = 0.0, recallCorpusDir: Option[String] = None,
       recallEvery: Int = 1,
       beforeLeg: String => Unit = _ => ()): Unit = {
-    import Compaction.{Kind, compactIfDue}
     drain(idStream, checkpointDir) { (batch, batchId) =>
       pinned(batch) {
         val s = batch.sparkSession
         graft.operators.Takedown.takedownAllWith(s, batch, batchId,
           targets, manifestDir, beforeLeg)
-        val folds = targets.lexIndexPath.map(_ -> Kind.Lex) ++
-          targets.posIndexPath.map(_ -> Kind.Pos) ++
-          targets.ivfIndexPath.map(_ -> Kind.Ivf) ++
-          targets.contentIndexPath.map(_ -> Kind.Content) ++
-          (for (pp <- targets.pairTablePath; sp <- pairSigPath)
-            yield pp -> Kind.Pair(sp))
-        folds.foreach { case (p, kind) =>
-          compactIfDue(s, p, kind, compactEvery) }
+        for ((_, p, Some(kind)) <- targets.legs(pairSigPath))
+          Compaction.compactIfDue(s, p, kind, compactEvery)
         // Recall probe discipline (r16, ADVICE r15): retrainDue's
         // exact arm is a corpus × query-panel pass, so (a) the probe
         // is SKIPPED outright while `_retrain_due` already stands —

@@ -100,4 +100,30 @@ class PqSpec extends SparkSpec {
       inQuery.exceptAll(served).isEmpty,
       "served ADC diverged from the in-query pipeline")
   }
+
+  test("a takedown recorded through the PQ kind leaves both served paths") {
+    val ivfIdx = tmpDir("pqtd_ivf")
+    val pqIdx = tmpDir("pqtd_pq")
+    Similarity.buildIvfIndexBatch(spark, Tables.embeddings(spark, sf0001),
+      ivfIdx, Compaction.BootstrapBatchId)
+    Pq.buildPqIndex(spark, sf0001, pqIdx)
+    def adc = Pq.adcTopkServed(spark, sf0001, pqIdx)
+    def ivfPq = Pq.ivfPqTopkServed(spark, sf0001, ivfIdx, pqIdx)
+    def vecIds(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col("vec_id")).collect().map(_.getLong(0)).toSet
+    // Take down every query's best hit on either path.
+    val dead = vecIds(adc.where(col("rank") === 1)) ++
+      vecIds(ivfPq.where(col("rank") === 1))
+    assert(dead.nonEmpty, "no served rows — vacuous")
+    import spark.implicits._
+    Compaction.Kind.Pq.record(dead.toSeq.toDF("vec_id"),
+      Compaction.resolveRoot(spark, pqIdx), 0L)
+    val adcAfter = vecIds(adc)
+    val ivfPqAfter = vecIds(ivfPq)
+    assert(adcAfter.nonEmpty && ivfPqAfter.nonEmpty)
+    assert((adcAfter intersect dead).isEmpty,
+      "flat ADC served a vector taken down under the PQ index")
+    assert((ivfPqAfter intersect dead).isEmpty,
+      "IVF-PQ served a vector taken down under the PQ index")
+  }
 }
