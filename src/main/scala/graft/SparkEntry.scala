@@ -130,7 +130,6 @@ object SparkEntry {
     // pair table; the resolved set feeds takedownAll.
     "q_takedown_by_content" -> ((s, d) => {
       val targets = stagedErasureEnv(s, d).targets
-      import org.apache.spark.sql.functions._
       val served =
         graft.sinks.Sinks.readLatest(s, targets.corpusTableDir.get)
       Takedown.resolveTakedownContent(served, contentProbePassages(s, d),
@@ -185,9 +184,9 @@ object SparkEntry {
     "q_containment_served" ->
       ((s, d) => Dedup.containmentFrom(stagedPairTable(s, d), 0.5)),
     "q_simhash" -> ((s, d) => Dedup.simhash(s, d)),
-    // 16-bit simhashNeighbors is pedagogical/quadratic — spec-only
-    // (TextDedupSpec), not on the oracle or bench surface (VERDICT r5 #3);
-    // q_simhash64_neighbors below is the production shape.
+    // The 16-bit signature has no neighbour join: its 4-bit bands are
+    // quadratic buckets. q_simhash64_neighbors below is the one
+    // near-dup join over simhash signatures.
     // similarity search
     "q_topk_similarity" -> ((s, d) => Similarity.topkCosine(s, d)),
     "q_ann_lsh" -> ((s, d) => Similarity.topkCosineLsh(s, d)),

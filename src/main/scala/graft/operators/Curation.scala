@@ -54,16 +54,7 @@ object Curation {
     * its content survives in the keeper; mutually-contained
     * near-identical pairs keep the lower doc_id, matching the
     * symmetric rule's convention. Same shape: loser frames ≪ corpus,
-    * one LEFT ANTI join. */
-  def curatedDocsContainment(spark: SparkSession, dir: String,
-                             jaccardThreshold: Double = 0.5,
-                             containmentThreshold: Double = 0.9,
-                             minTokens: Int = 20,
-                             maxPunctRatio: Double = 0.2): DataFrame =
-    curatedDocsContainmentFrom(spark, dir, Dedup.ngramJaccard(spark, dir),
-      jaccardThreshold, containmentThreshold, minTokens, maxPunctRatio)
-
-  /** [[curatedDocsContainment]] served from a prebuilt pair frame. */
+    * one LEFT ANTI join. Served from a prebuilt pair frame. */
   def curatedDocsContainmentFrom(spark: SparkSession, dir: String,
                                  pairFrame: DataFrame,
                                  jaccardThreshold: Double = 0.5,

@@ -527,43 +527,6 @@ object Dedup {
     labels.select(col("doc_id"), col("cluster_id"))
   }
 
-  /** SimHash near-duplicate pairs: band on four 4-bit quarters of the
-    * 16-bit signature. Pigeonhole guarantees completeness: any pair
-    * within Hamming distance ≤ 3 differs in at most 3 of the 4 quarters,
-    * so at least one quarter matches exactly and the pair is generated
-    * (ADVICE r2 — the previous 2-half banding was only complete to
-    * distance 1). Exact Hamming distance ≤ maxHamming is then filtered
-    * with the native codegen [[graft.expressions.HammingDistance]]
-    * expression. Candidate generation is an equi-join on the quarter
-    * value — never all-pairs. Scale note: 4-bit bands are sized to this
-    * 16-bit demo signature; a production 64-bit simhash keeps the same
-    * shape with four 16-bit bands (same radius-3 guarantee, far finer
-    * buckets). */
-  def simhashNeighbors(spark: SparkSession, dir: String,
-                       maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3,
-      s"4-band LSH over a 16-bit simhash is only complete to Hamming " +
-        s"distance 3; got maxHamming=$maxHamming")
-    val sig = simhash(spark, dir)
-    val quarters = sig.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(q =>
-        shiftright(col("simhash"), 4 * q).bitwiseAND(lit(15))): _*))
-        .as(Seq("q_idx", "q_val")))
-    val a = quarters.select(col("doc_id").as("doc_a"),
-      col("simhash").as("sim_a"), col("q_idx"), col("q_val"))
-    val b = quarters.select(col("doc_id").as("doc_b"),
-      col("simhash").as("sim_b"), col("q_idx"), col("q_val"))
-    a.join(b, Seq("q_idx", "q_val"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        HammingDistance.of(col("sim_a"), col("sim_b")).as("hamming"))
-      // Filter BEFORE the dedup shuffle: most candidates exceed the
-      // radius, so the distinct's exchange shrinks by orders of
-      // magnitude (measured 5.0 s → well under half at sf0.1).
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
   /** Production-width 64-bit SimHash, represented as four 16-bit
     * quarters (q0..q3) instead of one signed long — the quarters ARE
     * the radius-3 LSH bands, every value stays far inside 32 bits, and
@@ -594,10 +557,12 @@ object Dedup {
   }
 
   /** Near-dup pairs over the 64-bit signature: band on the four 16-bit
-    * quarters (pigeonhole-complete for Hamming radius ≤ 3 — same
-    * guarantee as [[simhashNeighbors]], now at the width where random
-    * collisions actually thin out), exact distance via four native
-    * [[graft.expressions.HammingDistance]] calls summed. */
+    * quarters (pigeonhole-complete for Hamming radius ≤ 3: a pair
+    * within distance 3 differs in at most 3 of the 4 quarters, so at
+    * least one quarter matches exactly and the pair is generated), exact
+    * distance via four native [[graft.expressions.HammingDistance]]
+    * calls summed. Candidate generation is an equi-join on the quarter
+    * value — never all-pairs. */
   def simhash64Neighbors(spark: SparkSession, dir: String,
                          maxHamming: Int = 3): DataFrame =
     simhash64NeighborsOf(simhash64(spark, dir), maxHamming)._1

@@ -76,7 +76,7 @@ object Events {
     * gaps-and-islands window formulation: a session break is a gap ≥ the
     * threshold, the session id is the running break count, and the
     * session end is last-event + gap (identical semantics to
-    * `session_window`, which [[userSessionsSW]] demonstrates).
+    * `session_window`, which StatefulSpec cross-checks it against).
     *
     * Why not `session_window` on the oracle-gated path: its physical
     * plan (partial sessions → shuffle → MergingSessions) was observed —
@@ -371,23 +371,4 @@ object Events {
         grouping(col("date")).as("g_date"),
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("total_value"))
-
-  /** The same sessionization through Spark's built-in `session_window`
-    * aggregate — the idiomatic API, spec-cross-checked against
-    * [[userSessions]] (see that method's scaladoc for why the
-    * oracle-gated path avoids it). */
-  def userSessionsSW(spark: SparkSession, dir: String,
-                     gap: String = "6 hours"): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("total_value"))
-      .select(
-        col("user_id"),
-        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_start"),
-        date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-          .as("session_end"),
-        col("n_events"), col("total_value"))
 }

@@ -54,22 +54,30 @@ object Layout {
   // bit i of y16 moved to 2i+1 is (y16 & 2^i) · 2^(i+1). Sums of
   // disjoint powers of two ≡ OR, and + folds better in codegen.
 
+  /** `df` plus its `zval` over (xCol, yCol): one bounds pass (a
+    * 4-scalar aggregate, broadcast back), then a map-only projection of
+    * the interleave. The one z-value construction both the oracle-checked
+    * frame and the layout writer use. */
+  private def withZval(df: DataFrame, xCol: String, yCol: String)
+      : DataFrame = {
+    val bounds = df.agg(
+      min(col(xCol)).as("xmin"), max(col(xCol)).as("xmax"),
+      min(col(yCol)).as("ymin"), max(col(yCol)).as("ymax"))
+    df.crossJoin(broadcast(bounds))
+      .withColumn("zval", zValue2(
+        normalize16(col(xCol), col("xmin"), col("xmax")),
+        normalize16(col(yCol), col("ymin"), col("ymax"))))
+      .drop("xmin", "xmax", "ymin", "ymax")
+  }
+
   /** The z-value frame for lineitem's (l_partkey, l_suppkey) — the
-    * oracle-checked core: one bounds pass (4-scalar aggregate,
-    * broadcast back), then a map-only projection of the interleave. */
+    * oracle-checked core of [[zorderWrite]]'s clustering key. */
   def zorderFrame(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_partkey"), col("l_suppkey"))
-    val bounds = li.agg(
-      min(col("l_partkey")).as("pmin"), max(col("l_partkey")).as("pmax"),
-      min(col("l_suppkey")).as("smin"), max(col("l_suppkey")).as("smax"))
-    li.crossJoin(broadcast(bounds))
-      .select(col("l_orderkey"), col("l_linenumber"),
-        zValue2(
-          normalize16(col("l_partkey"), col("pmin"), col("pmax")),
-          normalize16(col("l_suppkey"), col("smin"), col("smax")))
-          .as("zval"))
+    withZval(li, "l_partkey", "l_suppkey")
+      .select(col("l_orderkey"), col("l_linenumber"), col("zval"))
   }
 
   /** Cluster-write `df` z-ordered on two long/int columns: bounds pass →
@@ -87,15 +95,8 @@ object Layout {
     * Production leaves the default (size-targeted row groups). */
   def zorderWrite(df: DataFrame, xCol: String, yCol: String, path: String,
                   numFiles: Int, rowsPerFile: Option[Int] = None): Unit = {
-    val bounds = df.agg(
-      min(col(xCol)).as("xmin"), max(col(xCol)).as("xmax"),
-      min(col(yCol)).as("ymin"), max(col(yCol)).as("ymax"))
-    val z = df.crossJoin(broadcast(bounds))
-      .withColumn("zval", zValue2(
-        normalize16(col(xCol), col("xmin"), col("xmax")),
-        normalize16(col(yCol), col("ymin"), col("ymax"))))
-      .drop("xmin", "xmax", "ymin", "ymax")
-    val clustered = z.repartitionByRange(numFiles, col("zval"))
+    val clustered = withZval(df, xCol, yCol)
+      .repartitionByRange(numFiles, col("zval"))
       .sortWithinPartitions(col("zval"))
       .drop("zval")
     val w = clustered.write.mode("overwrite")

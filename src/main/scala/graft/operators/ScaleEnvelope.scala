@@ -207,9 +207,6 @@ object ScaleEnvelope {
     * through each and compares row multisets. */
   val PairFanoutCap = 1024L
 
-  /** Broadcast tier for a document's pairs above the cap. */
-  def pairFanoutBroadcast(fanout: Long): Boolean = fanout > PairFanoutCap
-
   // ---- 6. Rescore vector-side join form ----------------------------
 
   /** Corpus rows up to which the banded self-joins' exact-rescore

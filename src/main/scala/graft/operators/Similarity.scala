@@ -406,7 +406,7 @@ object Similarity {
     * cells. */
   val MinCentroids = 16
   val NumProbes = 2
-  /** Lloyd refinement rounds for every IVF build (see [[kmeansRefine]]). */
+  /** Lloyd refinement rounds for every IVF build (see [[kmeansRefineOf]]). */
   val KmIterations = 2
 
   /** Centroid count at corpus size n — the shared
@@ -437,7 +437,7 @@ object Similarity {
 
   /** Trained centroids: KmIterations Lloyd rounds from the hash-sample
     * seed, rebuilt into normalized (cent_id, cv, cnv) vector rows. The
-    * 9-dp component rounding inside [[kmeansRefine]] makes these
+    * 9-dp component rounding inside [[kmeansRefineOf]] makes these
     * replay- and engine-stable, so oracle-checked queries can sit on
     * top of them. The corpus count that sizes k is a one-off
     * build-time driver scalar, like the JDBC bounds probe. */
@@ -975,26 +975,18 @@ object Similarity {
     topCosine(candidates, k)
   }
 
-  /** Lloyd's k-means refinement for the IVF coarse index: starting from
-    * the deterministic hash-sampled centroids, each iteration (1)
-    * assigns every vector to its nearest centroid by cosine — a
-    * broadcast of the O(√N) centroid set, one corpus pass — and (2)
-    * recomputes centroids as member means via the posexplode +
+  /** Lloyd's k-means refinement for the IVF coarse index, over a
+    * prebuilt normalized corpus frame and an explicit centroid count —
+    * the form [[trainedCentroidsOf]] (and thus every IVF build) goes
+    * through. Starting from the deterministic hash-sampled centroids,
+    * each iteration (1) assigns every vector to its nearest centroid by
+    * cosine — a broadcast of the O(√N) centroid set, one corpus pass —
+    * and (2) recomputes centroids as member means via the posexplode +
     * (cell, dim) hash-aggregate shape of [[labelCentroids]] (shuffle key
     * space = k × dim, sublinear in corpus size). Component means are
     * rounded to 9 dp so the refined index is partitioning-independent
     * and replay-stable, like every other deterministic artifact here.
     * Returns (cell, dim, mean_x) for the refined centroids. */
-  def kmeansRefine(spark: SparkSession, dir: String,
-                   iterations: Int = 2): DataFrame = {
-    val c = corpus(spark, dir)
-    kmeansRefineOf(c, iterations,
-      centroidCountFor(corpusSize(spark, dir)))
-  }
-
-  /** [[kmeansRefine]] over a prebuilt normalized corpus frame and an
-    * explicit centroid count — the form [[trainedCentroidsOf]] (and
-    * thus every IVF build) goes through. */
   def kmeansRefineOf(c: DataFrame, iterations: Int, k: Int): DataFrame = {
     var cents = seedCentroidsOf(c, k)
       .select(col("cent_id").as("cell"),

@@ -85,27 +85,4 @@ object Sketches {
         when(abs(col("est_inter") - col("n_inter_exact")).cast("double") /
           col("exact_union") <= 0.05, 1).otherwise(0).as("inter_ok"))
   }
-
-  /** Shard-merge identity harness for [[SketchSpec]]: per-shard
-    * sketches (`shards` deterministic user_id buckets) union-merged via
-    * `hll_union_agg` next to the single-pass global sketch — the
-    * returned frame carries both estimates per event_type so the spec
-    * can pin them EQUAL (not approximately: merging HLL registers is
-    * lossless, the estimator sees identical state). This is the
-    * incremental-maintenance story for the sketch tier: day N+1 =
-    * union(day ≤ N sketch, day N+1 slice sketch), no rebuild. */
-  def shardMergeIdentity(spark: SparkSession, dir: String,
-                         shards: Int = 7): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), col("user_id"),
-        pmod(col("user_id"), lit(shards)).as("shard"))
-    val perShard = ev.groupBy(col("event_type"), col("shard"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"))
-    val merged = perShard.groupBy(col("event_type"))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_merged"))
-    val global = ev.groupBy(col("event_type"))
-      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id")))
-        .as("est_global"))
-    merged.join(global, Seq("event_type"))
-  }
 }

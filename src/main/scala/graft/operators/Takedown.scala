@@ -306,7 +306,8 @@ object Takedown {
       posIndexPath: Option[String] = None,
       ivfIndexPath: Option[String] = None,
       pairTablePath: Option[String] = None,
-      contentIndexPath: Option[String] = None) {
+      contentIndexPath: Option[String] = None,
+      pqIndexPath: Option[String] = None) {
     /** Each targeted artifact as (manifest name, path, index kind); the
       * corpus table is the one leg without a kind. `pairSigPath` names
       * the pair table's signature table, which only a fold reads
@@ -318,7 +319,8 @@ object Takedown {
       ("pos", posIndexPath, Some(Kind.Pos)),
       ("ivf", ivfIndexPath, Some(Kind.Ivf)),
       ("pairs", pairTablePath, Some(Kind.Pair(pairSigPath))),
-      ("content", contentIndexPath, Some(Kind.Content)))
+      ("content", contentIndexPath, Some(Kind.Content)),
+      ("pq", pqIndexPath, Some(Kind.Pq)))
       .collect { case (n, Some(p), k) => (n, p, k) }
   }
 

@@ -45,25 +45,13 @@ object TextOps {
   def shingles(toks: Column, n: Int = 3): Column =
     // Native ShingleArray expression, NOT the declarative
     // array_distinct∘transform∘sequence form it replaced (kept in
-    // [[shinglesDeclarative]] as the equivalence oracle): higher-order
+    // ShingleSpec as the equivalence oracle): higher-order
     // transform lambdas evaluate interpreted PER ELEMENT, and the
     // honest noop-sink bench measured that at ~8 s for sf0.1's ~2M
     // shingles across the minhash/fingerprint family — the compiled
     // per-row sliding window is ~20× cheaper (ShingleSpec pins
     // element-for-element equality of the two forms).
     graft.expressions.ShingleArray.of(toks, n)
-
-  /** The declarative shingle construction [[shingles]] replaced —
-    * retained as the independently-derived twin ShingleSpec checks the
-    * native expression against (and the form the DuckDB oracles mirror
-    * structurally). */
-  def shinglesDeclarative(toks: Column, n: Int = 3): Column =
-    when(size(toks) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ",
-          (0 until n).map(j => element_at(toks, (i + j + 1).cast("int"))): _*))))
-      .otherwise(array().cast("array<string>"))
 
   /** Per-language stopword lists for the heuristic language scorer.
     * Deterministic tie-break: first list in this order wins. */
@@ -949,30 +937,14 @@ object TextOps {
       md5(col("enc")).as("encoded_md5"))
   }
 
-  /** REFERENCE encoder — the literal replace-loop the DuckDB oracle twin
-    * replays: find the min-rank pair present as adjacent pieces, apply
-    * ONE single-pass left-to-right replace-all over the space-delimited
-    * state, repeat to the fixpoint. O(k·L) per iteration, ≤ L
-    * iterations. [[encodePiecesFast]] computes the identical result
-    * (ScalaCheck-pinned) in O(L log L) independent of k — this form
-    * exists as the executable spec both engines share. */
-  private[graft] def encodePiecesRef(
-      pieces: scala.collection.Seq[String], merges: Array[(String, String)]): String = {
-    var st = if (pieces.isEmpty) " " else pieces.mkString(" ", " ", " ")
-    var done = false
-    while (!done) {
-      merges.find { case (a, b) => st.contains(s" $a $b ") } match {
-        case Some((a, b)) => st = st.replace(s" $a $b ", s" $a$b ")
-        case None => done = true
-      }
-    }
-    st.trim
-  }
-
-  /** Pass-faithful heap encoder: identical output to [[encodePiecesRef]]
-    * at O(L log L), independent of the merge-table size — the form that
-    * survives a real 30k-merge vocabulary where the reference loop's
-    * O(k·L) scan per iteration is hopeless.
+  /** Pass-faithful heap encoder: identical output to the reference
+    * replace-loop the DuckDB oracle twin replays — find the min-rank
+    * pair present as adjacent pieces, apply ONE single-pass
+    * left-to-right replace-all over the space-delimited state, repeat
+    * to the fixpoint (TextDedupSpec keeps that loop as the executable
+    * spec) — at O(L log L), independent of the merge-table size: the
+    * form that survives a real 30k-merge vocabulary, where the
+    * reference loop's O(k·L) scan per iteration is hopeless.
     *
     * Faithfulness is subtle and spec-pinned: one reference iteration is
     * a single-pass replace-all, which merges every occurrence of the

@@ -410,105 +410,6 @@ object Sinks {
     }, batchId, orphanFenceMs, beforeClaim)
   }
 
-  /** Range-clustered layout: repartitionByRange + sortWithinPartitions
-    * on the dominant filter column before writing, so every output file
-    * covers a disjoint, internally-sorted value range. Parquet stores
-    * per-row-group min/max stats; against this layout a range predicate
-    * skips whole files/row groups at planning time, where a
-    * hash-distributed layout forces every file open. The write costs
-    * one range shuffle (sampled boundaries) — the standing-lake trade
-    * of one layout pass for every future scan. The single-column
-    * linearization is the practical subset of Z-ordering; multi-column
-    * needs an interleaved key, same write shape. */
-  def writeRangeLayout(df: DataFrame, path: String, sortCol: String,
-                       files: Int): Unit =
-    df.repartitionByRange(files, org.apache.spark.sql.functions.col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(path)
-
-  /** The multi-column completion of [[writeRangeLayout]]: cluster files
-    * on a Z-ORDER (Morton) key so range predicates on ANY of the layout
-    * columns — and especially on several at once — skip files via
-    * parquet min/max stats. A single-column range layout makes each
-    * file span the full domain of every OTHER column, so a 2-D box
-    * predicate still opens every file matching dim 1; interleaving the
-    * bits gives every file a small bounding box in all layout dims at
-    * once (file count intersecting a box shrinks from O(selectivity·F)
-    * to ~O(box-area·F)).
-    *
-    * Mechanics: each column is min/max-normalized to a 16-bit integer
-    * (15-bit at 4 columns, keeping the interleave out of the sign bit;
-    * the min/max pass is ONE compact aggregate collected to the
-    * driver — 2·N scalars, not data); bit b of column i lands at
-    * position b·N+i of the 63-bit z-value (so ≤ 4 columns); the write
-    * is then exactly the range-layout shape — one sampled range
-    * shuffle on z, sort within partitions, every task writes its own
-    * file. The z column is dropped before writing: it is a LAYOUT
-    * device, not data, and recomputable from the stats. Nulls
-    * normalize to bucket 0 (they sort first, same as a plain sort
-    * layout). Skew note: repartitionByRange samples the z
-    * distribution, so value-heavy cells split across files instead of
-    * pinning one writer. */
-  def writeZOrderLayout(df: DataFrame, path: String, cols: Seq[String],
-                        files: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    require(cols.nonEmpty && cols.size <= 4,
-      s"z-order interleaves 16 bits per column into 64: 1-4 cols, got $cols")
-    cols.foreach { c =>
-      val f = df.schema(c)
-      require(f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"z-order layout column must be numeric (strings would all " +
-          s"collapse to bucket 0): $c is ${f.dataType.simpleString}")
-    }
-    val aggs = count(lit(1)).as("n") +: cols.flatMap { c =>
-      Seq(min(col(c).cast("double")).as(s"mn_$c"),
-        max(col(c).cast("double")).as(s"mx_$c"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect().head
-    if (row.getAs[Long]("n") == 0L) { // empty input: no stats to layout
-      df.write.mode("overwrite").parquet(path) // on — write the empty
-      return // dataset as-is, matching writeRangeLayout's behavior
-    }
-    // 15 bits/col at 4 cols keeps the top interleaved bit out of the
-    // SIGN position (16·4 = 64 would put column 3's high bit at bit 63,
-    // turning the upper half of its domain negative and wrapping the
-    // Morton order at the signed sort boundary).
-    val bits = if (cols.size == 4) 15 else 16
-    val top = (1L << bits) - 1
-    val z = zValue(cols.zipWithIndex.map { case (c, i) =>
-      val mn = if (row.isNullAt(row.fieldIndex(s"mn_$c"))) 0.0
-        else row.getAs[Double](s"mn_$c")
-      val mx = if (row.isNullAt(row.fieldIndex(s"mx_$c"))) 0.0
-        else row.getAs[Double](s"mx_$c")
-      val span = if (mx > mn) mx - mn else 1.0
-      // bucket in [0, 2^bits); nulls → 0 (sort first, like a plain sort)
-      least(greatest(coalesce(
-        ((col(c).cast("double") - mn) / span * top), lit(0.0)),
-        lit(0.0)), lit(top.toDouble)).cast("long")
-    }, bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Morton interleave of pre-bucketed `bits`-wide values: bit b of
-    * input i → output bit b·N+i (N·bits ≤ 63 so the sign bit stays
-    * clear). Unrolled into bits·N codegen-friendly shift/or terms — no
-    * UDF, stays inside whole-stage codegen. */
-  private def zValue(buckets: Seq[org.apache.spark.sql.Column],
-                     bits: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val n = buckets.size
-    require(n * bits <= 63, s"z-value would reach the sign bit: $n x $bits")
-    val terms = for {
-      (bk, i) <- buckets.zipWithIndex
-      b <- 0 until bits
-    } yield shiftleft(shiftright(bk, b).bitwiseAND(lit(1L)), b * n + i)
-    terms.reduce(_.bitwiseOR(_))
-  }
-
   /** Atomic versioned publish — the missing piece between [[upsert]]'s
     * in-place swap and a standing corpus pipeline: each publish writes a
     * COMPLETE new version directory `v=<n>` and only then creates its

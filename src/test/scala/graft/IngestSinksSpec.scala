@@ -279,87 +279,6 @@ class IngestSinksSpec extends SparkSpec {
     assert(got == orig)
   }
 
-  test("range layout: files cover disjoint, internally sorted ranges") {
-    val dir = tmpDir("rangelayout")
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-      .select($"doc_id", $"n_chars")
-    Sinks.writeRangeLayout(docs, s"$dir/t", "n_chars", files = 4)
-    val files = new java.io.File(s"$dir/t").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-    assert(files.length >= 2)
-    val ranges = files.map { f =>
-      val vals = spark.read.parquet(f).select("n_chars")
-        .collect().map(_.getLong(0))
-      assert(vals.sameElements(vals.sorted), s"$f not internally sorted")
-      (vals.min, vals.max)
-    }.sortBy(_._1)
-    // Disjoint (touching at equal boundary values allowed): each file's
-    // min is >= the previous file's max.
-    ranges.sliding(2).foreach {
-      case Array((_, hiA), (loB, _)) => assert(loB >= hiA)
-      case _ =>
-    }
-    // Lossless.
-    assert(spark.read.parquet(s"$dir/t").count() == docs.count())
-  }
-
-  test("z-order layout: multi-dim box predicates touch fewer files than a linear sort") {
-    import org.apache.spark.sql.functions._
-    val dir = tmpDir("graft_zorder")
-    // Deterministic 64x64 grid: every (x, y) cell exactly once.
-    val grid = spark.range(4096)
-      .select((col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
-    Sinks.writeZOrderLayout(grid, s"$dir/z", Seq("x", "y"), files = 16)
-    Sinks.writeRangeLayout(grid, s"$dir/lin", "x", files = 16)
-    def boxes(path: String): Array[(Long, Long, Long, Long)] =
-      new java.io.File(path).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map { f =>
-          val r = spark.read.parquet(f.getPath)
-            .agg(min("x"), max("x"), min("y"), max("y")).collect().head
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-        }
-    // Files whose bounding box intersects the query box x,y ∈ [0,15]²
-    // (1/16 of the area) — what parquet min/max skipping would open.
-    def hits(bs: Array[(Long, Long, Long, Long)]): Int =
-      bs.count { case (x0, x1, y0, y1) => x0 <= 15 && x1 >= 0 && y0 <= 15 && y1 >= 0 }
-    val (zB, linB) = (boxes(s"$dir/z"), boxes(s"$dir/lin"))
-    assert(zB.length >= 8 && linB.length >= 8, "both layouts split into files")
-    assert(hits(zB) < hits(linB),
-      s"z-order opens fewer files for a 2-D box: z=${hits(zB)} lin=${hits(linB)}")
-    // The interleave is a LAYOUT device only: data round-trips losslessly
-    // and the helper column does not survive to disk.
-    val back = spark.read.parquet(s"$dir/z")
-    assert(back.columns.sorted.sameElements(Array("x", "y")))
-    assert(back.count() == 4096 &&
-      back.exceptAll(grid).isEmpty && grid.exceptAll(back).isEmpty)
-  }
-
-  test("z-order at 4 columns keeps the interleave out of the sign bit") {
-    import org.apache.spark.sql.functions._
-    val dir = tmpDir("graft_z4")
-    // Only the 4th column varies: its bits occupy the interleave's top
-    // positions, so 16-bit buckets would place its high bit at bit 63 —
-    // the SIGN — wrapping the sort and handing the wrap-straddling file
-    // a full-domain bounding box that overlaps every other file's.
-    val grid = spark.range(4096).select(lit(1L).as("a"), lit(1L).as("b"),
-      lit(1L).as("c"), col("id").as("d"))
-    Sinks.writeZOrderLayout(grid, s"$dir/z4", Seq("a", "b", "c", "d"),
-      files = 8)
-    val ranges = new java.io.File(s"$dir/z4").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map { f =>
-        val r = spark.read.parquet(f.getPath).agg(min("d"), max("d"))
-          .collect().head
-        (r.getLong(0), r.getLong(1))
-      }.sortBy(_._1)
-    assert(ranges.length >= 4)
-    ranges.sliding(2).foreach {
-      case Array((_, hiA), (loB, _)) =>
-        assert(loB > hiA, s"file d-ranges must stay disjoint: ${ranges.toSeq}")
-      case _ =>
-    }
-    assert(spark.read.parquet(s"$dir/z4").count() == 4096)
-  }
-
   test("versioned publish: readers follow LATEST, crashes stay invisible, vacuum keeps current") {
     import org.apache.spark.sql.functions._
     val dir = tmpDir("graft_pub")

@@ -95,6 +95,38 @@ class LayoutSpec extends SparkSpec {
       f"z-order win too small: $zFrac%.2f vs $pFrac%.2f")
   }
 
+  test("z-order layout: multi-dim box predicates touch fewer files than a linear sort") {
+    val dir = tmpDir("graft_zorder")
+    // Deterministic 64x64 grid: every (x, y) cell exactly once.
+    val grid = spark.range(4096)
+      .select((col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
+    Layout.zorderWrite(grid, "x", "y", s"$dir/z", numFiles = 16)
+    grid.repartitionByRange(16, col("x"))
+      .sortWithinPartitions(col("x"))
+      .write.mode("overwrite").parquet(s"$dir/lin")
+    def boxes(path: String): Array[(Long, Long, Long, Long)] =
+      new java.io.File(path).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map { f =>
+          val r = spark.read.parquet(f.getPath)
+            .agg(min("x"), max("x"), min("y"), max("y")).collect().head
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        }
+    // Files whose bounding box intersects the query box x,y ∈ [0,15]²
+    // (1/16 of the area) — what parquet min/max skipping would open.
+    def hits(bs: Array[(Long, Long, Long, Long)]): Int =
+      bs.count { case (x0, x1, y0, y1) => x0 <= 15 && x1 >= 0 && y0 <= 15 && y1 >= 0 }
+    val (zB, linB) = (boxes(s"$dir/z"), boxes(s"$dir/lin"))
+    assert(zB.length >= 8 && linB.length >= 8, "both layouts split into files")
+    assert(hits(zB) < hits(linB),
+      s"z-order opens fewer files for a 2-D box: z=${hits(zB)} lin=${hits(linB)}")
+    // The interleave is a LAYOUT device only: data round-trips losslessly
+    // and the helper column does not survive to disk.
+    val back = spark.read.parquet(s"$dir/z")
+    assert(back.columns.sorted.sameElements(Array("x", "y")))
+    assert(back.count() == 4096 &&
+      back.exceptAll(grid).isEmpty && grid.exceptAll(back).isEmpty)
+  }
+
   test("zorderFrame: zvalues bounded, deterministic, and curve-local") {
     val z = operators.Layout.zorderFrame(spark, sf0001).cache()
     try {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Compaction, Pq, Similarity}
+import graft.operators.{Compaction, Pq, Similarity, Takedown}
 
 /** Product quantization: structure, determinism, and the property PQ
   * exists for — ADC ranking over 4-byte codes still finds real
@@ -116,8 +116,18 @@ class PqSpec extends SparkSpec {
       vecIds(ivfPq.where(col("rank") === 1))
     assert(dead.nonEmpty, "no served rows — vacuous")
     import spark.implicits._
-    Compaction.Kind.Pq.record(dead.toSeq.toDF("vec_id"),
-      Compaction.resolveRoot(spark, pqIdx), 0L)
+    // Through the orchestrator's PQ leg (a doc's vector is keyed by its
+    // doc id), as a deployment records it.
+    val targets = Takedown.TakedownTargets(pqIndexPath = Some(pqIdx))
+    val manifest = tmpDir("pqtd_manifest")
+    Takedown.takedownAll(spark, dead.toSeq.toDF("doc_id"), 0L, targets,
+      manifest)
+    assert(Takedown.manifestComplete(spark, manifest, 0L, targets))
+    val cert = Takedown.erasureCertificate(spark,
+      dead.toSeq.toDF("doc_id"), targets).collect()
+    // One certificate row for the leg: codes still served, none dead.
+    assert(cert.map(r => (r.getString(0), r.getLong(1) > 0L, r.getLong(2)))
+      .toSeq == Seq(("pq", true, 0L)), s"PQ certificate: ${cert.toSeq}")
     val adcAfter = vecIds(adc)
     val ivfPqAfter = vecIds(ivfPq)
     assert(adcAfter.nonEmpty && ivfPqAfter.nonEmpty)

@@ -213,12 +213,12 @@ class PublishProtocolSpec extends SparkSpec {
     val t = s"${tmpDir("ledger_rt")}/t"
     val (fs, _, root) = fsOf(t)
     import org.apache.spark.sql.functions.col
-    def delta(id: Long, n: Long) = Seq(("k", n)).toDF("k", "n")
+    def delta(n: Long) = Seq(("k", n)).toDF("k", "n")
     def sumOf: Long = Sinks.readLatest(spark, t)
       .agg(org.apache.spark.sql.functions.sum(col("n"))).collect()(0).getLong(0)
     // Contiguous stream ids 0..4 → the on-disk ledger is ONE line.
     (0L to 4L).foreach(i =>
-      Sinks.mergeAggPublish(spark, delta(i, 1L), t, Seq("k"), Seq("n"),
+      Sinks.mergeAggPublish(spark, delta(1L), t, Seq("k"), Seq("n"),
         batchId = Some(i)))
     assert(sumOf == 5L)
     val v = Publish.currentVersion(fs, root)
@@ -230,12 +230,12 @@ class PublishProtocolSpec extends SparkSpec {
     assert(Publish.appliedBatches(fs, root, v) == Seq((0L, 4L)))
     // Replays of every id in the range are no-ops.
     (0L to 4L).foreach { i =>
-      assert(Sinks.mergeAggPublish(spark, delta(i, 100L), t, Seq("k"),
+      assert(Sinks.mergeAggPublish(spark, delta(100L), t, Seq("k"),
         Seq("n"), batchId = Some(i)) == v)
     }
     assert(sumOf == 5L, "a replayed batch re-merged — exactly-once broken")
     // A sparse ad-hoc id stays individually detectable.
-    Sinks.mergeAggPublish(spark, delta(99L, 2L), t, Seq("k"), Seq("n"),
+    Sinks.mergeAggPublish(spark, delta(2L), t, Seq("k"), Seq("n"),
       batchId = Some(99L))
     assert(Publish.appliedBatches(fs, root, Publish.currentVersion(fs, root))
       == Seq((0L, 4L), (99L, 99L)))

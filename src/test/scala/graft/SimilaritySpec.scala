@@ -242,16 +242,17 @@ class SimilaritySpec extends SparkSpec {
 
   test("kmeansRefine: complete dims per cell, deterministic, moves centroids") {
     import org.apache.spark.sql.functions._
-    val refined = Similarity.kmeansRefine(spark, sf0001, iterations = 2)
+    val c = Similarity.normalizedCorpus(spark, sf0001)
+    val nSeeds = Similarity.centroidCountFor(c.count())
+    val refined = Similarity.kmeansRefineOf(c, 2, nSeeds)
     val dims = refined.groupBy("cell").count()
     // k stays k: every seed cell survives (empty-cluster guard), with
     // all of its dims.
-    val c = Similarity.normalizedCorpus(spark, sf0001)
-    val nSeeds = Similarity.centroidCountFor(c.count())
     assert(dims.count() == nSeeds && nSeeds > 0 &&
       dims.where(col("count") =!= Similarity.Dim).isEmpty)
     // Deterministic: a second run returns identical components.
-    val again = Similarity.kmeansRefine(spark, sf0001, iterations = 2)
+    val again = Similarity.kmeansRefineOf(
+      Similarity.normalizedCorpus(spark, sf0001), 2, nSeeds)
     assert(refined.exceptAll(again).isEmpty && again.exceptAll(refined).isEmpty)
     // Refinement actually moved at least one centroid off its seed.
     val seeds = Similarity.seedCentroidsOf(c, nSeeds)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 
@@ -7,12 +8,34 @@ import graft.operators.Sketches
 class SketchSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Per-shard sketches (`shards` deterministic user_id buckets)
+    * union-merged via `hll_union_agg` next to the single-pass global
+    * sketch — the returned frame carries both estimates per event_type
+    * so the spec can pin them EQUAL (not approximately: merging HLL
+    * registers is lossless, the estimator sees identical state). This
+    * is the incremental-maintenance story for the sketch tier: day N+1
+    * = union(day ≤ N sketch, day N+1 slice sketch), no rebuild. */
+  private def shardMergeIdentity(spark: SparkSession, dir: String,
+                                 shards: Int = 7): DataFrame = {
+    val ev = Tables.events(spark, dir)
+      .select(col("event_type"), col("user_id"),
+        pmod(col("user_id"), lit(shards)).as("shard"))
+    val perShard = ev.groupBy(col("event_type"), col("shard"))
+      .agg(hll_sketch_agg(col("user_id")).as("sk"))
+    val merged = perShard.groupBy(col("event_type"))
+      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_merged"))
+    val global = ev.groupBy(col("event_type"))
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id")))
+        .as("est_global"))
+    merged.join(global, Seq("event_type"))
+  }
+
   test("shard-merge identity: union of per-shard sketches == global sketch") {
     // THE mergeability claim: building per-shard and union-merging must
     // give the estimator identical register state to one global pass —
     // so the estimates are EQUAL, not approximately equal. (This is what
     // makes per-day incremental maintenance lossless.)
-    val rows = Sketches.shardMergeIdentity(spark, sf0001).collect()
+    val rows = shardMergeIdentity(spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (m, g) = (r.getAs[Long]("est_merged"), r.getAs[Long]("est_global"))

@@ -370,7 +370,6 @@ class TakedownSpec extends SparkSpec {
     // apply (negative-namespace ledger id), not silently no-op.
     val t = s"$dir/corpus"
     graft.sinks.Sinks.mergePublish(spark, docs, t, Seq("doc_id"))
-    import spark.implicits._
     val touch = docs.limit(1).withColumn("op", lit("U"))
     graft.sinks.Sinks.mergePublishCdc(spark, touch, t, Seq("doc_id"),
       batchId = Some(0L)) // ingest CDC batch id 0 now on the ledger

@@ -9,6 +9,26 @@ class TextDedupSpec extends SparkSpec {
   import spark.implicits._
   import Dedup.{WideTables, wideKeyCol}
 
+  /** REFERENCE BPE encoder — the literal replace-loop the DuckDB oracle
+    * twin replays: find the min-rank pair present as adjacent pieces,
+    * apply ONE single-pass left-to-right replace-all over the
+    * space-delimited state, repeat to the fixpoint. O(k·L) per
+    * iteration, ≤ L iterations. [[TextOps.encodePiecesFast]] computes
+    * the identical result in O(L log L) independent of k — this form
+    * is the executable spec both engines share. */
+  private def encodePiecesRef(
+      pieces: scala.collection.Seq[String], merges: Array[(String, String)]): String = {
+    var st = if (pieces.isEmpty) " " else pieces.mkString(" ", " ", " ")
+    var done = false
+    while (!done) {
+      merges.find { case (a, b) => st.contains(s" $a $b ") } match {
+        case Some((a, b)) => st = st.replace(s" $a $b ", s" $a$b ")
+        case None => done = true
+      }
+    }
+    st.trim
+  }
+
   test("tokens/shingles edge cases: empty, short, whitespace-heavy") {
     val df = Seq("", "   ", "one", "one two", "one two three",
       "  A  lot   OF   spaces here ").toDF("text")
@@ -219,9 +239,6 @@ class TextDedupSpec extends SparkSpec {
     assert(banded == brute,
       s"banding missed ${(brute -- banded).size} pairs / " +
         s"invented ${(banded -- brute).size}")
-    // 64-bit width actually thins random collisions vs the 16-bit demo.
-    val demo = Dedup.simhashNeighbors(spark, sf0001).count()
-    assert(banded.size <= demo)
   }
 
   test("simhash64 wide multi-index is result-identical to quarter banding") {
@@ -597,7 +614,7 @@ class TextDedupSpec extends SparkSpec {
       val merges = mergesGen
         .pureApply(Gen.Parameters.default, Seed(seed + 10000))
         .distinct.toArray
-      val ref = TextOps.encodePiecesRef(pieces, merges)
+      val ref = encodePiecesRef(pieces, merges)
       val fast = TextOps.encodePiecesFast(pieces, merges)
       assert(fast == ref,
         s"seed $seed pieces=$pieces merges=${merges.toSeq}\n" +
@@ -613,13 +630,13 @@ class TextDedupSpec extends SparkSpec {
     // its 'a' already consumed → "abx ab".
     val pieces = Vector("a", "b", "x", "a", "b")
     val merges = Array(("abx", "a"), ("ab", "x"), ("a", "b"))
-    assert(TextOps.encodePiecesRef(pieces, merges) == "abx ab")
+    assert(encodePiecesRef(pieces, merges) == "abx ab")
     assert(TextOps.encodePiecesFast(pieces, merges) == "abx ab")
     // And the adjacent-occurrence skip: one pass merges occurrences 1
     // and 3 of (a,b); the sandwiched occurrence 2 lost its delimiter
     // and only merges on the NEXT iteration.
     val run = Vector("a", "b", "a", "b", "a", "b")
-    assert(TextOps.encodePiecesRef(run, Array(("a", "b"))) == "ab ab ab")
+    assert(encodePiecesRef(run, Array(("a", "b"))) == "ab ab ab")
     assert(TextOps.encodePiecesFast(run, Array(("a", "b"))) == "ab ab ab")
   }
 
@@ -687,11 +704,6 @@ class TextDedupSpec extends SparkSpec {
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val cand = Dedup.minhashPairs(spark, dir)
     assert(cand.count() == 191) // 190 storm + 1 calm
-    // The envelope predicate is strict-above-the-cap.
-    assert(!graft.operators.ScaleEnvelope.pairFanoutBroadcast(
-      graft.operators.ScaleEnvelope.PairFanoutCap) &&
-      graft.operators.ScaleEnvelope.pairFanoutBroadcast(
-        graft.operators.ScaleEnvelope.PairFanoutCap + 1))
     val plain = Dedup.verifyPairs(cand, docs, fanoutCap = Long.MaxValue)
     val storm = Dedup.verifyPairs(cand, docs, fanoutCap = 5L)
     // The storm dispatch actually took the two-tier branch: its plan
