@@ -17,15 +17,6 @@ import graft.operators.Relational
   */
 object Graft {
 
-  /** One-call setup on a live session: native SQL functions (`dot_d`,
-    * `hamming`, `bounded_collect_long`, `shingle_array`), the
-    * `vec_mean` UDAF, the HOF-fold rewrite rule, and every table view. */
-  def install(spark: SparkSession, dir: String): Unit = {
-    GraftExtensions.install(spark)
-    graft.expressions.VecMean.register(spark)
-    registerViews(spark, dir)
-  }
-
   def registerViews(spark: SparkSession, dir: String): Unit = {
     // Fixture tables under their fixture names.
     Seq("region", "nation", "customer", "supplier", "part", "orders",

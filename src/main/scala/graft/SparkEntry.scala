@@ -1083,7 +1083,7 @@ object SparkEntry {
       run()
       inc.write.parquet(s"$dir/in/b1")
       run()
-      val replayed = graft.sinks.Sinks.mergePublishWith(s, base, s"$dir/t",
+      val replayed = graft.sinks.Sinks.mergePublish(s, base, s"$dir/t",
         Seq("o_orderkey"), batchId = Some(0L))
       require(replayed == 2,
         s"replayed micro-batch minted version $replayed")

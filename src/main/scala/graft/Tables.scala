@@ -2,19 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Fixture table readers (see /root/repo/TESTDATA.md, FIXTURES.md).
+/** Fixture table readers (see TESTDATA.md, FIXTURES.md).
   *
-  * Every read routes through the [[graft.connect.Connectors]] seam
-  * (VERDICT r8 #3): the `dir` locator's scheme picks the connector, so a
-  * deployment swaps in a cloud source (GCS/BigQuery/Delta) by registering
-  * it — no edits here or in any operator. The default (plain paths) is
-  * the parquet-dir source, where Catalyst provides column pruning and
-  * predicate pushdown for free — downstream operators should see
-  * `PushedFilters`/`ReadSchema` reach these scans in `.explain`.
+  * Every table is a `<dir>/<name>.parquet` directory — the fixture
+  * layout and the layer layout `Sinks` writes — where Catalyst provides
+  * column pruning and predicate pushdown for free: downstream operators
+  * should see `PushedFilters`/`ReadSchema` reach these scans in
+  * `.explain`.
   */
 object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.connect.Connectors.source(dir).read(spark, dir, name)
+    spark.read.parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = read(s, d, "nation")
@@ -70,11 +68,6 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    // The ts-encoding shims below adapt for the PARQUET fixtures' on-disk
-    // quirks specifically; a foreign connector owns its own type mapping
-    // and is read verbatim through the seam.
-    if (!graft.connect.Connectors.isParquetDir(d))
-      return graft.connect.Connectors.source(d).read(s, d, "events")
     val path = s"$d/events.parquet"
     val inferred: Option[DataFrame] =
       try Some(s.read.parquet(path))

@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -118,19 +118,6 @@ object BoundedCollectLong {
     StructField("n", LongType, nullable = false),
     StructField("vals", ArrayType(LongType, containsNull = false),
       nullable = false)))
-
-  /** `bounded_collect_long(v, limit)` — limit must be a literal int
-    * (it sizes executor-side buffers; a per-row limit is meaningless). */
-  val builder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2,
-      "bounded_collect_long(v, limit) takes two arguments")
-    val limit = children(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"bounded_collect_long limit must be an integer literal, got $other")
-    }
-    BoundedCollectLong(children(0), limit)
-  }
 
   /** `bounded_collect_long(v, limit)` as an aggregate Column, built
     * through [[ColumnSeam]]: no function-registry entry on any

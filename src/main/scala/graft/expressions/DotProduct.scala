@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * BEFORE the multiply, so `dot_d(f, g)` over float arrays is
   * bit-identical to `dot_d(cast f, cast g)` over their double casts
   * (float→double widening is exact, and the accumulation is the same
-  * double LTR either way — spec-pinned in ExtensionsSpec). This lets
+  * double LTR either way — spec-pinned in SimilaritySpec). This lets
   * the similarity rescore paths ship the corpus's RAW float32 vectors
   * through exchanges and broadcasts at half the bytes of the
   * pre-widened `array<double>` form without perturbing one bit of any
@@ -114,13 +114,6 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** The SQL function builder `dot_d(a, b)`, installed by
-    * [[graft.GraftExtensions]] for SQL users. */
-  val builder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2, "dot_d(a, b) takes two arguments")
-    DotProduct(children(0), children(1))
-  }
-
   /** `dot_d(a, b)` as a Column, built through [[ColumnSeam]]: no
     * function-registry entry on any session. */
   def of(a: Column, b: Column): Column =

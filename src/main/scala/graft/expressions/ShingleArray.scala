@@ -84,20 +84,6 @@ case class ShingleArray(child: Expression, n: Int)
 }
 
 object ShingleArray {
-  /** The SQL function builder `shingle_array(toks, n)`, installed by
-    * [[graft.GraftExtensions]] for SQL users; n must be a foldable int
-    * literal. */
-  val builder: Seq[Expression] => Expression = { children =>
-    require(children.length == 2, "shingle_array(toks, n) takes two args")
-    val n = children(1) match {
-      case e if e.foldable =>
-        e.eval(null).asInstanceOf[Number].intValue
-      case _ => throw new IllegalArgumentException(
-        "shingle_array: n must be a literal")
-    }
-    ShingleArray(children(0), n)
-  }
-
   /** `shingle_array(toks, n)` as a Column, built through
     * [[ColumnSeam]]: no function-registry entry on any session. */
   def of(toks: Column, n: Int): Column =

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.expressions.HammingDistance
 import TextOps.{normText, tokens, shingles}
 
 /** Deduplication operators for the LLM-data-pipeline tier: exact
@@ -560,9 +559,9 @@ object Dedup {
     * quarters (pigeonhole-complete for Hamming radius ≤ 3: a pair
     * within distance 3 differs in at most 3 of the 4 quarters, so at
     * least one quarter matches exactly and the pair is generated), exact
-    * distance via four native [[graft.expressions.HammingDistance]]
-    * calls summed. Candidate generation is an equi-join on the quarter
-    * value — never all-pairs. */
+    * distance as four built-in `bit_count(a ^ b)` calls summed.
+    * Candidate generation is an equi-join on the quarter value — never
+    * all-pairs. */
   def simhash64Neighbors(spark: SparkSession, dir: String,
                          maxHamming: Int = 3): DataFrame =
     simhash64NeighborsOf(simhash64(spark, dir), maxHamming)._1
@@ -795,8 +794,10 @@ object Dedup {
     * band_val) row per band expression, optionally quarantine
     * over-`cap` buckets (see [[simhash64NeighborsOf]] scaladoc for the
     * report semantics), self-join on the band key, verify with the
-    * codegen'd [[graft.expressions.HammingDistance]] over the four
-    * quarters, dedup pairs. The quarantine count aggregation rides the
+    * built-in `bit_count` of each quarter's XOR, summed over the four
+    * quarters, dedup pairs. Each quarter lies in [0, 65535], so
+    * `bit_count`'s int-to-long widening cannot change the count and
+    * `hamming` stays `int`. The quarantine count aggregation rides the
     * SAME (band_idx, band_val) key as the self-join, so its exchange is
     * reused rather than an extra corpus shuffle.
     *
@@ -841,7 +842,7 @@ object Dedup {
       .where(col("doc_a") < col("doc_b"))
     def verify(df: DataFrame): DataFrame = df
       .select(col("doc_a"), col("doc_b"),
-        (0 until 4).map(q => HammingDistance.of(col(s"a$q"), col(s"b$q")))
+        (0 until 4).map(q => bit_count(col(s"a$q").bitwiseXOR(col(s"b$q"))))
           .reduce(_ + _).as("hamming"))
       .where(col("hamming") <= maxHamming)
     val pairs = bucketCap match {

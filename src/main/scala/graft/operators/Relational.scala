@@ -211,9 +211,8 @@ object Relational {
     * NOT the raw column — the fixture column is timestamp_ntz (8
     * bytes), and grouping on the raw timestamp is only equivalent to
     * the reference's DATE grouping when every timestamp is midnight (a
-    * fixture invariant, not a contract — the Connectors seam admits
-    * foreign sources with intraday times, which would silently split
-    * (country, date) groups). `to_date` is unconditionally equivalent
+    * fixture invariant, not a contract — a source with intraday times
+    * would silently split (country, date) groups). `to_date` is unconditionally equivalent
     * to the old string key (dateStr(c) ≡ to_date(c).cast("string"),
     * and `cast` date→string is injective) and actually yields the
     * date32 exchange key the r17 note claimed. */

@@ -750,20 +750,12 @@ object Takedown {
                                  idPushdownCap: Long =
                                    ScaleEnvelope.ContentIdPushdownCap)
       : DataFrame = {
-    val root = Compaction.resolveRoot(spark, indexPath)
-    // Pinned: the frame feeds a driver-side bucket collect, the probe
-    // join, and the verify join — a nondeterministic request source
-    // must resolve to ONE passage set across them (the takedownAll
-    // id-pinning argument).
-    val p = passagePrep(passages).localCheckpoint()
-    val buckets = p
-      .select(ContentIndex.shingleBucket(col("probe")).as("sb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    val (root, p, candidates) = servedProbe(spark, indexPath, passages)
     // Candidates pinned: they feed a driver-side doc-bucket collect
     // (≤ DocBuckets distinct values — bounded by the layout, not the
     // data) and the verify join; without the pin the probe join would
     // re-run per consumer.
-    val cand = candidatesOf(spark, root, p, buckets).localCheckpoint()
+    val cand = candidates.localCheckpoint()
     // Candidate ids: COUNTED before anything is collected (r16,
     // VERDICT r15 #2 — the set is bounded by CORPUS match cardinality,
     // not request size; a boilerplate probe can make it corpus-scale).
@@ -817,29 +809,35 @@ object Takedown {
     exactTier(candText, p)
   }
 
-  /** The served CANDIDATE tier — probe-bucket-pruned shingle postings
-    * equi-joined on the exact probe shingle. One definition for the
-    * resolver and for [[servedCandidates]] (the PlanAuditSpec seam —
-    * the resolver pins this frame, which truncates its scan out of
-    * downstream final plans). */
-  private def candidatesOf(spark: SparkSession, root: String, p: DataFrame,
-                           buckets: Seq[Long]): DataFrame =
-    ContentIndex.shinglePostings(spark, root, buckets)
-      .join(broadcast(p), col("sh") === col("probe"))
-      .select(col("doc_id"), col("passage_id")).distinct()
-      .withColumn("db", ContentIndex.docBucket(col("doc_id")))
-
-  /** The candidate tier as the production code builds it, pre-pin —
-    * exposed for plan auditing only. */
-  private[graft] def servedCandidates(spark: SparkSession, indexPath: String,
-                                      passages: DataFrame): DataFrame = {
+  /** The served resolver's probe steps, shared by [[servedExact]] and
+    * [[servedCandidates]]: the resolved index root, the PINNED passage
+    * frame, and the un-pinned CANDIDATE tier — probe-bucket-pruned
+    * shingle postings equi-joined on the exact probe shingle. The
+    * passages are pinned because they feed a driver-side bucket
+    * collect, the probe join, and the verify join — a nondeterministic
+    * request source must resolve to ONE passage set across them (the
+    * takedownAll id-pinning argument). */
+  private def servedProbe(spark: SparkSession, indexPath: String,
+                          passages: DataFrame)
+      : (String, DataFrame, DataFrame) = {
     val root = Compaction.resolveRoot(spark, indexPath)
     val p = passagePrep(passages).localCheckpoint()
     val buckets = p
       .select(ContentIndex.shingleBucket(col("probe")).as("sb"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    candidatesOf(spark, root, p, buckets)
+    val candidates = ContentIndex.shinglePostings(spark, root, buckets)
+      .join(broadcast(p), col("sh") === col("probe"))
+      .select(col("doc_id"), col("passage_id")).distinct()
+      .withColumn("db", ContentIndex.docBucket(col("doc_id")))
+    (root, p, candidates)
   }
+
+  /** The candidate tier as the production code builds it, pre-pin —
+    * exposed for plan auditing only (the resolver pins this frame,
+    * which truncates its scan out of downstream final plans). */
+  private[graft] def servedCandidates(spark: SparkSession, indexPath: String,
+                                      passages: DataFrame): DataFrame =
+    servedProbe(spark, indexPath, passages)._3
 
   /** Shared passage preparation: normalized passage text + the
     * first-3-token probe shingle, with the completeness guard

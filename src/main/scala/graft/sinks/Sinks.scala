@@ -16,23 +16,45 @@ import org.apache.hadoop.fs.Path
   */
 object Sinks {
 
-  /** K1/K2: append into a layer table. Routes through the
-    * [[graft.connect.Connectors]] sink seam (VERDICT r8 #3) — the
-    * locator's scheme picks the connector; the parquet-dir default
-    * writes with the incoming partitioning (no coalesce, every task
-    * writes its own file, exactly how a 1000-executor append must
-    * behave). */
+  /** K1/K2: append into a layer table, writing with the incoming
+    * partitioning: no coalesce, every task writes its own file, exactly
+    * how a 1000-executor append must behave. */
   def appendLayer(df: DataFrame, layerPath: String): Unit =
-    graft.connect.Connectors.sink(layerPath).append(df, layerPath)
+    df.write.mode("append").parquet(layerPath)
 
   /** K3: CTAS — create-or-fail, the `CREATE TABLE ... AS SELECT` twin.
     * Optional partitioning: at warehouse scale the master layer is
     * partitioned on its dominant filter column so downstream scans
-    * prune directories (`PartitionFilters` in the plan). Connector-
-    * routed like [[appendLayer]]. */
+    * prune directories (`PartitionFilters` in the plan).
+    *
+    * RETRY-IDEMPOTENT (r9, with `Steps`): a failed create attempt leaves
+    * the target directory existing with only commit-protocol debris
+    * (`_temporary`, no committed data files), so a naive errorifexists
+    * retry would convert a transient fault into a permanent "path
+    * already exists". Debris-only targets are cleared and re-created;
+    * targets holding ANY committed data still fail — that is the
+    * contract protecting a pre-existing table. */
   def createTableAs(df: DataFrame, tablePath: String,
-                    partitionBy: Seq[String] = Nil): Unit =
-    graft.connect.Connectors.sink(tablePath).create(df, tablePath, partitionBy)
+                    partitionBy: Seq[String] = Nil): Unit = {
+    val path = new Path(tablePath)
+    val fs = path.getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(path) && isCommitDebrisOnly(fs, path)) fs.delete(path, true)
+    val w = df.write.mode("errorifexists")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(tablePath)
+  }
+
+  /** True when `path` holds no committed data: only `_`-prefixed
+    * metadata/scratch entries (`_temporary`, `_SUCCESS`) and empty
+    * directories, recursively. */
+  private def isCommitDebrisOnly(fs: org.apache.hadoop.fs.FileSystem,
+                                 path: Path): Boolean =
+    fs.listStatus(path).forall { st =>
+      if (st.getPath.getName.startsWith("_")) true
+      else if (st.isDirectory) isCommitDebrisOnly(fs, st.getPath)
+      else false
+    }
 
   /** K4: staged CSV object write (header row, like the generator upload
     * `create_campaigns/csv/main.py:33-43`). Whitespace-exact: Spark's
@@ -142,8 +164,10 @@ object Sinks {
     * touches the other 100 TB. */
   def overwritePartitions(df: DataFrame, tablePath: String,
                           partitionBy: Seq[String]): Unit =
-    graft.connect.Connectors.sink(tablePath)
-      .overwritePartitions(df, tablePath, partitionBy)
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionBy: _*)
+      .parquet(tablePath)
 
   /** Keyed upsert (poor-man's MERGE) into a parquet layer: incoming
     * rows replace existing rows with the same key; everything else
@@ -267,14 +291,7 @@ object Sinks {
     * version isolation. A 100 TB table pays full-rewrite only because
     * this layout shares nothing between versions; the partition-grain
     * refinement ([[overwritePartitions]]) applies unchanged when keys
-    * map to partitions. */
-  def mergePublish(spark: SparkSession, incoming: DataFrame,
-                   tableDir: String, keys: Seq[String],
-                   latestBy: Seq[String] = Nil): Int =
-    mergePublishWith(spark, incoming, tableDir, keys, latestBy)
-
-  /** [[mergePublish]] with the OCC knobs exposed (test seam +
-    * orphan-fence age; the public overload pins production defaults).
+    * map to partitions.
     *
     * SERIALIZABILITY (r10, second pass): read-merge-publish is a lost
     * update under concurrent publishers — A and B both merge from v=2,
@@ -298,12 +315,12 @@ object Sinks {
     * either their marker lands (new base) or they age into fencing.
     * The crashed caller's batch replays idempotently (latest-wins
     * merge of the same rows converges — the crash-replay spec). */
-  def mergePublishWith(spark: SparkSession, incoming: DataFrame,
-                       tableDir: String, keys: Seq[String],
-                       latestBy: Seq[String] = Nil,
-                       batchId: Option[Long] = None,
-                       orphanFenceMs: Long = 60000L,
-                       beforeClaim: () => Unit = () => ()): Int = {
+  def mergePublish(spark: SparkSession, incoming: DataFrame,
+                   tableDir: String, keys: Seq[String],
+                   latestBy: Seq[String] = Nil,
+                   batchId: Option[Long] = None,
+                   orphanFenceMs: Long = 60000L,
+                   beforeClaim: () => Unit = () => ()): Int = {
     import org.apache.spark.sql.functions.col
     val deduped = latestWins(incoming, tableDir, keys, latestBy)
     Publish.publishLoop(spark, tableDir, {
@@ -328,7 +345,7 @@ object Sinks {
     * The op column does NOT land in the table. Returns the published
     * version.
     *
-    * Same OCC/fencing/ledger machinery as [[mergePublishWith]] —
+    * Same OCC/fencing/ledger machinery as [[mergePublish]] —
     * batch-keyed deletes are exactly-once under replay, and takedown
     * (purge these keys from the corpus) is precisely a D-batch:
     * [[graft.operators.Takedown]] propagates the same id set into the

@@ -207,7 +207,7 @@ object StreamingIngest {
     * [[graft.sinks.Sinks.diffVersions]] for free, and readers resolve
     * whole committed versions instead of riding upsert's non-atomic
     * two-rename swap window. Delivery is EXACTLY-ONCE BY LEDGER: the
-    * micro-batch id rides `mergePublishWith(batchId=...)`, so a batch
+    * micro-batch id rides `mergePublish(batchId=...)`, so a batch
     * replayed after a checkpoint-window crash is detected against the
     * current version's applied-batch ledger and becomes a no-op —
     * stronger than the content-convergence argument upsertStream
@@ -223,7 +223,7 @@ object StreamingIngest {
       // The merge plan references the batch twice (anti-join keys +
       // union).
       pinned(batch) {
-        graft.sinks.Sinks.mergePublishWith(batch.sparkSession, batch,
+        graft.sinks.Sinks.mergePublish(batch.sparkSession, batch,
           tableDir, keys, latestBy, batchId = Some(batchId))
       }
     }

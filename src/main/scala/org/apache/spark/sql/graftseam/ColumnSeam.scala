@@ -13,12 +13,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * inside `org.apache.spark.sql` purely to re-export those two
   * conversions. Operator code reaches every native expression through
   * it, via the expression's `of` constructor (`DotProduct.of`,
-  * `HammingDistance.of`, `BoundedCollectLong.of`, `ShingleArray.of`,
-  * `BloomProbe.of`): building a Column never writes a session's
-  * function registry, and works whichever session (if any) is active.
-  * The SQL names are for SQL users only, installed once per session by
-  * [[graft.GraftExtensions]]. Keeping the escape hatch to one tiny file
-  * keeps the rest of the repo on public API only.
+  * `BoundedCollectLong.of`, `ShingleArray.of`, `BloomProbe.of`):
+  * building a Column never writes a session's function registry, and
+  * works whichever session (if any) is active. Keeping the escape hatch
+  * to one tiny file keeps the rest of the repo on public API only.
   */
 object ColumnSeam {
   /** Wrap a raw Catalyst expression as a Column (classic mode). */

@@ -6,20 +6,6 @@ import org.apache.spark.sql.functions._
   * results as the DataFrame API. */
 class GraftFacadeSpec extends SparkSpec {
 
-  test("install wires functions + rewrite + views in one call") {
-    Graft.install(spark, sf0001)
-    try {
-      // Native SQL functions are usable against a registered view.
-      val d = spark.sql(
-        """SELECT vec_id,
-          |       dot_d(transform(embedding, x -> CAST(x AS DOUBLE)),
-          |             transform(embedding, x -> CAST(x AS DOUBLE))) AS sq
-          |FROM embeddings LIMIT 5""".stripMargin)
-      assert(d.count() == 5 && d.where(col("sq") < 0).isEmpty)
-      assert(spark.sql("SELECT hamming(5, 6)").head().getInt(0) == 2)
-    } finally GraftExtensions.uninstall(spark)
-  }
-
   test("registered views answer SQL equal to the DataFrame API") {
     Graft.registerViews(spark, sf0001)
     val viaSql = spark.sql(

@@ -64,6 +64,31 @@ class IngestSinksSpec extends SparkSpec {
     assert(!Ingest.filesExist(spark, s"$dir/ingested/*.csv"))
   }
 
+  test("create is retry-idempotent over commit debris, still protects data") {
+    val dir = tmpDir("ctas")
+    val df = Seq((1, "x"), (2, "y")).toDF("id", "v")
+    // Simulate a failed first attempt: target exists holding only
+    // commit-protocol debris (_temporary scratch), no committed files.
+    val target = new java.io.File(s"$dir/t.parquet")
+    val scratch = new java.io.File(target, "_temporary/0/task_000")
+    assert(scratch.mkdirs())
+    java.nio.file.Files.write(new java.io.File(scratch, "part-0").toPath,
+      "partial".getBytes)
+    Sinks.createTableAs(df, target.toString) // retry: must succeed
+    assert(Tables.read(spark, dir, "t").count() == 2)
+    // A target holding COMMITTED data still fails — that's the contract.
+    intercept[Exception] { Sinks.createTableAs(df, target.toString) }
+    assert(Tables.read(spark, dir, "t").count() == 2) // untouched
+  }
+
+  test("parquet layer round-trips through appendLayer and Tables.read") {
+    val dir = tmpDir("layer")
+    val df = Seq((1, "x"), (2, "y")).toDF("id", "v")
+    Sinks.appendLayer(df, s"$dir/t.parquet")
+    val back = Tables.read(spark, dir, "t")
+    assert(back.collect().toSet == df.collect().toSet)
+  }
+
   test("F7: filename routing parses table/ext/dag from landed paths") {
     val (t, e, dag) = Ingest.routeFilename($"path")
     val r = Seq("results/campaigns_20230706_ad17.csv",
@@ -338,7 +363,7 @@ class IngestSinksSpec extends SparkSpec {
     // it): the aged orphan is fenced away, the retry claims ITS number
     // adjacent to the still-current v=2, and converges — the merge is a
     // pure function of (current, incoming).
-    assert(Sinks.mergePublishWith(spark, crashInc, t, Seq("id"),
+    assert(Sinks.mergePublish(spark, crashInc, t, Seq("id"),
       orphanFenceMs = 0L) == 3)
     val afterReplay = Set((1L, "A", 11.0), (2L, "B", 21.0),
       (3L, "c", 30.0), (4L, "d", 40.0))
@@ -397,7 +422,7 @@ class IngestSinksSpec extends SparkSpec {
     val aBatch = Seq((2L, "from_a", 2.0)).toDF("id", "s", "x")
     val bBatch = Seq((3L, "from_b", 3.0)).toDF("id", "s", "x")
     var interfered = false
-    val v = Sinks.mergePublishWith(spark, bBatch, t, Seq("id"),
+    val v = Sinks.mergePublish(spark, bBatch, t, Seq("id"),
       beforeClaim = () => if (!interfered) {
         interfered = true
         assert(Sinks.mergePublish(spark, aBatch, t, Seq("id")) == 2)
@@ -454,7 +479,7 @@ class IngestSinksSpec extends SparkSpec {
     // Same fence-age pin as the aggregate test above: contention only.
     val fs = (1 to 4).map { i =>
       Future {
-        Sinks.mergePublishWith(spark,
+        Sinks.mergePublish(spark,
           Seq((i.toLong, s"w$i", i.toDouble)).toDF("id", "s", "x"),
           t, Seq("id"), orphanFenceMs = 600000L)
       }

@@ -48,7 +48,7 @@ class PublishFenceSpec extends SparkSpec {
     // aged orphan — B's first claim lands non-adjacent at v=2, is
     // retracted, the gap is fenced (unmarked → reclaimed), and B's
     // retry commits at v=1.
-    assert(Sinks.mergePublishWith(spark, Seq((2L, "from_b")).toDF("id", "s"),
+    assert(Sinks.mergePublish(spark, Seq((2L, "from_b")).toDF("id", "s"),
       t, Seq("id"), orphanFenceMs = 0L) == 1)
     assert(rowsOf(t) == Set((2L, "from_b")))
     // A wakes and tries to commit: its token is gone with the fenced
@@ -59,7 +59,7 @@ class PublishFenceSpec extends SparkSpec {
     assert(e.getMessage.contains("fenced before commit"))
     assert(markersOf(fs, root) == Set(1), "A's failed commit left a marker")
     // A's REPLAY (the contract the exception message demands) converges.
-    assert(Sinks.mergePublishWith(spark, Seq((1L, "from_a")).toDF("id", "s"),
+    assert(Sinks.mergePublish(spark, Seq((1L, "from_a")).toDF("id", "s"),
       t, Seq("id")) == 2)
     assert(rowsOf(t) == Set((1L, "from_a"), (2L, "from_b")))
     // No tombstone or stage debris outlives the episode.
@@ -90,7 +90,7 @@ class PublishFenceSpec extends SparkSpec {
     assert(childrenOf(fs, root) == Set("v=1", "_latest"),
       "fence left debris (tombstone or fenced dir)")
     // Replay converges.
-    assert(Sinks.mergePublishWith(spark, Seq((2L, "from_a")).toDF("id", "s"),
+    assert(Sinks.mergePublish(spark, Seq((2L, "from_a")).toDF("id", "s"),
       t, Seq("id")) == 2)
     assert(rowsOf(t) == Set((1L, "base"), (2L, "from_a")))
   }
@@ -454,9 +454,9 @@ class PublishFenceSpec extends SparkSpec {
     // Same contract on the keyed-merge path.
     val m = s"${tmpDir("ledger_m")}/t"
     val b0 = Seq((1L, "x")).toDF("id", "s")
-    assert(Sinks.mergePublishWith(spark, b0, m, Seq("id"),
+    assert(Sinks.mergePublish(spark, b0, m, Seq("id"),
       batchId = Some(0L)) == 1)
-    assert(Sinks.mergePublishWith(spark, b0, m, Seq("id"),
+    assert(Sinks.mergePublish(spark, b0, m, Seq("id"),
       batchId = Some(0L)) == 1, "replayed merge batch minted a version")
   }
 

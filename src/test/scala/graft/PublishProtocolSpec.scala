@@ -65,7 +65,7 @@ class PublishProtocolSpec extends SparkSpec {
     // (non-zombie) gap content, retracts, fences 4 and 5, and the
     // retry commits adjacent at 4 — bounded, not the 65-round
     // starvation the dir-derived numbering produced.
-    assert(Sinks.mergePublishWith(spark, Seq((7L, "m")).toDF("id", "s"),
+    assert(Sinks.mergePublish(spark, Seq((7L, "m")).toDF("id", "s"),
       t, Seq("id"), orphanFenceMs = 0L) == 4)
     assert(rowsOf(t) == Set((6L, "h"), (7L, "m")))
   }

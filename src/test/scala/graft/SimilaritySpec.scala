@@ -228,16 +228,49 @@ class SimilaritySpec extends SparkSpec {
       lit(0.0), (acc, v) => acc + v)
     // Bit-exact equality, not tolerance: identical accumulation order.
     assert(vecs.where(DotProduct.of(col("a"), col("b")) =!= fold).isEmpty)
-    // The edges go through SQL, so the spec installs the name.
-    GraftExtensions.install(spark)
-    try {
-      val edge = spark.sql(
-        """SELECT dot_d(array(1.0d, 2.0d), array(3.0d)) AS mismatch,
-          |       dot_d(array(1.0d, CAST(NULL AS DOUBLE)), array(3.0d, 4.0d)) AS nul,
-          |       dot_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS ok""".stripMargin)
-        .head()
-      assert(edge.isNullAt(0) && edge.isNullAt(1) && edge.getDouble(2) == 11.0)
-    } finally GraftExtensions.uninstall(spark)
+    val edge = spark.range(1).select(
+      DotProduct.of(array(lit(1.0), lit(2.0)), array(lit(3.0)))
+        .as("mismatch"),
+      DotProduct.of(array(lit(1.0), lit(null).cast("double")),
+        array(lit(3.0), lit(4.0))).as("nul"),
+      DotProduct.of(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0)))
+        .as("ok"))
+      .head()
+    assert(edge.isNullAt(0) && edge.isNullAt(1) && edge.getDouble(2) == 11.0)
+  }
+
+  test("dot_d over float32 arrays is bit-identical to the double cast " +
+      "form (r18 widening pin)") {
+    // The r18 rescore paths ship RAW float32 vectors through the join
+    // and widen inside dot_d — sound only if widen-then-multiply equals
+    // cast-the-array-then-multiply, elementwise and in accumulation
+    // order. Pin it on real fixture vectors, both pure-float and the
+    // MIXED (float, double) case the hyperplane dots use.
+    val v = Tables.embeddings(spark, sf0001).limit(200)
+      .select(col("embedding").as("f"),
+        transform(col("embedding"), x => x.cast("double")).as("d"),
+        reverse(col("embedding")).as("fr"),
+        transform(reverse(col("embedding")), x => x.cast("double")).as("dr"))
+    val got = v.select(
+      DotProduct.of(col("f"), col("fr")).as("ff"),
+      DotProduct.of(col("d"), col("dr")).as("dd"),
+      DotProduct.of(col("f"), col("dr")).as("fd"))
+      .collect()
+    got.foreach { r =>
+      assert(r.getDouble(0) == r.getDouble(1),
+        s"float/float dot diverged: ${r.getDouble(0)} vs ${r.getDouble(1)}")
+      assert(r.getDouble(2) == r.getDouble(1),
+        s"mixed dot diverged: ${r.getDouble(2)} vs ${r.getDouble(1)}")
+    }
+    // Null / length-mismatch edges keep the zip_with semantics on the
+    // float path too.
+    val edge = spark.range(1).select(
+      DotProduct.of(array(lit(1.0f), lit(2.0f)), array(lit(3.0f)))
+        .as("mismatch"),
+      DotProduct.of(array(lit(1.0f)), array(lit(null).cast("float")))
+        .as("nul"))
+      .head()
+    assert(edge.isNullAt(0) && edge.isNullAt(1))
   }
 
   test("kmeansRefine: complete dims per cell, deterministic, moves centroids") {

@@ -176,7 +176,7 @@ class StreamingPipelineSpec extends SparkSpec {
     // Crash-replay of micro-batch 0 (exactly what a re-run foreachBatch
     // does after a checkpoint-window failure): the applied-batch ledger
     // detects it — no new version, no content change.
-    assert(Sinks.mergePublishWith(spark, b0, t, Seq("id"),
+    assert(Sinks.mergePublish(spark, b0, t, Seq("id"),
       latestBy = Seq("seq"), batchId = Some(0L)) == 2)
     assert(latest == Set((1L, "a"), (2L, "B"), (3L, "c")),
       "replayed micro-batch mutated the stream-maintained table")

@@ -149,24 +149,6 @@ class TextDedupSpec extends SparkSpec {
     assert(pairs.count() == 20)
   }
 
-  test("HammingDistance expression: eval, codegen path, nulls, registry") {
-    GraftExtensions.install(spark)
-    try {
-      val df = Seq((0xFF00, 0x0F00), (5, 5), (0, 0xFFFF))
-        .toDF("a", "b")
-        .selectExpr("hamming(a, b) AS h")
-      assert(df.collect().map(_.getInt(0)).toSeq == Seq(4, 0, 16))
-      // null-safe: null input → null output
-      val n = spark.sql("SELECT hamming(CAST(NULL AS INT), 3)").head()
-      assert(n.isNullAt(0))
-      // survives whole-stage codegen over a real table
-      val sig = Dedup.simhash(spark, sf0001).limit(10)
-      val d = sig.selectExpr("hamming(simhash, simhash) AS z")
-        .agg(max($"z")).head().getInt(0)
-      assert(d == 0)
-    } finally GraftExtensions.uninstall(spark)
-  }
-
   test("quality score stays in [0, 1] on the fixture corpus") {
     val mm = TextOps.qualityScore(spark, sf0001)
       .agg(min($"quality_score"), max($"quality_score")).head()
@@ -275,8 +257,8 @@ class TextDedupSpec extends SparkSpec {
     a.join(b, Seq("band_idx", "band_val"))
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (expr("hamming(a0, b0)") + expr("hamming(a1, b1)") +
-          expr("hamming(a2, b2)") + expr("hamming(a3, b3)")).as("hamming"))
+        (0 until 4).map(q => bit_count(col(s"a$q").bitwiseXOR(col(s"b$q"))))
+          .reduce(_ + _).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -289,9 +271,7 @@ class TextDedupSpec extends SparkSpec {
     // with a full distinct. Same pair set, and the shipped form must
     // also be duplicate-free WITHOUT the distinct.
     val sig = Dedup.simhash64(spark, sf0001)
-    // The twin calls `hamming` by its SQL name.
-    GraftExtensions.install(spark)
-    try for (wide <- Seq(false, true)) {
+    for (wide <- Seq(false, true)) {
       val shipped =
         if (wide) Dedup.simhash64WideNeighborsOf(sig)._1
         else Dedup.simhash64NeighborsOf(sig)._1
@@ -302,7 +282,7 @@ class TextDedupSpec extends SparkSpec {
       assert(rows.length == rows.map(r => (r.getLong(0), r.getLong(1)))
         .distinct.length, s"wide=$wide emitted duplicate pairs")
       assert(rows.nonEmpty)
-    } finally GraftExtensions.uninstall(spark)
+    }
   }
 
   test("wide multi-index pigeonhole: 3 flips in 3 DIFFERENT quarters still pair") {
